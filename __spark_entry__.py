@@ -1458,9 +1458,9 @@ def _wrap(fn):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Ordering contract: the driver's correctness gate checks the FIRST 50
     # entries.  Slots 1-50 therefore hold every semantically distinct
-    # operator exactly once; slots 51-59 hold forced-physical-path twins /
+    # operator exactly once; slots 51-60 hold forced-physical-path twins /
     # compositions whose logical twin is in-window (noted per entry).  All
-    # 59 still run under tools/check_oracles.py and pytest.
+    # 60 still run under tools/check_oracles.py and pytest.
     raw = {
         # spatial core (G4/G6/T4/T9/T13 + north-rule kNN / raster↔vector)
         "pip_region_rows": q_pip_region_rows,

@@ -77,28 +77,6 @@ def build_cells_table(
     )
 
 
-def cell_region_sets_map(point_cells: DataFrame, candidates_bcast, rings_bcast) -> DataFrame:
-    """cell_region_sets via the broadcast-store kernel: ONE mapInArrow pass
-    resolves every distinct cell center's region set (identical semantics
-    to the join+PIP plan — same kernel as the zero-shuffle flagship), in
-    place of the explode-join/filter/groupBy/left-join stage pipeline whose
-    fixed overhead dominated at dimension scale."""
-    from libosmtools_spark.joins.mapjoin import map_spatial_join
-
-    clat, clon = cell_center_cols(F.col("cell_key"))
-    centers = (
-        point_cells.select("cell_key").distinct()
-        .select(
-            F.col("cell_key").alias("ck_id"),
-            clat.alias("lat"),
-            clon.alias("lon"),
-            "cell_key",
-        )
-    )
-    res = map_spatial_join(centers, candidates_bcast, rings_bcast, id_col="ck_id")
-    return res.select(F.col("ck_id").alias("cell_key"), "region_ids")
-
-
 def build_cells_table_map(
     point_cells: DataFrame,
     candidates_bcast,
@@ -124,8 +102,9 @@ def build_cells_table_map(
     comma-joined sorted region-id strings, empty set pinned to 0.
 
     ``input_batch_unique=True`` skips the distinct exchange for callers
-    whose input is already batch-deduplicated near dimension scale
-    (page_cell_keys_text); corpus-scale callers keep distinct-first so the
+    whose input is already batch-deduplicated near dimension scale (the
+    flagship kernel's batch-unique keys, SpatialEngine.kernel_cells, or
+    page_cell_keys_text); corpus-scale callers keep distinct-first so the
     single-task gather never sees fact-table row counts."""
     import numpy as np
 

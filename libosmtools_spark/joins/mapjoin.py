@@ -257,6 +257,9 @@ def _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words) -> np.ndarr
     return masks
 
 
+#: flag column of map_spatial_join_text: first row of its cell key in the batch
+BATCH_UNIQUE = "batch_unique"
+
 #: named-group form of geom.columns.GEO_REGEX for pyarrow's extract_regex
 #: (RE2 requires named captures; names change nothing about what matches)
 _GEO_REGEX_NAMED = r"geo:(?P<glat>-?\d+\.\d{6}),(?P<glon>-?\d+\.\d{6})"
@@ -300,9 +303,9 @@ def map_spatial_join_text(
     text_col: str = "text",
     level: int = 6,
 ) -> DataFrame:
-    """pages(id, text) → (id, cell_key, region_ids): the zero-shuffle
-    flagship kernel with geocode + cell-key derivation INSIDE the Arrow
-    batch (RE2 + numpy) instead of JVM expressions upstream.
+    """pages(id, text) → (id, cell_key, region_ids, batch_unique): the
+    zero-shuffle flagship kernel with geocode + cell-key derivation INSIDE
+    the Arrow batch (RE2 + numpy) instead of JVM expressions upstream.
 
     Same results as ``with_cell_key(geocode_pages(pages))`` →
     ``map_spatial_join`` (see _geocode_batch for the parity argument); the
@@ -311,11 +314,17 @@ def map_spatial_join_text(
     Measured at the 25.6M-page scaling tier (local[4]): the JVM
     geocode+key stage alone was ~4.7 s and the identity Arrow round trip
     ~10.6 s; fusing them removes a whole JVM pass and 24 bytes/row of
-    boundary traffic (guide §4.1: control how many columns cross)."""
+    boundary traffic (guide §4.1: control how many columns cross).
+
+    ``batch_unique`` (``BATCH_UNIQUE``) is true on the first row of each
+    distinct cell key (NULL included) within its Arrow batch: filtering on
+    it yields the cells-dictionary feed (build_cells_table_map) at
+    batches × occupied-cells rows, straight from this one pass over the
+    pages."""
     n_regions = candidates_bcast.value["n_regions"]
     n_words = max(1, (n_regions + 62) // 63)
     id_type = dict(pages.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, cell_key long, region_ids array<int>"
+    schema = f"{id_col} {id_type}, cell_key long, region_ids array<int>, {BATCH_UNIQUE} boolean"
     index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     def run(batches):
@@ -328,6 +337,8 @@ def map_spatial_join_text(
             keys = _keys_of(la, lo, level)
             masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
             offs, vals = _masks_to_region_lists(masks)
+            first = np.zeros(len(keys), dtype=bool)
+            first[np.unique(keys, return_index=True)[1]] = True
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(id_col),
@@ -335,13 +346,14 @@ def map_spatial_join_text(
                     pa.ListArray.from_arrays(
                         pa.array(offs, type=pa.int32()), pa.array(vals, type=pa.int32())
                     ),
+                    pa.array(first),
                 ],
-                [id_col, "cell_key", "region_ids"],
+                [id_col, "cell_key", "region_ids", BATCH_UNIQUE],
             )
 
     out = pages.select(id_col, text_col).mapInArrow(run, schema)
     restore_key = F.when(F.col("cell_key") >= 0, F.col("cell_key"))
-    return out.select(id_col, restore_key.alias("cell_key"), "region_ids")
+    return out.select(id_col, restore_key.alias("cell_key"), "region_ids", BATCH_UNIQUE)
 
 
 def page_cell_keys_text(
@@ -349,8 +361,9 @@ def page_cell_keys_text(
 ) -> DataFrame:
     """pages(…, text) → distinct-ish (cell_key) rows (NULL for pages with
     no geocode), one text-only Arrow pass emitting each batch's UNIQUE
-    keys — the cells-dictionary feed of the flagship without re-running
-    the geocode as a second JVM pass over the corpus.  Callers still
+    keys — the occupied cells alone, without resolving regions (the
+    benchmark's keys-pass layer, perfbench/layers.py; the flagship takes
+    the same keys from its kernel pass, ``BATCH_UNIQUE``).  Callers
     .distinct() the (tiny) result; the batch-level np.unique just keeps
     the emitted rows at distinct-cell scale instead of corpus scale."""
     schema = "cell_key long"

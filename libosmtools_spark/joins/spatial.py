@@ -74,33 +74,6 @@ def make_pip_udf(rings_bcast):
     return pip
 
 
-def spatial_join_left(
-    points: DataFrame,
-    cell_index: DataFrame,
-    rings_bcast,
-    level: int = 6,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """Left-outer variant: every point row survives; ``region_id`` is NULL
-    for points in no region.  One broadcast join + the PIP predicate — no
-    union, no second pass — so a downstream groupBy(point key) can build
-    region sets AND carry point attributes in a single shuffle."""
-    pts = points if "cell_key" in points.columns else with_cell_key(points, lat, lon, level)
-    idx = F.broadcast(cell_index)
-    joined = pts.join(idx, "cell_key", "left")
-    pip = make_pip_udf(rings_bcast)
-    # a failed candidate becomes region_id NULL (NOT a dropped row — the
-    # point must survive even if its only candidate fails); downstream
-    # collect_set ignores NULLs
-    matched = F.col("region_id").isNotNull() & (
-        F.col("full") | pip(F.col(lat), F.col(lon), F.col("region_id"))
-    )
-    return joined.withColumn(
-        "region_id", F.when(matched, F.col("region_id"))
-    ).drop("full")
-
-
 def spatial_join(
     points: DataFrame,
     cell_index: DataFrame,
@@ -190,7 +163,13 @@ def spatial_join_adaptive_left(
     region_id NULL.  To keep the downstream groupBy(point key) shuffle at
     ~1× the point count (not ×n_levels), non-matching probe rows are
     dropped EXCEPT each point's base-level row, which is kept as the
-    guaranteed survivor."""
+    guaranteed survivor: rows that matched no index row before the PIP
+    (so they never cross the Arrow boundary), failed candidates after it.
+
+    The PIP UDF is marked nondeterministic so that Catalyst keeps the
+    second filter above its projection: pushed below it, the filter would
+    inline the PIP predicate and the UDF would run twice (one
+    ArrowEvalPython each)."""
     probe_arr = F.array(*[cell_key_col(F.col(lat), F.col(lon), lv)
                           for lv in range(base_level, max_level + 1)])
     pts = points.select(
@@ -199,8 +178,10 @@ def spatial_join_adaptive_left(
     idx = adaptive_index.select(
         F.col("cell_key").alias("_probe_key"), "region_id", "full"
     )
-    joined = pts.join(F.broadcast(idx), "_probe_key", "left")
-    pip = make_pip_udf(rings_bcast)
+    joined = pts.join(F.broadcast(idx), "_probe_key", "left").filter(
+        F.col("region_id").isNotNull() | F.col("_is_base")
+    )
+    pip = make_pip_udf(rings_bcast).asNondeterministic()
     matched = F.col("region_id").isNotNull() & (
         F.col("full") | pip(F.col(lat), F.col(lon), F.col("region_id"))
     )

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +19,7 @@ from libosmtools_spark.cells.assign import (
     build_cells_table_map,
 )
 from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
+from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE, map_spatial_join_text
 from libosmtools_spark.joins.spatial import (
     geocode_pages,
     page_region_sets,
@@ -117,39 +119,53 @@ class SpatialEngine:
         cells = self.cells(pages)
         return assign_point_cell_ids(pts, cells).select("url", "cell_key", "cell_id")
 
-    def flagship_map(self, pages: DataFrame) -> DataFrame:
-        """(url, cell_key, cell_id, region_ids) with ZERO shuffles — the
-        broadcast-store plan (joins/mapjoin.py): one text-in mapInArrow
-        resolves each page's geocode, cell key AND region set (RE2 + numpy
-        inside the batch — the JVM regex/key pass and 24 B/row of Arrow
-        boundary traffic are gone, see map_spatial_join_text); the cells
-        dictionary derives from a text-only second pass that emits
-        batch-unique keys, and joins broadcast.  The plan of record for
-        10^12 pages with a broadcastable polygon store (the reference's
-        own in-memory posture)."""
-        from libosmtools_spark.joins.mapjoin import (
-            map_spatial_join_text,
-            page_cell_keys_text,
-        )
-
-        res = map_spatial_join_text(
+    def flagship_kernel(self, pages: DataFrame) -> DataFrame:
+        """(url, cell_key, region_ids, batch_unique): the one text-in
+        mapInArrow pass of the flagship (joins/mapjoin.py) — RE2 geocode,
+        cell key AND region set per page inside the Arrow batch, plus the
+        batch-unique key flag that feeds the cells dictionary
+        (``kernel_cells``)."""
+        return map_spatial_join_text(
             pages, self.candidates_bcast, self.rings_bcast, level=self.level
         )
-        cells = build_cells_table_map(
-            page_cell_keys_text(pages, level=self.level),
+
+    def kernel_cells(self, kernel_out: DataFrame) -> DataFrame:
+        """(cell_key, cell_id, region_ids) dictionary over the cells a
+        ``flagship_kernel`` output occupies, built in one Arrow task from
+        its batch-unique keys (no distinct exchange; the gather holds
+        Σ over batches of distinct keys: batches × occupied cells at most)."""
+        return build_cells_table_map(
+            kernel_out.filter(F.col(BATCH_UNIQUE)).select("cell_key"),
             self.candidates_bcast,
             self.rings_bcast,
-            # batch-unique keys already — the fused build's single task
-            # dedups globally, no distinct exchange needed
             input_batch_unique=True,
         )
-        out = res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-        return out.select(
-            "url",
-            "cell_key",
-            F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-            "region_ids",
+
+    def flagship_map(self, pages: DataFrame) -> DataFrame:
+        """(url, cell_key, cell_id, region_ids) from ONE scan of the pages
+        and no fact-side shuffle — the in-session broadcast-store plan (the
+        reference's own in-memory posture).
+
+        The ``flagship_kernel`` pass runs once, inside an eager DISK_ONLY
+        ``localCheckpoint`` of its narrow output, so the call itself runs
+        a Spark job.  Both the cells dictionary (``kernel_cells``, from the
+        flagged batch-unique keys) and the final broadcast join read that
+        checkpoint, so no page is geocoded twice.  Every call runs its own
+        checkpoint job: nothing is cached across calls.
+
+        Limits of the local checkpoint: it cuts the lineage, so if an
+        executor holding checkpoint blocks is lost before the returned
+        frame is read, reading it fails instead of recomputing.  And each
+        live result holds one narrow copy of its corpus (url, cell_key,
+        region_ids) on executor-local disk until Spark's ContextCleaner
+        frees it, after the returned frame is garbage-collected.  The
+        fault-tolerant shape for corpora at cluster scale is
+        ``run_flagship_staged`` (the same kernel and dictionary feed over
+        durable parquet stages)."""
+        res = self.flagship_kernel(pages).localCheckpoint(
+            eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
+        return with_cell_ids(res, self.kernel_cells(res))
 
     def flagship(self, pages: DataFrame) -> DataFrame:
         """(url, cell_key, cell_id, region_ids) — ONE wide pass:
@@ -172,13 +188,20 @@ class SpatialEngine:
         cells = build_cells_table_map(
             pts.select("cell_key"), self.candidates_bcast, self.rings_bcast
         )
-        out = agg.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-        return out.select(
-            "url",
-            "cell_key",
-            F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-            "region_ids",
-        )
+        return with_cell_ids(agg, cells)
+
+
+def with_cell_ids(rows: DataFrame, cells: DataFrame) -> DataFrame:
+    """(url, cell_key, region_ids, …) rows + the cells dictionary →
+    (url, cell_key, cell_id, region_ids): broadcast join on cell_key; a
+    NULL or unknown key gets cell 0."""
+    out = rows.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
+    return out.select(
+        "url",
+        "cell_key",
+        F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
+        "region_ids",
+    )
 
 
 def pages_from_html(pages: DataFrame) -> DataFrame:
@@ -200,6 +223,14 @@ def run_flagship(spark: SparkSession, fixtures_dir: str, level: int = DEFAULT_LE
     return eng.flagship(pages)
 
 
+#: format of run_flagship_staged's stage tables, part of their checkpoint
+#: key: a checkpoint root whose stages were written in another format (the
+#: ``page_regions`` stage before it carried ``batch_unique``, say) is
+#: rebuilt instead of read back.  Change it whenever a stage's schema or
+#: meaning changes.
+STAGED_FORMAT = "kernel-batch-unique"
+
+
 def run_flagship_staged(
     spark: SparkSession,
     fixtures_dir: str,
@@ -208,53 +239,28 @@ def run_flagship_staged(
     max_level: int | None = None,
 ) -> DataFrame:
     """The production shape of the flagship: staged, resumable, and ONE
-    scan of the fact table.
+    scan of the fact table — the same kernel pass and dictionary feed as
+    ``SpatialEngine.flagship_map``, with parquet stages in place of its
+    in-session checkpoint.
 
-    - stage ``page_regions``: the zero-shuffle map join, written to
-      parquet (this IS the expensive fact pass — geocode + kernel);
-    - stage ``cells``: the dictionary built from the STAGE OUTPUT's
-      distinct cells (read back from the narrow stage-1 parquet — the
-      in-memory flagship_map re-derives them with a second pages scan,
-      which at 10^12 rows is a full extra fact pass);
+    - stage ``page_regions``: ``flagship_kernel``, written to parquet
+      (this IS the expensive fact pass — geocode + kernel);
+    - stage ``cells``: ``kernel_cells`` over the stage-1 parquet (its
+      batch-unique keys, read back from the narrow stage output);
     - stage ``flagship``: broadcast join of the two.
 
     Each stage records manifest lineage + per-partition metrics
     (run/checkpoint.py); re-running with an unchanged input fingerprint
-    skips straight to reading the stage parquet — resumable from any
-    point (north-rule requirement)."""
-    from libosmtools_spark.cells.assign import build_cells_table_map
-    from libosmtools_spark.joins.mapjoin import map_spatial_join_text
+    and ``STAGED_FORMAT`` skips straight to reading the stage parquet —
+    resumable from any point (north-rule requirement)."""
     from libosmtools_spark.run.checkpoint import CheckpointManager, input_fingerprint
 
     pages_path = os.path.join(fixtures_dir, "pages.parquet")
-    fp = input_fingerprint(spark, pages_path)
+    fp = f"{input_fingerprint(spark, pages_path)}:{STAGED_FORMAT}"
     rings = spark.read.parquet(os.path.join(fixtures_dir, "region_rings.parquet"))
     eng = SpatialEngine(spark, rings, level, max_level)
     cp = CheckpointManager(spark, ckpt_root)
 
-    def build_regions():
-        pages = spark.read.parquet(pages_path)
-        return map_spatial_join_text(
-            pages, eng.candidates_bcast, eng.rings_bcast, level=eng.level
-        )
-
-    res = cp.stage("page_regions", fp, build_regions)
-    cells = cp.stage(
-        "cells",
-        fp,
-        lambda: build_cells_table_map(
-            res.select("cell_key"), eng.candidates_bcast, eng.rings_bcast
-        ),
-    )
-    final = cp.stage(
-        "flagship",
-        fp,
-        lambda: res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-        .select(
-            "url",
-            "cell_key",
-            F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-            "region_ids",
-        ),
-    )
-    return final
+    res = cp.stage("page_regions", fp, lambda: eng.flagship_kernel(spark.read.parquet(pages_path)))
+    cells = cp.stage("cells", fp, lambda: eng.kernel_cells(res))
+    return cp.stage("flagship", fp, lambda: with_cell_ids(res, cells))

@@ -180,3 +180,33 @@ class TestStagedFlagship:
         again = run_flagship_staged(spark, sf_smoke, root)
         assert again.count() == len(got)
         assert open(manifest).read() == before  # no stage re-ran
+
+    def test_rebuilds_stage_of_older_format(self, spark, sf_smoke, tmp_path):
+        """A checkpoint root whose ``page_regions`` stage was written before
+        it carried ``batch_unique`` (keyed by the bare input fingerprint)
+        and that stopped before ``cells`` is rebuilt on resume, not read
+        back: the result equals flagship_map."""
+        import os
+
+        from libosmtools_spark.pipeline import SpatialEngine, run_flagship_staged
+        from libosmtools_spark.run.checkpoint import CheckpointManager, input_fingerprint
+
+        root = str(tmp_path / "ckpt_old")
+        pages_path = os.path.join(sf_smoke, "pages.parquet")
+        pages = spark.read.parquet(pages_path)
+        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
+        old = CheckpointManager(spark, root)
+        old.stage(
+            "page_regions",
+            input_fingerprint(spark, pages_path),
+            lambda: eng.flagship_kernel(pages).drop("batch_unique"),
+        )
+
+        got = run_flagship_staged(spark, sf_smoke, root).toPandas()
+        want = eng.flagship_map(pages).toPandas()
+        g = got.sort_values("url").reset_index(drop=True)
+        w = want.sort_values("url").reset_index(drop=True)
+        assert (g["url"] == w["url"]).all()
+        assert (g["cell_id"].to_numpy() == w["cell_id"].to_numpy()).all()
+        assert (g["region_ids"].apply(list) == w["region_ids"].apply(list)).all()
+        assert "batch_unique" in spark.read.parquet(os.path.join(root, "page_regions")).columns

@@ -244,6 +244,168 @@ class TestFlagshipMapParity:
         w = _sorted_records(want, "url")
         pd.testing.assert_frame_equal(g, w, check_dtype=False)
 
+    def test_one_pages_scan_per_call(self, spark, engine, sf_smoke):
+        """All the jobs of one flagship_map call (its eager kernel
+        checkpoint and the returned frame) scan the pages parquet once."""
+        from tools.dump_plans import scans_per_call
+
+        path = os.path.join(sf_smoke, "pages.parquet")
+        pages = spark.read.parquet(path)
+        assert scans_per_call(spark, lambda: engine.flagship_map(pages), path) == 1
+
+    def test_fallback_flagship_runs_pip_once(self, engine, pages):
+        """The shuffle fallback evaluates its PIP UDF in ONE
+        ArrowEvalPython (the row filter must not inline the predicate)."""
+        plan = engine.flagship(pages)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1
+
+    def test_fallback_drops_failed_candidates_before_shuffle(self, engine, pages):
+        """The left join hands the groupBy(url) the same rows as filtering
+        after a plain (deterministic) PIP would: a failed non-base
+        candidate is dropped, not kept as a NULL row."""
+        from libosmtools_spark.geom.columns import cell_key_col
+        from libosmtools_spark.joins.spatial import make_pip_udf, spatial_join_adaptive_left
+
+        pts = engine.page_points(pages).select("url", "lat", "lon", "cell_key")
+        got = spatial_join_adaptive_left(
+            pts, engine.cell_index, engine.rings_bcast, engine.level, engine.max_level
+        )
+        levels = range(engine.level, engine.max_level + 1)
+        probes = F.array(*[cell_key_col(F.col("lat"), F.col("lon"), lv) for lv in levels])
+        idx = engine.cell_index.select(F.col("cell_key").alias("_k"), "region_id", "full")
+        joined = pts.select("*", F.posexplode(probes).alias("_pos", "_k")).join(
+            F.broadcast(idx), "_k", "left"
+        )
+        pip = make_pip_udf(engine.rings_bcast)
+        hit = F.col("region_id").isNotNull() & (
+            F.col("full") | pip(F.col("lat"), F.col("lon"), F.col("region_id"))
+        )
+        want = (
+            joined.withColumn("region_id", F.when(hit, F.col("region_id")))
+            .filter(F.col("region_id").isNotNull() | (F.col("_pos") == 0))
+            .select(got.columns)
+        )
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+
+def _dictionary_store():
+    """Region 0 apart; region 1 a background strip holding twelve disjoint
+    regions 2..13: occupied cells carry the 14 distinct sets {0}, {1} and
+    {1, k}, so the set-string order ("1,10" < "1,2") differs from the
+    numeric one."""
+    from libosmtools_spark.data.synth import regions_frames
+    from libosmtools_spark.geom import kernels as K
+
+    R = K.rect_ring
+    rects = [R(-40.0, -40.0, -30.0, -30.0), R(0.0, 0.0, 10.0, 100.0)]
+    rects += [R(1.0, 8.0 * j + 1.0, 9.0, 8.0 * j + 7.0) for j in range(12)]
+    specs = [
+        {"region_id": i, "name": f"r{i}", "rings": [("outer", K.snap(r))], "tags": {}}
+        for i, r in enumerate(rects)
+    ]
+    return regions_frames(specs)[1]
+
+
+def _dictionary_pages(shift: int = 0) -> pd.DataFrame:
+    """(url, text): several pages in every region, pages outside all
+    regions, without a geo: token and with a garbled one.  ``shift``
+    rotates the texts against the urls."""
+    pts = [(-35.0, -35.0), (5.0, 97.5), (50.0, 50.0)]
+    pts += [(5.0 + d, 8.0 * j + 4.0 + d) for j in range(12) for d in (-0.5, 0.0, 0.5)]
+    texts = [f"page near geo:{a:.6f},{o:.6f} end" for a, o in pts] * 3
+    texts += ["no coordinates here", "geo:12.5,x garbled"] * 4
+    texts = texts[shift:] + texts[:shift]
+    return pd.DataFrame({"url": [f"u{i}" for i in range(len(texts))], "text": texts})
+
+
+class TestFlagshipDictionaryFeed:
+    """The flagship builds its cells dictionary from the batch-unique keys
+    of its one kernel pass."""
+
+    @pytest.fixture(scope="class")
+    def store_engine(self, spark):
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        rings = spark.createDataFrame(
+            _dictionary_store(),
+            "region_id long, ring_id long, ring_role string, "
+            "points array<struct<lat:double,lon:double>>",
+        )
+        return SpatialEngine(spark, rings)
+
+    @staticmethod
+    def _rows(df, cols):
+        rows = df.select(*cols).collect()
+        return sorted((tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows), key=repr)
+
+    def test_dictionary_equals_relational_interning(self, spark, store_engine):
+        from libosmtools_spark.cells.assign import cell_region_sets, intern_cell_ids
+        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
+
+        eng = store_engine
+        pages = spark.createDataFrame(_dictionary_pages())
+        got = eng.kernel_cells(eng.flagship_kernel(pages))
+        keys = with_cell_key(geocode_pages(pages), level=eng.level).select("cell_key")
+        want = intern_cell_ids(
+            cell_region_sets(keys, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level)
+        )
+        cols = ("cell_key", "cell_id", "region_ids")
+        g, w = self._rows(got, cols), self._rows(want, cols)
+        assert g == w
+        assert (None, 0, ()) in g  # the NULL-key row of geocode-less pages
+        assert len({r[2] for r in g if r[2]}) > 10
+        # "1,10" ranks before "1,2": string order, not numeric
+        ids = {r[2]: r[1] for r in g}
+        assert ids[(1, 10)] < ids[(1, 2)]
+
+    def test_gather_is_batch_unique_keys(self, spark, store_engine):
+        """With several Arrow batches the dictionary input holds exactly
+        Σ over batches of distinct keys (NULL counted once per batch)."""
+        from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE
+        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
+
+        eng = store_engine
+        pdf = _dictionary_pages()
+        pages = spark.createDataFrame(pdf).coalesce(1)  # one partition, pdf order
+        key_of = {
+            r.url: r.cell_key
+            for r in with_cell_key(geocode_pages(pages), level=eng.level)
+            .select("url", "cell_key")
+            .collect()
+        }
+        keys = pd.Series([key_of[u] for u in pdf["url"]], dtype="object")
+        batch = 16
+        want = sum(
+            keys.iloc[i : i + batch].nunique(dropna=False) for i in range(0, len(keys), batch)
+        )
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, str(batch))
+        try:
+            got = eng.flagship_kernel(pages).filter(BATCH_UNIQUE).count()
+            out = eng.flagship_map(pages).toPandas()
+        finally:
+            spark.conf.set(conf, old)
+        assert len(keys) > 4 * batch
+        assert got == want
+        assert keys.nunique(dropna=False) < got < len(keys)
+        assert len(out) == len(pdf)
+
+    def test_no_reuse_across_calls(self, spark, store_engine):
+        """Two calls over different page frames with the same urls: each
+        result matches its own frame's fallback flagship, also when both
+        are materialized after both calls."""
+        eng = store_engine
+        a = spark.createDataFrame(_dictionary_pages())
+        b = spark.createDataFrame(_dictionary_pages(shift=7))
+        got_a, got_b = eng.flagship_map(a), eng.flagship_map(b)
+        cols = ("url", "cell_key", "cell_id", "region_ids")
+        ra, rb = self._rows(got_a, cols), self._rows(got_b, cols)
+        assert ra == self._rows(eng.flagship(a), cols)
+        assert rb == self._rows(eng.flagship(b), cols)
+        assert ra != rb
+
 
 class TestRoundTrip:
     def test_write_read_back_identical(self, engine, pages, tmp_path, spark):

@@ -4,7 +4,10 @@ the plan-shape invariants the engine is designed around:
 - the cell-index join is a BroadcastHashJoin (no shuffle on the fact side);
 - parquet scans show pushed filters / pruned schemas where expected;
 - relational stages sit inside WholeStageCodegen spans;
-- the zero-shuffle flagship has NO Exchange at all before the final agg.
+- the zero-shuffle flagship has NO Exchange at all before the final agg;
+- one flagship_map call scans the pages parquet once, across all its jobs
+  (the eager kernel checkpoint and the frame it returns);
+- the shuffle fallback flagship evaluates its PIP UDF once.
 
 Usage: python tools/dump_plans.py [sf_dir]
 """
@@ -13,6 +16,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -24,6 +28,27 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def scans_per_call(spark, call, path: str) -> int:
+    """Parquet scans of ``path`` in the physical plans of every SQL
+    execution that ``call()`` starts, including materializing the frame it
+    returns (a noop write)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    seen = {e.executionId() for e in executions()}
+    call().write.format("noop").mode("overwrite").save()
+    needle = f"{os.path.abspath(path)}]"
+    return sum(
+        e.physicalPlanDescription().count(needle)
+        for e in executions()
+        if e.executionId() not in seen
+    )
 
 
 def main():
@@ -43,21 +68,29 @@ def main():
     )
     fx = ensure_fixtures("0.001")
     eng = SpatialEngine.from_fixtures(spark, fx)
-    pages = spark.read.parquet(os.path.join(fx, "pages.parquet"))
+    pages_path = os.path.join(fx, "pages.parquet")
+    pages = spark.read.parquet(pages_path)
 
     sections: list[tuple[str, str, list[str]]] = []
 
     p = plan_of(eng.flagship_map(pages))
     sections.append((
-        "flagship_map (zero-shuffle broadcast-store plan)",
+        "flagship_map (zero-shuffle broadcast-store plan, over its kernel checkpoint)",
         p,
-        ["MapInArrow", "BroadcastHashJoin"],
+        ["Scan ExistingRDD", "BroadcastHashJoin"],
     ))
 
-    p = plan_of(eng.flagship(pages))
+    kernel_plan = plan_of(eng.flagship_kernel(pages))
+    sections.append((
+        "flagship_map kernel pass (run once per call, by the eager checkpoint)",
+        kernel_plan,
+        ["MapInArrow"],
+    ))
+
+    fallback_plan = plan_of(eng.flagship(pages))
     sections.append((
         "flagship (shuffle fallback plan)",
-        p,
+        fallback_plan,
         ["BroadcastHashJoin"],
     ))
 
@@ -70,23 +103,19 @@ def main():
 
     checks = []
     fm = sections[0][1]
-    # the PAGES (fact) path must be shuffle-free: inspect the raw map-join
-    # output before the dimension-side cells dictionary is attached
-    from libosmtools_spark.joins.mapjoin import map_spatial_join
-
-    raw = map_spatial_join(
-        eng.page_points(pages).select("url", "lat", "lon", "cell_key"),
-        eng.candidates_bcast,
-        eng.rings_bcast,
-    )
-    raw_plan = plan_of(raw)
-    fact_shuffles = raw_plan.count("Exchange") - raw_plan.count("BroadcastExchange")
+    # the PAGES (fact) path must be shuffle-free: inspect the kernel pass
+    # before the dimension-side cells dictionary is attached
+    fact_shuffles = kernel_plan.count("Exchange") - kernel_plan.count("BroadcastExchange")
     checks.append(f"- fact-side shuffles in the zero-shuffle map join: {fact_shuffles} "
                   f"{'✓' if fact_shuffles == 0 else '✗ UNEXPECTED'}")
     checks.append(f"- flagship_map dimension join is BroadcastHashJoin: "
                   f"{'✓' if 'BroadcastHashJoin' in fm else '✗'}")
-    checks.append("- flagship_map shuffles are confined to the dimension-side cells "
-                  "dictionary subtree (tiny: distinct cells), never the pages path ✓")
+    scans = scans_per_call(spark, lambda: eng.flagship_map(pages), pages_path)
+    checks.append(f"- pages parquet scans in one flagship_map call (all its jobs): {scans} "
+                  f"{'✓' if scans == 1 else '✗ UNEXPECTED'}")
+    pips = len(re.findall(r"^\(\d+\) ArrowEvalPython", fallback_plan, re.M))
+    checks.append(f"- PIP UDF evaluations (ArrowEvalPython) in the fallback flagship: {pips} "
+                  f"{'✓' if pips == 1 else '✗ UNEXPECTED'}")
     scan_q = plan_of(spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
                      .select("doc_id").filter("doc_id > 100"))
     checks.append(f"- parquet pushdown visible (PushedFilters): "
