@@ -225,13 +225,13 @@ def _doc_cells_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (_session_key(spark), sf_dir)
     if key not in _CELLS_CACHE:
         _register_caches()
-        from libosmtools_spark.cells.assign import build_cells_table
+        from libosmtools_spark.cells.assign import build_cells_table_map
         from libosmtools_spark.joins.spatial import with_cell_key
 
-        _, rings_bcast, cell_index = _engine(spark)
+        _, rings_bcast, _ = _engine(spark)
         pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-        _CELLS_CACHE[key] = build_cells_table(
-            pts.select("cell_key"), cell_index, rings_bcast, LEVEL, MAX_LEVEL
+        _CELLS_CACHE[key] = build_cells_table_map(
+            pts.select("cell_key"), _candidates_bcast(spark), rings_bcast
         ).cache()
     return _CELLS_CACHE[key]
 
@@ -505,7 +505,9 @@ cells_final AS (
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on the repo's sf0.001 fixtures: geocode pages →
-    cell-key join → PIP refine → (url, cell_key, cell_id, region_ids)."""
+    cell key → region set (the mapInArrow kernel) → cells dictionary →
+    (url, cell_key, cell_id, region_ids).  The call runs the kernel pass
+    (run_flagship's eager checkpoint)."""
     _ensure_shipped(spark)
     from libosmtools_spark.data.synth import ensure_fixtures
     from libosmtools_spark.pipeline import run_flagship
@@ -590,24 +592,19 @@ def q_cell_repair(spark, sf_dir):
     and the rebuilt dictionary must equal a fresh full build — the
     cells_dict oracle, with the rebuilt flag baked into the value hash so
     a silently-skipped repair turns the driver row red."""
-    from libosmtools_spark.cells.assign import build_cells_table, handle_cell_changes
+    from libosmtools_spark.cells.assign import build_cells_table_map, handle_cell_changes
     from libosmtools_spark.joins.spatial import with_cell_key
 
-    _, rings_bcast, cell_index = _engine(spark)
+    _, rings_bcast, _ = _engine(spark)
+    cand = _candidates_bcast(spark)
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    stale = build_cells_table(
-        pts.filter(F.col("doc_id") % 7 == 0).select("cell_key"),
-        cell_index,
-        rings_bcast,
-        LEVEL,
-        MAX_LEVEL,
+    stale = build_cells_table_map(
+        pts.filter(F.col("doc_id") % 7 == 0).select("cell_key"), cand, rings_bcast
     )
     repaired, rebuilt = handle_cell_changes(
         pts,
         stale,
-        lambda: build_cells_table(
-            pts.select("cell_key"), cell_index, rings_bcast, LEVEL, MAX_LEVEL
-        ),
+        lambda: build_cells_table_map(pts.select("cell_key"), cand, rings_bcast),
     )
     return repaired.select(
         "cell_key", "cell_id", F.lit(int(rebuilt)).cast("int").alias("rebuilt")

@@ -10,71 +10,31 @@ centroid for the same purpose).
 Dictionary order contract (deterministic, engine == oracle == golden):
 cell ids are dense_rank over the **lexicographic order of the comma-joined
 sorted region-id list**, with the empty list forced to 0 and non-empty lists
-starting at 1.
+starting at 1 (``intern_region_sets``).
+
+One builder: ``build_cells_table_map`` resolves each occupied cell's center
+with the flagship's region kernel (joins/mapjoin._resolve_masks) and
+interns the sets in one Arrow task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Iterable, Sequence
+
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libosmtools_spark.geom.columns import cell_center_cols
-from libosmtools_spark.joins.spatial import spatial_join, spatial_join_adaptive
 
-
-def cell_region_sets(
-    cell_keys: DataFrame, cell_index: DataFrame, rings_bcast, level: int = 6,
-    max_level: int | None = None,
-) -> DataFrame:
-    """distinct cell_key → (cell_key, region_ids sorted array): PIP of the
-    cell center against the region store (T4's centroid query).
-
-    ``max_level`` > level means ``cell_index`` is the adaptive mixed-level
-    index (the engine default); the center query then probes ancestor keys
-    per level.  Output is identical either way — the index shape only
-    changes which centers skip the ray-cast."""
-    clat, clon = cell_center_cols(F.col("cell_key"))
-    centers = cell_keys.select("cell_key").distinct().withColumn("lat", clat).withColumn("lon", clon)
-    if max_level is not None and max_level > level:
-        hits = spatial_join_adaptive(centers, cell_index, rings_bcast, level, max_level)
-    else:
-        hits = spatial_join(centers, cell_index, rings_bcast, level=level)
-    sets = hits.groupBy("cell_key").agg(F.array_sort(F.collect_set("region_id")).alias("region_ids"))
-    return (
-        centers.select("cell_key")
-        .join(sets, "cell_key", "left")
-        .withColumn("region_ids", F.coalesce(F.col("region_ids"), F.array().cast("array<int>")))
-    )
-
-
-def intern_cell_ids(cell_sets: DataFrame) -> DataFrame:
-    """(cell_key, region_ids) → (cell_key, cell_id, region_ids).
-
-    dense_rank over the canonical set string; empty ⇒ 0
-    (/root/reference/src/OsmTriangulationRegionStore.cpp:990-996).  The
-    window is over the *distinct set strings* (dimension-scale), not the
-    cells table, so the single-partition window is bounded.
-    """
-    keyed = cell_sets.withColumn("set_key", F.concat_ws(",", F.col("region_ids")))
-    distinct_sets = keyed.select("set_key").filter(F.col("set_key") != "").distinct()
-    w = Window.orderBy("set_key")
-    dict_df = distinct_sets.withColumn("cell_id", F.dense_rank().over(w))
-    return (
-        keyed.join(F.broadcast(dict_df), "set_key", "left")
-        .withColumn("cell_id", F.coalesce(F.col("cell_id"), F.lit(0)))
-        .select("cell_key", "cell_id", "region_ids")
-    )
-
-
-def build_cells_table(
-    point_cells: DataFrame, cell_index: DataFrame, rings_bcast, level: int = 6,
-    max_level: int | None = None,
-) -> DataFrame:
-    """distinct cells among points → the cells dictionary table
-    (cell_key, cell_id, region_ids)."""
-    return intern_cell_ids(
-        cell_region_sets(point_cells, cell_index, rings_bcast, level, max_level)
-    )
+def intern_region_sets(region_lists: Iterable[Sequence[int]]) -> np.ndarray:
+    """Sorted region-id lists → int32 cell ids by the dictionary order
+    contract: dense rank over the lexicographic order of the comma-joined
+    lists, empty list pinned to 0 (the reference's
+    OsmTriangulationRegionStore.cpp:990-996).  Python str order == Spark
+    UTF8 binary order on ASCII digits and commas."""
+    set_keys = [",".join(map(str, ids)) for ids in region_lists]
+    ranked = {s: r + 1 for r, s in enumerate(sorted({s for s in set_keys if s}))}
+    return np.fromiter((ranked.get(s, 0) for s in set_keys), dtype=np.int32, count=len(set_keys))
 
 
 def build_cells_table_map(
@@ -83,31 +43,23 @@ def build_cells_table_map(
     rings_bcast,
     input_batch_unique: bool = False,
 ) -> DataFrame:
-    """build_cells_table on the broadcast-kernel path (engine flagship
-    default) — output identical to the join-based build (parity-tested).
+    """distinct cells among ``point_cells.cell_key`` → the cells dictionary
+    (cell_key, cell_id, region_ids): the engine's one dictionary builder.
 
-    FUSED single-task build: the cells dictionary is dimension-scale BY
-    CONTRACT (it is broadcast into the flagship join right after, and the
-    reference holds the analogous cellIdToCellList in memory), yet the old
-    pipeline spent five tiny distributed stages on it — distinct exchange,
-    a centers mapInArrow stage, the set-string distinct, the dense_rank
-    window (its own single-partition exchange), and the dictionary join —
-    each paying fixed scheduling/boundary cost that together rivalled the
-    flagship's whole fact pass at bench scale (measured: cells branch
-    1.64 s vs 0.82 s for the 200k-page kernel pass).  Now ONE Arrow task
-    on the repartition(1)-gathered distinct keys computes centers (the
-    exact cell_center_cols arithmetic, same IEEE op order), resolves
-    region sets with the same `_resolve_masks` kernel, and interns ids by
-    the same contract: dense rank over the lexicographic order of the
-    comma-joined sorted region-id strings, empty set pinned to 0.
+    The dictionary is dimension-scale BY CONTRACT (it is broadcast into the
+    flagship join right after, and the reference holds the analogous
+    cellIdToCellList in memory), so ONE Arrow task on the
+    repartition(1)-gathered keys computes cell centers (the exact
+    cell_center_cols arithmetic, same IEEE op order), resolves their region
+    sets with the flagship's ``_resolve_masks`` kernel, and interns ids with
+    ``intern_region_sets``.  A NULL key (page without a geocode) gets the
+    empty set and cell 0.
 
     ``input_batch_unique=True`` skips the distinct exchange for callers
     whose input is already batch-deduplicated near dimension scale (the
     flagship kernel's batch-unique keys, SpatialEngine.kernel_cells, or
     page_cell_keys_text); corpus-scale callers keep distinct-first so the
     single-task gather never sees fact-table row counts."""
-    import numpy as np
-
     from libosmtools_spark.geom import kernels as K
     from libosmtools_spark.joins.mapjoin import _masks_to_region_lists, _resolve_masks
 
@@ -134,7 +86,7 @@ def build_cells_table_map(
         n = len(keys)
         # centers via the EXACT cell_center_cols formula — same op order
         # (iy·size − 90.0) + size/2, so the doubles feeding the ray-cast
-        # are bit-identical to the JVM-computed centers of the old path
+        # are bit-identical to the JVM-computed ones
         la = np.full(n, np.nan)
         lo = np.full(n, np.nan)
         valid = keys >= 0
@@ -148,11 +100,7 @@ def build_cells_table_map(
             lo[valid] = ix.astype(np.float64) * size - 180.0 + size / 2
         masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
         offs, vals = _masks_to_region_lists(masks)
-        set_keys = [",".join(map(str, vals[offs[i] : offs[i + 1]])) for i in range(n)]
-        # dense rank over lexicographically sorted non-empty set strings —
-        # Python str order == Spark UTF8 binary order on ASCII digits/commas
-        ranked = {s: r + 1 for r, s in enumerate(sorted({s for s in set_keys if s}))}
-        cell_id = np.fromiter((ranked.get(s, 0) for s in set_keys), dtype=np.int32, count=n)
+        cell_id = intern_region_sets(vals[offs[i] : offs[i + 1]] for i in range(n))
         out_keys = pa.array([None if k < 0 else int(k) for k in keys], type=pa.int64())
         yield pa.RecordBatch.from_arrays(
             [

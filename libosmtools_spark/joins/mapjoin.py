@@ -11,11 +11,13 @@ translation is a single ``mapInArrow`` pass:
     searchsorted + mask OR, boundary candidates ray-cast) →
     (url, cell_key, region_ids)
 
-ZERO shuffles, embarrassingly parallel, scales linearly with executors —
-this is the plan that survives 10^12 rows.  The join-based path
-(joins/spatial.py) remains for stores too large to broadcast; the lat/lon
-variant ``map_spatial_join`` serves callers whose coordinates already
-exist as columns (streaming joins, cell centers).
+ZERO shuffles, embarrassingly parallel, scales linearly with executors.
+``_resolve_masks`` is the engine's one region resolver: the flagship
+(``map_spatial_join_text``), the cells dictionary (cells/assign.py) and
+the lat/lon variant ``map_spatial_join`` — for callers whose coordinates
+already exist as columns (streaming joins, oracle queries) — all resolve
+through it.  The relational join (joins/spatial.py) is the fallback for
+stores too large to broadcast.
 """
 
 from __future__ import annotations
@@ -387,7 +389,6 @@ def map_spatial_join(
     id_col: str = "url",
     lat: str = "lat",
     lon: str = "lon",
-    n_regions: int | None = None,
     carry_cols: tuple = (),
 ) -> DataFrame:
     """points(id, lat, lon, cell_key) → (id, cell_key, region_ids array).
@@ -398,17 +399,9 @@ def map_spatial_join(
     a per-point int64 BITMASK (multi-word for stores >62 regions) — pure
     integer vector ops, no Python-object strings in the hot path (string
     assembly doubled CPU time at high thread counts from memory stalls).
-    Masks are decoded to sorted region-id arrays JVM-side."""
-    built = candidates_bcast.value["n_regions"]
-    if n_regions is None:
-        n_regions = built
-    elif n_regions != built:
-        # the mask geometry (n_words) is baked into the prebuilt full_masks
-        # arrays: a larger override would read past them, a smaller one
-        # would silently truncate high region ids
-        raise ValueError(
-            f"n_regions={n_regions} does not match the broadcast index build ({built})"
-        )
+    Masks decode to sorted region-id arrays inside the batch
+    (_masks_to_region_lists)."""
+    n_regions = candidates_bcast.value["n_regions"]
     n_words = max(1, (n_regions + 62) // 63)
     dtypes = dict(points.dtypes)
     id_type = dtypes[id_col]

@@ -1,8 +1,13 @@
 """The flagship end-to-end pipeline (SURVEY.md §3.3 Spark lifecycle):
 
-pages → geocode(text) → cell_key arithmetic → cell-index equi-join →
-PIP-refine partial hits → region sets per url → cells dictionary →
+pages → one text-in ``mapInArrow`` kernel (geocode, cell key, region set
+per page; joins/mapjoin.py) → cells dictionary over the occupied cells
+(cells/assign.build_cells_table_map) → broadcast join →
 (url, cell_key, cell_id, region_ids).
+
+``SpatialEngine`` resolves regions with that one kernel only; the
+relational ``joins.spatial.spatial_join_adaptive`` is the fallback for
+region stores too large to broadcast.
 """
 
 from __future__ import annotations
@@ -13,20 +18,10 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from libosmtools_spark.cells.assign import (
-    assign_point_cell_ids,
-    build_cells_table,
-    build_cells_table_map,
-)
+from libosmtools_spark.cells.assign import assign_point_cell_ids, build_cells_table_map
 from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
 from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE, map_spatial_join_text
-from libosmtools_spark.joins.spatial import (
-    geocode_pages,
-    page_region_sets,
-    spatial_join_adaptive,
-    spatial_join_adaptive_left,
-    with_cell_key,
-)
+from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
 
 DEFAULT_LEVEL = 6
 #: levels of recursive boundary refinement below the base grid — the
@@ -92,25 +87,19 @@ class SpatialEngine:
     def page_regions(self, pages: DataFrame) -> DataFrame:
         """(url, region_ids sorted array) for every page — join-output parity
         target (BASELINE.json north_star)."""
-        pts = self.page_points(pages).select("url", "lat", "lon", "cell_key")
-        hits = spatial_join_adaptive(
-            pts, self.cell_index, self.rings_bcast, self.level, self.max_level
-        )
-        return page_region_sets(hits.select("url", "region_id"), pages)
+        return self.flagship_kernel(pages).select("url", "region_ids")
 
     def page_region_rows(self, pages: DataFrame) -> DataFrame:
-        """Exploded (url, region_id) rows — the raw join output."""
-        pts = self.page_points(pages).select("url", "lat", "lon", "cell_key")
-        return spatial_join_adaptive(
-            pts, self.cell_index, self.rings_bcast, self.level, self.max_level
-        ).select("url", "region_id")
+        """Exploded (url, region_id) rows — one per containing region."""
+        return self.flagship_kernel(pages).select(
+            "url", F.explode("region_ids").alias("region_id")
+        )
 
     def cells(self, pages: DataFrame) -> DataFrame:
         """(cell_key, cell_id, region_ids) dictionary over the cells the
         pages occupy (T4)."""
-        pts = self.page_points(pages).select("cell_key")
-        return build_cells_table(
-            pts, self.cell_index, self.rings_bcast, self.level, self.max_level
+        return build_cells_table_map(
+            self.page_points(pages).select("cell_key"), self.candidates_bcast, self.rings_bcast
         )
 
     def page_cells(self, pages: DataFrame) -> DataFrame:
@@ -167,29 +156,6 @@ class SpatialEngine:
         )
         return with_cell_ids(res, self.kernel_cells(res))
 
-    def flagship(self, pages: DataFrame) -> DataFrame:
-        """(url, cell_key, cell_id, region_ids) — ONE wide pass:
-
-        left-join the broadcast cell index (every page survives; failed PIP
-        candidates become NULL), then a single groupBy(url) builds the
-        region set AND carries cell_key — no page×page join anywhere.  The
-        cells dictionary is dimension-scale and broadcast.  Total cost at
-        scale: one broadcast join + one shuffle on url (the adaptive left
-        join keeps the shuffle at ~1× the page count: non-matching probe
-        rows are dropped except each page's guaranteed base-level row)."""
-        pts = self.page_points(pages).select("url", "lat", "lon", "cell_key")
-        hits = spatial_join_adaptive_left(
-            pts, self.cell_index, self.rings_bcast, self.level, self.max_level
-        )
-        agg = hits.groupBy("url").agg(
-            F.first("cell_key").alias("cell_key"),
-            F.array_sort(F.collect_set("region_id")).alias("region_ids"),
-        )
-        cells = build_cells_table_map(
-            pts.select("cell_key"), self.candidates_bcast, self.rings_bcast
-        )
-        return with_cell_ids(agg, cells)
-
 
 def with_cell_ids(rows: DataFrame, cells: DataFrame) -> DataFrame:
     """(url, cell_key, region_ids, …) rows + the cells dictionary →
@@ -217,10 +183,12 @@ def pages_from_html(pages: DataFrame) -> DataFrame:
 
 
 def run_flagship(spark: SparkSession, fixtures_dir: str, level: int = DEFAULT_LEVEL) -> DataFrame:
-    """pages → (url, cell_key, cell_id, region_ids)."""
+    """pages → (url, cell_key, cell_id, region_ids) by
+    ``SpatialEngine.flagship_map``, so the call itself runs the kernel pass
+    (its eager checkpoint)."""
     pages = spark.read.parquet(os.path.join(fixtures_dir, "pages.parquet"))
     eng = SpatialEngine.from_fixtures(spark, fixtures_dir, level)
-    return eng.flagship(pages)
+    return eng.flagship_map(pages)
 
 
 #: format of run_flagship_staged's stage tables, part of their checkpoint

@@ -190,19 +190,15 @@ class TestFacesParity:
         for q, _la, _lo, fi in queries:
             assert got.get(q, ()) == faces[fi]["set"], f"query {q} vs face {fi}"
 
-    def test_interned_dictionaries_coincide(self, spark, faces_and_queries):
-        """The face-derived dictionary and the engine's intern_cell_ids
+    def test_interned_dictionaries_coincide(self, faces_and_queries):
+        """The face-derived dictionary and the engine's intern_region_sets
         produce the same set→id mapping (the T4 rule both sides pin)."""
-        from libosmtools_spark.cells.assign import intern_cell_ids
+        from libosmtools_spark.cells.assign import intern_region_sets
 
         faces, _ = faces_and_queries
-        face_dict = _intern([f["set"] for f in faces])
-        rows = [
-            (i, list(f["set"])) for i, f in enumerate(faces)
-        ]
-        df = spark.createDataFrame(rows, "cell_key long, region_ids array<int>")
-        engine_rows = intern_cell_ids(df).collect()
-        engine_dict = {tuple(r["region_ids"]): r["cell_id"] for r in engine_rows}
+        sets = [f["set"] for f in faces]
+        face_dict = _intern(sets)
+        engine_dict = dict(zip(sets, intern_region_sets(sets).tolist()))
         assert engine_dict == face_dict
         # empty face set pinned to cell 0 on both sides
         assert face_dict[()] == 0

@@ -92,7 +92,8 @@ if __name__ == "__main__":
 class TestAdaptiveShuffleJoin:
     def test_non_broadcast_matches(self, spark, sf_smoke):
         """broadcast_index=False (shuffle join on probe key, for stores past
-        broadcast size) produces the identical hit set."""
+        broadcast size) produces the identical hit set, and its probe join
+        shuffles even though both sides fit the broadcast threshold."""
         import os
 
         from libosmtools_spark.pipeline import SpatialEngine
@@ -107,3 +108,6 @@ class TestAdaptiveShuffleJoin:
                                   eng.level, eng.max_level,
                                   broadcast_index=False).select("url", "region_id")
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+        b.collect()  # the final adaptive plan
+        plan = b._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan and "ShuffledHashJoin" in plan

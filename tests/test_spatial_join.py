@@ -4,6 +4,7 @@ tile-to-cell assignments per url)."""
 
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +24,33 @@ def pages(spark, sf_smoke):
 
 def _sorted_records(pdf, key):
     return pdf.sort_values(key).reset_index(drop=True)
+
+
+def _flagship_rows(df):
+    """url → (cell_key, cell_id, region_ids) as exact Python values (in
+    pandas, a NULL key would turn the column float64 and round level-6
+    keys)."""
+    rows = df.select("url", "cell_key", "cell_id", "region_ids").collect()
+    out = {r.url: (r.cell_key, r.cell_id, tuple(r.region_ids)) for r in rows}
+    assert len(out) == len(rows), "one row per url"
+    return out
+
+
+def _read_goldens(sf_dir):
+    names = ("golden_page_regions", "golden_page_cells")
+    return {n: pd.read_parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
+
+
+def _golden_flagship_rows(golden):
+    """golden_page_regions ⋈ golden_page_cells on url, as _flagship_rows
+    (``golden`` maps names to frames, as synth.golden_frames returns)."""
+    m = golden["golden_page_regions"].merge(
+        golden["golden_page_cells"], on="url", validate="one_to_one"
+    )
+    return {
+        u: (int(k), int(c), tuple(int(x) for x in ids))
+        for u, k, c, ids in zip(m["url"], m["cell_key"], m["cell_id"], m["region_ids"])
+    }
 
 
 class TestColumnKernelParity:
@@ -105,6 +133,25 @@ class TestPageRegionsParity:
             "region_ids", F.col("region_ids").cast("array<long>")
         )
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+class TestRelationalFallbackParity:
+    @pytest.mark.parametrize("broadcast_index", [True, False])
+    def test_region_sets_match_golden(self, engine, pages, sf_smoke, broadcast_index):
+        """The one relational fallback, spatial_join_adaptive, with the cell
+        index broadcast and shuffled: every page's region set equals the
+        brute-force golden (pages in no region produce no row)."""
+        from libosmtools_spark.joins.spatial import spatial_join_adaptive
+
+        pts = engine.page_points(pages).select("url", "lat", "lon")
+        hits = spatial_join_adaptive(
+            pts, engine.cell_index, engine.rings_bcast, engine.level, engine.max_level,
+            broadcast_index=broadcast_index,
+        )
+        sets = hits.groupBy("url").agg(F.array_sort(F.collect_set("region_id")).alias("ids"))
+        got = {r.url: tuple(r.ids) for r in sets.collect()}
+        golden = _golden_flagship_rows(_read_goldens(sf_smoke))
+        assert got == {u: ids for u, (_, _, ids) in golden.items() if ids}
 
 
 class TestCellsParity:
@@ -205,16 +252,23 @@ class TestInvariants:
 
 class TestFlagshipMapParity:
     def test_map_join_equals_shuffle_flagship(self, engine, pages):
-        """Zero-shuffle flagship_map ≡ shuffle flagship, row for row."""
-        a = engine.flagship(pages).toPandas()
-        b = engine.flagship_map(pages).toPandas()
-        for df in (a, b):
-            df["region_ids"] = df["region_ids"].map(lambda x: tuple(int(i) for i in x))
-        a = a.sort_values("url").reset_index(drop=True)
-        b = b.sort_values("url").reset_index(drop=True)
-        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+        """Zero-shuffle flagship_map ≡ the shuffle path (spatial_join_adaptive
+        with the cell index shuffled, grouped per url), region set for
+        region set; the shuffle path has no row for a page in no region."""
+        from libosmtools_spark.joins.spatial import spatial_join_adaptive
 
-    def test_map_join_null_cellkey_shares_batch(self, engine, pages, spark):
+        pts = engine.page_points(pages).select("url", "lat", "lon")
+        hits = spatial_join_adaptive(
+            pts, engine.cell_index, engine.rings_bcast, engine.level, engine.max_level,
+            broadcast_index=False,
+        )
+        sets = hits.groupBy("url").agg(F.array_sort(F.collect_set("region_id")).alias("ids"))
+        want = {r.url: tuple(r.ids) for r in sets.collect()}
+        got = {u: ids for u, (_, _, ids) in _flagship_rows(engine.flagship_map(pages)).items()}
+        assert len(got) == pages.count()
+        assert {u: ids for u, ids in got.items() if ids} == want
+
+    def test_map_join_null_cellkey_shares_batch(self, engine, pages, spark, sf_smoke):
         """Regression: a geocode-less page (NULL cell_key) in the SAME Arrow
         batch as valid pages must not corrupt the batch.  Before the -1
         sentinel fix, one NULL made pandas deliver cell_key as float64;
@@ -225,24 +279,15 @@ class TestFlagshipMapParity:
             pages.schema,
         )
         mixed = pages.unionByName(no_geo).coalesce(1)  # ONE partition → one batch
-        got = engine.flagship_map(mixed).toPandas().set_index("url")
-        want = engine.flagship(mixed).toPandas().set_index("url")
-        assert len(got) == len(want)
-        for url in want.index:
-            assert list(got.loc[url, "region_ids"]) == list(want.loc[url, "region_ids"]), url
-            g_key, w_key = got.loc[url, "cell_key"], want.loc[url, "cell_key"]
-            assert (pd.isna(g_key) and pd.isna(w_key)) or g_key == w_key, url
-        assert list(got.loc["page://no-geocode", "region_ids"]) == []
-        assert pd.isna(got.loc["page://no-geocode", "cell_key"])
+        got = _flagship_rows(engine.flagship_map(mixed))
+        assert got.pop("page://no-geocode") == (None, 0, ())
+        assert got == _golden_flagship_rows(_read_goldens(sf_smoke))
 
-    def test_map_join_matches_golden(self, engine, pages, sf_smoke, spark):
-        got = engine.flagship_map(pages).select("url", "region_ids").toPandas()
-        want = spark.read.parquet(os.path.join(sf_smoke, "golden_page_regions.parquet")).toPandas()
-        got["region_ids"] = got["region_ids"].map(lambda a: tuple(int(x) for x in a))
-        want["region_ids"] = want["region_ids"].map(lambda a: tuple(int(x) for x in a))
-        g = _sorted_records(got, "url")
-        w = _sorted_records(want, "url")
-        pd.testing.assert_frame_equal(g, w, check_dtype=False)
+    def test_map_join_matches_golden(self, engine, pages, sf_smoke):
+        """flagship_map ≡ golden_page_regions ⋈ golden_page_cells, row for
+        row on all four columns."""
+        golden = _golden_flagship_rows(_read_goldens(sf_smoke))
+        assert _flagship_rows(engine.flagship_map(pages)) == golden
 
     def test_one_pages_scan_per_call(self, spark, engine, sf_smoke):
         """All the jobs of one flagship_map call (its eager kernel
@@ -253,58 +298,21 @@ class TestFlagshipMapParity:
         pages = spark.read.parquet(path)
         assert scans_per_call(spark, lambda: engine.flagship_map(pages), path) == 1
 
-    def test_fallback_flagship_runs_pip_once(self, engine, pages):
-        """The shuffle fallback evaluates its PIP UDF in ONE
-        ArrowEvalPython (the row filter must not inline the predicate)."""
-        plan = engine.flagship(pages)._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == 1
 
-    def test_fallback_drops_failed_candidates_before_shuffle(self, engine, pages):
-        """The left join hands the groupBy(url) the same rows as filtering
-        after a plain (deterministic) PIP would: a failed non-base
-        candidate is dropped, not kept as a NULL row."""
-        from libosmtools_spark.geom.columns import cell_key_col
-        from libosmtools_spark.joins.spatial import make_pip_udf, spatial_join_adaptive_left
-
-        pts = engine.page_points(pages).select("url", "lat", "lon", "cell_key")
-        got = spatial_join_adaptive_left(
-            pts, engine.cell_index, engine.rings_bcast, engine.level, engine.max_level
-        )
-        levels = range(engine.level, engine.max_level + 1)
-        probes = F.array(*[cell_key_col(F.col("lat"), F.col("lon"), lv) for lv in levels])
-        idx = engine.cell_index.select(F.col("cell_key").alias("_k"), "region_id", "full")
-        joined = pts.select("*", F.posexplode(probes).alias("_pos", "_k")).join(
-            F.broadcast(idx), "_k", "left"
-        )
-        pip = make_pip_udf(engine.rings_bcast)
-        hit = F.col("region_id").isNotNull() & (
-            F.col("full") | pip(F.col("lat"), F.col("lon"), F.col("region_id"))
-        )
-        want = (
-            joined.withColumn("region_id", F.when(hit, F.col("region_id")))
-            .filter(F.col("region_id").isNotNull() | (F.col("_pos") == 0))
-            .select(got.columns)
-        )
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-
-def _dictionary_store():
+def _dictionary_specs():
     """Region 0 apart; region 1 a background strip holding twelve disjoint
     regions 2..13: occupied cells carry the 14 distinct sets {0}, {1} and
     {1, k}, so the set-string order ("1,10" < "1,2") differs from the
     numeric one."""
-    from libosmtools_spark.data.synth import regions_frames
     from libosmtools_spark.geom import kernels as K
 
     R = K.rect_ring
     rects = [R(-40.0, -40.0, -30.0, -30.0), R(0.0, 0.0, 10.0, 100.0)]
     rects += [R(1.0, 8.0 * j + 1.0, 9.0, 8.0 * j + 7.0) for j in range(12)]
-    specs = [
+    return [
         {"region_id": i, "name": f"r{i}", "rings": [("outer", K.snap(r))], "tags": {}}
         for i, r in enumerate(rects)
     ]
-    return regions_frames(specs)[1]
 
 
 def _dictionary_pages(shift: int = 0) -> pd.DataFrame:
@@ -319,40 +327,50 @@ def _dictionary_pages(shift: int = 0) -> pd.DataFrame:
     return pd.DataFrame({"url": [f"u{i}" for i in range(len(texts))], "text": texts})
 
 
+def _brute_flagship(pdf: pd.DataFrame, level: int):
+    """Brute-force reference over _dictionary_specs: (flagship rows as
+    _flagship_rows, cells dictionary rows).  synth.golden_frames (all-pairs
+    PIP of every page and of every occupied cell's K.cell_center) covers the
+    geocoded pages; the others get the NULL key and cell 0."""
+    from libosmtools_spark.data.synth import extract_geo, golden_frames
+
+    geo = ~np.isnan(extract_geo(pdf["text"])[0])
+    golden = golden_frames(pdf[geo].reset_index(drop=True), _dictionary_specs(), level)
+    rows = {u: (None, 0, ()) for u in pdf["url"][~geo]}
+    rows.update(_golden_flagship_rows(golden))
+    gc = golden["golden_cells"]
+    cells = {
+        (int(k), int(c), tuple(int(x) for x in ids))
+        for k, c, ids in zip(gc["cell_key"], gc["cell_id"], gc["region_ids"])
+    }
+    if not geo.all():
+        cells.add((None, 0, ()))
+    return rows, cells
+
+
 class TestFlagshipDictionaryFeed:
     """The flagship builds its cells dictionary from the batch-unique keys
     of its one kernel pass."""
 
     @pytest.fixture(scope="class")
     def store_engine(self, spark):
+        from libosmtools_spark.data.synth import regions_frames
         from libosmtools_spark.pipeline import SpatialEngine
 
         rings = spark.createDataFrame(
-            _dictionary_store(),
+            regions_frames(_dictionary_specs())[1],
             "region_id long, ring_id long, ring_role string, "
             "points array<struct<lat:double,lon:double>>",
         )
         return SpatialEngine(spark, rings)
 
-    @staticmethod
-    def _rows(df, cols):
-        rows = df.select(*cols).collect()
-        return sorted((tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows), key=repr)
-
-    def test_dictionary_equals_relational_interning(self, spark, store_engine):
-        from libosmtools_spark.cells.assign import cell_region_sets, intern_cell_ids
-        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
-
+    def test_dictionary_equals_brute_interning(self, spark, store_engine):
         eng = store_engine
-        pages = spark.createDataFrame(_dictionary_pages())
-        got = eng.kernel_cells(eng.flagship_kernel(pages))
-        keys = with_cell_key(geocode_pages(pages), level=eng.level).select("cell_key")
-        want = intern_cell_ids(
-            cell_region_sets(keys, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level)
-        )
-        cols = ("cell_key", "cell_id", "region_ids")
-        g, w = self._rows(got, cols), self._rows(want, cols)
-        assert g == w
+        pdf = _dictionary_pages()
+        got = eng.kernel_cells(eng.flagship_kernel(spark.createDataFrame(pdf))).collect()
+        g = {(r.cell_key, r.cell_id, tuple(r.region_ids)) for r in got}
+        assert len(g) == len(got)
+        assert g == _brute_flagship(pdf, eng.level)[1]
         assert (None, 0, ()) in g  # the NULL-key row of geocode-less pages
         assert len({r[2] for r in g if r[2]}) > 10
         # "1,10" ranks before "1,2": string order, not numeric
@@ -394,16 +412,15 @@ class TestFlagshipDictionaryFeed:
 
     def test_no_reuse_across_calls(self, spark, store_engine):
         """Two calls over different page frames with the same urls: each
-        result matches its own frame's fallback flagship, also when both
-        are materialized after both calls."""
+        result matches its own frame's brute-force reference, also when
+        both are materialized after both calls."""
         eng = store_engine
-        a = spark.createDataFrame(_dictionary_pages())
-        b = spark.createDataFrame(_dictionary_pages(shift=7))
-        got_a, got_b = eng.flagship_map(a), eng.flagship_map(b)
-        cols = ("url", "cell_key", "cell_id", "region_ids")
-        ra, rb = self._rows(got_a, cols), self._rows(got_b, cols)
-        assert ra == self._rows(eng.flagship(a), cols)
-        assert rb == self._rows(eng.flagship(b), cols)
+        pdf_a, pdf_b = _dictionary_pages(), _dictionary_pages(shift=7)
+        got_a = eng.flagship_map(spark.createDataFrame(pdf_a))
+        got_b = eng.flagship_map(spark.createDataFrame(pdf_b))
+        ra, rb = _flagship_rows(got_a), _flagship_rows(got_b)
+        assert ra == _brute_flagship(pdf_a, eng.level)[0]
+        assert rb == _brute_flagship(pdf_b, eng.level)[0]
         assert ra != rb
 
 

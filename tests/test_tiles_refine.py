@@ -165,7 +165,7 @@ class TestRefine:
         (/root/reference/src/OsmTriangulationRegionStore.cpp:927-943):
         unchanged geometry keeps the dictionary; moved points (unknown
         cells) trigger the clear-and-rebuild path."""
-        from libosmtools_spark.cells.assign import build_cells_table, handle_cell_changes
+        from libosmtools_spark.cells.assign import build_cells_table_map, handle_cell_changes
         from pyspark.sql import functions as F
 
         pts = engine.page_points(pages).select("url", "cell_key")
@@ -178,9 +178,8 @@ class TestRefine:
         new_cells, rebuilt2 = handle_cell_changes(
             moved,
             cells,
-            rebuild=lambda: build_cells_table(
-                moved.select("cell_key"), engine.cell_index, engine.rings_bcast,
-                engine.level, engine.max_level,
+            rebuild=lambda: build_cells_table_map(
+                moved.select("cell_key"), engine.candidates_bcast, engine.rings_bcast
             ),
         )
         assert rebuilt2

@@ -7,7 +7,8 @@ the plan-shape invariants the engine is designed around:
 - the zero-shuffle flagship has NO Exchange at all before the final agg;
 - one flagship_map call scans the pages parquet once, across all its jobs
   (the eager kernel checkpoint and the frame it returns);
-- the shuffle fallback flagship evaluates its PIP UDF once.
+- the relational fallback (spatial_join_adaptive) evaluates its PIP UDF
+  once, and with broadcast_index=False its probe join really shuffles.
 
 Usage: python tools/dump_plans.py [sf_dir]
 """
@@ -56,6 +57,7 @@ def main():
 
     import __spark_entry__ as entry
     from libosmtools_spark.data.synth import ensure_fixtures
+    from libosmtools_spark.joins.spatial import spatial_join_adaptive
     from libosmtools_spark.pipeline import SpatialEngine
     from libosmtools_spark.session import get_spark
 
@@ -87,11 +89,14 @@ def main():
         ["MapInArrow"],
     ))
 
-    fallback_plan = plan_of(eng.flagship(pages))
+    pts = eng.page_points(pages).select("url", "lat", "lon")
+    fallback_plan = plan_of(spatial_join_adaptive(
+        pts, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level, broadcast_index=False
+    ))
     sections.append((
-        "flagship (shuffle fallback plan)",
+        "spatial_join_adaptive, broadcast_index=False (relational fallback, shuffled index)",
         fallback_plan,
-        ["BroadcastHashJoin"],
+        ["ShuffledHashJoin", "ArrowEvalPython"],
     ))
 
     qs = entry.queries()
@@ -114,8 +119,11 @@ def main():
     checks.append(f"- pages parquet scans in one flagship_map call (all its jobs): {scans} "
                   f"{'✓' if scans == 1 else '✗ UNEXPECTED'}")
     pips = len(re.findall(r"^\(\d+\) ArrowEvalPython", fallback_plan, re.M))
-    checks.append(f"- PIP UDF evaluations (ArrowEvalPython) in the fallback flagship: {pips} "
+    checks.append(f"- PIP UDF evaluations (ArrowEvalPython) in spatial_join_adaptive: {pips} "
                   f"{'✓' if pips == 1 else '✗ UNEXPECTED'}")
+    bhj = fallback_plan.count("BroadcastHashJoin")
+    checks.append(f"- BroadcastHashJoins in spatial_join_adaptive(broadcast_index=False): {bhj} "
+                  f"{'✓' if bhj == 0 and 'ShuffledHashJoin' in fallback_plan else '✗ UNEXPECTED'}")
     scan_q = plan_of(spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
                      .select("doc_id").filter("doc_id > 100"))
     checks.append(f"- parquet pushdown visible (PushedFilters): "

@@ -279,10 +279,6 @@ Cross-checks:
   split — the explode would otherwise serialize); 8 tasks/core so the last
   wave's straggler tail costs 1/waves of the wall (4/core measured ~13%
   idle at 16 cores).
-- fallback shuffle plan (joins/spatial.py) for non-broadcastable stores:
-  broadcast-index left join + ONE groupBy(url); AQE post-shuffle coalescing
-  capped reducer parallelism on this workload (55 s → 20 s at 16 cores with
-  coalescing off) — partition sizing matters more than operator choice.
 """
     os.makedirs(os.path.join(repo, "BENCH"), exist_ok=True)
     path = os.path.join(repo, "BENCH", "BASELINE.md")

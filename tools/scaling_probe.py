@@ -50,9 +50,9 @@ def run_variant():
     if variant == "cache":
         pts = pts.persist()
         from libosmtools_spark.joins.mapjoin import map_spatial_join
-        from libosmtools_spark.cells.assign import build_cells_table
+        from libosmtools_spark.cells.assign import build_cells_table_map
         res = map_spatial_join(pts, eng.candidates_bcast, eng.rings_bcast)
-        cells = build_cells_table(pts.select("cell_key"), eng.cell_index, eng.rings_bcast, eng.level)
+        cells = build_cells_table_map(pts.select("cell_key"), eng.candidates_bcast, eng.rings_bcast)
         out = res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
         out = out.select("url", "cell_key", F.coalesce("cell_id", F.lit(0)).alias("cell_id"), "region_ids")
     else:

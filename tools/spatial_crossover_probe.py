@@ -1,7 +1,7 @@
 """Broadcast-vs-shuffle crossover probe for the spatial region store
-(VERDICT r7 item 4): the flagship's plan of record (joins/mapjoin.py)
-assumes the polygon store + cell index BROADCAST; spatial_join_adaptive /
-SpatialEngine.flagship is the big-store shuffle fallback.  This probe
+(VERDICT r7 item 4): the flagship (joins/mapjoin.py) assumes the polygon
+store + cell index BROADCAST; spatial_join_adaptive with
+broadcast_index=False is the big-store shuffle fallback.  This probe
 measures, store size by store size, what the dispatch point costs:
 
 - engine build wall (driver-local covering build ≤ LOCAL_INDEX_MAX_REGIONS,
@@ -9,9 +9,10 @@ measures, store size by store size, what the dispatch point costs:
 - broadcast payload size of the kernel candidate tables (the dense
   full-mask rows grow as occupied-cells × ceil(regions/63) words — the
   structural reason broadcast must stop somewhere);
-- flagship query wall on the broadcast-kernel path (flagship_map) vs the
-  shuffle-join path (flagship), same 200k-point corpus aimed at the
-  store's hotspots.
+- query wall on the broadcast-kernel path (flagship_map) vs the
+  shuffle-join path (spatial_join_adaptive with the index shuffled, plus
+  the per-url region-set groupBy), same 200k-point corpus aimed at the
+  store's hotspots.  The shuffle side builds no cells dictionary.
 
 Usage: python tools/spatial_crossover_probe.py [n_regions ...]
        (default sizes 64 256 1024 4096 8192)
@@ -82,6 +83,20 @@ def bcast_payload_bytes(cand: dict) -> int:
     return total
 
 
+def shuffle_region_sets(eng, pages):
+    """(url, region_ids) of the pages in at least one region, by the
+    relational fallback with its cell index shuffled, not broadcast."""
+    from pyspark.sql import functions as F
+
+    from libosmtools_spark.joins.spatial import spatial_join_adaptive
+
+    pts = eng.page_points(pages).select("url", "lat", "lon")
+    hits = spatial_join_adaptive(
+        pts, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level, broadcast_index=False
+    )
+    return hits.groupBy("url").agg(F.array_sort(F.collect_set("region_id")).alias("region_ids"))
+
+
 def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [64, 256, 1024, 4096, 8192]
 
@@ -92,8 +107,14 @@ def main() -> None:
     pages = make_pages(spark, N_POINTS)
     pages.count()  # materialize the synthetic corpus outside the timers
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
+    def best_of_2(query) -> float:
+        """min wall of two runs, each timing the call and a noop write"""
+        walls = []
+        for _ in range(2):
+            t0 = time.monotonic()
+            query(pages).write.format("noop").mode("overwrite").save()
+            walls.append(time.monotonic() - t0)
+        return min(walls)
 
     print(f"{'regions':>8} {'build_s':>8} {'bcast_s':>8} {'bcast_MB':>9} "
           f"{'map_s':>7} {'shuffle_s':>9}", flush=True)
@@ -109,18 +130,8 @@ def main() -> None:
         t_bcast = time.monotonic() - t0
         mb = bcast_payload_bytes(eng.candidates_bcast.value) / 1e6
 
-        t_map = min(
-            (lambda: (lambda s: (noop(eng.flagship_map(pages)), time.monotonic() - s)[1])(
-                time.monotonic()
-            ))()
-            for _ in range(2)
-        )
-        t_shuffle = min(
-            (lambda: (lambda s: (noop(eng.flagship(pages)), time.monotonic() - s)[1])(
-                time.monotonic()
-            ))()
-            for _ in range(2)
-        )
+        t_map = best_of_2(eng.flagship_map)
+        t_shuffle = best_of_2(lambda p: shuffle_region_sets(eng, p))
         print(f"{n:>8} {t_build:>8.2f} {t_bcast:>8.2f} {mb:>9.1f} "
               f"{t_map:>7.2f} {t_shuffle:>9.2f}", flush=True)
     spark.stop()
