@@ -151,16 +151,25 @@ def _region_pred_sql(lat: str, lon: str) -> dict[int, str]:
     return preds
 
 
-def _oracle_region_rings(spark: SparkSession) -> DataFrame:
-    rows = []
-    for rid, rings in ORACLE_REGIONS.items():
-        for ring_id, (role, pts) in enumerate(rings):
-            rows.append(
-                (rid, ring_id, role, [{"lat": float(a), "lon": float(o)} for a, o in pts])
-            )
+def _region_rings(spark: SparkSession, regions: dict) -> DataFrame:
+    """region_id → [(role, ring)] → the engine's region_rings frame."""
+    rows = [
+        (rid, ring_id, role, [{"lat": float(a), "lon": float(o)} for a, o in pts])
+        for rid, rings in regions.items()
+        for ring_id, (role, pts) in enumerate(rings)
+    ]
     return spark.createDataFrame(
         rows, "region_id int, ring_id int, ring_role string, points array<struct<lat:double,lon:double>>"
     )
+
+
+def _oracle_region_rings(spark: SparkSession) -> DataFrame:
+    return _region_rings(spark, ORACLE_REGIONS)
+
+
+def _antim_region_rings(spark: SparkSession) -> DataFrame:
+    """The wrapped store (ANTIM_REGIONS, defined below)."""
+    return _region_rings(spark, ANTIM_REGIONS)
 
 
 def _session_key(spark: SparkSession) -> str:
@@ -173,46 +182,28 @@ def _session_key(spark: SparkSession) -> str:
 def _register_caches() -> None:
     from libosmtools_spark.session import register_session_cache
 
-    for d in (_ENGINE_CACHE, _CAND_CACHE, _CELLS_CACHE, _ANTIM_CACHE):
+    for d in (_ENGINE_CACHE, _CELLS_CACHE):
         register_session_cache(d)
 
+
+#: the queries' region stores, by name → their rings frame
+_STORES = {"oracle": _oracle_region_rings, "antimeridian": _antim_region_rings}
 
 _ENGINE_CACHE: dict = {}
 
 
-def _engine(spark: SparkSession):
-    """Build (once per session) the real spatial-engine artifacts for the
-    oracle region store: broadcast rings + cell-coverage index."""
-    key = _session_key(spark)
+def _engine(spark: SparkSession, store: str):
+    """The ``SpatialEngine`` of a named store (``_STORES``), built once per
+    session with the engine-default ADAPTIVE mixed-level index (boundary
+    cells refined MAX_LEVEL-LEVEL extra levels) — the oracles below thereby
+    verify the production index shape, not a simplified flat one."""
+    key = (_session_key(spark), store)
     if key not in _ENGINE_CACHE:
-        from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
+        from libosmtools_spark.pipeline import SpatialEngine
 
         _register_caches()
-        rings_df = _oracle_region_rings(spark)
-        rings_bcast = spark.sparkContext.broadcast(rings_lookup(rings_df.toPandas()))
-        # the engine-default ADAPTIVE mixed-level index (boundary cells
-        # refined MAX_LEVEL-LEVEL extra levels) — the oracles below thereby
-        # verify the production index shape, not a simplified flat one
-        cell_index = build_adaptive_cell_index(rings_df, LEVEL, MAX_LEVEL).cache()
-        _ENGINE_CACHE[key] = (rings_df, rings_bcast, cell_index)
+        _ENGINE_CACHE[key] = SpatialEngine(spark, _STORES[store](spark), LEVEL, MAX_LEVEL)
     return _ENGINE_CACHE[key]
-
-
-_CAND_CACHE: dict = {}
-
-
-def _candidates_bcast(spark: SparkSession):
-    """cell_key → (region ids, full flags, clipped edges) broadcast for the
-    zero-shuffle map join, built once per session from the oracle store."""
-    key = _session_key(spark)
-    if key not in _CAND_CACHE:
-        from libosmtools_spark.joins.mapjoin import build_cell_candidates
-
-        _, rings_bcast, cell_index = _engine(spark)
-        _CAND_CACHE[key] = spark.sparkContext.broadcast(
-            build_cell_candidates(cell_index.toPandas(), rings_bcast.value)
-        )
-    return _CAND_CACHE[key]
 
 
 _CELLS_CACHE: dict = {}
@@ -228,10 +219,10 @@ def _doc_cells_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
         from libosmtools_spark.cells.assign import build_cells_table_map
         from libosmtools_spark.joins.spatial import with_cell_key
 
-        _, rings_bcast, _ = _engine(spark)
+        eng = _engine(spark, "oracle")
         pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
         _CELLS_CACHE[key] = build_cells_table_map(
-            pts.select("cell_key"), _candidates_bcast(spark), rings_bcast
+            pts.select("cell_key"), eng.candidates_bcast, eng.rings_bcast
         ).cache()
     return _CELLS_CACHE[key]
 
@@ -274,34 +265,6 @@ _ANTIM_PRED = {
     2: "({lat} > 0.05 AND {lat} < 80.05 AND ({lon} > 176.05 OR {lon} < -175.95))",
     3: "({lat} > -60.05 AND {lat} < -50.05 AND {lon} > 160.05 AND {lon} < 179.95)",
 }
-
-
-_ANTIM_CACHE: dict = {}
-
-
-def _antim_engine(spark: SparkSession):
-    """(rings_df, rings_bcast, cell_index, candidates_bcast) for the wrapped
-    store — the same production artifacts as _engine, over ANTIM_REGIONS."""
-    key = _session_key(spark)
-    if key not in _ANTIM_CACHE:
-        from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
-        from libosmtools_spark.joins.mapjoin import build_cell_candidates
-
-        _register_caches()
-        rows = []
-        for rid, rings in ANTIM_REGIONS.items():
-            for ring_id, (role, pts) in enumerate(rings):
-                rows.append((rid, ring_id, role, [{"lat": float(a), "lon": float(o)} for a, o in pts]))
-        rings_df = spark.createDataFrame(
-            rows, "region_id int, ring_id int, ring_role string, points array<struct<lat:double,lon:double>>"
-        )
-        rings_bcast = spark.sparkContext.broadcast(rings_lookup(rings_df.toPandas()))
-        cell_index = build_adaptive_cell_index(rings_df, LEVEL, MAX_LEVEL).cache()
-        cand = spark.sparkContext.broadcast(
-            build_cell_candidates(cell_index.toPandas(), rings_bcast.value)
-        )
-        _ANTIM_CACHE[key] = (rings_df, rings_bcast, cell_index, cand)
-    return _ANTIM_CACHE[key]
 
 
 # cell-key arithmetic shared with the oracle (single definition)
@@ -530,9 +493,9 @@ def _fixtures_for(sf_dir: str) -> str:
 def q_pip_region_rows(spark, sf_dir):
     from libosmtools_spark.joins.spatial import spatial_join_adaptive, with_cell_key
 
-    _, rings_bcast, cell_index = _engine(spark)
+    eng = _engine(spark, "oracle")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    hits = spatial_join_adaptive(pts, cell_index, rings_bcast, LEVEL, MAX_LEVEL)
+    hits = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast, LEVEL, MAX_LEVEL)
     return hits.select("doc_id", "region_id")
 
 
@@ -544,10 +507,10 @@ def q_pip_region_rows_shuffle(spark, sf_dir):
     ann_cosine_blocked follow for their forced paths)."""
     from libosmtools_spark.joins.spatial import spatial_join_adaptive, with_cell_key
 
-    _, rings_bcast, cell_index = _engine(spark)
+    eng = _engine(spark, "oracle")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
     hits = spatial_join_adaptive(
-        pts, cell_index, rings_bcast, LEVEL, MAX_LEVEL, broadcast_index=False
+        pts, eng.cell_index, eng.rings_bcast, LEVEL, MAX_LEVEL, broadcast_index=False
     )
     return hits.select("doc_id", "region_id")
 
@@ -595,8 +558,8 @@ def q_cell_repair(spark, sf_dir):
     from libosmtools_spark.cells.assign import build_cells_table_map, handle_cell_changes
     from libosmtools_spark.joins.spatial import with_cell_key
 
-    _, rings_bcast, _ = _engine(spark)
-    cand = _candidates_bcast(spark)
+    eng = _engine(spark, "oracle")
+    cand, rings_bcast = eng.candidates_bcast, eng.rings_bcast
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
     stale = build_cells_table_map(
         pts.filter(F.col("doc_id") % 7 == 0).select("cell_key"), cand, rings_bcast
@@ -665,7 +628,7 @@ def q_raster_to_vector(spark, sf_dir):
 def q_vector_to_raster(spark, sf_dir):
     from libosmtools_spark.tiles.materialize import vector_to_raster
 
-    rings_df, _, _ = _engine(spark)
+    rings_df = _engine(spark, "oracle").region_rings
     rect_ids = sorted(set(RECTS) | set(HOLED))
     cov = vector_to_raster(rings_df.filter(F.col("region_id").isin(rect_ids)), LEVEL)
     return cov.select(
@@ -690,7 +653,7 @@ def q_region_footprint(spark, sf_dir):
     analog with an exact SQL mirror)."""
     from libosmtools_spark.tiles.materialize import region_raster_footprint, vector_to_raster
 
-    rings_df, _, _ = _engine(spark)
+    rings_df = _engine(spark, "oracle").region_rings
     rect_ids = sorted(set(RECTS) | set(HOLED))
     cov = vector_to_raster(rings_df.filter(F.col("region_id").isin(rect_ids)), LEVEL)
     return region_raster_footprint(cov).select(
@@ -735,18 +698,18 @@ def q_flagship_map(spark, sf_dir):
     """The ZERO-shuffle broadcast-store map join (joins/mapjoin.py) end to
     end over the derived points — the flagship operator under an exact SQL
     oracle (cell assignment + dictionary + per-point region sets)."""
+    from libosmtools_spark.cells.assign import assign_point_cell_ids
     from libosmtools_spark.joins.mapjoin import map_spatial_join
     from libosmtools_spark.joins.spatial import with_cell_key
 
-    _, rings_bcast, _ = _engine(spark)
+    eng = _engine(spark, "oracle")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    res = map_spatial_join(pts, _candidates_bcast(spark), rings_bcast, id_col="doc_id")
-    cells = _doc_cells_dict(spark, sf_dir)
-    out = res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
+    res = map_spatial_join(pts, eng.candidates_bcast, eng.rings_bcast, id_col="doc_id")
+    out = assign_point_cell_ids(res, _doc_cells_dict(spark, sf_dir))
     return out.select(
         "doc_id",
         "cell_key",
-        F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
+        "cell_id",
         F.concat_ws(",", F.col("region_ids").cast("array<string>")).alias("region_set"),
     )
 
@@ -757,9 +720,9 @@ def q_pip_antimeridian(spark, sf_dir):
     wrapped coverage keys + frame-shifted ray-cast."""
     from libosmtools_spark.joins.spatial import spatial_join_adaptive, with_cell_key
 
-    rings_df, rings_bcast, cell_index, _ = _antim_engine(spark)
+    eng = _engine(spark, "antimeridian")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    hits = spatial_join_adaptive(pts, cell_index, rings_bcast, LEVEL, MAX_LEVEL)
+    hits = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast, LEVEL, MAX_LEVEL)
     return hits.select("doc_id", "region_id")
 
 
@@ -769,9 +732,9 @@ def q_flagship_antimeridian(spark, sf_dir):
     from libosmtools_spark.joins.mapjoin import map_spatial_join
     from libosmtools_spark.joins.spatial import with_cell_key
 
-    _, rings_bcast, _, cand = _antim_engine(spark)
+    eng = _engine(spark, "antimeridian")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    res = map_spatial_join(pts, cand, rings_bcast, id_col="doc_id")
+    res = map_spatial_join(pts, eng.candidates_bcast, eng.rings_bcast, id_col="doc_id")
     return res.select(
         "doc_id",
         F.concat_ws(",", F.col("region_ids").cast("array<string>")).alias("region_set"),

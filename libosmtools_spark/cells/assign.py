@@ -63,8 +63,7 @@ def build_cells_table_map(
     from libosmtools_spark.geom import kernels as K
     from libosmtools_spark.joins.mapjoin import _masks_to_region_lists, _resolve_masks
 
-    n_regions = candidates_bcast.value["n_regions"]
-    n_words = max(1, (n_regions + 62) // 63)
+    n_words = candidates_bcast.value["n_words"]
     index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     keys_df = point_cells.select("cell_key")

@@ -293,8 +293,10 @@ def minhash_lsh_pairs(
     # earlier rounds measured the raw array<long> key slower than the
     # string cast — the hashed long beats both).  A cross-(band,key) hash
     # collision can only ADD a candidate pair, and every candidate passes
-    # exact-Jaccard verification below, so the declared output is
-    # unchanged; collisions are ~2^-64 per bucket pair.
+    # exact-Jaccard verification below, so a collision can add a true
+    # pair the band match alone would have missed but never a false one:
+    # the output is a superset of the unhashed key's, not guaranteed
+    # byte-identical to it (collisions are ~2^-64 per bucket pair).
     # checkpointed ONCE: the aliased self-join below otherwise re-runs the
     # whole signature pipeline per side, and with both sides reading the
     # same materialized rows the two bucket exchanges canonicalize equal

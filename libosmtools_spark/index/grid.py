@@ -13,18 +13,18 @@ for every region, the cells at a chosen level overlapping it, classified
 - ``full = false`` — the region boundary touches the cell: query points go
   through the exact ray-cast refine (the "candidate" list).
 
-The build fans out one pandas group per region (``applyInPandas``), so it
-scales with the region count; at planet scale the output is
-range-partitioned by cell_key so Iceberg/parquet partition pruning applies.
+The adaptive build takes the rings its caller has already collected
+(``SpatialEngine`` collects them once for the broadcast lookup): stores up
+to ``LOCAL_INDEX_MAX_REGIONS`` regions are covered locally from that
+frame, larger ones fan out one pandas group per region (``applyInPandas``),
+so the build scales with the region count.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from libosmtools_spark.geom import kernels as K
 
@@ -72,55 +72,49 @@ def build_cell_index(region_rings: DataFrame, level: int) -> DataFrame:
 LOCAL_INDEX_MAX_REGIONS = 1024
 
 
+def _adaptive_rows(rid: int, pdf: pd.DataFrame, base_level: int, max_level: int) -> pd.DataFrame:
+    outers, inners = _rings_of_group(pdf)
+    keys, full = K.adaptive_covering_cells(outers, inners, base_level, max_level)
+    return pd.DataFrame(
+        {"cell_key": keys.astype(np.int64), "region_id": np.int32(rid), "full": full}
+    )
+
+
 def build_adaptive_cell_index(
     region_rings: DataFrame,
     base_level: int,
     max_level: int,
-    rings_pdf: pd.DataFrame | None = None,
+    rings_pdf: pd.DataFrame,
 ) -> DataFrame:
     """Multi-level cell_index(cell_key, region_id, full) with keys at mixed
     levels (kernels.adaptive_covering_cells) — the production index shape:
     boundary-linear size, so even continent polygons stay broadcastable.
     Query side: with_ancestor_keys + spatial_join_adaptive.
 
+    ``rings_pdf`` is ``region_rings`` already collected: every caller
+    collects the rings for the broadcast lookup (``rings_lookup``) anyway.
     Count-gated physical dispatch (identical rows either way, order aside —
     every consumer joins/aggregates or re-sorts): dimension-scale stores
     (≤ LOCAL_INDEX_MAX_REGIONS regions) compute the covering driver-side
-    from ``rings_pdf`` (or one collect) — the engine collects the rings for
-    the broadcast lookup anyway, so this saves a whole shuffle + UDF stage
-    per engine build; larger stores fan out one pandas group per region."""
+    from ``rings_pdf``, with no Spark job; larger stores fan out one pandas
+    group of ``region_rings`` per region."""
+    if rings_pdf["region_id"].nunique() > LOCAL_INDEX_MAX_REGIONS:
 
-    def per_region(pdf: pd.DataFrame) -> pd.DataFrame:
-        rid = int(pdf["region_id"].iloc[0])
-        outers, inners = _rings_of_group(pdf)
-        keys, full = K.adaptive_covering_cells(outers, inners, base_level, max_level)
-        return pd.DataFrame(
-            {"cell_key": keys.astype(np.int64), "region_id": np.int32(rid), "full": full}
-        )
+        def per_region(pdf: pd.DataFrame) -> pd.DataFrame:
+            return _adaptive_rows(int(pdf["region_id"].iloc[0]), pdf, base_level, max_level)
 
-    if rings_pdf is None:
-        n_regions = region_rings.select("region_id").distinct().count()
-        if n_regions <= LOCAL_INDEX_MAX_REGIONS:
-            rings_pdf = region_rings.toPandas()
-    if rings_pdf is not None and rings_pdf["region_id"].nunique() <= LOCAL_INDEX_MAX_REGIONS:
-        parts = []
-        for rid, grp in rings_pdf.groupby("region_id"):
-            outers, inners = _rings_of_group(grp)
-            keys, full = K.adaptive_covering_cells(outers, inners, base_level, max_level)
-            parts.append(
-                pd.DataFrame(
-                    {"cell_key": keys.astype(np.int64), "region_id": np.int32(rid), "full": full}
-                )
-            )
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"cell_key": [], "region_id": [], "full": []})
-        )
-        spark = region_rings.sparkSession
-        return spark.createDataFrame(pdf, CELL_INDEX_SCHEMA)
+        return region_rings.groupBy("region_id").applyInPandas(per_region, CELL_INDEX_SCHEMA)
 
-    return region_rings.groupBy("region_id").applyInPandas(per_region, CELL_INDEX_SCHEMA)
+    parts = [
+        _adaptive_rows(rid, grp, base_level, max_level)
+        for rid, grp in rings_pdf.groupby("region_id")
+    ]
+    pdf = (
+        pd.concat(parts, ignore_index=True)
+        if parts
+        else pd.DataFrame({"cell_key": [], "region_id": [], "full": []})
+    )
+    return region_rings.sparkSession.createDataFrame(pdf, CELL_INDEX_SCHEMA)
 
 
 def rings_lookup(region_rings_pdf: pd.DataFrame) -> dict:
@@ -139,6 +133,3 @@ def rings_lookup(region_rings_pdf: pd.DataFrame) -> dict:
         out[int(rid)] = K.unwrap_rings(outers, inners)
     return out
 
-
-def load_region_rings(spark: SparkSession, fixtures_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{fixtures_dir}/region_rings.parquet")

@@ -150,11 +150,6 @@ def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict | None = Non
     return {"n_regions": n_regions, "n_words": n_words, "levels": levels}
 
 
-#: the single-long bitmask path needs global region ids ≤ MASK_MAX_REGION;
-#: larger stores use the multi-word mask (array<long>)
-MASK_MAX_REGION = 62
-
-
 def _masks_to_region_lists(masks: np.ndarray):
     """(n, n_words) int64 bitmasks → (offsets, values) int32 arrays for a
     ``pa.ListArray`` of ascending region ids per row.
@@ -301,18 +296,16 @@ def map_spatial_join_text(
     pages: DataFrame,
     candidates_bcast,
     rings_bcast,
-    id_col: str = "url",
-    text_col: str = "text",
     level: int = 6,
 ) -> DataFrame:
-    """pages(id, text) → (id, cell_key, region_ids, batch_unique): the
+    """pages(url, text) → (url, cell_key, region_ids, batch_unique): the
     zero-shuffle flagship kernel with geocode + cell-key derivation INSIDE
     the Arrow batch (RE2 + numpy) instead of JVM expressions upstream.
 
     Same results as ``with_cell_key(geocode_pages(pages))`` →
     ``map_spatial_join`` (see _geocode_batch for the parity argument); the
-    win is the Python boundary: only (id, text) crosses into the worker —
-    not (id, lat, lon, cell_key) — and the JVM regex pass disappears.
+    win is the Python boundary: only (url, text) crosses into the worker —
+    not (url, lat, lon, cell_key) — and the JVM regex pass disappears.
     Measured at the 25.6M-page scaling tier (local[4]): the JVM
     geocode+key stage alone was ~4.7 s and the identity Arrow round trip
     ~10.6 s; fusing them removes a whole JVM pass and 24 bytes/row of
@@ -323,10 +316,9 @@ def map_spatial_join_text(
     it yields the cells-dictionary feed (build_cells_table_map) at
     batches × occupied-cells rows, straight from this one pass over the
     pages."""
-    n_regions = candidates_bcast.value["n_regions"]
-    n_words = max(1, (n_regions + 62) // 63)
-    id_type = dict(pages.dtypes)[id_col]
-    schema = f"{id_col} {id_type}, cell_key long, region_ids array<int>, {BATCH_UNIQUE} boolean"
+    n_words = candidates_bcast.value["n_words"]
+    url_type = dict(pages.dtypes)["url"]
+    schema = f"url {url_type}, cell_key long, region_ids array<int>, {BATCH_UNIQUE} boolean"
     index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     def run(batches):
@@ -335,7 +327,7 @@ def map_spatial_join_text(
         tabs = candidates_bcast.value["levels"]
         rings = rings_bcast.value
         for batch in batches:
-            la, lo = _geocode_batch(batch.column(text_col))
+            la, lo = _geocode_batch(batch.column("text"))
             keys = _keys_of(la, lo, level)
             masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
             offs, vals = _masks_to_region_lists(masks)
@@ -343,24 +335,22 @@ def map_spatial_join_text(
             first[np.unique(keys, return_index=True)[1]] = True
             yield pa.RecordBatch.from_arrays(
                 [
-                    batch.column(id_col),
+                    batch.column("url"),
                     pa.array(keys, type=pa.int64()),
                     pa.ListArray.from_arrays(
                         pa.array(offs, type=pa.int32()), pa.array(vals, type=pa.int32())
                     ),
                     pa.array(first),
                 ],
-                [id_col, "cell_key", "region_ids", BATCH_UNIQUE],
+                ["url", "cell_key", "region_ids", BATCH_UNIQUE],
             )
 
-    out = pages.select(id_col, text_col).mapInArrow(run, schema)
+    out = pages.select("url", "text").mapInArrow(run, schema)
     restore_key = F.when(F.col("cell_key") >= 0, F.col("cell_key"))
-    return out.select(id_col, restore_key.alias("cell_key"), "region_ids", BATCH_UNIQUE)
+    return out.select("url", restore_key.alias("cell_key"), "region_ids", BATCH_UNIQUE)
 
 
-def page_cell_keys_text(
-    pages: DataFrame, text_col: str = "text", level: int = 6
-) -> DataFrame:
+def page_cell_keys_text(pages: DataFrame, level: int = 6) -> DataFrame:
     """pages(…, text) → distinct-ish (cell_key) rows (NULL for pages with
     no geocode), one text-only Arrow pass emitting each batch's UNIQUE
     keys — the occupied cells alone, without resolving regions (the
@@ -374,11 +364,11 @@ def page_cell_keys_text(
         import pyarrow as pa
 
         for batch in batches:
-            la, lo = _geocode_batch(batch.column(text_col))
+            la, lo = _geocode_batch(batch.column("text"))
             keys = np.unique(_keys_of(la, lo, level))
             yield pa.RecordBatch.from_arrays([pa.array(keys, type=pa.int64())], ["cell_key"])
 
-    out = pages.select(text_col).mapInArrow(run, schema)
+    out = pages.select("text").mapInArrow(run, schema)
     return out.select(F.when(F.col("cell_key") >= 0, F.col("cell_key")).alias("cell_key"))
 
 
@@ -401,8 +391,7 @@ def map_spatial_join(
     assembly doubled CPU time at high thread counts from memory stalls).
     Masks decode to sorted region-id arrays inside the batch
     (_masks_to_region_lists)."""
-    n_regions = candidates_bcast.value["n_regions"]
-    n_words = max(1, (n_regions + 62) // 63)
+    n_words = candidates_bcast.value["n_words"]
     dtypes = dict(points.dtypes)
     id_type = dtypes[id_col]
     # region_ids emitted DIRECTLY as an Arrow ListArray (offsets + int32

@@ -2,12 +2,15 @@
 
 pages → one text-in ``mapInArrow`` kernel (geocode, cell key, region set
 per page; joins/mapjoin.py) → cells dictionary over the occupied cells
-(cells/assign.build_cells_table_map) → broadcast join →
-(url, cell_key, cell_id, region_ids).
+(cells/assign.build_cells_table_map) → broadcast cell-id join
+(cells/assign.assign_point_cell_ids) → (url, cell_key, cell_id, region_ids).
 
-``SpatialEngine`` resolves regions with that one kernel only; the
-relational ``joins.spatial.spatial_join_adaptive`` is the fallback for
-region stores too large to broadcast.
+``SpatialEngine`` is the only code that builds a region store's artifacts
+(rings broadcast, adaptive cell index, candidate tables): the
+``__spark_entry__`` queries and the tests build every store through it.
+It resolves regions with the one kernel only; the relational
+``joins.spatial.spatial_join_adaptive`` is the fallback for region stores
+too large to broadcast.
 """
 
 from __future__ import annotations
@@ -34,10 +37,15 @@ DEFAULT_LEVEL = 6
 #: level degenerates to the flat single-level index (the round-1/2 shape).
 DEFAULT_REFINE_LEVELS = 4
 
+#: the flagship's output columns, in the order consumers hash them
+FLAGSHIP_COLUMNS = ("url", "cell_key", "cell_id", "region_ids")
+
 
 class SpatialEngine:
     """Holds the built index artifacts (the analog of the reference's
-    OsmGridRegionTree + OsmTriangulationRegionStore pair) for a region store.
+    OsmGridRegionTree + OsmTriangulationRegionStore pair) for a region store,
+    built from one collect of its rings: the rings broadcast, the adaptive
+    cell index and, on first use, the candidate tables broadcast.
     """
 
     def __init__(
@@ -154,20 +162,7 @@ class SpatialEngine:
         res = self.flagship_kernel(pages).localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
-        return with_cell_ids(res, self.kernel_cells(res))
-
-
-def with_cell_ids(rows: DataFrame, cells: DataFrame) -> DataFrame:
-    """(url, cell_key, region_ids, …) rows + the cells dictionary →
-    (url, cell_key, cell_id, region_ids): broadcast join on cell_key; a
-    NULL or unknown key gets cell 0."""
-    out = rows.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-    return out.select(
-        "url",
-        "cell_key",
-        F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-        "region_ids",
-    )
+        return assign_point_cell_ids(res, self.kernel_cells(res)).select(*FLAGSHIP_COLUMNS)
 
 
 def pages_from_html(pages: DataFrame) -> DataFrame:
@@ -231,4 +226,8 @@ def run_flagship_staged(
 
     res = cp.stage("page_regions", fp, lambda: eng.flagship_kernel(spark.read.parquet(pages_path)))
     cells = cp.stage("cells", fp, lambda: eng.kernel_cells(res))
-    return cp.stage("flagship", fp, lambda: with_cell_ids(res, cells))
+    return cp.stage(
+        "flagship",
+        fp,
+        lambda: assign_point_cell_ids(res, cells).select(*FLAGSHIP_COLUMNS),
+    )

@@ -64,20 +64,34 @@ def test_oracle_match(spark, duck, name):
     _match(spark, duck, name)
 
 
-def test_session_caches_registered_and_clearable(spark):
-    """Per-session engine caches are registered with the session module and
-    empty out on clear_session_caches (the stop_spark hook) — a process
-    cycling many sessions does not accumulate dead broadcasts; rebuilding
-    afterwards works."""
+def test_session_caches_registered_and_clearable(spark, monkeypatch):
+    """One engine cache: each named store is one SpatialEngine per session,
+    whose candidate tables are built once.  The caches are registered with
+    the session module and empty out on clear_session_caches (the
+    stop_spark hook) — a process cycling many sessions does not accumulate
+    dead broadcasts; rebuilding afterwards works."""
     from libosmtools_spark import session as S
+    from libosmtools_spark.joins import mapjoin as M
 
-    entry._engine(spark)
-    entry._antim_engine(spark)
-    assert entry._ENGINE_CACHE and entry._ANTIM_CACHE
-    assert any(c is entry._ENGINE_CACHE for c in S._SESSION_CACHES)
+    built = []
+    real = M.build_cell_candidates
+    monkeypatch.setattr(M, "build_cell_candidates", lambda *a: built.append(1) or real(*a))
     S.clear_session_caches()
-    assert not entry._ENGINE_CACHE and not entry._ANTIM_CACHE and not entry._CELLS_CACHE
-    entry._engine(spark)  # rebuild after eviction works
+    engines = {s: entry._engine(spark, s) for s in entry._STORES}
+    assert set(engines) == {"oracle", "antimeridian"}
+    assert engines["oracle"] is not engines["antimeridian"]
+    for s, eng in engines.items():
+        assert entry._engine(spark, s) is eng
+        assert entry._engine(spark, s).candidates_bcast is eng.candidates_bcast
+    assert len(built) == len(engines)
+    entry._doc_cells_dict(spark, SF_DIR)
+    assert all(any(c is d for c in S._SESSION_CACHES) for d in (entry._ENGINE_CACHE, entry._CELLS_CACHE))
+    assert len(entry._ENGINE_CACHE) == 2 and len(entry._CELLS_CACHE) == 1
+    S.clear_session_caches()
+    assert not entry._ENGINE_CACHE and not entry._CELLS_CACHE
+    rebuilt = entry._engine(spark, "oracle")  # rebuild after eviction works
+    assert rebuilt is not engines["oracle"]
+    assert rebuilt.cell_index.count() == engines["oracle"].cell_index.count() > 0
     assert len(entry._ENGINE_CACHE) == 1
 
 

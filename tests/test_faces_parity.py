@@ -159,8 +159,8 @@ class TestFacesParity:
     def test_grid_point_sets_match_faces(self, spark, faces_and_queries):
         """Engine per-point region sets == containing face's set, for every
         query point strictly inside a face."""
-        from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
         from libosmtools_spark.joins.spatial import spatial_join_adaptive, with_cell_key
+        from libosmtools_spark.pipeline import SpatialEngine
 
         faces, queries = faces_and_queries
         rings_rows = [
@@ -172,15 +172,14 @@ class TestFacesParity:
             "region_id int, ring_id int, ring_role string, "
             "points array<struct<lat:double,lon:double>>",
         )
-        rings_bcast = spark.sparkContext.broadcast(rings_lookup(rings_df.toPandas()))
-        cell_index = build_adaptive_cell_index(rings_df, 6, 10)
+        eng = SpatialEngine(spark, rings_df, 6, 10)
         pts = with_cell_key(
             spark.createDataFrame(
                 [(q, la, lo) for q, la, lo, _ in queries], "qid long, lat double, lon double"
             ),
             level=6,
         )
-        hits = spatial_join_adaptive(pts, cell_index, rings_bcast, 6, 10)
+        hits = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast, 6, 10)
         got = {
             r["qid"]: tuple(sorted(r["rs"]))
             for r in hits.groupBy("qid")

@@ -59,7 +59,9 @@ class TestAdaptiveJoin:
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(800)
         pts = eng.page_points(pages).select("url", "lat", "lon")
 
-        adaptive = build_adaptive_cell_index(eng.region_rings, base_level=3, max_level=8)
+        adaptive = build_adaptive_cell_index(
+            eng.region_rings, base_level=3, max_level=8, rings_pdf=eng.region_rings.toPandas()
+        )
         got = (
             spatial_join_adaptive(pts, adaptive, eng.rings_bcast, 3, 8)
             .select("url", "region_id")
@@ -78,7 +80,7 @@ class TestAdaptiveJoin:
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(500)
         pts = eng.page_points(pages).select("url", "lat", "lon")
-        adaptive = build_adaptive_cell_index(eng.region_rings, 3, 8)
+        adaptive = build_adaptive_cell_index(eng.region_rings, 3, 8, eng.region_rings.toPandas())
         got = spatial_join_adaptive(pts, adaptive, eng.rings_bcast, 3, 8).select("url", "region_id").toPandas()
         assert not got.duplicated(["url", "region_id"]).any()
 

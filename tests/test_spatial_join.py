@@ -424,6 +424,47 @@ class TestFlagshipDictionaryFeed:
         assert ra != rb
 
 
+class TestLocalIndexGate:
+    """Both sides of ``grid.LOCAL_INDEX_MAX_REGIONS``: with the gate at 0,
+    every store takes the distributed ``applyInPandas`` build."""
+
+    @staticmethod
+    def _index_rows(df):
+        return sorted((r.cell_key, r.region_id, r.full) for r in df.collect())
+
+    @pytest.mark.parametrize("store", ["fixture", "antimeridian"])
+    def test_distributed_build_equals_local(self, spark, sf_smoke, monkeypatch, store):
+        import __spark_entry__ as entry
+        from libosmtools_spark.index import grid
+
+        if store == "fixture":
+            rings = spark.read.parquet(os.path.join(sf_smoke, "region_rings.parquet"))
+        else:
+            rings = entry._antim_region_rings(spark)
+        rings_pdf = rings.toPandas()
+        local = grid.build_adaptive_cell_index(rings, 6, 10, rings_pdf=rings_pdf)
+        monkeypatch.setattr(grid, "LOCAL_INDEX_MAX_REGIONS", 0)
+        dist = grid.build_adaptive_cell_index(rings, 6, 10, rings_pdf=rings_pdf)
+
+        def plan(df):
+            return df._jdf.queryExecution().analyzed().toString()
+
+        assert "FlatMapGroupsInPandas" in plan(dist)
+        assert "FlatMapGroupsInPandas" not in plan(local)
+        assert self._index_rows(dist) == self._index_rows(local)
+
+    def test_distributed_build_flagship_matches_golden(self, spark, sf_smoke, pages, monkeypatch):
+        from libosmtools_spark.index import grid
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        monkeypatch.setattr(grid, "LOCAL_INDEX_MAX_REGIONS", 0)
+        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
+        analyzed = eng.cell_index._jdf.queryExecution().analyzed().toString()
+        assert "FlatMapGroupsInPandas" in analyzed
+        golden = _golden_flagship_rows(_read_goldens(sf_smoke))
+        assert _flagship_rows(eng.flagship_map(pages)) == golden
+
+
 class TestRoundTrip:
     def test_write_read_back_identical(self, engine, pages, tmp_path, spark):
         out = engine.page_cells(pages)
