@@ -24,20 +24,13 @@ def get_spark(
 ) -> SparkSession:
     cpus = cpus or default_cpus()
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
-    # Scan-parallelism FLOOR, derived from the session's core count (not a
-    # constant): many-small-file inputs otherwise pack into a handful of
-    # 128 MB splits (each file padded by openCostInBytes), leaving most
-    # cores idle and making the stage straggler-bound — measured on the
-    # 128-file scaling corpus: ~6 splits at local[4], ~18 at local[16],
-    # i.e. ~1 wave with a heavy tail.  waves-per-core ×4 keeps the tail at
-    # ~1/4 of a wave (guide §2.6/§6); on a cluster defaultParallelism is
-    # total executor cores, so the floor scales with the cluster.
-    min_scan_parts = cpus * int(os.environ.get("SPARK_GRAFT_SCAN_WAVES", "4"))
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.minPartitionNum", str(min_scan_parts))
+        # No scan floor: file splits default to one wave (minPartitionNum = default.parallelism).
+        # A cpus × 4 floor binds only below cpus × 4 × 128 MB, cutting one-row-group files into
+        # empty byte ranges, each still a Python task (~0.23 s of worker CPU: invalidate_caches).
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
