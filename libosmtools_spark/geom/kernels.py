@@ -265,9 +265,11 @@ def cell_diag_m(key):
 #: target element count of the (points x edges) temporaries — keeps each
 #: intermediate ≈512 KB so the ray cast's working set stays within a core's
 #: PRIVATE cache instead of the shared L3 (the multiprocess-contention
-#: microbench, tools/pip_microbench.py, measures 4→16-proc efficiency 0.95
-#: at 65k elements vs 0.72 at 1M; the unchunked kernel was measured 60.7 s
-#: vs 0.68 s on a 65k-point × 800-edge batch and did not scale with cores).
+#: microbench tools/pip_microbench.py, since deleted — recover it with
+#: ``git show 0ecc20e:tools/pip_microbench.py`` — measured 4→16-proc
+#: efficiency 0.95 at 65k elements vs 0.72 at 1M; the unchunked kernel was
+#: measured 60.7 s vs 0.68 s on a 65k-point × 800-edge batch and did not
+#: scale with cores).
 _PIP_CHUNK_ELEMS = 65_536
 
 
@@ -277,8 +279,9 @@ def _point_in_ring_block(y, x, y1, x1, y2, x2):
     by ±1 is exact, so the strict `<` (the half-open boundary rule) is
     preserved for on-edge points, unlike a naive inequality flip which
     would turn `<` into `<=` on descending edges.  Measured ~15% faster
-    than the division form under 16-way contention
-    (tools/pip_microbench.py); agrees with it exactly on vertex/edge
+    than the division form under 16-way contention (by
+    tools/pip_microbench.py, since deleted; recover it with ``git show
+    0ecc20e:tools/pip_microbench.py``); agrees with it exactly on vertex/edge
     points (exact products) and everywhere off-boundary."""
     straddle = (y1 <= y) != (y2 <= y)
     d = y2 - y1

@@ -63,8 +63,10 @@ def build_cell_index(region_rings: DataFrame, level: int) -> DataFrame:
 #: 8.7 s wall for the distributed applyInPandas build at local[4], whose
 #: cost is almost all shuffle + python-worker dispatch at dimension scale).
 #: Larger stores keep the distributed per-region build.  The bound is
-#: MEASURED, not asserted (tools/spatial_crossover_probe.py, 64-vertex
-#: star stores, 32 cores): driver-local vs distributed build walls were
+#: MEASURED, not asserted (by tools/spatial_crossover_probe.py, since
+#: deleted; recover it with ``git show
+#: 0ecc20e:tools/spatial_crossover_probe.py``; 64-vertex star stores,
+#: 32 cores): driver-local vs distributed build walls were
 #: 2.9/5.6 s at 512 regions, 5.1/6.4 at 1024, 8.3/6.3 at 2048, 13.3/6.2
 #: at 4096 — the single-core local build crosses the (nearly flat,
 #: fixed-cost-dominated) distributed build between 1k and 2k regions, so

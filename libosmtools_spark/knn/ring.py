@@ -51,9 +51,10 @@ _KNN_CHUNK_ELEMS = 262_144
 _METRIC_COLS = {"flat": sq_euclid_deg_col, "wrap": wrap_sq_euclid_deg_col}
 
 #: below this many points the broadcast-matrix strategy wins outright.
-#: Measured on the bench corpus (tools/knn_probe.py, 32 cores, x10 replica
-#: distribution, warm JVM, min-of-2, after the chunk + one-checkpoint-per-
-#: round fixes): brute/ring walls 1.1/3.4 s at 20k, 2.8/4.2 s at 50k —
+#: Measured on the bench corpus (by tools/knn_probe.py, since deleted;
+#: recover it with ``git show 0ecc20e:tools/knn_probe.py``; 32 cores, x10
+#: replica distribution, warm JVM, min-of-2, after the chunk + one-
+#: checkpoint-per-round fixes): brute/ring walls 1.1/3.4 s at 20k, 2.8/4.2 s at 50k —
 #: brute extrapolates quadratically past ring's near-flat wall at ~60-80k
 #: points.  64k is the measured crossover on this box, NOT a universal
 #: constant: on a real cluster the bound is executor-memory for the

@@ -8,8 +8,13 @@ per page; joins/mapjoin.py) → cells dictionary over the occupied cells
 ``SpatialEngine`` is the only code that builds a region store's artifacts
 (rings broadcast, adaptive cell index, candidate tables): the
 ``__spark_entry__`` queries and the tests build every store through it.
-It resolves regions with the one kernel only; the relational
-``joins.spatial.spatial_join_adaptive`` is the fallback for region stores
+Its surface is the flagship's three stages: ``flagship_kernel`` (the
+one pass that geocodes pages: RE2 inside the kernel), ``kernel_cells``
+(the dictionary, fed from that pass) and ``flagship_map`` (the two
+joined).  Region sets, cell keys and cell ids of pages are read from
+those outputs; the JVM geocoder ``joins.spatial.geocode_pages`` serves
+streaming, hop-split and the relational
+``joins.spatial.spatial_join_adaptive``, the fallback for region stores
 too large to broadcast.
 """
 
@@ -24,7 +29,6 @@ from pyspark.sql import functions as F
 from libosmtools_spark.cells.assign import assign_point_cell_ids, build_cells_table_map
 from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
 from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE, map_spatial_join_text
-from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
 
 DEFAULT_LEVEL = 6
 #: levels of recursive boundary refinement below the base grid — the
@@ -86,35 +90,6 @@ class SpatialEngine:
     def from_fixtures(cls, spark: SparkSession, fixtures_dir: str, level: int = DEFAULT_LEVEL):
         rings = spark.read.parquet(os.path.join(fixtures_dir, "region_rings.parquet"))
         return cls(spark, rings, level)
-
-    # -- queries ---------------------------------------------------------
-
-    def page_points(self, pages: DataFrame) -> DataFrame:
-        return with_cell_key(geocode_pages(pages), level=self.level)
-
-    def page_regions(self, pages: DataFrame) -> DataFrame:
-        """(url, region_ids sorted array) for every page — join-output parity
-        target (BASELINE.json north_star)."""
-        return self.flagship_kernel(pages).select("url", "region_ids")
-
-    def page_region_rows(self, pages: DataFrame) -> DataFrame:
-        """Exploded (url, region_id) rows — one per containing region."""
-        return self.flagship_kernel(pages).select(
-            "url", F.explode("region_ids").alias("region_id")
-        )
-
-    def cells(self, pages: DataFrame) -> DataFrame:
-        """(cell_key, cell_id, region_ids) dictionary over the cells the
-        pages occupy (T4)."""
-        return build_cells_table_map(
-            self.page_points(pages).select("cell_key"), self.candidates_bcast, self.rings_bcast
-        )
-
-    def page_cells(self, pages: DataFrame) -> DataFrame:
-        """(url, cell_key, cell_id) — tile-to-cell assignment per url."""
-        pts = self.page_points(pages).select("url", "cell_key")
-        cells = self.cells(pages)
-        return assign_point_cell_ids(pts, cells).select("url", "cell_key", "cell_id")
 
     def flagship_kernel(self, pages: DataFrame) -> DataFrame:
         """(url, cell_key, region_ids, batch_unique): the one text-in

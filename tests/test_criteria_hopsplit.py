@@ -52,12 +52,15 @@ class TestHopSplit:
     def test_splits_hot_cell(self, spark, sf_smoke):
         from libosmtools_spark.cells.assign import assign_point_cell_ids
         from libosmtools_spark.cells.hopsplit import split_oversized_cells_hopbfs
+        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
         from libosmtools_spark.pipeline import SpatialEngine
 
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
-        pts = eng.page_points(pages).select("url", "lat", "lon", "cell_key")
-        cells = eng.cells(pages)
+        pts = with_cell_key(geocode_pages(pages), level=eng.level).select(
+            "url", "lat", "lon", "cell_key"
+        )
+        cells = eng.kernel_cells(eng.flagship_kernel(pages))
         pc = assign_point_cell_ids(pts, cells)
         out = split_oversized_cells_hopbfs(pc, max_points=200, level=6).toPandas()
         assert len(out) == pages.count()
@@ -74,12 +77,15 @@ class TestHopSplit:
     def test_deterministic(self, spark, sf_smoke):
         from libosmtools_spark.cells.assign import assign_point_cell_ids
         from libosmtools_spark.cells.hopsplit import split_oversized_cells_hopbfs
+        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
         from libosmtools_spark.pipeline import SpatialEngine
 
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(500)
-        pts = eng.page_points(pages).select("url", "lat", "lon", "cell_key")
-        cells = eng.cells(pages)
+        pts = with_cell_key(geocode_pages(pages), level=eng.level).select(
+            "url", "lat", "lon", "cell_key"
+        )
+        cells = eng.kernel_cells(eng.flagship_kernel(pages))
         pc = assign_point_cell_ids(pts, cells)
         a = split_oversized_cells_hopbfs(pc, max_points=100, level=6).toPandas()
         b = split_oversized_cells_hopbfs(pc, max_points=100, level=6).toPandas()

@@ -6,6 +6,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from libosmtools_spark.knn.ring import BRUTE_THRESHOLD
+
 
 @pytest.fixture(scope="module")
 def pages_pts(spark, sf_smoke):
@@ -15,11 +17,29 @@ def pages_pts(spark, sf_smoke):
     return geocode_pages(pages).select("url", "lat", "lon").cache()
 
 
-@pytest.mark.parametrize("method", ["ring", "brute"])
-def test_knn_matches_golden(spark, sf_smoke, pages_pts, method):
+@pytest.mark.parametrize(
+    "method, n_rows, path",
+    [
+        ("ring", None, "ring"),
+        ("brute", None, "brute"),
+        # both sides of the count gate; n_rows skips the dispatch count job
+        ("auto", BRUTE_THRESHOLD, "brute"),
+        ("auto", BRUTE_THRESHOLD + 1, "ring"),
+    ],
+    ids=["ring", "brute", "auto-at-threshold", "auto-past-threshold"],
+)
+def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, method, n_rows, path):
+    from libosmtools_spark.knn import ring
     from libosmtools_spark.knn.ring import knn_join, knn_neighbor_lists
 
-    rows = knn_join(pages_pts, "url", k=5, level=6, method=method)
+    taken = []
+    for name in ("knn_brute", "knn_ring"):
+        impl = getattr(ring, name)
+        monkeypatch.setattr(
+            ring, name, lambda *a, _n=name, _f=impl, **kw: taken.append(_n) or _f(*a, **kw)
+        )
+    rows = knn_join(pages_pts, "url", k=5, level=6, method=method, n_rows=n_rows)
+    assert taken == [f"knn_{path}"]
     got = knn_neighbor_lists(rows, "url").toPandas()
     want = spark.read.parquet(os.path.join(sf_smoke, "golden_knn.parquet")).toPandas()
     got["neighbor_ids"] = got["neighbor_ids"].map(tuple)

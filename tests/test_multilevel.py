@@ -52,12 +52,12 @@ class TestAdaptiveKernel:
 class TestAdaptiveJoin:
     def test_matches_flat_join(self, spark, sf_smoke):
         from libosmtools_spark.index.grid import build_adaptive_cell_index
-        from libosmtools_spark.joins.spatial import spatial_join_adaptive
+        from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
         from libosmtools_spark.pipeline import SpatialEngine
 
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)  # adaptive default 6..10
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(800)
-        pts = eng.page_points(pages).select("url", "lat", "lon")
+        pts = geocode_pages(pages).select("url", "lat", "lon")
 
         adaptive = build_adaptive_cell_index(
             eng.region_rings, base_level=3, max_level=8, rings_pdf=eng.region_rings.toPandas()
@@ -67,19 +67,23 @@ class TestAdaptiveJoin:
             .select("url", "region_id")
             .toPandas()
         )
-        want = eng.page_region_rows(pages).toPandas()
+        want = (
+            eng.flagship_kernel(pages)
+            .select("url", F.explode("region_ids").alias("region_id"))
+            .toPandas()
+        )
         g = set(map(tuple, got.itertuples(index=False)))
         w = set(map(tuple, want.itertuples(index=False)))
         assert g == w
 
     def test_no_duplicate_hits(self, spark, sf_smoke):
         from libosmtools_spark.index.grid import build_adaptive_cell_index
-        from libosmtools_spark.joins.spatial import spatial_join_adaptive
+        from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
         from libosmtools_spark.pipeline import SpatialEngine
 
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(500)
-        pts = eng.page_points(pages).select("url", "lat", "lon")
+        pts = geocode_pages(pages).select("url", "lat", "lon")
         adaptive = build_adaptive_cell_index(eng.region_rings, 3, 8, eng.region_rings.toPandas())
         got = spatial_join_adaptive(pts, adaptive, eng.rings_bcast, 3, 8).select("url", "region_id").toPandas()
         assert not got.duplicated(["url", "region_id"]).any()
@@ -99,11 +103,11 @@ class TestAdaptiveShuffleJoin:
         import os
 
         from libosmtools_spark.pipeline import SpatialEngine
-        from libosmtools_spark.joins.spatial import spatial_join_adaptive
+        from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
 
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(400)
-        pts = eng.page_points(pages).select("url", "lat", "lon")
+        pts = geocode_pages(pages).select("url", "lat", "lon")
         a = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast,
                                   eng.level, eng.max_level).select("url", "region_id")
         b = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast,

@@ -10,11 +10,10 @@ from pyspark.sql import functions as F
 class TestSalting:
     def test_salted_count_matches_plain(self, spark, sf_smoke):
         from libosmtools_spark.joins.skew import salted_count, top_hot_keys
-        from libosmtools_spark.pipeline import SpatialEngine
+        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
 
-        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
-        pts = eng.page_points(pages).select("url", "cell_key")
+        pts = with_cell_key(geocode_pages(pages)).select("url", "cell_key")
         hot = top_hot_keys(pts, "cell_key", top_k=4)
         assert hot, "fixture must have hot cells"
         got = salted_count(pts, "cell_key", entropy="url", hot_keys=hot).toPandas()
@@ -25,11 +24,10 @@ class TestSalting:
 
     def test_replicated_join_matches_plain(self, spark, sf_smoke):
         from libosmtools_spark.joins.skew import replicate_broadcast_join, top_hot_keys
-        from libosmtools_spark.pipeline import SpatialEngine
+        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
 
-        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(500)
-        pts = eng.page_points(pages).select("url", "cell_key")
+        pts = with_cell_key(geocode_pages(pages)).select("url", "cell_key")
         dim = pts.groupBy("cell_key").count().withColumnRenamed("count", "n_in_cell")
         hot = top_hot_keys(pts, "cell_key", top_k=3)
         got = replicate_broadcast_join(pts, dim, "cell_key", hot, n_salt=4, entropy="url").toPandas()
@@ -47,7 +45,7 @@ class TestCatalogSink:
         assert not iceberg_available(spark)  # sandbox has no iceberg jars
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(300)
-        out = eng.page_cells(pages)
+        out = eng.flagship_map(pages).select("url", "cell_key", "cell_id")
         write_table(out, "page_cells", str(tmp_path))
         back = read_table(spark, "page_cells", str(tmp_path)).drop("cell_prefix")
         assert back.exceptAll(out).count() == 0
@@ -66,7 +64,7 @@ class TestCatalogSink:
 
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(400)
-        cells = eng.cells(pages).select("cell_key", "cell_id")
+        cells = eng.kernel_cells(eng.flagship_kernel(pages)).select("cell_key", "cell_id")
         ids = sorted(r.cell_id for r in cells.select("cell_id").distinct().collect())
         # map all but the last id, reversing order (a nontrivial remap)
         mapped = ids[:-1]

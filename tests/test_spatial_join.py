@@ -22,6 +22,12 @@ def pages(spark, sf_smoke):
     return spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).cache()
 
 
+@pytest.fixture(scope="module")
+def cells(engine, pages):
+    """The flagship's cells dictionary over the fixture pages."""
+    return engine.kernel_cells(engine.flagship_kernel(pages)).cache()
+
+
 def _sorted_records(pdf, key):
     return pdf.sort_values(key).reset_index(drop=True)
 
@@ -92,21 +98,15 @@ class TestColumnKernelParity:
 
 
 class TestPageRegionsParity:
-    def test_region_sets_match_golden(self, engine, pages, sf_smoke, spark):
-        got = engine.page_regions(pages).toPandas()
-        want = spark.read.parquet(os.path.join(sf_smoke, "golden_page_regions.parquet")).toPandas()
-        got["region_ids"] = got["region_ids"].map(lambda a: tuple(a))
-        want["region_ids"] = want["region_ids"].map(lambda a: tuple(a))
-        g = _sorted_records(got, "url")
-        w = _sorted_records(want, "url")
-        pd.testing.assert_frame_equal(g, w)
-
     def test_every_page_has_a_row(self, engine, pages):
-        assert engine.page_regions(pages).count() == pages.count()
+        assert engine.flagship_kernel(pages).count() == pages.count()
 
-    def test_byte_identical_text(self, engine, pages):
-        """input_hint invariant: text passes through untouched."""
-        out = engine.page_points(pages).select("url", "text")
+    def test_byte_identical_text(self, pages):
+        """input_hint invariant: the JVM geocoder carries text through
+        untouched."""
+        from libosmtools_spark.joins.spatial import geocode_pages
+
+        out = geocode_pages(pages).select("url", "text")
         diff = out.join(pages.select("url", F.col("text").alias("t0")), "url").filter(
             F.col("text") != F.col("t0")
         )
@@ -126,12 +126,8 @@ class TestPageRegionsParity:
             .filter(F.col("text") != F.col("t0"))
         )
         assert bad.count() == 0
-        a = engine.page_regions(extracted).withColumn(
-            "region_ids", F.col("region_ids").cast("array<long>")
-        )
-        b = engine.page_regions(pages).withColumn(
-            "region_ids", F.col("region_ids").cast("array<long>")
-        )
+        a = engine.flagship_kernel(extracted).select("url", "region_ids")
+        b = engine.flagship_kernel(pages).select("url", "region_ids")
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -141,9 +137,9 @@ class TestRelationalFallbackParity:
         """The one relational fallback, spatial_join_adaptive, with the cell
         index broadcast and shuffled: every page's region set equals the
         brute-force golden (pages in no region produce no row)."""
-        from libosmtools_spark.joins.spatial import spatial_join_adaptive
+        from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
 
-        pts = engine.page_points(pages).select("url", "lat", "lon")
+        pts = geocode_pages(pages).select("url", "lat", "lon")
         hits = spatial_join_adaptive(
             pts, engine.cell_index, engine.rings_bcast, engine.level, engine.max_level,
             broadcast_index=broadcast_index,
@@ -155,8 +151,8 @@ class TestRelationalFallbackParity:
 
 
 class TestCellsParity:
-    def test_cells_dictionary_matches_golden(self, engine, pages, sf_smoke, spark):
-        got = engine.cells(pages).toPandas()
+    def test_cells_dictionary_matches_golden(self, cells, sf_smoke, spark):
+        got = cells.toPandas()
         want = spark.read.parquet(os.path.join(sf_smoke, "golden_cells.parquet")).toPandas()
         got["region_ids"] = got["region_ids"].map(lambda a: tuple(a))
         want["region_ids"] = want["region_ids"].map(lambda a: tuple(int(x) for x in a))
@@ -166,48 +162,41 @@ class TestCellsParity:
             check_dtype=False,
         )
 
-    def test_page_cells_match_golden(self, engine, pages, sf_smoke, spark):
-        got = engine.page_cells(pages).toPandas()
-        want = spark.read.parquet(os.path.join(sf_smoke, "golden_page_cells.parquet")).toPandas()
-        pd.testing.assert_frame_equal(
-            _sorted_records(got, "url"), _sorted_records(want, "url"), check_dtype=False
-        )
-
 
 class TestInvariants:
     """Spark translation of selfTest()
     (/root/reference/src/OsmTriangulationRegionStore.cpp:1227-1281)."""
 
-    def test_cell_id_space_gap_free(self, engine, pages):
-        cells = engine.cells(pages).toPandas()
-        nonzero = sorted(cells.loc[cells.cell_id > 0, "cell_id"].unique())
+    def test_cell_id_space_gap_free(self, cells):
+        pdf = cells.toPandas()
+        nonzero = sorted(pdf.loc[pdf.cell_id > 0, "cell_id"].unique())
         assert nonzero == list(range(1, len(nonzero) + 1))
 
-    def test_empty_set_iff_cell_zero(self, engine, pages):
-        cells = engine.cells(pages).toPandas()
-        for _, row in cells.iterrows():
+    def test_empty_set_iff_cell_zero(self, cells):
+        pdf = cells.toPandas()
+        for _, row in pdf.iterrows():
             assert (len(row["region_ids"]) == 0) == (row["cell_id"] == 0)
 
-    def test_cellid_regionset_bijection(self, engine, pages):
-        cells = engine.cells(pages).toPandas()
-        cells["k"] = cells["region_ids"].map(lambda a: tuple(a))
-        grp = cells.groupby("cell_id")["k"].nunique()
+    def test_cellid_regionset_bijection(self, cells):
+        pdf = cells.toPandas()
+        pdf["k"] = pdf["region_ids"].map(lambda a: tuple(a))
+        grp = pdf.groupby("cell_id")["k"].nunique()
         assert (grp == 1).all()
-        grp2 = cells.groupby("k")["cell_id"].nunique()
+        grp2 = pdf.groupby("k")["cell_id"].nunique()
         assert (grp2 == 1).all()
 
-    def test_region_lists_sorted_strictly_ascending(self, engine, pages):
-        cells = engine.cells(pages).toPandas()
-        for ids in cells["region_ids"]:
+    def test_region_lists_sorted_strictly_ascending(self, cells):
+        pdf = cells.toPandas()
+        for ids in pdf["region_ids"]:
             assert list(ids) == sorted(set(ids))
 
-    def test_selftest_violations_all_zero(self, engine, pages, spark):
+    def test_selftest_violations_all_zero(self, cells):
         """The relational T21 suite (run.selftest.selftest_violations, the
         driver's selftest_invariants query) reports zero violations on a
         healthy store."""
         from libosmtools_spark.run.selftest import selftest_violations
 
-        out = selftest_violations(engine.cells(pages)).toPandas()
+        out = selftest_violations(cells).toPandas()
         assert set(out["check_name"]) == {
             "cell_ids_dense", "cell_key_unique", "empty_set_iff_cell0",
             "region_ids_sorted_distinct", "set_id_bijection",
@@ -255,9 +244,9 @@ class TestFlagshipMapParity:
         """Zero-shuffle flagship_map ≡ the shuffle path (spatial_join_adaptive
         with the cell index shuffled, grouped per url), region set for
         region set; the shuffle path has no row for a page in no region."""
-        from libosmtools_spark.joins.spatial import spatial_join_adaptive
+        from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
 
-        pts = engine.page_points(pages).select("url", "lat", "lon")
+        pts = geocode_pages(pages).select("url", "lat", "lon")
         hits = spatial_join_adaptive(
             pts, engine.cell_index, engine.rings_bcast, engine.level, engine.max_level,
             broadcast_index=False,
@@ -467,8 +456,8 @@ class TestLocalIndexGate:
 
 class TestRoundTrip:
     def test_write_read_back_identical(self, engine, pages, tmp_path, spark):
-        out = engine.page_cells(pages)
-        path = str(tmp_path / "page_cells.parquet")
+        out = engine.flagship_map(pages)
+        path = str(tmp_path / "flagship.parquet")
         out.write.mode("overwrite").parquet(path)
         back = spark.read.parquet(path)
         assert back.exceptAll(out).count() == 0

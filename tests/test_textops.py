@@ -486,6 +486,29 @@ class TestANN:
         want = cosine_topk_brute(embeddings, k=3).toPandas().sort_values(["vec_id", "rank"])
         assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
 
+    def test_ann_topk_gate_both_sides(self, embeddings, monkeypatch):
+        """Both sides of ann_topk's ``brute_max_rows`` gate: a corpus of
+        exactly the bound takes the broadcast matmul path, one row over it
+        the blocked path, and the rows are identical."""
+        from libosmtools_spark.sim import ann
+
+        taken = []
+        for name in ("cosine_topk_brute", "cosine_topk_blocked"):
+            impl = getattr(ann, name)
+            monkeypatch.setattr(
+                ann, name, lambda *a, _n=name, _f=impl, **kw: taken.append(_n) or _f(*a, **kw)
+            )
+        n = embeddings.count()
+
+        def rows(brute_max_rows):
+            out = ann.ann_topk(embeddings, k=3, brute_max_rows=brute_max_rows).toPandas()
+            return out.sort_values(["vec_id", "rank"]).reset_index(drop=True)
+
+        at, over = rows(n), rows(n - 1)
+        assert taken == ["cosine_topk_brute", "cosine_topk_blocked"]
+        assert len(at) == 3 * n
+        pd.testing.assert_frame_equal(at, over)
+
 
 class TestMultimodal:
     def test_feature_plumbing(self, spark, sf_smoke):

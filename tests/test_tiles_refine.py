@@ -21,7 +21,15 @@ def pages(spark, sf_smoke):
 
 @pytest.fixture(scope="module")
 def cells(engine, pages):
-    return engine.cells(pages).cache()
+    return engine.kernel_cells(engine.flagship_kernel(pages)).cache()
+
+
+@pytest.fixture(scope="module")
+def points(engine, pages):
+    """pages + (lat, lon, cell_key) by the JVM geocoder."""
+    from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
+
+    return with_cell_key(geocode_pages(pages), level=engine.level)
 
 
 class TestRasterVector:
@@ -43,10 +51,9 @@ class TestRasterVector:
         rings = spark.read.parquet(os.path.join(sf_smoke, "region_rings.parquet"))
         cov = vector_to_raster(rings, 6).toPandas()
         # urban region (9) fully covered: all pages with region 9 land in its cells
-        pr = engine.page_region_rows(pages).filter(F.col("region_id") == 9)
         keys = set(
-            engine.page_points(pages)
-            .join(pr, "url", "left_semi")
+            engine.flagship_kernel(pages)
+            .filter(F.array_contains("region_ids", 9))
             .select("cell_key")
             .toPandas()["cell_key"]
         )
@@ -85,7 +92,7 @@ class TestCellGraph:
         expect = sum(len(r) for r in pdf["region_ids"])
         assert len(inv) == expect
 
-    def test_sizes_com_stats(self, engine, pages, cells):
+    def test_sizes_com_stats(self, points, pages, cells):
         from libosmtools_spark.cells.assign import assign_point_cell_ids
         from libosmtools_spark.tiles.materialize import (
             cell_center_of_mass,
@@ -93,7 +100,7 @@ class TestCellGraph:
             cell_stats,
         )
 
-        pts = engine.page_points(pages).select("url", "lat", "lon", "cell_key")
+        pts = points.select("url", "lat", "lon", "cell_key")
         pc = assign_point_cell_ids(pts, cells).cache()
         sizes = cell_sizes(pc.select("url", "cell_key", "cell_id")).toPandas()
         assert sizes["n_points"].sum() == pages.count()
@@ -160,7 +167,7 @@ class TestRefine:
         label = connected_components(df, max_iter=10, algo="label").toPandas()
         assert label["refined_cell_id"].nunique() > 1  # needs ~64 rounds
 
-    def test_handle_cell_changes_repair(self, spark, engine, pages, cells):
+    def test_handle_cell_changes_repair(self, engine, points, cells):
         """T20 repair — handleCellChanges
         (/root/reference/src/OsmTriangulationRegionStore.cpp:927-943):
         unchanged geometry keeps the dictionary; moved points (unknown
@@ -168,7 +175,7 @@ class TestRefine:
         from libosmtools_spark.cells.assign import build_cells_table_map, handle_cell_changes
         from pyspark.sql import functions as F
 
-        pts = engine.page_points(pages).select("url", "cell_key")
+        pts = points.select("url", "cell_key")
         kept, rebuilt = handle_cell_changes(
             pts, cells, rebuild=lambda: (_ for _ in ()).throw(AssertionError("no rebuild"))
         )
@@ -188,11 +195,11 @@ class TestRefine:
         )
         assert missing.count() == 0
 
-    def test_refine_oversized_bounds_counts(self, engine, pages):
+    def test_refine_oversized_bounds_counts(self, points, pages):
         from libosmtools_spark.cells.refine import refine_oversized
         from libosmtools_spark.geom.kernels import _LEVEL_SHIFT
 
-        pts = engine.page_points(pages).select("url", "lat", "lon", "cell_key")
+        pts = points.select("url", "lat", "lon", "cell_key")
         refined = refine_oversized(pts, max_points=100, max_level=20)
         counts = refined.groupBy("cell_key").count().toPandas()
         assert counts["count"].max() <= 100
@@ -222,14 +229,14 @@ class TestCellDiameter:
         assert out[2] == (1, 0.0)
         assert None not in out  # null cells excluded
 
-    def test_refine_bounds_quadratic_work(self, engine, pages):
+    def test_refine_bounds_quadratic_work(self, points):
         """The T6 contract the bench measures: after refine_oversized no
         cell exceeds the bound and the per-cell quadratic work Σn² drops."""
         from pyspark.sql import functions as F
 
         from libosmtools_spark.cells.refine import refine_oversized
 
-        pts = engine.page_points(pages).select("lat", "lon", "cell_key")
+        pts = points.select("lat", "lon", "cell_key")
         refined = refine_oversized(pts, max_points=50)
 
         def stats(df):

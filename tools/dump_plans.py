@@ -57,7 +57,7 @@ def main():
 
     import __spark_entry__ as entry
     from libosmtools_spark.data.synth import ensure_fixtures
-    from libosmtools_spark.joins.spatial import spatial_join_adaptive
+    from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive, with_cell_key
     from libosmtools_spark.pipeline import SpatialEngine
     from libosmtools_spark.session import get_spark
 
@@ -89,7 +89,7 @@ def main():
         ["MapInArrow"],
     ))
 
-    pts = eng.page_points(pages).select("url", "lat", "lon")
+    pts = with_cell_key(geocode_pages(pages), level=eng.level).select("url", "lat", "lon")
     fallback_plan = plan_of(spatial_join_adaptive(
         pts, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level, broadcast_index=False
     ))

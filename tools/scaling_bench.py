@@ -265,9 +265,11 @@ Cross-checks:
   (cross-multiplication with exact sign scaling) and chunks its
   (points × edges) temporaries to ≈512 KB so the working set stays in a
   core's private cache, not the shared L3.  tools/pip_microbench.py
-  measures the kernel alone at 4→16-proc efficiency 0.95 (vs 0.72 at 8 MB
-  chunks) and ~15% faster than the division form.
-- per-component CPU accounting (tools/scaling_probe.py, warm, min-of-2):
+  (since deleted; `git show 0ecc20e:tools/pip_microbench.py`) measured the
+  kernel alone at 4→16-proc efficiency 0.95 (vs 0.72 at 8 MB chunks) and
+  ~15% faster than the division form.
+- per-component CPU accounting (tools/scaling_probe.py, since deleted;
+  `git show 0ecc20e:tools/scaling_probe.py`; warm, min-of-2):
   the JVM pipeline (scan → geocode regex → cell key → hash agg) is ~2 s of
   the ~43 s 4-core job; the Arrow+numpy UDF dominates, with 16-thread
   CPU inflation 1.16× — at this VM's raw multiprocess ceiling (1.23×).
