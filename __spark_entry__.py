@@ -211,7 +211,8 @@ _CELLS_CACHE: dict = {}
 
 def _doc_cells_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cell_key, cell_id, region_ids) over the distinct cells the derived
-    points occupy — the real T4 dictionary operator.  Cached per
+    points occupy — the real T4 dictionary operator, built on the driver
+    by a job that runs when this is first called.  Kept per
     (session, sf_dir): several queries share it."""
     key = (_session_key(spark), sf_dir)
     if key not in _CELLS_CACHE:
@@ -223,7 +224,7 @@ def _doc_cells_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
         _CELLS_CACHE[key] = build_cells_table_map(
             pts.select("cell_key"), eng.candidates_bcast, eng.rings_bcast
-        ).cache()
+        )
     return _CELLS_CACHE[key]
 
 
@@ -470,7 +471,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on the repo's sf0.001 fixtures: geocode pages →
     cell key → region set (the mapInArrow kernel) → cells dictionary →
     (url, cell_key, cell_id, region_ids).  The call runs the kernel pass
-    (run_flagship's eager checkpoint)."""
+    (run_flagship's dictionary-feed collect)."""
     _ensure_shipped(spark)
     from libosmtools_spark.data.synth import ensure_fixtures
     from libosmtools_spark.pipeline import run_flagship

@@ -12,9 +12,10 @@ cell ids are dense_rank over the **lexicographic order of the comma-joined
 sorted region-id list**, with the empty list forced to 0 and non-empty lists
 starting at 1 (``intern_region_sets``).
 
-One builder: ``build_cells_table_map`` resolves each occupied cell's center
-with the flagship's region kernel (joins/mapjoin._resolve_masks) and
-interns the sets in one Arrow task.
+One builder: ``build_cells_table_map`` collects the occupied cells' keys
+to the driver, resolves each cell's center with the flagship's region
+kernel (joins/mapjoin._resolve_masks) and interns the sets there, in
+memory, as the reference does; no Python worker task runs for it.
 """
 
 from __future__ import annotations
@@ -48,72 +49,64 @@ def build_cells_table_map(
 
     The dictionary is dimension-scale BY CONTRACT (it is broadcast into the
     flagship join right after, and the reference holds the analogous
-    cellIdToCellList in memory), so ONE Arrow task on the
-    repartition(1)-gathered keys computes cell centers (the exact
-    cell_center_cols arithmetic, same IEEE op order), resolves their region
-    sets with the flagship's ``_resolve_masks`` kernel, and interns ids with
-    ``intern_region_sets``.  A NULL key (page without a geocode) gets the
-    empty set and cell 0.
+    cellIdToCellList in memory), so it is built on the driver: one job
+    collects the keys (``toArrow``), and the driver computes cell centers
+    (the exact cell_center_cols arithmetic, same IEEE op order), resolves
+    their region sets with the flagship's ``_resolve_masks`` kernel and
+    interns ids with ``intern_region_sets``.  A NULL key (page without a
+    geocode) gets the empty set and cell 0.  The call itself runs that
+    job; the returned frame is a ``LocalRelation``, so reading or
+    broadcasting it starts no Python worker (Spark still collects a
+    broadcast ``LocalTableScan`` in a small JVM-only job).
 
     ``input_batch_unique=True`` skips the distinct exchange for callers
     whose input is already batch-deduplicated near dimension scale (the
-    flagship kernel's batch-unique keys, SpatialEngine.kernel_cells, or
-    page_cell_keys_text); corpus-scale callers keep distinct-first so the
-    single-task gather never sees fact-table row counts."""
+    flagship kernel's batch-unique keys, SpatialEngine.kernel_cells);
+    corpus-scale callers keep distinct-first so the driver gather never
+    sees fact-table row counts."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from libosmtools_spark.geom import kernels as K
     from libosmtools_spark.joins.mapjoin import _masks_to_region_lists, _resolve_masks
-
-    n_words = candidates_bcast.value["n_words"]
-    index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     keys_df = point_cells.select("cell_key")
     if not input_batch_unique:
         keys_df = keys_df.distinct()
-
-    def build(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tabs = candidates_bcast.value["levels"]
-        rings = rings_bcast.value
-        parts = [
-            pc.fill_null(b.column(0), -1).to_numpy(zero_copy_only=False).astype(np.int64)
-            for b in batches
-            if len(b)
-        ]
-        keys = np.unique(np.concatenate(parts)) if parts else np.empty(0, dtype=np.int64)
-        n = len(keys)
-        # centers via the EXACT cell_center_cols formula — same op order
-        # (iy·size − 90.0) + size/2, so the doubles feeding the ray-cast
-        # are bit-identical to the JVM-computed ones
-        la = np.full(n, np.nan)
-        lo = np.full(n, np.nan)
-        valid = keys >= 0
-        if valid.any():
-            kv = keys[valid]
-            level = kv >> K._LEVEL_SHIFT
-            iy = (kv >> K._IY_SHIFT) & ((np.int64(1) << (K._LEVEL_SHIFT - K._IY_SHIFT)) - 1)
-            ix = kv & ((np.int64(1) << K._IY_SHIFT) - 1)
-            size = 180.0 / np.power(2.0, level.astype(np.float64))
-            la[valid] = iy.astype(np.float64) * size - 90.0 + size / 2
-            lo[valid] = ix.astype(np.float64) * size - 180.0 + size / 2
-        masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
-        offs, vals = _masks_to_region_lists(masks)
-        cell_id = intern_region_sets(vals[offs[i] : offs[i + 1]] for i in range(n))
-        out_keys = pa.array([None if k < 0 else int(k) for k in keys], type=pa.int64())
-        yield pa.RecordBatch.from_arrays(
-            [
-                out_keys,
-                pa.array(cell_id, type=pa.int32()),
-                pa.ListArray.from_arrays(
-                    pa.array(offs, type=pa.int32()), pa.array(vals, type=pa.int32())
-                ),
-            ],
-            ["cell_key", "cell_id", "region_ids"],
-        )
-
-    return keys_df.repartition(1).mapInArrow(
-        build, "cell_key long, cell_id int, region_ids array<int>"
+    col = keys_df.toArrow().column(0)
+    keys = np.unique(pc.fill_null(col, -1).to_numpy())
+    n = len(keys)
+    # centers via the EXACT cell_center_cols formula — same op order
+    # (iy·size − 90.0) + size/2, so the doubles feeding the ray-cast
+    # are bit-identical to the JVM-computed ones
+    la = np.full(n, np.nan)
+    lo = np.full(n, np.nan)
+    valid = keys >= 0
+    if valid.any():
+        kv = keys[valid]
+        level = kv >> K._LEVEL_SHIFT
+        iy = (kv >> K._IY_SHIFT) & ((np.int64(1) << (K._LEVEL_SHIFT - K._IY_SHIFT)) - 1)
+        ix = kv & ((np.int64(1) << K._IY_SHIFT) - 1)
+        size = 180.0 / np.power(2.0, level.astype(np.float64))
+        la[valid] = iy.astype(np.float64) * size - 90.0 + size / 2
+        lo[valid] = ix.astype(np.float64) * size - 180.0 + size / 2
+    cand = candidates_bcast.value
+    masks = _resolve_masks(
+        la, lo, keys, cand["levels"], rings_bcast.value, sorted(cand["levels"]), cand["n_words"]
+    )
+    offs, vals = _masks_to_region_lists(masks)
+    cell_id = intern_region_sets(vals[offs[i] : offs[i + 1]] for i in range(n))
+    table = pa.table(
+        {
+            "cell_key": pa.array(keys, mask=~valid),
+            "cell_id": pa.array(cell_id, type=pa.int32()),
+            "region_ids": pa.ListArray.from_arrays(
+                pa.array(offs, type=pa.int32()), pa.array(vals, type=pa.int32())
+            ),
+        }
+    )
+    return point_cells.sparkSession.createDataFrame(
+        table, "cell_key long, cell_id int, region_ids array<int>"
     )
 
 

@@ -313,9 +313,9 @@ def map_spatial_join_text(
 
     ``batch_unique`` (``BATCH_UNIQUE``) is true on the first row of each
     distinct cell key (NULL included) within its Arrow batch: filtering on
-    it yields the cells-dictionary feed (build_cells_table_map) at
-    batches × occupied-cells rows, straight from this one pass over the
-    pages."""
+    it yields the cells-dictionary feed (build_cells_table_map, which
+    collects it to the driver) at batches × occupied-cells rows, straight
+    from this one pass over the pages."""
     n_words = candidates_bcast.value["n_words"]
     url_type = dict(pages.dtypes)["url"]
     schema = f"url {url_type}, cell_key long, region_ids array<int>, {BATCH_UNIQUE} boolean"

@@ -1,17 +1,19 @@
 """The flagship end-to-end pipeline (SURVEY.md §3.3 Spark lifecycle):
 
 pages → one text-in ``mapInArrow`` kernel (geocode, cell key, region set
-per page; joins/mapjoin.py) → cells dictionary over the occupied cells
+per page; joins/mapjoin.py) → cells dictionary over the occupied cells,
+built on the driver from the kernel's batch-unique keys
 (cells/assign.build_cells_table_map) → broadcast cell-id join
 (cells/assign.assign_point_cell_ids) → (url, cell_key, cell_id, region_ids).
+One Python pass per query: the kernel is the only Python task of the plan.
 
 ``SpatialEngine`` is the only code that builds a region store's artifacts
 (rings broadcast, adaptive cell index, candidate tables): the
 ``__spark_entry__`` queries and the tests build every store through it.
 Its surface is the flagship's three stages: ``flagship_kernel`` (the
 one pass that geocodes pages: RE2 inside the kernel), ``kernel_cells``
-(the dictionary, fed from that pass) and ``flagship_map`` (the two
-joined).  Region sets, cell keys and cell ids of pages are read from
+(the dictionary, a driver step fed from that pass) and ``flagship_map``
+(the two joined).  Region sets, cell keys and cell ids of pages are read from
 those outputs; the JVM geocoder ``joins.spatial.geocode_pages`` serves
 streaming, hop-split and the relational
 ``joins.spatial.spatial_join_adaptive``, the fallback for region stores
@@ -103,9 +105,12 @@ class SpatialEngine:
 
     def kernel_cells(self, kernel_out: DataFrame) -> DataFrame:
         """(cell_key, cell_id, region_ids) dictionary over the cells a
-        ``flagship_kernel`` output occupies, built in one Arrow task from
-        its batch-unique keys (no distinct exchange; the gather holds
-        Σ over batches of distinct keys: batches × occupied cells at most)."""
+        ``flagship_kernel`` output occupies, built on the driver from its
+        batch-unique keys (no distinct exchange; the driver collect holds
+        Σ over batches of distinct keys: batches × occupied cells at most,
+        bounded only by ``spark.driver.maxResultSize``).  The call runs the
+        collect job; the returned frame is a driver-local
+        ``LocalRelation``."""
         return build_cells_table_map(
             kernel_out.filter(F.col(BATCH_UNIQUE)).select("cell_key"),
             self.candidates_bcast,
@@ -118,12 +123,16 @@ class SpatialEngine:
         and no fact-side shuffle — the in-session broadcast-store plan (the
         reference's own in-memory posture).
 
-        The ``flagship_kernel`` pass runs once, inside an eager DISK_ONLY
-        ``localCheckpoint`` of its narrow output, so the call itself runs
-        a Spark job.  Both the cells dictionary (``kernel_cells``, from the
-        flagged batch-unique keys) and the final broadcast join read that
-        checkpoint, so no page is geocoded twice.  Every call runs its own
-        checkpoint job: nothing is cached across calls.
+        The ``flagship_kernel`` output is marked for a lazy DISK_ONLY
+        ``localCheckpoint``.  The call's one Spark job is the dictionary
+        feed: ``kernel_cells`` collects the flagged batch-unique keys, and
+        that job runs the kernel once and stores every checkpoint block
+        (a partition a job skipped is computed by Spark's
+        ``LocalRDDCheckpointData`` after it).  The dictionary is then built
+        on the driver, and the final broadcast join reads the checkpoint
+        blocks, so no page is geocoded twice and the kernel is the plan's
+        only Python pass.  Every call runs its own job: nothing is cached
+        across calls.
 
         Limits of the local checkpoint: it cuts the lineage, so if an
         executor holding checkpoint blocks is lost before the returned
@@ -135,7 +144,7 @@ class SpatialEngine:
         ``run_flagship_staged`` (the same kernel and dictionary feed over
         durable parquet stages)."""
         res = self.flagship_kernel(pages).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
+            eager=False, storageLevel=StorageLevel.DISK_ONLY
         )
         return assign_point_cell_ids(res, self.kernel_cells(res)).select(*FLAGSHIP_COLUMNS)
 
@@ -155,7 +164,7 @@ def pages_from_html(pages: DataFrame) -> DataFrame:
 def run_flagship(spark: SparkSession, fixtures_dir: str, level: int = DEFAULT_LEVEL) -> DataFrame:
     """pages → (url, cell_key, cell_id, region_ids) by
     ``SpatialEngine.flagship_map``, so the call itself runs the kernel pass
-    (its eager checkpoint)."""
+    (its dictionary-feed collect)."""
     pages = spark.read.parquet(os.path.join(fixtures_dir, "pages.parquet"))
     eng = SpatialEngine.from_fixtures(spark, fixtures_dir, level)
     return eng.flagship_map(pages)
@@ -184,7 +193,8 @@ def run_flagship_staged(
     - stage ``page_regions``: ``flagship_kernel``, written to parquet
       (this IS the expensive fact pass — geocode + kernel);
     - stage ``cells``: ``kernel_cells`` over the stage-1 parquet (its
-      batch-unique keys, read back from the narrow stage output);
+      batch-unique keys, read back from the narrow stage output and built
+      into the dictionary on the driver);
     - stage ``flagship``: broadcast join of the two.
 
     Each stage records manifest lineage + per-partition metrics

@@ -279,13 +279,35 @@ class TestFlagshipMapParity:
         assert _flagship_rows(engine.flagship_map(pages)) == golden
 
     def test_one_pages_scan_per_call(self, spark, engine, sf_smoke):
-        """All the jobs of one flagship_map call (its eager kernel
-        checkpoint and the returned frame) scan the pages parquet once."""
+        """All the jobs of one flagship_map call (its dictionary-feed
+        collect and the returned frame) scan the pages parquet once."""
         from tools.dump_plans import scans_per_call
 
         path = os.path.join(sf_smoke, "pages.parquet")
         pages = spark.read.parquet(path)
         assert scans_per_call(spark, lambda: engine.flagship_map(pages), path) == 1
+
+    def test_one_python_pass_per_call(self, spark, engine, sf_smoke):
+        """All the jobs of one flagship_map call run one Python pass, the
+        kernel: the cells dictionary is built on the driver, not in a
+        second mapInArrow."""
+        from tools.dump_plans import python_passes_per_call
+
+        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
+        assert python_passes_per_call(spark, lambda: engine.flagship_map(pages)) == 1
+
+    def test_one_job_per_call(self, spark, engine, sf_smoke):
+        """A flagship_map call runs exactly one Spark job before its frame
+        is read: the dictionary-feed collect, which runs the kernel."""
+        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
+        engine.candidates_bcast  # built on first use, by a job of its own
+        sc, group = spark.sparkContext, "flagship-map-call"
+        sc.setJobGroup(group, group)
+        try:
+            engine.flagship_map(pages)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def _dictionary_specs():
@@ -398,6 +420,50 @@ class TestFlagshipDictionaryFeed:
         assert got == want
         assert keys.nunique(dropna=False) < got < len(keys)
         assert len(out) == len(pdf)
+
+    def test_batch_unique_feed_equals_distinct_first(self, spark, store_engine):
+        """Both sides of ``input_batch_unique``: the kernel's batch-unique
+        keys (several per key, one per Arrow batch) and the distinct-first
+        feed over every page's key give the same dictionary."""
+        from libosmtools_spark.cells.assign import build_cells_table_map
+        from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE
+
+        eng = store_engine
+        pages = spark.createDataFrame(_dictionary_pages()).coalesce(1)
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "16")
+        try:
+            kernel = eng.flagship_kernel(pages).cache()
+            flagged = kernel.filter(BATCH_UNIQUE)
+            assert flagged.count() > flagged.select("cell_key").distinct().count()
+            feeds = [
+                build_cells_table_map(
+                    flagged, eng.candidates_bcast, eng.rings_bcast, input_batch_unique=True
+                ),
+                build_cells_table_map(kernel, eng.candidates_bcast, eng.rings_bcast),
+            ]
+            got = [
+                sorted(
+                    (r.cell_key is not None, r.cell_key, r.cell_id, tuple(r.region_ids))
+                    for r in f.collect()
+                )
+                for f in feeds
+            ]
+            kernel.unpersist()
+        finally:
+            spark.conf.set(conf, old)
+        assert got[0] == got[1]
+        assert len(got[0]) == len({r[1] for r in got[0]})  # one row per key
+
+    def test_kernel_cells_is_driver_local(self, spark, store_engine):
+        """``kernel_cells`` returns a LocalRelation: reading or broadcasting
+        the dictionary starts no Python worker."""
+        eng = store_engine
+        cells = eng.kernel_cells(eng.flagship_kernel(spark.createDataFrame(_dictionary_pages())))
+        analyzed = cells._jdf.queryExecution().analyzed().toString()
+        assert analyzed.startswith("LocalRelation")
+        assert "Python" not in analyzed and "MapInArrow" not in analyzed
 
     def test_no_reuse_across_calls(self, spark, store_engine):
         """Two calls over different page frames with the same urls: each

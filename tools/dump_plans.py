@@ -6,7 +6,10 @@ the plan-shape invariants the engine is designed around:
 - relational stages sit inside WholeStageCodegen spans;
 - the zero-shuffle flagship has NO Exchange at all before the final agg;
 - one flagship_map call scans the pages parquet once, across all its jobs
-  (the eager kernel checkpoint and the frame it returns);
+  (the dictionary-feed collect that runs the kernel into its checkpoint,
+  and the frame it returns);
+- one flagship_map call runs one Python pass (MapInArrow) across all its
+  jobs: the kernel; the cells dictionary is built on the driver;
 - the relational fallback (spatial_join_adaptive) evaluates its PIP UDF
   once, and with broadcast_index=False its probe join really shuffles.
 
@@ -31,10 +34,9 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def scans_per_call(spark, call, path: str) -> int:
-    """Parquet scans of ``path`` in the physical plans of every SQL
-    execution that ``call()`` starts, including materializing the frame it
-    returns (a noop write)."""
+def plans_per_call(spark, call) -> list[str]:
+    """The physical plans of every SQL execution that ``call()`` starts,
+    including materializing the frame it returns (a noop write)."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():
@@ -44,11 +46,21 @@ def scans_per_call(spark, call, path: str) -> int:
 
     seen = {e.executionId() for e in executions()}
     call().write.format("noop").mode("overwrite").save()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() not in seen]
+
+
+def scans_per_call(spark, call, path: str) -> int:
+    """Parquet scans of ``path`` across ``plans_per_call``."""
     needle = f"{os.path.abspath(path)}]"
+    return sum(p.count(needle) for p in plans_per_call(spark, call))
+
+
+def python_passes_per_call(spark, call) -> int:
+    """MapInArrow nodes (Python passes over rows) across
+    ``plans_per_call``; an adaptive plan counts its final plan only."""
     return sum(
-        e.physicalPlanDescription().count(needle)
-        for e in executions()
-        if e.executionId() not in seen
+        len(re.findall(r"MapInArrow \(\d+\)", p.split("== Initial Plan ==")[0]))
+        for p in plans_per_call(spark, call)
     )
 
 
@@ -77,14 +89,14 @@ def main():
 
     p = plan_of(eng.flagship_map(pages))
     sections.append((
-        "flagship_map (zero-shuffle broadcast-store plan, over its kernel checkpoint)",
+        "flagship_map (zero-shuffle broadcast-store plan: kernel checkpoint ⋈ driver-built dictionary)",
         p,
-        ["Scan ExistingRDD", "BroadcastHashJoin"],
+        ["Scan ExistingRDD", "BroadcastHashJoin", "LocalTableScan"],
     ))
 
     kernel_plan = plan_of(eng.flagship_kernel(pages))
     sections.append((
-        "flagship_map kernel pass (run once per call, by the eager checkpoint)",
+        "flagship_map kernel pass (run once per call, by the dictionary-feed collect)",
         kernel_plan,
         ["MapInArrow"],
     ))
@@ -118,6 +130,9 @@ def main():
     scans = scans_per_call(spark, lambda: eng.flagship_map(pages), pages_path)
     checks.append(f"- pages parquet scans in one flagship_map call (all its jobs): {scans} "
                   f"{'✓' if scans == 1 else '✗ UNEXPECTED'}")
+    passes = python_passes_per_call(spark, lambda: eng.flagship_map(pages))
+    checks.append(f"- Python passes (MapInArrow) in one flagship_map call (all its jobs): {passes} "
+                  f"{'✓' if passes == 1 else '✗ UNEXPECTED'}")
     pips = len(re.findall(r"^\(\d+\) ArrowEvalPython", fallback_plan, re.M))
     checks.append(f"- PIP UDF evaluations (ArrowEvalPython) in spatial_join_adaptive: {pips} "
                   f"{'✓' if pips == 1 else '✗ UNEXPECTED'}")

@@ -52,10 +52,10 @@ def main() -> None:
 
     eng = SpatialEngine.from_fixtures(spark, fx)
     pages = spark.read.parquet(os.path.join(fx, "pages.parquet"))
-    # flagship_map runs its kernel pass when called (eager checkpoint), so
+    # flagship_map runs its kernel pass when called (dictionary-feed collect), so
     # its plan costs one full job; the kernel's own plan is dumped first
     with open(os.path.join(out_dir, f"flagship_{suffix}.txt"), "w") as f:
-        f.write("== kernel pass (run by the eager checkpoint) ==\n")
+        f.write("== kernel pass (run by the dictionary-feed collect) ==\n")
         f.write(plan_of(eng.flagship_kernel(pages)))
         f.write("\n== frame flagship_map returns (over the checkpoint) ==\n")
         f.write(plan_of(eng.flagship_map(pages)))

@@ -10,7 +10,7 @@ Methodology (documented in BENCH/BASELINE.md):
 - The timed job is the query on a prebuilt index (the index build is the
   reference's one-time GridRegionTree construction, amortized across
   queries).  Each timed repetition makes its own ``flagship_map`` call:
-  the call itself runs the kernel pass (eager checkpoint), so timing only
+  the call itself runs the kernel pass (dictionary-feed collect), so timing only
   the materialization of a frame made outside the timer would leave out
   most of the query.
 - The input is the sf0.1 pages fixture deterministically inflated (distinct
@@ -64,7 +64,7 @@ best = None
 for _ in range(2):
     c0, t0 = cpu_sec(), time.monotonic()
     # a fresh call inside the timer: flagship_map runs its kernel pass when
-    # CALLED (eager checkpoint), so the call is most of the query
+    # CALLED (dictionary-feed collect), so the call is most of the query
     out = eng.flagship_map(pages)  # ZERO-shuffle plan (joins/mapjoin.py)
     row = out.select(F.count("*").alias("n"),
         F.sum(F.xxhash64("url","cell_key","cell_id",F.concat_ws(",","region_ids")).cast("double")).alias("h")).collect()[0]
