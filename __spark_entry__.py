@@ -471,13 +471,14 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on the repo's sf0.001 fixtures: geocode pages →
     cell key → region set (the mapInArrow kernel) → cells dictionary →
     (url, cell_key, cell_id, region_ids).  The call runs the kernel pass
-    (run_flagship's dictionary-feed collect)."""
+    (flagship_map's dictionary-feed collect)."""
     _ensure_shipped(spark)
     from libosmtools_spark.data.synth import ensure_fixtures
-    from libosmtools_spark.pipeline import run_flagship
+    from libosmtools_spark.pipeline import SpatialEngine
 
     fixtures = ensure_fixtures("0.001")
-    return run_flagship(spark, fixtures)
+    pages = spark.read.parquet(f"{fixtures}/pages.parquet")
+    return SpatialEngine.from_fixtures(spark, fixtures).flagship_map(pages)
 
 
 # ===========================================================================
@@ -1295,10 +1296,11 @@ def q_flagship_page_cells(spark, sf_dir):
     import sys
 
     sys.path.insert(0, REPO)
-    from libosmtools_spark.pipeline import run_flagship
+    from libosmtools_spark.pipeline import SpatialEngine
 
     fx = _fixtures_for(sf_dir)
-    out = run_flagship(spark, fx)
+    pages = spark.read.parquet(f"{fx}/pages.parquet")
+    out = SpatialEngine.from_fixtures(spark, fx).flagship_map(pages)
     return out.select("url", "cell_key", "cell_id")
 
 

@@ -131,19 +131,6 @@ def with_cell_id_criterion(inner: "callable", id_col: str = "cell_id") -> "calla
     return is_bad
 
 
-def lipschitz_criterion(max_level_gap: int = 1) -> "callable":
-    """is_bad: a cell is more than ``max_level_gap`` levels coarser than its
-    finest neighbor — the grid analog of LipschitzMeshCriteria's size slope
-    (/root/reference/include/osmtools/MeshCriteria.h:300-354).  Requires a
-    ``finest_neighbor_level`` column (join the dual graph first)."""
-
-    def is_bad(cells: DataFrame) -> Column:
-        level = F.shiftright(F.col("cell_key"), _LEVEL_SHIFT)
-        return (F.col("finest_neighbor_level") - level) > F.lit(max_level_gap)
-
-    return is_bad
-
-
 def refine_until_good(
     cells: DataFrame,
     is_bad,

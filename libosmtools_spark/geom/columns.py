@@ -13,12 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from libosmtools_spark.geom.kernels import SNAP_SCALE, _IY_SHIFT, _LEVEL_SHIFT
-
-
-def snap_col(c: Column) -> Column:
-    """G5 quantization (round-half-even, matching numpy.round)."""
-    return F.call_function("rint", c * F.lit(float(SNAP_SCALE))) / F.lit(float(SNAP_SCALE))
+from libosmtools_spark.geom.kernels import _IY_SHIFT, _LEVEL_SHIFT
 
 
 def norm_lon_col(lon: Column) -> Column:

@@ -200,16 +200,6 @@ def cell_ring(key: int, k: int):
     return np.unique(keys)
 
 
-def ring_min_distance_deg(key: int, k: int) -> float:
-    """Lower bound on the degree-space distance from anywhere inside ``key``'s
-    cell to anywhere outside its k-ring.  Used for kNN early termination: once
-    k neighbors are found with distance < this bound, no point outside the
-    ring can beat them."""
-    level, _, _ = unpack_key(np.int64(key))
-    size = 180.0 / (1 << int(level))
-    return k * size
-
-
 # ---------------------------------------------------------------------------
 # distances
 # ---------------------------------------------------------------------------

@@ -6,6 +6,8 @@ built on the driver from the kernel's batch-unique keys
 (cells/assign.build_cells_table_map) → broadcast cell-id join
 (cells/assign.assign_point_cell_ids) → (url, cell_key, cell_id, region_ids).
 One Python pass per query: the kernel is the only Python task of the plan.
+``entry()`` and the ``flagship_page_cells`` query run it as
+``SpatialEngine.from_fixtures(spark, fx).flagship_map(pages)``.
 
 ``SpatialEngine`` is the only code that builds a region store's artifacts
 (rings broadcast, adaptive cell index, candidate tables): the
@@ -159,15 +161,6 @@ def pages_from_html(pages: DataFrame) -> DataFrame:
     from libosmtools_spark.text.analysis import html_text_col
 
     return pages.withColumn("text", html_text_col(F.col("html")))
-
-
-def run_flagship(spark: SparkSession, fixtures_dir: str, level: int = DEFAULT_LEVEL) -> DataFrame:
-    """pages → (url, cell_key, cell_id, region_ids) by
-    ``SpatialEngine.flagship_map``, so the call itself runs the kernel pass
-    (its dictionary-feed collect)."""
-    pages = spark.read.parquet(os.path.join(fixtures_dir, "pages.parquet"))
-    eng = SpatialEngine.from_fixtures(spark, fixtures_dir, level)
-    return eng.flagship_map(pages)
 
 
 #: format of run_flagship_staged's stage tables, part of their checkpoint

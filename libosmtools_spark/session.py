@@ -11,6 +11,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Arrow batch rows: large batches amortize per-batch UDF overhead (region-group
+#: setup, chunk dispatch); measured 54s → 31s on the PIP stage vs 65536
+ARROW_MAX_RECORDS_PER_BATCH = 262144
+
+#: driver GC period that lets the ContextCleaner reclaim dropped broadcasts
+PERIODIC_GC_INTERVAL = "90s"
+
 
 def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -49,16 +56,11 @@ def get_spark(
         # dropped references; on a 48g heap that can take many minutes, so
         # worker/JVM copies pile up across a query census and later
         # queries pay the memory pressure.  Periodic GC bounds the pile.
-        .config("spark.cleaner.periodicGC.interval", os.environ.get("SPARK_GRAFT_PERIODIC_GC", "90s"))
+        .config("spark.cleaner.periodicGC.interval", PERIODIC_GC_INTERVAL)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # large Arrow batches amortize per-batch UDF overhead (region-group
-        # setup, chunk dispatch); measured 54s → 31s on the PIP stage vs 65536
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "262144"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS_PER_BATCH))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from libosmtools_spark.geom import kernels as K
-from libosmtools_spark.geom.columns import cell_bounds_cols, cell_center_cols
+from libosmtools_spark.geom.columns import cell_bounds_cols
 from libosmtools_spark.index.grid import build_cell_index
 from libosmtools_spark.session import release_local_checkpoint
 
@@ -472,12 +472,6 @@ def cell_stats(point_cells: DataFrame, exact_median: bool = False) -> DataFrame:
         (F.sum("n").cast("double") / F.count("*").cast("double")).alias("mean_points"),
         F.count("*").alias("n_cells"),
     )
-
-
-def cell_centers(cells: DataFrame) -> DataFrame:
-    """cell midpoints (T3 analog) as columns."""
-    clat, clon = cell_center_cols(F.col("cell_key"))
-    return cells.select("cell_key", clat.alias("center_lat"), clon.alias("center_lon"))
 
 
 def _set_diam2(cla, clo) -> float:

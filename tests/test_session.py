@@ -1,7 +1,8 @@
 """Scan plan of the engine's session: file scans use Spark's own split
 sizing (one wave of ``spark.default.parallelism``), with no session-wide
 ``minPartitionNum`` floor that would cut one-row-group files into empty
-byte ranges, each of them a Python task in the flagship kernel."""
+byte ranges, each of them a Python task in the flagship kernel.  The Arrow
+batch size and driver GC period are module constants of ``session``."""
 
 import base64
 import os
@@ -53,6 +54,15 @@ def one_row_group_pages(tmp_path_factory):
 
 def test_session_sets_no_scan_floor(spark):
     assert spark.conf.get("spark.sql.files.minPartitionNum", None) is None
+
+
+def test_session_settings_are_constants(spark):
+    from libosmtools_spark import session
+
+    assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == str(
+        session.ARROW_MAX_RECORDS_PER_BATCH
+    )
+    assert spark.conf.get("spark.cleaner.periodicGC.interval") == session.PERIODIC_GC_INTERVAL
 
 
 def test_one_row_group_files_are_one_task_each(spark, sf_smoke, one_row_group_pages):
