@@ -53,10 +53,11 @@ def build_cells_table_map(
     collects the keys (``toArrow``), and the driver computes cell centers
     (the exact cell_center_cols arithmetic, same IEEE op order), resolves
     their region sets with the flagship's ``_resolve_masks`` kernel and
-    interns ids with ``intern_region_sets``.  A NULL key (page without a
-    geocode) gets the empty set and cell 0.  The call itself runs that
-    job; the returned frame is a ``LocalRelation``, so reading or
-    broadcasting it starts no Python worker (Spark still collects a
+    interns ids with ``intern_region_sets`` (``rings_bcast`` is not read:
+    the candidate tables carry the clipped edges).  A NULL key (page
+    without a geocode) gets the empty set and cell 0.  The call itself
+    runs that job; the returned frame is a ``LocalRelation``, so reading
+    or broadcasting it starts no Python worker (Spark still collects a
     broadcast ``LocalTableScan`` in a small JVM-only job).
 
     ``input_batch_unique=True`` skips the distinct exchange for callers
@@ -91,9 +92,7 @@ def build_cells_table_map(
         la[valid] = iy.astype(np.float64) * size - 90.0 + size / 2
         lo[valid] = ix.astype(np.float64) * size - 180.0 + size / 2
     cand = candidates_bcast.value
-    masks = _resolve_masks(
-        la, lo, keys, cand["levels"], rings_bcast.value, sorted(cand["levels"]), cand["n_words"]
-    )
+    masks = _resolve_masks(la, lo, keys, cand["levels"], None, sorted(cand["levels"]), cand["n_words"])
     offs, vals = _masks_to_region_lists(masks)
     cell_id = intern_region_sets(vals[offs[i] : offs[i + 1]] for i in range(n))
     table = pa.table(

@@ -263,23 +263,28 @@ def cell_diag_m(key):
 _PIP_CHUNK_ELEMS = 65_536
 
 
-def _point_in_ring_block(y, x, y1, x1, y2, x2):
-    """Division-free ray-cast block: ``x < x1 + (y-y1)/(y2-y1)*(x2-x1)``
-    cross-multiplied after scaling both sides by sign(y2-y1) — multiplying
-    by ±1 is exact, so the strict `<` (the half-open boundary rule) is
-    preserved for on-edge points, unlike a naive inequality flip which
-    would turn `<` into `<=` on descending edges.  Measured ~15% faster
-    than the division form under 16-way contention (by
-    tools/pip_microbench.py, since deleted; recover it with ``git show
-    0ecc20e:tools/pip_microbench.py``); agrees with it exactly on vertex/edge
-    points (exact products) and everywhere off-boundary."""
+def _ray_crossings(y, x, y1, x1, y2, x2):
+    """Division-free ray-crossing predicate, elementwise over broadcast
+    operands: ``x < x1 + (y-y1)/(y2-y1)*(x2-x1)`` cross-multiplied after
+    scaling both sides by sign(y2-y1) — multiplying by ±1 is exact, so the
+    strict `<` (the half-open boundary rule) is preserved for on-edge
+    points, unlike a naive inequality flip which would turn `<` into `<=`
+    on descending edges.  Measured ~15% faster than the division form
+    under 16-way contention (by tools/pip_microbench.py, since deleted;
+    recover it with ``git show 0ecc20e:tools/pip_microbench.py``); agrees
+    with it exactly on vertex/edge points (exact products) and everywhere
+    off-boundary."""
     straddle = (y1 <= y) != (y2 <= y)
     d = y2 - y1
     s = np.sign(d)
     lhs = (x - x1) * (d * s)          # (x - x1) * |d|
     rhs = (y - y1) * ((x2 - x1) * s)
-    crossings = straddle & (lhs < rhs)
-    return (crossings.sum(axis=1) % 2).astype(bool)
+    return straddle & (lhs < rhs)
+
+
+def _point_in_ring_block(y, x, y1, x1, y2, x2):
+    """Ray-cast parity of each row of a (points × edges) block."""
+    return (_ray_crossings(y, x, y1, x1, y2, x2).sum(axis=1) % 2).astype(bool)
 
 
 def point_in_ring(lats, lons, ring: np.ndarray):

@@ -82,6 +82,24 @@ def _adaptive_rows(rid: int, pdf: pd.DataFrame, base_level: int, max_level: int)
     )
 
 
+def local_adaptive_cell_index(rings_pdf: pd.DataFrame, base_level: int, max_level: int):
+    """The driver-local side of ``build_adaptive_cell_index``: the index
+    rows as a pandas frame for stores of ≤ ``LOCAL_INDEX_MAX_REGIONS``
+    regions, computed from the collected ``rings_pdf`` with no Spark job;
+    None for larger stores (their index is built distributed)."""
+    if rings_pdf["region_id"].nunique() > LOCAL_INDEX_MAX_REGIONS:
+        return None
+    parts = [
+        _adaptive_rows(rid, grp, base_level, max_level)
+        for rid, grp in rings_pdf.groupby("region_id")
+    ]
+    return (
+        pd.concat(parts, ignore_index=True)
+        if parts
+        else pd.DataFrame({"cell_key": [], "region_id": [], "full": []})
+    )
+
+
 def build_adaptive_cell_index(
     region_rings: DataFrame,
     base_level: int,
@@ -98,25 +116,17 @@ def build_adaptive_cell_index(
     Count-gated physical dispatch (identical rows either way, order aside —
     every consumer joins/aggregates or re-sorts): dimension-scale stores
     (≤ LOCAL_INDEX_MAX_REGIONS regions) compute the covering driver-side
-    from ``rings_pdf``, with no Spark job; larger stores fan out one pandas
-    group of ``region_rings`` per region."""
-    if rings_pdf["region_id"].nunique() > LOCAL_INDEX_MAX_REGIONS:
+    from ``rings_pdf`` (``local_adaptive_cell_index``), with no Spark job;
+    larger stores fan out one pandas group of ``region_rings`` per
+    region."""
+    pdf = local_adaptive_cell_index(rings_pdf, base_level, max_level)
+    if pdf is not None:
+        return region_rings.sparkSession.createDataFrame(pdf, CELL_INDEX_SCHEMA)
 
-        def per_region(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _adaptive_rows(int(pdf["region_id"].iloc[0]), pdf, base_level, max_level)
+    def per_region(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _adaptive_rows(int(pdf["region_id"].iloc[0]), pdf, base_level, max_level)
 
-        return region_rings.groupBy("region_id").applyInPandas(per_region, CELL_INDEX_SCHEMA)
-
-    parts = [
-        _adaptive_rows(rid, grp, base_level, max_level)
-        for rid, grp in rings_pdf.groupby("region_id")
-    ]
-    pdf = (
-        pd.concat(parts, ignore_index=True)
-        if parts
-        else pd.DataFrame({"cell_key": [], "region_id": [], "full": []})
-    )
-    return region_rings.sparkSession.createDataFrame(pdf, CELL_INDEX_SCHEMA)
+    return region_rings.groupBy("region_id").applyInPandas(per_region, CELL_INDEX_SCHEMA)
 
 
 def rings_lookup(region_rings_pdf: pd.DataFrame) -> dict:

@@ -7,9 +7,7 @@ GridRegionTree (/root/reference/include/osmtools/OsmGridRegionTree.h:109-151)
 translation is a single ``mapInArrow`` pass:
 
     pages → one text-in Arrow-batched map (RE2 geocode + cell keys +
-    region resolution all inside the batch: definite hits free via
-    searchsorted + mask OR, boundary candidates ray-cast) →
-    (url, cell_key, region_ids)
+    region resolution all inside the batch) → (url, cell_key, region_ids)
 
 ZERO shuffles, embarrassingly parallel, scales linearly with executors.
 ``_resolve_masks`` is the engine's one region resolver: the flagship
@@ -18,6 +16,15 @@ the lat/lon variant ``map_spatial_join`` — for callers whose coordinates
 already exist as columns (streaming joins, oracle queries) — all resolve
 through it.  The relational join (joins/spatial.py) is the fallback for
 stores too large to broadcast.
+
+The broadcast is ``build_cell_candidates``' per-level tables, nothing
+else: the kernel never reads the rings.  Points in FULL cells take their
+regions from one searchsorted + mask-row OR per level.  Points in PARTIAL
+(boundary) cells ray-cast against each candidate region's edges pre-clipped
+to the cell, stored flat per level (``PartialCells``: cell → (region,
+frame) pairs → edges, CSR), so one segmented vector pass resolves every
+boundary point of a batch with no per-cell Python loop (the flat per-cell
+edge layout of *Raster Intervals*, SIGMOD 2023).
 """
 
 from __future__ import annotations
@@ -30,34 +37,79 @@ from pyspark.sql import functions as F
 from libosmtools_spark.geom import kernels as K
 
 
-def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict | None = None) -> dict:
-    """Broadcast-ready per-LEVEL lookup tables from the collected
-    cell-coverage index (dimension-scale; the index may hold mixed-level
-    keys — the adaptive default).
+class PartialCells:
+    """One level's partial (boundary) candidates as CSR arrays, read-only.
+
+    - ``cell_ptr`` int64[k+1]: cell ``i``'s candidate pairs are
+      ``cell_ptr[i]:cell_ptr[i+1]`` (cells follow the level's sorted keys);
+    - ``region`` int64[P], ``lon_lo`` / ``lon_hi`` float64[P]: each pair's
+      region id and that REGION's continuous longitude frame;
+    - ``edge_ptr`` int64[P+1]: pair ``p``'s edges are
+      ``edges[edge_ptr[p]:edge_ptr[p+1]]``;
+    - ``edges`` float64[E, 4]: ``[y1, x1, y2, x2]`` rows, each pair's
+      region boundary clipped to the cell (kernels.clip_edges_for_cell).
+
+    ``view[i]`` is cell ``i``'s ``[(region_id, edges, lon_lo, lon_hi),
+    ...]`` list, or None when the cell has no partial candidate — the
+    per-cell shape readers outside the resolver (perfbench/layers.py)
+    iterate."""
+
+    __slots__ = ("cell_ptr", "region", "lon_lo", "lon_hi", "edge_ptr", "edges")
+
+    def __init__(self, cell_ptr, region, lon_lo, lon_hi, edge_ptr, edges):
+        self.cell_ptr = cell_ptr
+        self.region = region
+        self.lon_lo = lon_lo
+        self.lon_hi = lon_hi
+        self.edge_ptr = edge_ptr
+        self.edges = edges
+
+    def __len__(self) -> int:
+        return len(self.cell_ptr) - 1
+
+    def __getitem__(self, i):
+        if not 0 <= i < len(self):
+            raise IndexError(i)
+        a, b = int(self.cell_ptr[i]), int(self.cell_ptr[i + 1])
+        if a == b:
+            return None
+        ep = self.edge_ptr
+        return [
+            (int(self.region[p]), self.edges[ep[p] : ep[p + 1]], float(self.lon_lo[p]), float(self.lon_hi[p]))
+            for p in range(a, b)
+        ]
+
+
+def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict) -> dict:
+    """Broadcast-ready per-LEVEL lookup tables from the cell-coverage index
+    (dimension-scale; the index may hold mixed-level keys — the adaptive
+    default) and the store's rings (region_id → (outers, inners), the
+    continuous-frame ``rings_lookup``).
 
     Returns ``{"n_regions": int, "n_words": int, "levels": {level:
-    (keys_sorted int64[k], full_masks int64[k, n_words], part_payload
-    list[k], has_part bool[k])}}``:
+    (keys_sorted int64[k], full_masks int64[k, n_words], partial
+    PartialCells[k], has_part bool[k])}}``:
 
     - ``full_masks[i]`` is the OR of the region bits FULLY covering cell
       ``keys_sorted[i]`` — the kernel resolves full hits with one batched
       searchsorted + mask-row OR, NO per-cell Python (a per-cell loop over
       the adaptive index's thousands of fine cells was pure interpreter
       overhead — measured 2× the whole flagship);
-    - ``part_payload[i]`` lists ``(region_id, clipped_edges|None, lon_lo,
-      lon_hi)`` for boundary (partial) candidates — the only per-cell work
-      left, on a thin point-sparse minority of cells.  (lon_lo, lon_hi) is
-      the owning REGION's continuous longitude frame, threaded through so
-      query-time probe shifting never re-derives a frame from the clipped
-      edge subset (whose max lon can sit exactly at 180.0 for a wrapped
-      region and defeat the identity check).
+    - ``partial`` holds, per cell, one (region, lon_lo, lon_hi) pair per
+      region whose boundary touches the cell, with that region's edges
+      pre-clipped to the cell (kernels.clip_edges_for_cell, the cell's lon
+      window shifted into the region's frame): a planet-size ring shrinks
+      to the few edges near the cell, which is where the ray-cast cost
+      goes.  (lon_lo, lon_hi) is the owning REGION's continuous longitude
+      frame, so query-time probe shifting never re-derives a frame from the
+      clipped subset (whose max lon can sit exactly at 180.0 for a wrapped
+      region and defeat the identity check).  Parity over the combined
+      outer+inner edge set is the even-odd rule — equivalent to
+      inside(outer) ∧ ¬inside(hole) for nested holes (the region model).
 
-    When ``rings`` (region_id → (outers, inners)) is given, each partial
-    candidate's boundary is PRE-CLIPPED to the cell (kernels.
-    clip_edges_for_cell): a planet-size ring shrinks to the few edges near
-    the cell, which is where the ray-cast cost goes.  Parity over the
-    combined outer+inner edge set is the even-odd rule — equivalent to
-    inside(outer) ∧ ¬inside(hole) for nested holes (the region model)."""
+    Rows are ordered by (cell key, region id), so the tables do not depend
+    on the index's row order (driver-local and distributed builds give
+    identical tables)."""
     ck = cell_index_pdf["cell_key"].to_numpy(dtype=np.int64)
     rid = cell_index_pdf["region_id"].to_numpy(dtype=np.int64)
     full = cell_index_pdf["full"].to_numpy(dtype=bool)
@@ -73,80 +125,73 @@ def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict | None = Non
     lv_of = ck >> K._LEVEL_SHIFT
     for lv in np.unique(lv_of):
         m = lv_of == lv
-        keys_lv = ck[m]
-        order = np.argsort(keys_lv, kind="stable")
-        skeys = keys_lv[order]
+        order = np.lexsort((rid[m], ck[m]))
+        skeys = ck[m][order]
         srid = rid[m][order]
         sfull = full[m][order]
         sword = word[m][order]
         sbit = bit_val[m][order]
-        uniq, starts = np.unique(skeys, return_index=True)
+        uniq = np.unique(skeys)
         grp_idx = np.searchsorted(uniq, skeys)  # row → unique-cell index
         full_masks = np.zeros((len(uniq), n_words), dtype=np.int64)
         frows = np.flatnonzero(sfull)
         np.bitwise_or.at(full_masks, (grp_idx[frows], sword[frows]), sbit[frows])
-        part_payload: list = [None] * len(uniq)
-        has_part = np.zeros(len(uniq), dtype=bool)
+        # one candidate pair per partial row, in (cell, region) order
         prows = np.flatnonzero(~sfull)
-        if len(prows):
-            p_g = grp_idx[prows]  # unique-cell index per partial row
-            p_r = srid[prows]  # owning region per partial row
-            # per-row (clipped_edges, lon_lo, lon_hi), clipped REGION-AT-A-
-            # TIME: the old per-row loop re-ran cell_bounds / frame shift /
-            # a full O(region edges) comparison per boundary cell in Python
-            # — O(boundary cells) interpreter iterations that became the one
-            # driver-side scale cliff of the plan of record.  Here each
-            # region does ONE vectorized bounds+frame pass over all its
-            # cells and a chunked 2-D (cells × edges) clip mask; the only
-            # per-cell step left is the boolean-index edge extraction.
-            clipped: list = [None] * len(prows)
-            if rings is not None:
-                for r in np.unique(p_r):
-                    cached = region_edges.get(int(r))
-                    if cached is None:
-                        outers, inners = rings[int(r)]
-                        arr = np.vstack(
-                            [K.ring_edges(rr) for rr in list(outers) + list(inners)]
-                        )
-                        ylo = np.minimum(arr[:, 0], arr[:, 2])
-                        yhi = np.maximum(arr[:, 0], arr[:, 2])
-                        emax = np.maximum(arr[:, 1], arr[:, 3])
-                        elo = float(min(arr[:, 1].min(), arr[:, 3].min()))
-                        ehi = float(max(arr[:, 1].max(), arr[:, 3].max()))
-                        cached = region_edges[int(r)] = (arr, ylo, yhi, emax, elo, ehi)
-                    arr, ylo, yhi, emax, elo, ehi = cached
-                    rows_r = np.flatnonzero(p_r == r)
-                    min_lat, max_lat, min_lon, max_lon = K.cell_bounds(
-                        uniq[p_g[rows_r]].astype(np.int64)
-                    )
-                    # shift each cell's lon window into the region's
-                    # continuous frame (antimeridian-wrapped regions store
-                    # lons past ±180; identity — shift +0.0 — otherwise)
-                    c = (min_lon + max_lon) / 2.0
-                    cw = np.asarray(K.wrap_lons_to_frame(c, elo, ehi), dtype=np.float64)
-                    sh_min_lon = min_lon + (cw - c)
-                    # chunked (cells × edges) keep mask — same predicate as
-                    # clip_edges_for_cell, evaluated for all cells at once
-                    step = max(1, 4_000_000 // max(len(arr), 1))
-                    for s in range(0, len(rows_r), step):
-                        ch = slice(s, s + step)
-                        keep2d = (
-                            (yhi[None, :] > min_lat[ch, None])
-                            & (ylo[None, :] <= max_lat[ch, None])
-                            & (emax[None, :] >= sh_min_lon[ch, None])
-                        )
-                        for j, row_i in enumerate(rows_r[ch]):
-                            clipped[row_i] = (arr[keep2d[j]], elo, ehi)
-            # assemble per-cell payload lists in the original (key-sorted,
-            # stable) row order — identical ordering to the old loop
-            for i, row in enumerate(prows):
-                g = p_g[i]
-                cl, elo, ehi = clipped[i] if clipped[i] is not None else (None, -180.0, 180.0)
-                if part_payload[g] is None:
-                    part_payload[g] = []
-                part_payload[g].append((int(p_r[i]), cl, elo, ehi))
-                has_part[g] = True
-        levels[int(lv)] = (uniq, full_masks, part_payload, has_part)
+        p_g = grp_idx[prows]  # unique-cell index per pair
+        p_r = srid[prows]  # owning region per pair
+        lon_lo = np.empty(len(prows))
+        lon_hi = np.empty(len(prows))
+        pair_of = [np.empty(0, dtype=np.int64)]
+        pair_edges = [np.empty((0, 4))]
+        # clipped REGION-AT-A-TIME: each region does ONE vectorized
+        # bounds + frame pass over all its cells and a chunked 2-D
+        # (cells × edges) clip mask — no per-cell Python
+        for r in np.unique(p_r):
+            cached = region_edges.get(int(r))
+            if cached is None:
+                outers, inners = rings[int(r)]
+                arr = np.vstack([K.ring_edges(rr) for rr in list(outers) + list(inners)])
+                ylo = np.minimum(arr[:, 0], arr[:, 2])
+                yhi = np.maximum(arr[:, 0], arr[:, 2])
+                emax = np.maximum(arr[:, 1], arr[:, 3])
+                elo = float(min(arr[:, 1].min(), arr[:, 3].min()))
+                ehi = float(max(arr[:, 1].max(), arr[:, 3].max()))
+                cached = region_edges[int(r)] = (arr, ylo, yhi, emax, elo, ehi)
+            arr, ylo, yhi, emax, elo, ehi = cached
+            rows_r = np.flatnonzero(p_r == r)
+            lon_lo[rows_r] = elo
+            lon_hi[rows_r] = ehi
+            min_lat, max_lat, min_lon, max_lon = K.cell_bounds(uniq[p_g[rows_r]])
+            # shift each cell's lon window into the region's continuous
+            # frame (antimeridian-wrapped regions store lons past ±180;
+            # identity — shift +0.0 — otherwise)
+            c = (min_lon + max_lon) / 2.0
+            cw = np.asarray(K.wrap_lons_to_frame(c, elo, ehi), dtype=np.float64)
+            sh_min_lon = min_lon + (cw - c)
+            # chunked (cells × edges) keep mask — clip_edges_for_cell's
+            # predicate, evaluated for all cells at once
+            step = max(1, 4_000_000 // max(len(arr), 1))
+            for s in range(0, len(rows_r), step):
+                ch = slice(s, s + step)
+                keep2d = (
+                    (yhi[None, :] > min_lat[ch, None])
+                    & (ylo[None, :] <= max_lat[ch, None])
+                    & (emax[None, :] >= sh_min_lon[ch, None])
+                )
+                j, e = np.nonzero(keep2d)  # row-major: each pair's edges in ring order
+                pair_of.append(rows_r[ch][j])
+                pair_edges.append(arr[e])
+        pair_of = np.concatenate(pair_of)
+        by_pair = np.argsort(pair_of, kind="stable")
+        edge_ptr = np.zeros(len(prows) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(pair_of, minlength=len(prows)), out=edge_ptr[1:])
+        cell_ptr = np.zeros(len(uniq) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(p_g, minlength=len(uniq)), out=cell_ptr[1:])
+        partial = PartialCells(
+            cell_ptr, p_r, lon_lo, lon_hi, edge_ptr, np.concatenate(pair_edges)[by_pair]
+        )
+        levels[int(lv)] = (uniq, full_masks, partial, np.diff(cell_ptr) > 0)
     return {"n_regions": n_regions, "n_words": n_words, "levels": levels}
 
 
@@ -198,11 +243,16 @@ def _masks_to_region_lists(masks: np.ndarray):
 
 def _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words) -> np.ndarray:
     """The kernel core: (lat, lon, cell_key[-1 sentinel]) arrays → (n,
-    n_words) int64 region bitmasks.  Rows are grouped by cell (np.unique —
-    points in the same cell share one candidate set), definite regions OR
-    in with one batched searchsorted + mask-row OR per level, and only
-    boundary-cell points ray-cast (against edges pre-clipped to the cell).
-    Pure integer/float vector ops — no Python-object strings."""
+    n_words) int64 region bitmasks, from ``build_cell_candidates``' tables
+    alone.  Per level, every point's key at that level is probed with one
+    searchsorted: definite regions OR in as full-mask rows, and the points
+    of partial cells ray-cast in one segmented pass (``_raycast_partial``).
+    Pure integer/float vector ops — no Python-object strings, no per-cell
+    Python loop.
+
+    ``rings`` is not read: it stays in the positional signature for
+    callers written against the whole-ring resolver (perfbench/layers.py
+    passes the rings lookup); the engine's callers pass None."""
     n = len(keys)
     masks = np.zeros((n, n_words), dtype=np.int64)
     valid = keys >= 0
@@ -217,7 +267,7 @@ def _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words) -> np.ndarr
         else {lv: np.empty(0, np.int64) for lv in index_levels}
     )
     for lv in index_levels:
-        lkeys, full_masks, part_payload, has_part = tabs[lv]
+        lkeys, full_masks, partial, has_part = tabs[lv]
         if not len(lkeys):
             continue
         pkeys = pkeys_by_level[lv]
@@ -229,29 +279,72 @@ def _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words) -> np.ndarr
         # ---- FULL hits: one vectorized OR per mask word
         for w in range(n_words):
             masks[hidx, w] |= full_masks[hpos, w]
-        # ---- PARTIAL cells: per-cell ray-cast (boundary-only)
+        # ---- PARTIAL cells: one segmented ray-cast
         pm = has_part[hpos]
         if pm.any():
-            p_idx = hidx[pm]
-            p_pos = hpos[pm]
-            order = np.argsort(p_pos, kind="stable")
-            sp = p_pos[order]
-            si = p_idx[order]
-            uniq, starts = np.unique(sp, return_index=True)
-            ends = np.append(starts[1:], len(sp))
-            for u, s, e in zip(uniq, starts, ends):
-                sel = si[s:e]
-                la_sel = la[sel]  # copy once per cell, not per region
-                lo_sel = lo[sel]
-                for rid, cl, flo, fhi in part_payload[u]:
-                    word, bit = divmod(rid, 63)
-                    if cl is not None:
-                        hits_ = K.point_in_edges(la_sel, lo_sel, cl, frame=(flo, fhi))
-                    else:
-                        outers, inners = rings[rid]
-                        hits_ = K.point_in_rings(la_sel, lo_sel, outers, inners)
-                    masks[sel[hits_], word] |= np.int64(1) << np.int64(bit)
+            _raycast_partial(masks, la, lo, hidx[pm], hpos[pm], partial)
     return masks
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + c)`` for each (s, c) pair."""
+    total = int(counts.sum())
+    offs = np.cumsum(counts) - counts
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - offs, counts)
+
+
+def _chunks(counts: np.ndarray, cap: int):
+    """Consecutive ``(start, end)`` slices of ``counts`` whose sums stay
+    within ``cap`` (a slice holds one item at least)."""
+    ends = np.cumsum(counts)
+    s = 0
+    while s < len(counts):
+        e = max(s + 1, int(np.searchsorted(ends, ends[s] - counts[s] + cap, side="right")))
+        yield s, e
+        s = e
+
+
+def _raycast_partial(masks, la, lo, rows, cells, partial: PartialCells) -> None:
+    """OR into ``masks`` the region bit of every (point, partial candidate)
+    pair whose clipped edges the point crosses an odd number of times.
+
+    ``rows`` are batch rows and ``cells`` their rows in the level table.
+    Each point is repeated over its cell's pairs (a probe per pair), its
+    lon shifted into the pair's region frame with exactly
+    ``kernels.wrap_lons_to_frame``'s arithmetic (identity inside [-180,
+    180]), and each probe meets its pair's edges through
+    ``kernels._ray_crossings`` (the predicate of ``point_in_edges``, same
+    operands), so hits are bit-identical to a per-cell ray-cast.  Probes
+    are made for about ``kernels._PIP_CHUNK_ELEMS`` at a time, and their
+    edges gathered in chunks of as many (probe, edge) elements, so memory
+    does not grow with the batch."""
+    cap = K._PIP_CHUNK_ELEMS
+    p0 = partial.cell_ptr[cells]
+    npair = partial.cell_ptr[cells + 1] - p0
+    for a, b in _chunks(npair, cap):
+        q_row = np.repeat(rows[a:b], npair[a:b])
+        q_pair = _ranges(p0[a:b], npair[a:b])
+        y = la[q_row]
+        x = lo[q_row]
+        flo = partial.lon_lo[q_pair]
+        fhi = partial.lon_hi[q_pair]
+        wrap = ~((flo >= -180.0) & (fhi <= 180.0))
+        if wrap.any():
+            xw = x[wrap]
+            mid = (flo[wrap] + fhi[wrap]) / 2.0
+            x[wrap] = xw + 360.0 * np.round((mid - xw) / 360.0)
+        e0 = partial.edge_ptr[q_pair]
+        ne = partial.edge_ptr[q_pair + 1] - e0
+        odd = np.zeros(len(q_row), dtype=bool)
+        for s, e in _chunks(ne, cap):
+            cnt = ne[s:e]
+            k = np.repeat(np.arange(e - s), cnt)  # chunk-local probe per element
+            y1, x1, y2, x2 = partial.edges[_ranges(e0[s:e], cnt)].T
+            cross = K._ray_crossings(y[s:e][k], x[s:e][k], y1, x1, y2, x2)
+            odd[s:e] = np.bincount(k[cross], minlength=e - s) & 1
+        hit = np.flatnonzero(odd)
+        rid = partial.region[q_pair[hit]]
+        np.bitwise_or.at(masks, (q_row[hit], rid // 63), np.int64(1) << (rid % 63))
 
 
 #: flag column of map_spatial_join_text: first row of its cell key in the batch
@@ -315,7 +408,10 @@ def map_spatial_join_text(
     distinct cell key (NULL included) within its Arrow batch: filtering on
     it yields the cells-dictionary feed (build_cells_table_map, which
     collects it to the driver) at batches × occupied-cells rows, straight
-    from this one pass over the pages."""
+    from this one pass over the pages.
+
+    ``rings_bcast`` is not read and is not shipped to the workers: the
+    candidate tables carry every edge the kernel ray-casts."""
     n_words = candidates_bcast.value["n_words"]
     url_type = dict(pages.dtypes)["url"]
     schema = f"url {url_type}, cell_key long, region_ids array<int>, {BATCH_UNIQUE} boolean"
@@ -325,11 +421,10 @@ def map_spatial_join_text(
         import pyarrow as pa
 
         tabs = candidates_bcast.value["levels"]
-        rings = rings_bcast.value
         for batch in batches:
             la, lo = _geocode_batch(batch.column("text"))
             keys = _keys_of(la, lo, level)
-            masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
+            masks = _resolve_masks(la, lo, keys, tabs, None, index_levels, n_words)
             offs, vals = _masks_to_region_lists(masks)
             first = np.zeros(len(keys), dtype=bool)
             first[np.unique(keys, return_index=True)[1]] = True
@@ -383,14 +478,14 @@ def map_spatial_join(
 ) -> DataFrame:
     """points(id, lat, lon, cell_key) → (id, cell_key, region_ids array).
 
-    Per Arrow batch: group point rows by cell (np.unique — points in the
-    same cell share the same candidate set), assign definite regions
-    without a geometry test, ray-cast the candidates, and OR each hit into
-    a per-point int64 BITMASK (multi-word for stores >62 regions) — pure
-    integer vector ops, no Python-object strings in the hot path (string
-    assembly doubled CPU time at high thread counts from memory stalls).
-    Masks decode to sorted region-id arrays inside the batch
-    (_masks_to_region_lists)."""
+    Per Arrow batch: assign definite regions without a geometry test,
+    ray-cast the boundary candidates (``_resolve_masks``), and OR each hit
+    into a per-point int64 BITMASK (multi-word for stores >62 regions) —
+    pure integer vector ops, no Python-object strings in the hot path
+    (string assembly doubled CPU time at high thread counts from memory
+    stalls).  Masks decode to sorted region-id arrays inside the batch
+    (_masks_to_region_lists).  ``rings_bcast`` is not read, as in
+    ``map_spatial_join_text``."""
     n_words = candidates_bcast.value["n_words"]
     dtypes = dict(points.dtypes)
     id_type = dtypes[id_col]
@@ -413,7 +508,6 @@ def map_spatial_join(
         import pyarrow.compute as pc
 
         tabs = candidates_bcast.value["levels"]
-        rings = rings_bcast.value
         nan = pa.scalar(float("nan"), type=pa.float64())
         for batch in batches:
             # Arrow-native I/O (mapInArrow): the id column passes through as
@@ -433,7 +527,7 @@ def map_spatial_join(
             # corrupt the whole batch — the asarray int64 check raises
             # loudly if that ever regresses.
             keys = np.asarray(batch.column("cell_key").to_numpy(), dtype=np.int64)
-            masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
+            masks = _resolve_masks(la, lo, keys, tabs, None, index_levels, n_words)
             arrays = [batch.column(id_col), batch.column("cell_key")]
             names = [id_col, "cell_key"]
             for c in carry_cols:  # passthrough Arrow buffers (e.g. event time

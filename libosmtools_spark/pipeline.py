@@ -31,7 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from libosmtools_spark.cells.assign import assign_point_cell_ids, build_cells_table_map
-from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
+from libosmtools_spark.index.grid import (
+    CELL_INDEX_SCHEMA,
+    build_adaptive_cell_index,
+    local_adaptive_cell_index,
+    rings_lookup,
+)
 from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE, map_spatial_join_text
 
 DEFAULT_LEVEL = 6
@@ -73,20 +78,29 @@ class SpatialEngine:
         # of a collect + a shuffle/UDF stage per build
         rings_pdf = region_rings.toPandas()
         self.rings_bcast = spark.sparkContext.broadcast(rings_lookup(rings_pdf))
-        self.cell_index = build_adaptive_cell_index(
-            region_rings, level, self.max_level, rings_pdf=rings_pdf
+        # the driver-local index (None above LOCAL_INDEX_MAX_REGIONS) feeds
+        # the candidate tables directly; only a distributed index is
+        # collected back for them
+        self._index_pdf = local_adaptive_cell_index(rings_pdf, level, self.max_level)
+        self.cell_index = (
+            build_adaptive_cell_index(region_rings, level, self.max_level, rings_pdf=rings_pdf)
+            if self._index_pdf is None
+            else spark.createDataFrame(self._index_pdf, CELL_INDEX_SCHEMA)
         ).cache()
         self._candidates_bcast = None
 
     @property
     def candidates_bcast(self):
-        """cell_key → (region ids, full flags) lookup, broadcast lazily —
-        powers the zero-shuffle map join."""
+        """The candidate tables (``build_cell_candidates``), broadcast
+        lazily — all the zero-shuffle map join reads."""
         if self._candidates_bcast is None:
             from libosmtools_spark.joins.mapjoin import build_cell_candidates
 
+            index_pdf = self._index_pdf
+            if index_pdf is None:
+                index_pdf = self.cell_index.toPandas()
             self._candidates_bcast = self.spark.sparkContext.broadcast(
-                build_cell_candidates(self.cell_index.toPandas(), self.rings_bcast.value)
+                build_cell_candidates(index_pdf, self.rings_bcast.value)
             )
         return self._candidates_bcast
 

@@ -508,6 +508,45 @@ class TestLocalIndexGate:
         assert "FlatMapGroupsInPandas" not in plan(local)
         assert self._index_rows(dist) == self._index_rows(local)
 
+    @pytest.mark.parametrize("store", ["fixture", "antimeridian"])
+    def test_candidates_equal_on_both_sides(self, spark, sf_smoke, monkeypatch, store):
+        """The engine's candidate tables are the same arrays whichever side
+        of the gate built the index; only the distributed side runs a Spark
+        job to collect it (the driver-local index feeds them directly)."""
+        import __spark_entry__ as entry
+        from libosmtools_spark.index import grid
+        from libosmtools_spark.joins.mapjoin import PartialCells
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        if store == "fixture":
+            rings = spark.read.parquet(os.path.join(sf_smoke, "region_rings.parquet"))
+        else:
+            rings = entry._antim_region_rings(spark)
+        sc = spark.sparkContext
+
+        def candidates(group):
+            eng = SpatialEngine(spark, rings, 6, 10)
+            sc.setJobGroup(group, group)
+            try:
+                cand = eng.candidates_bcast.value
+            finally:
+                sc.setJobGroup(None, None)
+            return cand, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        local, local_jobs = candidates(f"cand-local-{store}")
+        monkeypatch.setattr(grid, "LOCAL_INDEX_MAX_REGIONS", 0)
+        dist, dist_jobs = candidates(f"cand-dist-{store}")
+        assert local_jobs == 0 < dist_jobs
+        assert (local["n_regions"], local["n_words"]) == (dist["n_regions"], dist["n_words"])
+        assert sorted(local["levels"]) == sorted(dist["levels"])
+        for lv, (keys, full_masks, partial, has_part) in local["levels"].items():
+            d_keys, d_full, d_partial, d_has = dist["levels"][lv]
+            np.testing.assert_array_equal(keys, d_keys)
+            np.testing.assert_array_equal(full_masks, d_full)
+            np.testing.assert_array_equal(has_part, d_has)
+            for name in PartialCells.__slots__:
+                np.testing.assert_array_equal(getattr(partial, name), getattr(d_partial, name))
+
     def test_distributed_build_flagship_matches_golden(self, spark, sf_smoke, pages, monkeypatch):
         from libosmtools_spark.index import grid
         from libosmtools_spark.pipeline import SpatialEngine
