@@ -981,60 +981,48 @@ def q_events_window(spark, sf_dir):
 _STREAM_SEQ = [0]
 
 
+def _events_thirds(sf_dir, sort_keys=None):
+    """events.parquet as three consecutive Arrow slices, one micro-batch
+    each; ``sort_keys`` (pyarrow sort keys) orders the table first."""
+    import pyarrow.compute as _pc
+    import pyarrow.parquet as _pq
+
+    tbl = _pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    if sort_keys:
+        tbl = tbl.take(_pc.sort_indices(tbl, sort_keys=sort_keys))
+    n = tbl.num_rows
+    cuts = [0, n // 3, 2 * n // 3, n]
+    return [tbl.slice(cuts[i], cuts[i + 1] - cuts[i]) for i in range(3)]
+
+
 def q_events_window_stream(spark, sf_dir):
     """Structured-Streaming face of events_window — the SAME windowed
     aggregation (arithmetic 5-minute buckets, pure JVM Columns) run as a
     REAL streaming query: parquet file source split into three slices
     (one micro-batch each, so the aggregation state genuinely accumulates
-    across batches), complete-mode memory sink, processAllAvailable.
+    across batches), complete-mode memory sink, processAllAvailable
+    (streaming/geostream.py::drain_to_memory).
     Stream == batch by construction (stateless bucket Columns + full-state
     complete mode), so the exact batch SQL oracle applies — graduating the
     streaming family from stream==batch pytest parity to a
     rows+schema+hash driver oracle (streaming/geostream.py is the same
     posture for the spatial pipeline)."""
-    import shutil
-    import tempfile
+    from libosmtools_spark.streaming.geostream import drain_to_memory
 
-    import pyarrow.parquet as _pq
-
-    src = os.path.join(sf_dir, "events.parquet")
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    try:
-        tbl = _pq.read_table(src)
-        n = tbl.num_rows
-        cuts = [0, n // 3, 2 * n // 3, n]
-        for i in range(3):
-            _pq.write_table(
-                tbl.slice(cuts[i], cuts[i + 1] - cuts[i]),
-                os.path.join(d, f"part-{i}.parquet"),
-            )
-        static = spark.read.parquet(src)
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
+    def build(stream):
         win = (F.floor(_epoch_us(F.col("ts")) / F.lit(300_000_000)) * 300).cast("long")
-        agg = stream.groupBy(win.alias("window_s"), "event_type").agg(
+        return stream.groupBy(win.alias("window_s"), "event_type").agg(
             F.count("*").alias("n_events"), F.min("event_id").alias("min_event_id")
         )
-        _STREAM_SEQ[0] += 1
-        qname = f"events_window_stream_{_STREAM_SEQ[0]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(qname)
-    finally:
-        # the memory sink holds the rows; the staged slices are not needed
-        # after the stream drains (min-of-N bench loops must not leak dirs)
-        shutil.rmtree(d, ignore_errors=True)
+
+    _STREAM_SEQ[0] += 1
+    return drain_to_memory(
+        spark,
+        _events_thirds(sf_dir),
+        build,
+        "complete",
+        f"events_window_stream_{_STREAM_SEQ[0]}",
+    )
 
 
 def q_stream_first_event(spark, sf_dir):
@@ -1046,53 +1034,19 @@ def q_stream_first_event(spark, sf_dir):
     equals the relational row_number()=1 answer.  A user whose rows span
     micro-batches exercises the cross-batch state suppression; the first
     batch containing a user holds their global minimum by construction."""
-    import shutil
-    import tempfile
-    import time as _time
+    from libosmtools_spark.streaming.geostream import (
+        drain_to_memory,
+        stream_first_event_per_user,
+    )
 
-    import pyarrow.compute as _pc
-    import pyarrow.parquet as _pq
-
-    from libosmtools_spark.streaming.geostream import stream_first_event_per_user
-
-    src = os.path.join(sf_dir, "events.parquet")
-    d = tempfile.mkdtemp(prefix="events_stateful_")
-    try:
-        tbl = _pq.read_table(src)
-        tbl = tbl.take(
-            _pc.sort_indices(
-                tbl, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
-            )
-        )
-        n = tbl.num_rows
-        cuts = [0, n // 3, 2 * n // 3, n]
-        now = _time.time()
-        for i in range(3):
-            path = os.path.join(d, f"part-{i}.parquet")
-            _pq.write_table(tbl.slice(cuts[i], cuts[i + 1] - cuts[i]), path)
-            os.utime(path, (now + i, now + i))  # oldest-first = slice order
-        static = spark.read.parquet(src)
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
-        )
-        out = stream_first_event_per_user(stream)
-        _STREAM_SEQ[0] += 1
-        qname = f"stream_first_event_{_STREAM_SEQ[0]}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.table(qname)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    _STREAM_SEQ[0] += 1
+    return drain_to_memory(
+        spark,
+        _events_thirds(sf_dir, [("ts", "ascending"), ("event_id", "ascending")]),
+        stream_first_event_per_user,
+        "append",
+        f"stream_first_event_{_STREAM_SEQ[0]}",
+    )
 
 
 def q_stream_region_counts(spark, sf_dir):
@@ -1192,8 +1146,8 @@ def q_cell_point_stats(spark, sf_dir):
 
 def q_hop_distances(spark, sf_dir):
     """T23 — BFS hop distances over the cell dual graph from cell_id 1
-    (tiles.materialize.cell_hop_distances; count-gated local/loop
-    dispatch, parity-tested)."""
+    (tiles.materialize.cell_hop_distances: a driver-local CSR BFS up to
+    LOCAL_BFS_MAX_EDGES edges, the distributed frontier loop beyond)."""
     from libosmtools_spark.tiles.materialize import cell_dual_graph, cell_hop_distances
 
     cells = _doc_cells_dict(spark, sf_dir)
@@ -1214,19 +1168,19 @@ def q_cell_graph_diameter(spark, sf_dir):
 
 def q_cell_graph_diameter_loop(spark, sf_dir):
     """T7, forced-distributed physical path (the knn_ring pattern): the
-    double-sweep fallback that replaces the old ValueError past
-    LOCAL_BFS_MAX_EDGES — deterministic hash-ordered seeds, two distributed
-    BFS sweeps each (tiles.materialize.cell_graph_diameter(algo='loop');
-    reference posture: approximate beyond the cutoff, never fail,
+    double sweep the diameter takes past LOCAL_BFS_MAX_EDGES —
+    deterministic hash-ordered seeds, two distributed BFS sweeps each
+    (tiles.materialize.cell_graph_double_sweep with sweeps=2; reference
+    posture: approximate beyond the cutoff, never fail,
     /root/reference/src/OsmTriangulationRegionStore.cpp:100-132).  Same
     all-pairs recursive-CTE oracle as the local path — the sweep answer
     must equal the exact diameter on this fixture."""
-    from libosmtools_spark.tiles.materialize import cell_dual_graph, cell_graph_diameter
+    from libosmtools_spark.tiles.materialize import cell_dual_graph, cell_graph_double_sweep
 
     cells = _doc_cells_dict(spark, sf_dir)
-    return cell_graph_diameter(
-        cell_dual_graph(cells.select("cell_key", "cell_id")), algo="loop", sweeps=2
-    )
+    return cell_graph_double_sweep(
+        cell_dual_graph(cells.select("cell_key", "cell_id")), sweeps=2
+    ).select("n_nodes", "n_edges", "diameter")
 
 
 def q_split_criteria(spark, sf_dir):

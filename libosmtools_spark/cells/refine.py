@@ -4,9 +4,11 @@ splitting.
 - ``connected_components``: the reference's makeConnected splits each cell
   id into contiguous components over face adjacency (DFS relabel,
   /root/reference/src/OsmTriangulationRegionStore.cpp:517-591).  Grid
-  version: iterative min-label propagation over the cell-key adjacency
-  graph restricted to same-cell_id edges — a bounded DataFrame loop with
-  localCheckpoint (lineage cut), the scalable substitute for the DFS.
+  version: component-min labels over the cell-key adjacency graph
+  restricted to same-cell_id edges — vectorized numpy on the driver for a
+  dimension-scale cells table, else a bounded DataFrame loop of min-label
+  propagation + pointer jumping with localCheckpoint (lineage cut), the
+  scalable substitute for the DFS.
 
 - ``refine_oversized``: the reference's refineCells bounds per-cell size
   with pluggable criteria (CellTriangleCountCriteria,
@@ -17,9 +19,6 @@ splitting.
   semantic-skew mitigation: dense urban tiles get deeper keys, so the
   downstream shuffle on cell_key is balanced — the same contract (bounded
   cell size), grid-native mechanism.
-
-- round cap mirrors the reference's refinement loop bound
-  (/root/reference/include/osmtools/OsmTriangulationRegionStore.h:513).
 """
 
 from __future__ import annotations
@@ -32,14 +31,14 @@ from libosmtools_spark.geom.columns import cell_key_col
 from libosmtools_spark.geom.kernels import _LEVEL_SHIFT
 from libosmtools_spark.tiles.materialize import neighbor_keys_col
 
-MAX_ROUNDS = 10_000  # reference round cap
-
-
 #: cells tables up to this many rows take the driver-local vectorized path
 #: — the cells dictionary is DIMENSION-scale (it broadcasts in the flagship
 #: join; the reference's makeConnected is likewise an in-memory DFS,
 #: /root/reference/src/OsmTriangulationRegionStore.cpp:517-591)
 LOCAL_CC_MAX_ROWS = 2_000_000
+#: round cap of the distributed label loop (pointer jumping converges in
+#: O(log diameter) rounds)
+CC_MAX_ROUNDS = 50
 
 
 def _local_component_labels(keys: np.ndarray, cids: np.ndarray, max_iter: int = 64) -> np.ndarray:
@@ -87,7 +86,7 @@ def _local_component_labels(keys: np.ndarray, cids: np.ndarray, max_iter: int = 
     return lab
 
 
-def connected_components(cells: DataFrame, max_iter: int = 50, algo: str = "auto") -> DataFrame:
+def connected_components(cells: DataFrame) -> DataFrame:
     """cells(cell_key, cell_id) → (cell_key, cell_id, refined_cell_id).
 
     refined_cell_id is dense over (cell_id, component), so the
@@ -95,42 +94,40 @@ def connected_components(cells: DataFrame, max_iter: int = 50, algo: str = "auto
     (/root/reference/src/OsmTriangulationRegionStore.cpp:589) is just the
     cell_id column retained alongside.
 
-    ``algo``:
-    - 'auto' (default): count-gated dispatch — the cells dictionary is a
-      dimension table (it broadcasts in the flagship join), so up to
-      LOCAL_CC_MAX_ROWS it runs the vectorized in-memory path (the
-      reference's own makeConnected posture, a DFS over an in-memory
-      triangulation); larger tables fall through to 'jump'.
-    - 'jump': distributed DataFrame loop — pointer jumping (label ←
-      label(label)) interleaved with neighbor-min propagation; O(log
-      diameter) rounds instead of O(diameter).
-    - 'label': plain min-label propagation, O(diameter) rounds — kept for
-      parity testing.
-    All three produce the identical fixpoint (component-min labels; parity-
-    tested and oracle-checked)."""
-    assert algo in ("auto", "jump", "label")
-    if algo == "auto":
-        n = cells.count()
-        if n <= LOCAL_CC_MAX_ROWS:
-            import pandas as pd
+    The cells dictionary is a dimension table (it broadcasts in the
+    flagship join), so up to LOCAL_CC_MAX_ROWS — gated and fetched by ONE
+    limit(N+1) job — it runs the vectorized in-memory path (the
+    reference's own makeConnected posture, a DFS over an in-memory
+    triangulation); larger tables run ``_distributed_components``.  Both
+    produce the identical fixpoint (component-min labels; parity-tested
+    and oracle-checked)."""
+    import pandas as pd
 
-            pdf = cells.select("cell_key", "cell_id").toPandas().sort_values("cell_key")
-            keys = pdf["cell_key"].to_numpy(dtype=np.int64)
-            cids = pdf["cell_id"].to_numpy(dtype=np.int64)
-            lab = _local_component_labels(keys, cids)
-            # dense_rank over distinct (cell_id, label), cell 0 pinned to 0 —
-            # identical to the Window dense_rank of the distributed path
-            pairs = np.stack([cids, lab], axis=1)
-            # np.unique(axis=0) sorts rows lexicographically — the same
-            # order as Window.orderBy(cell_id, label); inverse = rank-1
-            _, inv = np.unique(pairs, axis=0, return_inverse=True)
-            refined = np.where(cids == 0, 0, inv.astype(np.int64) + 1)
-            out = pd.DataFrame(
-                {"cell_key": keys, "cell_id": pdf["cell_id"].to_numpy(), "refined_cell_id": refined}
-            )
-            return cells.sparkSession.createDataFrame(out)
-        algo = "jump"
     base = cells.select("cell_key", "cell_id")
+    pdf = base.limit(LOCAL_CC_MAX_ROWS + 1).toPandas()
+    if len(pdf) > LOCAL_CC_MAX_ROWS:
+        return _distributed_components(base)
+    pdf = pdf.sort_values("cell_key")
+    keys = pdf["cell_key"].to_numpy(dtype=np.int64)
+    cids = pdf["cell_id"].to_numpy(dtype=np.int64)
+    lab = _local_component_labels(keys, cids)
+    # dense_rank over distinct (cell_id, label), cell 0 pinned to 0 —
+    # identical to the Window dense_rank of the distributed path
+    pairs = np.stack([cids, lab], axis=1)
+    # np.unique(axis=0) sorts rows lexicographically — the same order as
+    # Window.orderBy(cell_id, label); inverse = rank-1
+    _, inv = np.unique(pairs, axis=0, return_inverse=True)
+    refined = np.where(cids == 0, 0, inv.astype(np.int64) + 1)
+    out = pd.DataFrame(
+        {"cell_key": keys, "cell_id": pdf["cell_id"].to_numpy(), "refined_cell_id": refined}
+    )
+    return cells.sparkSession.createDataFrame(out)
+
+
+def _distributed_components(base: DataFrame) -> DataFrame:
+    """DataFrame loop: neighbor-min propagation interleaved with pointer
+    jumping (label ← label(label)), O(log diameter) rounds instead of
+    O(diameter), at most CC_MAX_ROUNDS."""
     # same-cell_id adjacency edges (both directions)
     edges = (
         base.withColumn("n_key", F.explode(neighbor_keys_col(F.col("cell_key"))))
@@ -143,7 +140,7 @@ def connected_components(cells: DataFrame, max_iter: int = 50, algo: str = "auto
     ).localCheckpoint()
 
     labels = base.withColumn("label", F.col("cell_key"))
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # propagate: label = min(own, neighbors')
         nbr_min = (
             edges.join(labels.select(F.col("cell_key").alias("n_key"), "label"), "n_key")
@@ -155,24 +152,22 @@ def connected_components(cells: DataFrame, max_iter: int = 50, algo: str = "auto
             .withColumn("new_label", F.least(F.col("label"), F.coalesce("nbr_label", "label")))
             .select("cell_key", "cell_id", F.col("new_label").alias("label"))
         )
-        if algo == "jump":
-            # pointer jumping: label ← label(label).  A label is always the
-            # cell_key of some member of the same component, so the lookup
-            # table is new_labels itself.
-            lut = new_labels.select(
-                F.col("cell_key").alias("label"), F.col("label").alias("label2")
-            )
-            new_labels = new_labels.join(lut, "label", "left").select(
-                "cell_key", "cell_id", F.coalesce("label2", "label").alias("label")
-            )
-        new_labels = new_labels.localCheckpoint()
-        changed = (
+        # pointer jumping: label ← label(label).  A label is always the
+        # cell_key of some member of the same component, so the lookup
+        # table is new_labels itself.
+        lut = new_labels.select(F.col("cell_key").alias("label"), F.col("label").alias("label2"))
+        new_labels = (
+            new_labels.join(lut, "label", "left")
+            .select("cell_key", "cell_id", F.coalesce("label2", "label").alias("label"))
+            .localCheckpoint()
+        )
+        converged = (
             new_labels.join(labels.select("cell_key", F.col("label").alias("old")), "cell_key")
             .filter(F.col("label") != F.col("old"))
             .isEmpty()
         )
         labels = new_labels
-        if changed:
+        if converged:
             break
 
     w = Window.orderBy("cell_id", "label")

@@ -4,7 +4,9 @@ flagship pipeline — geocode → cell key → windowed per-cell counts).
 
 The stateless stages (geocode, cell key) reuse the exact batch Columns, so
 streaming and batch cannot drift.  Watermarked tumbling windows bound state
-for late data.
+for late data.  ``drain_to_memory`` is the one synchronous driver of every
+streaming query here and in ``__spark_entry__``: stage the input, read it
+one file per micro-batch, drain into a memory sink.
 """
 
 from __future__ import annotations
@@ -131,79 +133,68 @@ def stream_first_event_per_user(events_stream: DataFrame):
     )
 
 
-def _cleanup_staged(d) -> None:
-    """Remove a mkdtemp staging copy after the stream drains (the memory
-    sink owns the rows); no-op when the caller passed a real directory."""
-    if d is not None:
-        import shutil
+def drain_to_memory(spark, source, build, output_mode: str, query_name: str) -> DataFrame:
+    """Run ``build(stream)`` as a real streaming query and drain it
+    synchronously: a parquet file source read one file per micro-batch
+    (``maxFilesPerTrigger=1``), a memory sink, ``processAllAvailable``.
+    Returns the sink table ``query_name``.
 
-        shutil.rmtree(d, ignore_errors=True)
+    ``source`` is a parquet directory, a single parquet file (copied into a
+    temporary directory — the file source reads directories), or a list of
+    Arrow tables staged as one file each with strictly increasing mtimes,
+    so the source (oldest first) reads them in list order.  The staged
+    copy is removed once the stream drains (the memory sink owns the
+    rows)."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    staged = not (isinstance(source, str) and os.path.isdir(source))
+    path = tempfile.mkdtemp(prefix="geostream_") if staged else source
+    try:
+        if staged and isinstance(source, str):
+            shutil.copy(source, path)
+        elif staged:
+            import pyarrow.parquet as pq
+
+            now = time.time()
+            for i, tbl in enumerate(source):
+                part = os.path.join(path, f"part-{i}.parquet")
+                pq.write_table(tbl, part)
+                os.utime(part, (now + i, now + i))
+        stream = (
+            spark.readStream.schema(spark.read.parquet(path).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+        )
+        q = (
+            build(stream).writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(query_name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        if staged:
+            shutil.rmtree(path, ignore_errors=True)
+    return spark.table(query_name)
 
 
 def run_dedup_stream_to_memory(spark, pages_dir: str, query_name: str = "dedup_stream"):
     """Drive the stateful dedup synchronously over fixture parquet."""
-    import os
-    import shutil
-    import tempfile
-
-    d = None
-    if os.path.isfile(pages_dir):
-        d = tempfile.mkdtemp(prefix="geostream_dedup_")
-        shutil.copy(pages_dir, os.path.join(d, os.path.basename(pages_dir)))
-        pages_dir = d
-    static = spark.read.parquet(pages_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pages_dir)
-    )
-    out = stream_dedup_first_seen(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        _cleanup_staged(d)
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return drain_to_memory(spark, pages_dir, stream_dedup_first_seen, "append", query_name)
 
 
 def run_stream_to_memory(spark, pages_dir: str, level: int = 6, query_name: str = "cells_stream"):
     """Drive the streaming query synchronously over the fixture parquet
     (memory sink; processAllAvailable) — the local smoke harness."""
-    import os
-    import shutil
-    import tempfile
-
-    d = None
-    if os.path.isfile(pages_dir):
-        # streaming file source requires a directory
-        d = tempfile.mkdtemp(prefix="geostream_")
-        shutil.copy(pages_dir, os.path.join(d, os.path.basename(pages_dir)))
-        pages_dir = d
-    static = spark.read.parquet(pages_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pages_dir)
+    return drain_to_memory(
+        spark, pages_dir, lambda s: stream_cell_counts(s, level=level), "complete", query_name
     )
-    agg = stream_cell_counts(stream, level=level)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        _cleanup_staged(d)
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_region_counts(
@@ -247,32 +238,12 @@ def run_region_stream_to_memory(spark, pages_dir: str, engine, query_name: str =
     """Drive the streaming spatial join synchronously over fixture parquet
     (memory sink; processAllAvailable) using a prebuilt SpatialEngine's
     broadcast artifacts."""
-    import os
-    import shutil
-    import tempfile
-
-    d = None
-    if os.path.isfile(pages_dir):
-        d = tempfile.mkdtemp(prefix="geostream_regions_")
-        shutil.copy(pages_dir, os.path.join(d, os.path.basename(pages_dir)))
-        pages_dir = d
-    static = spark.read.parquet(pages_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pages_dir)
+    return drain_to_memory(
+        spark,
+        pages_dir,
+        lambda s: stream_region_counts(
+            s, engine.candidates_bcast, engine.rings_bcast, level=engine.level
+        ),
+        "complete",
+        query_name,
     )
-    agg = stream_region_counts(stream, engine.candidates_bcast, engine.rings_bcast,
-                               level=engine.level)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        _cleanup_staged(d)
-    return spark.sql(f"SELECT * FROM {query_name}")

@@ -8,6 +8,11 @@ plus the north-rule raster↔vector requirement).
 - cell dual graph: adjacent distinct cell-id pairs
   (/root/reference/src/OsmTriangulationRegionStore.cpp:382-429) — grid-
   native via ring-1 neighbor keys.
+- dual-graph hop distances (T23) and diameter with endpoints (T7) on one
+  core: ONE job gates and fetches the edges as a CSR (``_local_csr``, up
+  to LOCAL_BFS_MAX_EDGES), then the driver runs ``hopsplit.csr_bfs`` /
+  ``hopsplit.max_hop_pair``; past the bound the distributed frontier BFS
+  and the one distributed double sweep (``cell_graph_double_sweep``) run.
 - cell sizes/representatives (T10, :280-292), center of mass (T11,
   :294-320), region→cells inverted index (T12,
   /root/reference/include/osmtools/OsmTriangulationRegionStore.h:538-553),
@@ -20,9 +25,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from libosmtools_spark.geom import kernels as K
+from libosmtools_spark.cells.hopsplit import (
+    APPROX_DIAMETER_RUNS,
+    csr_adjacency,
+    csr_bfs,
+    max_hop_pair,
+)
 from libosmtools_spark.geom.columns import cell_bounds_cols
 from libosmtools_spark.index.grid import build_cell_index
 from libosmtools_spark.session import release_local_checkpoint
@@ -112,69 +121,42 @@ def cell_dual_graph(cells: DataFrame) -> DataFrame:
 
 
 #: dual-graph edge sets up to this many rows take the driver-local
-#: vectorized BFS (the dual graph derives from the broadcastable cells
+#: vectorized path (the dual graph derives from the broadcastable cells
 #: dictionary — edges ≤ 8 × cells, dimension-scale by the same argument)
 LOCAL_BFS_MAX_EDGES = 4_000_000
+#: round cap of the distributed frontier expansion
+BFS_MAX_ROUNDS = 10_000
+
+_DIAMETER_SCHEMA = (
+    "n_nodes long, n_edges long, diameter long, endpoint_a long, endpoint_b long"
+)
 
 
-def cell_hop_distances(
-    dual_edges: DataFrame,
-    source_cell_id: int,
-    max_iter: int = 10_000,
-    algo: str = "auto",
-) -> DataFrame:
-    """T23 — hop distances over the cell dual graph: (cell_id, hop) for
-    every cell reachable from ``source_cell_id``, hop = BFS shortest path
-    length (/root/reference/src/OsmTriangulationRegionStore.cpp:382-429 —
-    the hop metric the reference's cell splitting and diameter checks
-    walk).  Cells outside the source's component are absent.
+def _local_csr(edges: DataFrame):
+    """(nodes, indptr, indices, n_edges) of the undirected edge set, or None
+    past LOCAL_BFS_MAX_EDGES.  ONE job both gates and fetches:
+    limit(N+1).toPandas() returns all M rows when M ≤ N, and N+1 rows
+    mean the graph is too big for the driver.  ``nodes`` are the sorted
+    endpoint ids; CSR node i is ``nodes[i]``."""
+    pdf = edges.limit(LOCAL_BFS_MAX_EDGES + 1).toPandas()
+    if len(pdf) > LOCAL_BFS_MAX_EDGES:
+        return None
+    a = pdf["cell_id_a"].to_numpy(dtype=np.int64)
+    b = pdf["cell_id_b"].to_numpy(dtype=np.int64)
+    nodes = np.unique(np.concatenate([a, b]))
+    ai, bi = np.searchsorted(nodes, a), np.searchsorted(nodes, b)
+    indptr, indices = csr_adjacency(
+        len(nodes), np.concatenate([ai, bi]), np.concatenate([bi, ai])
+    )
+    return nodes, indptr, indices, len(pdf)
 
-    ``algo`` (the connected_components dispatch pattern):
-    - 'auto': count-gated — dimension-scale edge sets run one vectorized
-      numpy BFS on the driver (frontier sweeps over a CSR-ish neighbor
-      array); larger graphs fall through to 'loop'.
-    - 'loop': distributed frontier expansion — per round the frontier
-      equi-joins the edge table, anti-joins the visited set, and both are
-      localCheckpointed (lineage cut); O(diameter) rounds, each a bounded
-      shuffle on cell ids only.  Both paths produce the identical
-      distance map (parity-tested and driver-oracled)."""
-    assert algo in ("auto", "loop")
-    edges = dual_edges.select("cell_id_a", "cell_id_b")
-    if algo == "auto":
-        # ONE job both gates and fetches: limit(N+1).toPandas() returns all
-        # M rows when M <= N, and an overflow (N+1 rows) routes to 'loop'
-        pdf = edges.limit(LOCAL_BFS_MAX_EDGES + 1).toPandas()
-        if len(pdf) <= LOCAL_BFS_MAX_EDGES:
-            a = pdf["cell_id_a"].to_numpy(dtype=np.int64)
-            b = pdf["cell_id_b"].to_numpy(dtype=np.int64)
-            # undirected: both directions, nodes remapped to 0..m-1
-            src = np.concatenate([a, b])
-            dst = np.concatenate([b, a])
-            nodes = np.unique(np.concatenate([a, b, [source_cell_id]]))
-            s = np.searchsorted(nodes, src)
-            d = np.searchsorted(nodes, dst)
-            dist = np.full(len(nodes), -1, dtype=np.int64)
-            start = int(np.searchsorted(nodes, source_cell_id))
-            dist[start] = 0
-            frontier = np.array([start], dtype=np.int64)
-            hop = 0
-            while len(frontier):
-                hop += 1
-                mask = np.isin(s, frontier)
-                cand = np.unique(d[mask])
-                cand = cand[dist[cand] < 0]
-                dist[cand] = hop
-                frontier = cand
-            found = dist >= 0
-            out = pd.DataFrame(
-                {"cell_id": nodes[found], "hop": dist[found]}
-            )
-            return dual_edges.sparkSession.createDataFrame(
-                out, schema="cell_id long, hop long"
-            )
-        algo = "loop"
 
-    spark = dual_edges.sparkSession
+def _distributed_hop_distances(edges: DataFrame, source_cell_id: int) -> DataFrame:
+    """Distributed frontier expansion: per round the frontier equi-joins the
+    edge table, anti-joins the visited set, and both are localCheckpointed
+    (lineage cut); O(diameter) rounds, each a bounded shuffle on cell ids
+    only."""
+    spark = edges.sparkSession
     both = edges.unionByName(
         edges.select(
             F.col("cell_id_b").alias("cell_id_a"), F.col("cell_id_a").alias("cell_id_b")
@@ -184,7 +166,7 @@ def cell_hop_distances(
         [(int(source_cell_id), 0)], "cell_id long, hop long"
     ).localCheckpoint()
     frontier = visited
-    for hop in range(1, max_iter + 1):
+    for hop in range(1, BFS_MAX_ROUNDS + 1):
         nxt = (
             frontier.join(both, frontier.cell_id == both.cell_id_a)
             .select(F.col("cell_id_b").alias("cell_id"))
@@ -210,199 +192,117 @@ def cell_hop_distances(
     return visited
 
 
-def cell_graph_diameter(
-    dual_edges: DataFrame,
-    exact_cutoff: int | None = None,
-    algo: str = "auto",
-    sweeps: int | None = None,
+def cell_hop_distances(dual_edges: DataFrame, source_cell_id: int) -> DataFrame:
+    """T23 — hop distances over the cell dual graph: (cell_id, hop) for
+    every cell reachable from ``source_cell_id``, hop = BFS shortest path
+    length (reference src/OsmTriangulationRegionStore.cpp:382-429 —
+    the hop metric the reference's cell splitting and diameter checks
+    walk).  Cells outside the source's component are absent.
+
+    Edge sets up to LOCAL_BFS_MAX_EDGES run one ``hopsplit.csr_bfs`` on the
+    driver; larger graphs run the distributed frontier expansion.  Both
+    paths produce the identical distance map (parity-tested and
+    oracle-checked)."""
+    edges = dual_edges.select("cell_id_a", "cell_id_b")
+    local = _local_csr(edges)
+    if local is None:
+        return _distributed_hop_distances(edges, source_cell_id)
+    nodes, indptr, indices, _ = local
+    start = int(np.searchsorted(nodes, source_cell_id))
+    if start == len(nodes) or nodes[start] != source_cell_id:
+        # a source with no edges reaches only itself
+        out = pd.DataFrame({"cell_id": [source_cell_id], "hop": [0]})
+    else:
+        dist = csr_bfs(indptr, indices, start)
+        found = dist >= 0
+        out = pd.DataFrame({"cell_id": nodes[found], "hop": dist[found]})
+    return dual_edges.sparkSession.createDataFrame(out, schema="cell_id long, hop long")
+
+
+def cell_graph_double_sweep(
+    dual_edges: DataFrame, sweeps: int = APPROX_DIAMETER_RUNS
 ) -> DataFrame:
+    """T7's distributed path: ``sweeps`` deterministic seeds (hash-ordered
+    node picks, the Spark-determinism analog of the reference's rng), each
+    running two distributed BFS sweeps (id-only shuffles, O(diameter)
+    rounds).  The diameter is the best second-sweep eccentricity, the
+    endpoints its witness pair (ties: the smallest sorted pair).  Exact on
+    trees and a lower bound in general, like the reference's approximation
+    (reference src/OsmTriangulationRegionStore.cpp:100-132); on
+    grid-shaped dual graphs the sweep lands on the periphery and matches
+    the exact answer (oracle-checked on the fixture).
+
+    Returns one row (n_nodes, n_edges, diameter, endpoint_a, endpoint_b)."""
+    spark = dual_edges.sparkSession
+    edges = dual_edges.select("cell_id_a", "cell_id_b")
+    nodes = (
+        edges.select(F.col("cell_id_a").alias("cell_id"))
+        .unionByName(edges.select(F.col("cell_id_b").alias("cell_id")))
+        .distinct()
+        .localCheckpoint()
+    )
+    n_nodes, n_edges = nodes.count(), edges.count()
+    # deterministic pseudo-random seeds: hash order over node ids — a
+    # bounded driver collect (``sweeps`` rows, never grows with n)
+    seed_rows = (
+        nodes.orderBy(F.xxhash64("cell_id"), F.col("cell_id")).limit(sweeps).collect()
+    )
+    release_local_checkpoint(nodes)
+    best = (0, 0, 0)  # (diameter, endpoint_a, endpoint_b)
+    for row in seed_rows:
+        far = []
+        source = int(row.cell_id)
+        for _ in range(2):
+            d = _distributed_hop_distances(edges, source)
+            far.append(d.orderBy(F.desc("hop"), F.asc("cell_id")).limit(1).collect()[0])
+            release_local_checkpoint(d)
+            source = int(far[-1].cell_id)
+        # the second sweep's eccentricity bounds the first's: ecc(far) ≥
+        # far.hop, so it alone is the sweep's answer
+        u, v = sorted((int(far[0].cell_id), int(far[1].cell_id)))
+        cand = (int(far[1].hop), u, v)
+        if cand[0] > best[0] or (cand[0] == best[0] and cand[1:] < best[1:]):
+            best = cand
+    return spark.createDataFrame([(int(n_nodes), int(n_edges), *best)], _DIAMETER_SCHEMA)
+
+
+def cell_graph_diameter_endpoints(dual_edges: DataFrame) -> DataFrame:
+    """T7 with the reference's ``calcDiameter(startNode, endNode)`` ENDPOINTS
+    (reference include/osmtools/OsmTriangulationRegionStore.h:83):
+    one row (n_nodes, n_edges, diameter, endpoint_a, endpoint_b), diameter
+    the max eccentricity over all components (nodes = edge endpoints;
+    isolated ids have no hops to measure).
+
+    Edge sets up to LOCAL_BFS_MAX_EDGES run ``hopsplit.max_hop_pair`` on
+    the driver: exact all-pairs BFS up to EXACT_DIAMETER_PRACTICAL nodes,
+    with a PINNED tie rule — the lexicographically smallest ``(endpoint_a,
+    endpoint_b)``, ``endpoint_a < endpoint_b``, among every pair at max
+    eccentricity (the reference's first-found pair depends on thread
+    interleaving; a deterministic rule is the Spark-reproducibility
+    analog) — and the seeded double sweep above it, as the reference
+    switches (reference src/OsmTriangulationRegionStore.cpp:100-132).
+    Larger edge sets run ``cell_graph_double_sweep``: approximate beyond
+    the cutoff, never fail."""
+    edges = dual_edges.select("cell_id_a", "cell_id_b")
+    local = _local_csr(edges)
+    if local is None:
+        return cell_graph_double_sweep(edges)
+    nodes, indptr, indices, n_edges = local
+    if len(nodes) == 0:
+        row = (0, 0, 0, 0, 0)
+    else:
+        u, v, diam = max_hop_pair(indptr, indices)
+        a, b = sorted((int(nodes[u]), int(nodes[v])))
+        row = (len(nodes), n_edges, diam, a, b)
+    return dual_edges.sparkSession.createDataFrame([row], _DIAMETER_SCHEMA)
+
+
+def cell_graph_diameter(dual_edges: DataFrame) -> DataFrame:
     """T7 — max-hop diameter of the cell dual graph with the reference's
-    exact/approx size switch
-    (/root/reference/include/osmtools/OsmTriangulationRegionStore.h:513 —
-    EXACT_DIAMETER_MAX_UNITS): exact all-pairs BFS when the node count is
-    under the cutoff, randomized double-sweep beyond (cells/hopsplit.
-    max_hop_pair — the same kernel the T6 splitter uses per cell).
-
-    ``algo`` (the cell_hop_distances dispatch pattern):
-    - 'auto': dimension-scale edge sets (≤ LOCAL_BFS_MAX_EDGES, gated and
-      fetched by ONE limit(N+1) job) run driver-local numpy; larger graphs
-      fall through to 'loop' — the reference's own posture is "approximate
-      beyond the cutoff, never fail"
-      (/root/reference/src/OsmTriangulationRegionStore.cpp:100-132).
-    - 'loop': fully distributed double-sweep — ``sweeps`` deterministic
-      seeds (hash-ordered node picks, the Spark-determinism analog of the
-      reference's rng), each seed runs two cell_hop_distances(algo='loop')
-      BFS sweeps (id-only shuffles, O(diameter) rounds); the result is the
-      max second-sweep eccentricity.  Exact on trees and a lower bound in
-      general, like the reference's approximation; on grid-shaped dual
-      graphs the sweep lands on the periphery and matches the exact answer
-      (driver-oracled on the fixture).
-
-    Returns one row (n_nodes, n_edges, diameter) — diameter is the max
-    eccentricity over all components (nodes = edge endpoints; isolated ids
-    have no hops to measure)."""
-    from libosmtools_spark.cells.hopsplit import (
-        APPROX_DIAMETER_RUNS,
-        EXACT_DIAMETER_PRACTICAL,
-        max_hop_pair,
-    )
-
-    assert algo in ("auto", "loop")
-    if exact_cutoff is None:
-        exact_cutoff = EXACT_DIAMETER_PRACTICAL
-    spark = dual_edges.sparkSession
-    edges = dual_edges.select("cell_id_a", "cell_id_b")
-    if algo == "auto":
-        # ONE job both gates and fetches (the cell_hop_distances pattern)
-        pdf = edges.limit(LOCAL_BFS_MAX_EDGES + 1).toPandas()
-        if len(pdf) > LOCAL_BFS_MAX_EDGES:
-            algo = "loop"
-    if algo == "loop":
-        if sweeps is None:
-            sweeps = APPROX_DIAMETER_RUNS
-        nodes = (
-            edges.select(F.col("cell_id_a").alias("cell_id"))
-            .unionByName(edges.select(F.col("cell_id_b").alias("cell_id")))
-            .distinct()
-            .localCheckpoint()
-        )
-        n_nodes = nodes.count()
-        n_edges = edges.count()
-        if n_nodes == 0:
-            release_local_checkpoint(nodes)
-            return spark.createDataFrame(
-                [(0, 0, 0)], "n_nodes long, n_edges long, diameter long"
-            )
-        # deterministic pseudo-random seeds: hash order over node ids —
-        # a bounded driver collect (``sweeps`` rows, never grows with n)
-        seed_rows = (
-            nodes.orderBy(F.xxhash64("cell_id"), F.col("cell_id")).limit(sweeps).collect()
-        )
-        release_local_checkpoint(nodes)
-        diam = 0
-        for row in seed_rows:
-            d1 = cell_hop_distances(edges, int(row.cell_id), algo="loop")
-            far = d1.orderBy(F.desc("hop"), F.asc("cell_id")).limit(1).collect()[0]
-            release_local_checkpoint(d1)
-            d2 = cell_hop_distances(edges, int(far.cell_id), algo="loop")
-            ecc = d2.agg(F.max("hop").alias("m")).collect()[0].m
-            release_local_checkpoint(d2)
-            # both sweeps' eccentricities are valid lower bounds
-            diam = max(diam, int(far.hop), int(ecc))
-        return spark.createDataFrame(
-            [(int(n_nodes), int(n_edges), int(diam))],
-            "n_nodes long, n_edges long, diameter long",
-        )
-    a = pdf["cell_id_a"].to_numpy(dtype=np.int64)
-    b = pdf["cell_id_b"].to_numpy(dtype=np.int64)
-    nodes = np.unique(np.concatenate([a, b]))
-    if len(nodes) == 0:
-        return spark.createDataFrame(
-            [(0, 0, 0)], "n_nodes long, n_edges long, diameter long"
-        )
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    src = np.concatenate([ai, bi])
-    dst = np.concatenate([bi, ai])
-    order = np.argsort(src, kind="stable")
-    src_s, dst_s = src[order], dst[order]
-    starts = np.searchsorted(src_s, np.arange(len(nodes) + 1))
-    adj = [dst_s[starts[i]: starts[i + 1]] for i in range(len(nodes))]
-    _, _, diam = max_hop_pair(adj, exact_cutoff)
-    return spark.createDataFrame(
-        [(int(len(nodes)), int(len(pdf)), int(diam))],
-        "n_nodes long, n_edges long, diameter long",
-    )
-
-
-def cell_graph_diameter_endpoints(
-    dual_edges: DataFrame, exact_cutoff: int | None = None
-) -> DataFrame:
-    """T7 parity detail: the reference's ``calcDiameter(startNode, endNode)``
-    reports the argmax ENDPOINTS, not just the hop count
-    (/root/reference/include/osmtools/OsmTriangulationRegionStore.h:83).
-
-    Exact dimension-scale path (the dual graph is interned-cell-scale by
-    construction): all-pairs BFS with a PINNED tie rule — among every pair
-    at max eccentricity, return the lexicographically smallest
-    ``(endpoint_a, endpoint_b)`` with ``endpoint_a < endpoint_b`` (the
-    reference's first-found pair depends on thread interleaving; a
-    deterministic rule is the Spark-reproducibility analog).  Graphs past
-    ``LOCAL_BFS_MAX_EDGES`` degrade to the seeded double-sweep: endpoints of
-    the best sweep found (a lower-bound witness pair — the same
-    approximation posture as the reference past its cutoff)."""
-    from libosmtools_spark.cells.hopsplit import (
-        APPROX_DIAMETER_RUNS,
-        EXACT_DIAMETER_PRACTICAL,
-        _bfs,
-    )
-
-    if exact_cutoff is None:
-        exact_cutoff = EXACT_DIAMETER_PRACTICAL
-    spark = dual_edges.sparkSession
-    schema = (
-        "n_nodes long, n_edges long, diameter long, endpoint_a long, endpoint_b long"
-    )
-    edges = dual_edges.select("cell_id_a", "cell_id_b")
-    pdf = edges.limit(LOCAL_BFS_MAX_EDGES + 1).toPandas()
-    if len(pdf) > LOCAL_BFS_MAX_EDGES:
-        # distributed double-sweep witness pair (deterministic seed rule
-        # shared with cell_graph_diameter's loop path)
-        nodes_df = (
-            edges.select(F.col("cell_id_a").alias("cell_id"))
-            .unionByName(edges.select(F.col("cell_id_b").alias("cell_id")))
-            .distinct()
-            .localCheckpoint()
-        )
-        n_nodes, n_edges = nodes_df.count(), edges.count()
-        seed_rows = (
-            nodes_df.orderBy(F.xxhash64("cell_id"), F.col("cell_id"))
-            .limit(APPROX_DIAMETER_RUNS)
-            .collect()
-        )
-        release_local_checkpoint(nodes_df)
-        best = (0, 0, 0)  # (diam, a, b)
-        for row in seed_rows:
-            d1 = cell_hop_distances(edges, int(row.cell_id), algo="loop")
-            far = d1.orderBy(F.desc("hop"), F.asc("cell_id")).limit(1).collect()[0]
-            release_local_checkpoint(d1)
-            d2 = cell_hop_distances(edges, int(far.cell_id), algo="loop")
-            far2 = d2.orderBy(F.desc("hop"), F.asc("cell_id")).limit(1).collect()[0]
-            release_local_checkpoint(d2)
-            u, v = sorted((int(far.cell_id), int(far2.cell_id)))
-            cand = (int(far2.hop), u, v)
-            if cand[0] > best[0] or (cand[0] == best[0] and cand[1:] < best[1:]):
-                best = cand
-        return spark.createDataFrame(
-            [(int(n_nodes), int(n_edges), best[0], best[1], best[2])], schema
-        )
-    a = pdf["cell_id_a"].to_numpy(dtype=np.int64)
-    b = pdf["cell_id_b"].to_numpy(dtype=np.int64)
-    nodes = np.unique(np.concatenate([a, b]))
-    if len(nodes) == 0:
-        return spark.createDataFrame([(0, 0, 0, 0, 0)], schema)
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    src = np.concatenate([ai, bi])
-    dst = np.concatenate([bi, ai])
-    order = np.argsort(src, kind="stable")
-    src_s, dst_s = src[order], dst[order]
-    starts = np.searchsorted(src_s, np.arange(len(nodes) + 1))
-    adj = [dst_s[starts[i]: starts[i + 1]] for i in range(len(nodes))]
-    diam, ea, eb = 0, int(nodes[0]), int(nodes[0])
-    for s in range(len(adj)):
-        d = _bfs(adj, s)
-        ecc = int(d.max())
-        if ecc < diam:
-            continue
-        # all argmax partners of s at this eccentricity; pin the smallest
-        # sorted (a, b) pair among ties
-        for t in np.flatnonzero(d == ecc):
-            u, v = sorted((int(nodes[s]), int(nodes[t])))
-            if ecc > diam or (u, v) < (ea, eb):
-                diam, ea, eb = ecc, u, v
-    return spark.createDataFrame(
-        [(int(len(nodes)), int(len(pdf)), diam, ea, eb)], schema
+    exact/approx size switch: one row (n_nodes, n_edges, diameter), the
+    projection of ``cell_graph_diameter_endpoints``."""
+    return cell_graph_diameter_endpoints(dual_edges).select(
+        "n_nodes", "n_edges", "diameter"
     )
 
 

@@ -22,3 +22,22 @@ def sf_smoke():
     from libosmtools_spark.data.synth import ensure_fixtures
 
     return ensure_fixtures("0.001")
+
+
+@pytest.fixture
+def spy(monkeypatch):
+    """spy(module, name) → list recording each call of ``module.name``
+    (the call still goes through); shows which side of a gate ran."""
+
+    def install(module, name):
+        calls = []
+        real = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            calls.append(args)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapper)
+        return calls
+
+    return install

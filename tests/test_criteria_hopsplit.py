@@ -9,6 +9,22 @@ from pyspark.sql import functions as F
 from libosmtools_spark.geom.kernels import _LEVEL_SHIFT
 
 
+def _plain_bfs(adj, start):
+    """Independent per-node queue BFS over list-of-lists adjacency."""
+    from collections import deque
+
+    dist = [-1] * len(adj)
+    dist[start] = 0
+    q = deque([start])
+    while q:
+        u = q.popleft()
+        for v in adj[u]:
+            if dist[v] < 0:
+                dist[v] = dist[u] + 1
+                q.append(v)
+    return dist
+
+
 class TestBFSKernels:
     def grid_adj(self, w, h):
         from libosmtools_spark.cells.hopsplit import _local_adjacency
@@ -17,32 +33,79 @@ class TestBFSKernels:
         return _local_adjacency(ys.ravel(), xs.ravel(), nlon=10_000), ys.ravel(), xs.ravel()
 
     def test_bfs_distances_manhattan(self):
-        from libosmtools_spark.cells.hopsplit import _bfs
+        from libosmtools_spark.cells.hopsplit import csr_bfs
 
         adj, ys, xs = self.grid_adj(5, 5)
-        d = _bfs(adj, 0)  # from (0,0)
+        d = csr_bfs(*adj, 0)  # from (0,0)
         assert (d == ys + xs).all()
+
+    def test_csr_bfs_matches_plain_bfs_on_random_graphs(self):
+        """The vectorized frontier BFS equals a plain queue BFS on random
+        sparse graphs, many of them disconnected (unreachable → -1)."""
+        from libosmtools_spark.cells.hopsplit import csr_adjacency, csr_bfs
+
+        rng = np.random.default_rng(7)
+        disconnected = 0
+        for _ in range(200):
+            n = int(rng.integers(1, 40))
+            m = int(rng.integers(0, 2 * n))
+            a, b = rng.integers(0, n, size=(2, m))
+            adj = [[] for _ in range(n)]
+            for u, v in zip(a.tolist(), b.tolist()):
+                adj[u].append(v)
+                adj[v].append(u)
+            csr = csr_adjacency(n, np.concatenate([a, b]), np.concatenate([b, a]))
+            for s in range(n):
+                want = _plain_bfs(adj, s)
+                assert csr_bfs(*csr, s).tolist() == want
+                disconnected += -1 in want
+        assert disconnected > 0  # the sample really has unreachable nodes
+
+    def test_local_adjacency_neighbour_order(self):
+        """Each unit's neighbours come in (1,0),(-1,0),(0,1),(0,-1) order,
+        with the lon wrap — the order _multi_source_bfs's ties depend on."""
+        from libosmtools_spark.cells.hopsplit import _local_adjacency
+
+        # 3×4 grid on a 4-wide wrapping row (nlon=4), units shuffled
+        rng = np.random.default_rng(3)
+        ys, xs = np.meshgrid(np.arange(3), np.arange(4), indexing="ij")
+        perm = rng.permutation(12)
+        iys, ixs = ys.ravel()[perm], xs.ravel()[perm]
+        indptr, indices = _local_adjacency(iys, ixs, nlon=4)
+        pos = {(int(y), int(x)): i for i, (y, x) in enumerate(zip(iys, ixs))}
+        for i, (y, x) in enumerate(zip(iys, ixs)):
+            want = [
+                pos[(y + dy, (x + dx) % 4)]
+                for dy, dx in ((1, 0), (-1, 0), (0, 1), (0, -1))
+                if (y + dy, (x + dx) % 4) in pos
+            ]
+            assert indices[indptr[i]: indptr[i + 1]].tolist() == want
 
     def test_max_hop_pair_exact(self):
         from libosmtools_spark.cells.hopsplit import max_hop_pair
 
         adj, ys, xs = self.grid_adj(4, 3)
-        u, v, diam = max_hop_pair(adj)
+        u, v, diam = max_hop_pair(*adj)
         assert diam == (3 - 1) + (4 - 1)
 
-    def test_max_hop_pair_approx_reasonable(self):
-        from libosmtools_spark.cells.hopsplit import max_hop_pair
+    def test_max_hop_pair_approx_reasonable(self, monkeypatch, spy):
+        from libosmtools_spark.cells import hopsplit as H
 
         adj, ys, xs = self.grid_adj(30, 30)
-        _, _, exact = max_hop_pair(adj, exact_cutoff=10_000)
-        _, _, approx = max_hop_pair(adj, exact_cutoff=1)
+        calls = spy(H, "csr_bfs")
+        _, _, exact = H.max_hop_pair(*adj)
+        assert len(calls) == 900  # exact: one BFS per node
+        calls.clear()
+        monkeypatch.setattr(H, "EXACT_DIAMETER_PRACTICAL", 1)
+        _, _, approx = H.max_hop_pair(*adj)
+        assert len(calls) == 2 * H.APPROX_DIAMETER_RUNS  # the double sweep
         assert approx >= exact * 0.7  # double-sweep on a grid is near-exact
 
     def test_multi_source_partition(self):
         from libosmtools_spark.cells.hopsplit import _multi_source_bfs
 
         adj, ys, xs = self.grid_adj(10, 1)  # a path graph
-        owner, dist = _multi_source_bfs(adj, [0, 9])
+        owner, dist = _multi_source_bfs(*adj, [0, 9])
         assert owner[0] == 0 and owner[9] == 1
         assert (owner >= 0).all()
         assert owner[4] == 0 and owner[5] == 1

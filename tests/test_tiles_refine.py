@@ -128,33 +128,38 @@ class TestRefine:
         # each refined id maps to exactly one unrefined id
         assert (merged.groupby("refined_cell_id")["cell_id"].nunique() == 1).all()
 
-    def test_cc_all_algorithms_agree(self, spark, engine, pages, cells):
-        """auto (vectorized local), jump (pointer-jumping distributed) and
-        label (plain propagation) must produce the identical fixpoint."""
+    def test_cc_all_algorithms_agree(self, spark, engine, pages, cells, monkeypatch, spy):
+        """The vectorized local path and the pointer-jumping distributed
+        path (forced past LOCAL_CC_MAX_ROWS) produce the identical
+        fixpoint."""
         import pandas as pd
 
-        from libosmtools_spark.cells.refine import connected_components
+        from libosmtools_spark.cells import refine as R
 
+        ran = spy(R, "_distributed_components")
         src = cells.select("cell_key", "cell_id")
-        frames = {
-            algo: connected_components(src, algo=algo)
-            .toPandas()
-            .sort_values("cell_key")
-            .reset_index(drop=True)
-            for algo in ("auto", "jump", "label")
-        }
-        for algo in ("jump", "label"):
-            pd.testing.assert_frame_equal(
-                frames["auto"], frames[algo], check_dtype=False, obj=algo
+
+        def run():
+            return (
+                R.connected_components(src).toPandas()
+                .sort_values("cell_key")
+                .reset_index(drop=True)
             )
 
-    def test_cc_jump_fewer_rounds_on_path(self, spark):
-        """A long path graph converges in ~log2(n) jump rounds; plain
-        propagation needs ~n rounds (so with max_iter < n it must NOT have
-        converged, while jump has)."""
+        local = run()
+        assert not ran
+        monkeypatch.setattr(R, "LOCAL_CC_MAX_ROWS", 0)
+        distributed = run()
+        assert len(ran) == 1
+        pd.testing.assert_frame_equal(local, distributed, check_dtype=False)
+
+    def test_cc_jump_fewer_rounds_on_path(self, spark, monkeypatch, spy):
+        """A long path graph converges in ~log2(n) jump rounds: with the
+        round cap at 10 < 64 nodes the distributed loop still finds one
+        component."""
         import pandas as pd
 
-        from libosmtools_spark.cells.refine import connected_components
+        from libosmtools_spark.cells import refine as R
         from libosmtools_spark.geom.kernels import cell_key
         import numpy as np
 
@@ -162,10 +167,12 @@ class TestRefine:
         lons = -180.0 + 2.8125 * np.arange(64) + 0.1
         keys = cell_key(np.zeros(64), lons, 6)
         df = spark.createDataFrame(pd.DataFrame({"cell_key": keys, "cell_id": 1}))
-        jump = connected_components(df, max_iter=10, algo="jump").toPandas()
+        ran = spy(R, "_distributed_components")
+        monkeypatch.setattr(R, "LOCAL_CC_MAX_ROWS", 0)
+        monkeypatch.setattr(R, "CC_MAX_ROUNDS", 10)
+        jump = R.connected_components(df).toPandas()
+        assert len(ran) == 1
         assert jump["refined_cell_id"].nunique() == 1  # converged
-        label = connected_components(df, max_iter=10, algo="label").toPandas()
-        assert label["refined_cell_id"].nunique() > 1  # needs ~64 rounds
 
     def test_handle_cell_changes_repair(self, engine, points, cells):
         """T20 repair — handleCellChanges
@@ -366,8 +373,8 @@ class TestHopDistances:
                     q.append(v)
         return dist
 
-    def test_local_and_loop_agree_with_reference(self, spark):
-        from libosmtools_spark.tiles.materialize import cell_hop_distances
+    def test_local_and_loop_agree_with_reference(self, spark, monkeypatch, spy):
+        from libosmtools_spark.tiles import materialize as M
 
         import numpy as np
 
@@ -380,21 +387,24 @@ class TestHopDistances:
         pairs = [(int(a), int(b)) for a, b in pairs]
         want = self._reference_bfs(pairs, 1)
         edges = self._edges(spark, pairs)
-        for algo in ("auto", "loop"):
-            got = {
-                r["cell_id"]: r["hop"]
-                for r in cell_hop_distances(edges, 1, algo=algo).collect()
-            }
-            assert got == want, algo
+        ran = spy(M, "_distributed_hop_distances")
+        for bound, n_ran in ((M.LOCAL_BFS_MAX_EDGES, 0), (0, 1)):
+            monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", bound)
+            got = {r["cell_id"]: r["hop"] for r in M.cell_hop_distances(edges, 1).collect()}
+            assert got == want, bound
+            assert len(ran) == n_ran
         assert 100 not in want  # disjoint component really excluded
 
-    def test_isolated_source(self, spark):
-        from libosmtools_spark.tiles.materialize import cell_hop_distances
+    def test_isolated_source(self, spark, monkeypatch, spy):
+        from libosmtools_spark.tiles import materialize as M
 
         edges = self._edges(spark, [(5, 6)])
-        for algo in ("auto", "loop"):
-            got = cell_hop_distances(edges, 99, algo=algo).collect()
-            assert [(r["cell_id"], r["hop"]) for r in got] == [(99, 0)], algo
+        ran = spy(M, "_distributed_hop_distances")
+        for bound, n_ran in ((M.LOCAL_BFS_MAX_EDGES, 0), (0, 1)):
+            monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", bound)
+            got = M.cell_hop_distances(edges, 99).collect()
+            assert [(r["cell_id"], r["hop"]) for r in got] == [(99, 0)], bound
+            assert len(ran) == n_ran
 
 
 class TestCellGraphDiameter:
@@ -417,15 +427,19 @@ class TestCellGraphDiameter:
         row = cell_graph_diameter(edges).collect()[0]
         assert row["diameter"] == 3  # the 4-node path wins
 
-    def test_approx_switch_lower_bounds(self, spark):
+    def test_approx_switch_lower_bounds(self, spark, monkeypatch, spy):
         """Above the cutoff the double-sweep runs; on a path graph the
         double-sweep is exact, so forcing cutoff=2 must still find 9."""
+        from libosmtools_spark.cells import hopsplit as H
         from libosmtools_spark.tiles.materialize import cell_graph_diameter
 
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(1, 10)], "cell_id_a long, cell_id_b long"
         )
-        row = cell_graph_diameter(edges, exact_cutoff=2).collect()[0]
+        monkeypatch.setattr(H, "EXACT_DIAMETER_PRACTICAL", 2)
+        ran = spy(H, "csr_bfs")
+        row = cell_graph_diameter(edges).collect()[0]
+        assert len(ran) == 2 * H.APPROX_DIAMETER_RUNS  # sweeps, not 10 BFS
         assert row["diameter"] == 9
 
     def test_empty(self, spark):
@@ -436,37 +450,43 @@ class TestCellGraphDiameter:
         assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (0, 0, 0)
 
     def test_distributed_double_sweep_matches_local(self, spark):
-        """The 'loop' path (forced) equals the exact local answer on a path
-        graph and a disconnected graph — one sweep suffices because the
-        double sweep is exact on trees."""
-        from libosmtools_spark.tiles.materialize import cell_graph_diameter
+        """The distributed double sweep equals the exact local answer on a
+        path graph and a disconnected graph — one sweep suffices because
+        the double sweep is exact on trees."""
+        from libosmtools_spark.tiles.materialize import cell_graph_double_sweep
 
         for rows, want in (
             ([(i, i + 1) for i in range(1, 10)], (10, 9, 9)),
             ([(1, 2), (2, 3), (3, 4), (10, 11)], (6, 4, 3)),
         ):
             edges = spark.createDataFrame(rows, "cell_id_a long, cell_id_b long")
-            row = cell_graph_diameter(edges, algo="loop", sweeps=1).collect()[0]
+            row = cell_graph_double_sweep(edges, sweeps=1).collect()[0]
             assert (row["n_nodes"], row["n_edges"], row["diameter"]) == want
 
     def test_auto_falls_through_to_loop_past_bound(self, spark, monkeypatch):
-        """Past LOCAL_BFS_MAX_EDGES the old code raised ValueError; auto now
-        degrades to the distributed double-sweep (the reference's
-        approximate-beyond-cutoff posture) and still answers."""
+        """Past LOCAL_BFS_MAX_EDGES the diameter degrades to the distributed
+        double-sweep (the reference's approximate-beyond-cutoff posture)
+        and still answers."""
         from libosmtools_spark.tiles import materialize as M
 
         monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", 3)
+        ran = []
+        sweep = M.cell_graph_double_sweep
+        monkeypatch.setattr(
+            M, "cell_graph_double_sweep", lambda e: ran.append(1) or sweep(e, sweeps=1)
+        )
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(1, 10)], "cell_id_a long, cell_id_b long"
         )
-        row = M.cell_graph_diameter(edges, sweeps=1).collect()[0]
+        row = M.cell_graph_diameter(edges).collect()[0]
+        assert ran == [1]
         assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
 
     def test_loop_empty(self, spark):
-        from libosmtools_spark.tiles.materialize import cell_graph_diameter
+        from libosmtools_spark.tiles.materialize import cell_graph_double_sweep
 
         edges = spark.createDataFrame([], "cell_id_a long, cell_id_b long")
-        row = cell_graph_diameter(edges, algo="loop").collect()[0]
+        row = cell_graph_double_sweep(edges).collect()[0]
         assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (0, 0, 0)
 
 
@@ -504,15 +524,80 @@ class TestDiameterEndpoints:
         assert row["diameter"] == d == 3
         assert (row["endpoint_a"], row["endpoint_b"]) == (1, 4)
 
-    def test_loop_path_witness_pair(self, spark, monkeypatch):
+    def test_loop_path_witness_pair(self, spark, monkeypatch, spy):
         """Past LOCAL_BFS_MAX_EDGES the distributed double-sweep reports the
         best sweep's witness pair — exact on a path graph (tree)."""
         from libosmtools_spark.tiles import materialize as M
 
         monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", 2)
+        ran = spy(M, "cell_graph_double_sweep")
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(1, 8)], "cell_id_a long, cell_id_b long"
         )
         row = M.cell_graph_diameter_endpoints(edges).collect()[0]
+        assert len(ran) == 1
         assert row["diameter"] == 7
         assert (row["endpoint_a"], row["endpoint_b"]) == (1, 8)
+
+    def test_endpoints_match_brute_all_pairs(self, spark):
+        """On random graphs (sparse ids, many disconnected) the local path's
+        endpoints equal a brute all-pairs search with the pinned tie rule:
+        the smallest sorted pair among every max-eccentricity pair."""
+        from collections import deque
+
+        from libosmtools_spark.tiles.materialize import cell_graph_diameter_endpoints
+
+        def brute(pairs):
+            adj = {}
+            for a, b in pairs:
+                adj.setdefault(a, set()).add(b)
+                adj.setdefault(b, set()).add(a)
+            best = (0, min(adj), min(adj))
+            for s in sorted(adj):
+                dist, q = {s: 0}, deque([s])
+                while q:
+                    u = q.popleft()
+                    for v in adj[u]:
+                        if v not in dist:
+                            dist[v] = dist[u] + 1
+                            q.append(v)
+                for t, d in dist.items():
+                    u, v = sorted((s, t))
+                    if d > best[0] or (d == best[0] and (u, v) < best[1:]):
+                        best = (d, u, v)
+            return (len(adj), len(pairs), *best)
+
+        rng = np.random.default_rng(11)
+        for _ in range(25):
+            n = int(rng.integers(2, 14))
+            ids = np.sort(rng.choice(1000, size=n, replace=False))
+            raw = rng.integers(0, n, size=(int(rng.integers(1, 2 * n)), 2))
+            pairs = sorted(
+                {(int(ids[min(a, b)]), int(ids[max(a, b)])) for a, b in raw if a != b}
+            )
+            if not pairs:
+                continue
+            edges = spark.createDataFrame(pairs, "cell_id_a long, cell_id_b long")
+            got = tuple(cell_graph_diameter_endpoints(edges).collect()[0])
+            assert got == brute(pairs), pairs
+
+    def test_endpoints_past_exact_cutoff_take_the_sweep(self, spark, monkeypatch, spy):
+        """Above EXACT_DIAMETER_PRACTICAL nodes the endpoints come from the
+        same seeded double sweep as the diameter, not all-pairs BFS."""
+        from libosmtools_spark.cells import hopsplit as H
+        from libosmtools_spark.tiles.materialize import (
+            cell_graph_diameter,
+            cell_graph_diameter_endpoints,
+        )
+
+        # a path 1..10 plus a pendant 20 off node 5
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, 10)] + [(5, 20)],
+            "cell_id_a long, cell_id_b long",
+        )
+        monkeypatch.setattr(H, "EXACT_DIAMETER_PRACTICAL", 5)
+        ran = spy(H, "csr_bfs")
+        row = cell_graph_diameter_endpoints(edges).collect()[0]
+        assert len(ran) == 2 * H.APPROX_DIAMETER_RUNS  # sweeps, not 11 BFS
+        assert tuple(row) == (11, 10, 9, 1, 10)
+        assert cell_graph_diameter(edges).collect()[0]["diameter"] == 9
