@@ -892,9 +892,7 @@ def q_ann_cosine_blocked(spark, sf_dir):
     from libosmtools_spark.sim.ann import cosine_topk_blocked
 
     emb = _emb(spark, sf_dir)
-    return cosine_topk_blocked(
-        emb, k=KNN_K, n_query_blocks=4, n_corpus_blocks=4
-    ).select("vec_id", "neighbor_id", "rank")
+    return cosine_topk_blocked(emb, k=KNN_K, n_blocks=4).select("vec_id", "neighbor_id", "rank")
 
 
 def q_ann_lsh(spark, sf_dir):
@@ -927,12 +925,10 @@ def q_cosine_dup(spark, sf_dir):
 def q_cosine_dup_blocked(spark, sf_dir):
     """Same contract via the DISTRIBUTED block-nested-loop physical path
     (what cosine_dup_pairs dispatches to beyond broadcast scale)."""
-    from libosmtools_spark.sim.ann import cosine_dup_pairs
+    from libosmtools_spark.sim.ann import cosine_dup_pairs_blocked
 
     emb = _emb(spark, sf_dir)
-    return cosine_dup_pairs(
-        emb, threshold=DUP_COS_T, brute_max_rows=0, n_query_blocks=4, n_corpus_blocks=4
-    ).select("a", "b")
+    return cosine_dup_pairs_blocked(emb, threshold=DUP_COS_T, n_blocks=4).select("a", "b")
 
 
 def q_ann_ivf(spark, sf_dir):

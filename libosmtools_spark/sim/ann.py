@@ -1,21 +1,37 @@
-"""Similarity search over embedding columns (training-data extension).
+"""Similarity search and near-duplicate pairs over the embeddings table
+(``vec_id``, ``embedding``) — training-data extension.
 
-- ``ann_topk``: the entry point — count-gated auto-dispatch (the same
-  pattern as knn/ring.py's knn_join): broadcastable corpora take the
-  one-matmul brute path; larger corpora take the distributed
-  block-nested-loop exact path.  No unguarded driver collect anywhere.
-- ``cosine_topk_brute``: exact top-k cosine neighbors against a broadcast
-  corpus matrix — one numpy matmul per Arrow batch (no per-row Python).
-- ``cosine_topk_blocked``: distributed exact top-k — (query-block ×
-  corpus-block) cogroups, partial top-k per pair, one global window merge.
-  Per-task memory is |corpus|/Bc + |queries|/Bq vectors; shuffle volume is
-  the honest O(n·B) of exact all-pairs search, spread over the cluster.
-- ``lsh_topk``: random-hyperplane LSH bucketing — the approximate scale
-  path: the bucket self-join carries (id, bucket) rows ONLY; full vectors
-  rejoin exactly once for scoring.
+Every operator runs on one small core:
+
+- ``_fetch_corpus``: the one gate-and-fetch.  A corpus of at most
+  BRUTE_MAX_ROWS rows collects to the driver in ONE bounded job
+  (``limit(BRUTE_MAX_ROWS + 1)``) as an id-sorted matrix; a larger one
+  returns None and the caller takes its distributed path.
+- ``_brute_scan``: the one broadcast cosine scan.  The corpus is divided by
+  its norms once, each Arrow batch of queries by its own, and each chunk of
+  queries does one matmul; a per-chunk ``emit`` turns the score block into
+  top-k rows or ``a < b`` pairs at or above a threshold.
+- ``_block_cogroup``: the one distributed block-nested-loop.  Ids hash into
+  ``n_blocks`` blocks per side, every (query block, corpus block) pair
+  cogroups on one task and scores with ``_block_cosines`` (per-block
+  normalization).  Nothing is collected to the driver.
+- ``bucket_pairs``: the one bucket self-join (ids sharing a long key →
+  distinct ``a < b`` pairs, ids only through the shuffle).  The LSH
+  operators here and the MinHash / SimHash joins in ``dedup`` use it.
+- ``_score_pairs``: exact cosine per candidate pair, dot / (‖a‖·‖b‖).
+- ``_topk_block`` / ``_rank_topk``: the self-excluded top-k of one score
+  block, and the one window merge; both rank by cosine desc, neighbour id
+  asc.
+
+Operators: ``ann_topk`` (gated: brute or blocked), ``cosine_topk_brute``,
+``cosine_topk_blocked``, ``lsh_topk`` (hyperplane LSH), ``ivf_topk``
+(inverted lists), ``cosine_dup_pairs`` (gated: brute or blocked),
+``cosine_dup_pairs_blocked`` and ``cosine_dup_pairs_lsh``.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -24,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from libosmtools_spark.sim.topk import topk_rows
+
+ID, VEC = "vec_id", "embedding"
 
 #: corpora up to this many rows broadcast whole (same posture as the
 #: region store / knn_join's brute threshold — a dimension-scale index).
@@ -35,220 +53,270 @@ from libosmtools_spark.sim.topk import topk_rows
 #: the broadcast matrix — re-probe at other scales.
 BRUTE_MAX_ROWS = 24_000
 
+#: blocks per side of the blocked paths when the gate picks them
+N_BLOCKS = 8
+
 #: per-chunk element budget for brute cosine score matrices: ~512 KB
 #: temporaries stay private-cache-resident; unchunked full-batch matmuls
 #: (e.g. 1250×20000 ≈ 200 MB) go memory-bandwidth-bound and fall off a
 #: cliff (measured 0.9 s → 19.3 s from 10k to 20k corpus rows)
 _ANN_CHUNK_ELEMS = 262_144
 
-_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("qid", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("rank", T.IntegerType()),
-    ]
-)
+_PAIRS = "a long, b long"
+_SCORED = "a long, b long, cosine double"
 
 
-def ann_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    brute_max_rows: int = BRUTE_MAX_ROWS,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Exact cosine top-k with automatic physical-path dispatch: corpora
-    that fit a broadcast take the matmul path; anything larger runs the
-    distributed blocked path.  Results are identical (same cosine formula,
-    same desc-cosine/asc-id tie rule).  ``n_rows`` (if known) skips the
-    dispatch count() job."""
-    n = embeddings.count() if n_rows is None else n_rows
-    if n == 0:
-        return _empty_topk(embeddings, id_col)
-    if n <= brute_max_rows:
-        return cosine_topk_brute(embeddings, k, id_col, vec_col, _count_checked=True)
-    return cosine_topk_blocked(embeddings, k, id_col=id_col, vec_col=vec_col)
+def _matrix(vectors: pd.Series) -> np.ndarray:
+    return np.stack(vectors.to_numpy()).astype(np.float64)
 
 
-def _empty_topk(embeddings: DataFrame, id_col: str) -> DataFrame:
-    """Typed empty (id, neighbor_id, rank) result — numpy paths can't
-    stack zero vectors."""
-    return embeddings.sparkSession.createDataFrame(
-        [], f"{id_col} long, neighbor_id long, rank int"
-    )
-
-
-def _collect_matrix(embeddings: DataFrame, id_col: str, vec_col: str):
-    """Corpus as (ids, M, norms), SORTED by id ascending — column order =
-    id order, so topk_rows' (score, column asc) tie rule is exactly the
-    (score, neighbor-id asc) contract with no per-row lexsort."""
-    pdf = embeddings.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    M = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-    norms = np.linalg.norm(M, axis=1)
+def _row_norms(X: np.ndarray) -> np.ndarray:
+    """Row L2 norms with zero rows mapped to 1, so a zero vector scores 0."""
+    norms = np.linalg.norm(X, axis=1)
     norms[norms == 0] = 1.0
-    return ids, M, norms
+    return norms
 
 
-def cosine_topk_brute(
-    embeddings: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_rows: int = BRUTE_MAX_ROWS,
-    _count_checked: bool = False,
-) -> DataFrame:
-    """(id, neighbor_id, rank): exact top-k by cosine, ties by neighbor id.
+def _fetch_corpus(embeddings: DataFrame):
+    """(ids, M, norms) SORTED by id ascending, or None past BRUTE_MAX_ROWS.
 
-    The corpus matrix is broadcast (dimension-scale index assumption — the
-    same posture as the region store); each Arrow batch of queries does ONE
-    matmul.  GUARDED: refuses corpora beyond ``max_rows`` — use ann_topk
-    (auto-dispatch) or cosine_topk_blocked for fact-table-scale corpora."""
-    spark = embeddings.sparkSession
-    if not _count_checked:
-        n = embeddings.count()
-        if n > max_rows:
-            raise ValueError(
-                f"cosine_topk_brute: corpus has {n} rows > max_rows={max_rows}; "
-                "use ann_topk (auto-dispatch) or cosine_topk_blocked"
-            )
-    ids, M, norms = _collect_matrix(embeddings, id_col, vec_col)
-    bc = spark.sparkContext.broadcast((ids, M / norms[:, None]))
+    One bounded job: the limit is both the gate and the fetch, so the
+    driver never holds more than BRUTE_MAX_ROWS + 1 rows.  Column order =
+    id order, so topk_rows' (score, column asc) tie rule is exactly the
+    (score, neighbour id asc) contract.  An empty corpus gives a (0, 0)
+    matrix — nothing to stack, and no query rows to score against it."""
+    pdf = embeddings.select(ID, VEC).limit(BRUTE_MAX_ROWS + 1).toPandas()
+    if len(pdf) > BRUTE_MAX_ROWS:
+        return None
+    ids = pdf[ID].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    M = _matrix(pdf[VEC].iloc[order]) if len(pdf) else np.zeros((0, 0))
+    return ids[order], M, _row_norms(M)
+
+
+def _brute_scan(embeddings: DataFrame, corpus, emit, schema: str) -> DataFrame:
+    """The one broadcast cosine scan: the id-sorted corpus, divided by its
+    norms once, is broadcast; each Arrow batch of queries is divided by its
+    own norms and scored in chunks of ≤ _ANN_CHUNK_ELEMS elements, one
+    matmul per chunk.  ``emit(qids, nids, S)`` turns a chunk's (queries ×
+    corpus) cosine block into output rows of ``schema``."""
+    ids, M, norms = corpus
+    bc = embeddings.sparkSession.sparkContext.broadcast((ids, M / norms[:, None]))
 
     def part(it):
         nids, Mn = bc.value
         chunk = max(4, _ANN_CHUNK_ELEMS // max(len(nids), 1))
         for pdf in it:
-            Q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            qn = np.linalg.norm(Q, axis=1)
-            qn[qn == 0] = 1.0
-            Qn = Q / qn[:, None]
-            all_qids = pdf[id_col].to_numpy()
+            Q = _matrix(pdf[VEC])
+            Qn = Q / _row_norms(Q)[:, None]
+            all_qids = pdf[ID].to_numpy()
             for i in range(0, len(all_qids), chunk):
                 qi = slice(i, i + chunk)
-                S = Qn[qi] @ Mn.T  # (chunk, n) cosine matrix
-                qids = all_qids[qi]
-                S[qids[:, None] == nids[None, :]] = -np.inf  # self-exclusion
-                # corpus is id-sorted: topk_rows(-S) gives exact
-                # (cosine desc, id asc) at O(n) per row — no per-row lexsort
-                top = topk_rows(-S, k)
-                m, kk = top.shape
-                yield pd.DataFrame(
-                    {
-                        "qid": np.repeat(qids, kk),
-                        "neighbor_id": nids[top].ravel(),
-                        "rank": np.tile(np.arange(1, kk + 1), m),
-                    }
-                )
+                yield emit(all_qids[qi], nids, Qn[qi] @ Mn.T)
 
-    return (
-        embeddings.select(id_col, vec_col)
-        .mapInPandas(part, _TOPK_SCHEMA)
-        .withColumnRenamed("qid", id_col)
-    )
+    return embeddings.select(ID, VEC).mapInPandas(part, schema)
 
 
-def cosine_topk_blocked(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_query_blocks: int = 8,
-    n_corpus_blocks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Distributed EXACT top-k cosine: block-nested-loop self-join.
+def _block_cogroup(embeddings: DataFrame, n_blocks: int, score, schema: str) -> DataFrame:
+    """The one distributed block-nested-loop: ids hash into ``n_blocks``
+    blocks per side, and every (qb, cb) pair cogroups on one task, which
+    returns ``score(left, right)`` for the query block's (qid, qv) rows and
+    the corpus block's (nid, nv) rows.  Per-task memory is two blocks of
+    vectors; shuffle volume is the honest O(n·B) of exact all-pairs search.
 
-    Queries hash into Bq blocks, corpus into Bc blocks; every (qb, cb)
-    pair cogroups on one task, computes its partial top-k with one matmul
-    (identical arithmetic to the brute path, so results merge exactly),
-    and a single window rank merges the Bc partials per query.  Nothing is
-    ever collected to the driver; per-task memory is bounded by the block
-    sizes, tunable independently of corpus size."""
-    Bq, Bc = n_query_blocks, n_corpus_blocks
-    # CRITICAL: both grouping keys must be LONG on BOTH sides.  pmod(xxhash64)
-    # is long but explode(sequence(int,int)) is int; cogroup with per-position
-    # key types (long,int) vs (int,long) compares equal inside a partition
-    # (UnsafeRow stores both in 8-byte slots) yet ROUTES by murmur3, which
-    # hashes int and long differently — so group alignment silently became
-    # partition-layout-dependent: exact at driver/test scale, dropping ~7/8
-    # of all (qb,cb) pairs on the 8-file 20k-row bench corpus (measured:
-    # 20/64 groups matched, AQE on or off; 64/64 with unified types).
-    q = (
-        embeddings.select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qv"),
-            F.pmod(F.xxhash64(id_col), F.lit(Bq)).alias("qb"),
-        )
-        .withColumn("cb", F.explode(F.sequence(F.lit(0), F.lit(Bc - 1))))
-        .withColumn("cb", F.col("cb").cast("long"))
-    )
-    c = (
-        embeddings.select(
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).alias("nv"),
-            F.pmod(F.xxhash64(id_col), F.lit(Bc)).alias("cb"),
-        )
-        .withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(Bq - 1))))
-        .withColumn("qb", F.col("qb").cast("long"))
-    )
+    CRITICAL: both grouping keys must be LONG on BOTH sides.  pmod(xxhash64)
+    is long but explode(sequence(int,int)) is int; cogroup with per-position
+    key types (long,int) vs (int,long) compares equal inside a partition
+    (UnsafeRow stores both in 8-byte slots) yet ROUTES by murmur3, which
+    hashes int and long differently — so group alignment silently became
+    partition-layout-dependent: exact at driver/test scale, dropping ~7/8 of
+    all (qb,cb) pairs on the 8-file 20k-row bench corpus (measured: 20/64
+    groups matched, AQE on or off; 64/64 with unified types)."""
+    names = [field.split()[0] for field in schema.split(",")]
 
-    part_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"qid": [], "neighbor_id": [], "cosine": []}).astype(
-                {"qid": "int64", "neighbor_id": "int64", "cosine": "float64"}
+    def side(id_alias, vec_alias, own, other):
+        return (
+            embeddings.select(
+                F.col(ID).alias(id_alias),
+                F.col(VEC).alias(vec_alias),
+                F.pmod(F.xxhash64(ID), F.lit(n_blocks)).alias(own),
             )
-        Q = np.stack(left["qv"].to_numpy()).astype(np.float64)
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0] = 1.0
-        nids = right["nid"].to_numpy()
+            .withColumn(other, F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
+            .withColumn(other, F.col(other).cast("long"))
+            .groupBy("qb", "cb")
+        )
+
+    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0 or len(right) == 0:
+            return pd.DataFrame({n: [] for n in names})
+        return score(left, right)
+
+    return side("qid", "qv", "qb", "cb").cogroup(side("nid", "nv", "cb", "qb")).applyInPandas(
+        run, schema
+    )
+
+
+def _block_cosines(left: pd.DataFrame, right: pd.DataFrame) -> np.ndarray:
+    """(query block × corpus block) cosine matrix, each block normalized by
+    its own norms, corpus columns in ``right``'s row order."""
+    Q, M = _matrix(left["qv"]), _matrix(right["nv"])
+    return (Q / _row_norms(Q)[:, None]) @ (M / _row_norms(M)[:, None]).T
+
+
+def _topk_block(qids: np.ndarray, nids: np.ndarray, S: np.ndarray, k: int) -> pd.DataFrame:
+    """(a, b, cosine, rank): the k best neighbours of each query row of the
+    score block ``S`` by (cosine desc, id asc), self excluded.  ``nids``
+    must be ascending: topk_rows(-S) then gives the exact order at O(n) per
+    row, with no per-row lexsort."""
+    S[qids[:, None] == nids[None, :]] = -np.inf  # self-exclusion
+    top = topk_rows(-S, k)
+    m, kk = top.shape
+    sel = S[np.arange(m)[:, None], top]
+    keep = (sel > -np.inf).ravel()  # the self slot ranks last; drop it
+    return pd.DataFrame(
+        {
+            "a": np.repeat(qids, kk)[keep],
+            "b": nids[top].ravel()[keep],
+            "cosine": sel.ravel()[keep],
+            "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), m)[keep],
+        }
+    )
+
+
+def _pairs_emit(threshold: float):
+    """Score block → its (a, b) pairs with a < b and cosine ≥ threshold:
+    each unordered pair is emitted by exactly one block / batch."""
+
+    def emit(qids, nids, S):
+        qi, ci = np.nonzero((S >= threshold) & (qids[:, None] < nids[None, :]))
+        return pd.DataFrame({"a": qids[qi], "b": nids[ci]})
+
+    return emit
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The one top-k merge: (a, b, cosine) rows → (vec_id, neighbor_id,
+    rank, cosine), the k best neighbours b of each query a by cosine desc,
+    neighbour id asc."""
+    w = Window.partitionBy("a").orderBy(F.col("cosine").desc(), F.col("b").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(F.col("a").alias(ID), F.col("b").alias("neighbor_id"), "rank", "cosine")
+    )
+
+
+def bucket_pairs(rows: DataFrame) -> DataFrame:
+    """The one bucket self-join: ``rows`` of (id, key) — two columns, the
+    id first — → distinct (a, b) id pairs, a < b, that share a key.  Only
+    ids and keys ride the shuffle; both sides read the same plan, so the
+    two key exchanges canonicalize equal and ReuseExchange ships ``rows``
+    through the shuffle once."""
+    ident, key = rows.columns
+    x = rows.select(F.col(ident).alias("a"), key)
+    y = rows.select(F.col(ident).alias("b"), key)
+    return x.join(y, key).filter(F.col("a") < F.col("b")).select("a", "b").distinct()
+
+
+def _score_pairs(embeddings: DataFrame, pairs: DataFrame) -> DataFrame:
+    """pairs(a, b) → + cosine = (va·vb row-sum) / (‖va‖·‖vb‖), both norms
+    zero-guarded — the same arithmetic on both paths, and symmetric in a
+    and b (the products commute, the sum order is the same).
+
+    A corpus that ``_fetch_corpus`` admits ships ONCE as an id-sorted
+    matrix and each pair batch GATHERS its rows — no vector join, no
+    per-pair np.stack, and the pair shuffle carries ids only.  Past that
+    bound the two vector joins + pair UDF remain."""
+    corpus = _fetch_corpus(embeddings)
+    if corpus is not None:
+        # the returned frame is LAZY, so this broadcast cannot be
+        # unpersisted here; the session's periodic ContextCleaner GC
+        # (session.py) reclaims it once the caller drops the result
+        bc = embeddings.sparkSession.sparkContext.broadcast(corpus)
+
+        def score(it):
+            sids, SM, norms = bc.value
+            for pdf in it:
+                ai = np.searchsorted(sids, pdf["a"].to_numpy())
+                bi = np.searchsorted(sids, pdf["b"].to_numpy())
+                cos = (SM[ai] * SM[bi]).sum(axis=1) / (norms[ai] * norms[bi])
+                yield pd.DataFrame({"a": pdf["a"], "b": pdf["b"], "cosine": cos})
+
+        return pairs.mapInPandas(score, _SCORED)
+
+    qv = embeddings.select(F.col(ID).alias("a"), F.col(VEC).alias("qv"))
+    nv = embeddings.select(F.col(ID).alias("b"), F.col(VEC).alias("nv"))
+
+    @F.pandas_udf(T.DoubleType())
+    def cos(a: pd.Series, c: pd.Series) -> pd.Series:
+        A, C = _matrix(a), _matrix(c)
+        return pd.Series((A * C).sum(axis=1) / (_row_norms(A) * _row_norms(C)))
+
+    joined = pairs.join(qv, "a").join(nv, "b")
+    return joined.withColumn("cosine", cos(F.col("qv"), F.col("nv"))).drop("qv", "nv")
+
+
+# ---------------------------------------------------------------------------
+# exact top-k
+# ---------------------------------------------------------------------------
+
+def ann_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """Exact cosine top-k (vec_id, neighbor_id, rank) with count-gated
+    dispatch: a corpus of at most BRUTE_MAX_ROWS rows takes the broadcast
+    matmul path (its fetch is the gate — one job), a larger one the
+    distributed blocked path.  Results are identical (same cosine formula,
+    same desc-cosine/asc-id tie rule)."""
+    corpus = _fetch_corpus(embeddings)
+    if corpus is None:
+        return cosine_topk_blocked(embeddings, k)
+    return _brute_topk(embeddings, corpus, k)
+
+
+def cosine_topk_brute(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """(vec_id, neighbor_id, rank): exact top-k by cosine, ties by
+    neighbour id, against a broadcast corpus matrix — one matmul per chunk
+    of each Arrow batch of queries.  Refuses corpora past BRUTE_MAX_ROWS
+    (bounded fetch); use ann_topk or cosine_topk_blocked for those."""
+    corpus = _fetch_corpus(embeddings)
+    if corpus is None:
+        raise ValueError(
+            f"cosine_topk_brute: corpus has more than {BRUTE_MAX_ROWS} rows; "
+            "use ann_topk (auto-dispatch) or cosine_topk_blocked"
+        )
+    return _brute_topk(embeddings, corpus, k)
+
+
+def _brute_topk(embeddings: DataFrame, corpus, k: int) -> DataFrame:
+    def emit(qids, nids, S):
+        return _topk_block(qids, nids, S, k).drop(columns="cosine")
+
+    return _brute_scan(embeddings, corpus, emit, "a long, b long, rank int").select(
+        F.col("a").alias(ID), F.col("b").alias("neighbor_id"), "rank"
+    )
+
+
+def cosine_topk_blocked(embeddings: DataFrame, k: int = 5, n_blocks: int = N_BLOCKS) -> DataFrame:
+    """Distributed EXACT top-k cosine (vec_id, neighbor_id, rank): every
+    (query block, corpus block) pair computes its partial top-k with one
+    matmul, and one window merges the ``n_blocks`` partials per query.
+    Nothing is collected to the driver; per-task memory is bounded by the
+    block sizes, tunable independently of corpus size."""
+
+    def partial_topk(left, right):
         # sort the corpus block by nid so topk_rows' column-order tie rule
         # is the (cosine desc, nid asc) contract (blocks arrive unordered)
-        nord = np.argsort(nids, kind="stable")
-        nids = nids[nord]
-        M = np.stack(right["nv"].to_numpy()[nord]).astype(np.float64)
-        mn = np.linalg.norm(M, axis=1)
-        mn[mn == 0] = 1.0
-        S = (Q / qn[:, None]) @ (M / mn[:, None]).T
-        qids = left["qid"].to_numpy()
-        S[qids[:, None] == nids[None, :]] = -np.inf  # self-exclusion
-        top = topk_rows(-S, min(k, S.shape[1]))
-        m, kk = top.shape
-        rows_idx = np.arange(m)[:, None]
-        sel = S[rows_idx, top]
-        keep = (sel > -np.inf).ravel()  # drop the self slots (one block owns them)
-        return pd.DataFrame(
-            {
-                "qid": np.repeat(qids, kk)[keep],
-                "neighbor_id": nids[top].ravel()[keep],
-                "cosine": sel.ravel()[keep],
-            }
-        )
+        right = right.iloc[np.argsort(right["nid"].to_numpy(), kind="stable")]
+        S = _block_cosines(left, right)
+        out = _topk_block(left["qid"].to_numpy(), right["nid"].to_numpy(), S, k)
+        return out.drop(columns="rank")
 
-    partials = (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(lambda left, right: partial_topk(left, right), part_schema)
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col), "neighbor_id", F.col("rank").cast("int").alias("rank")
-        )
-    )
+    partials = _block_cogroup(embeddings, n_blocks, partial_topk, _SCORED)
+    return _rank_topk(partials, k).select(ID, "neighbor_id", "rank")
 
+
+# ---------------------------------------------------------------------------
+# hyperplane LSH
+# ---------------------------------------------------------------------------
 
 #: embedding quantization scale for the bucket decision (2^20): q = floor(v·2^20)
 #: is exact in IEEE-754 (power-of-two multiply), and every partial sum of
@@ -259,6 +327,8 @@ LSH_QUANT = 1048576.0
 #: integer hyperplane coordinate range (random ±127 projections are as good
 #: as gaussian for sign-LSH, and keep the arithmetic integer-exact)
 LSH_PLANE_RANGE = 127
+#: seed of the deterministic hyperplanes (the SQL oracle regenerates them)
+LSH_SEED = 7
 
 #: base LSH geometry — the fixture-scale operating point (≤4096 rows):
 #: 10 planes × 12 tables holds recall ≈0.94 at cosine 0.9 with ~2% of
@@ -285,45 +355,35 @@ _LSH_P_NEAR = 0.8564
 LSH_MAX_TABLES = 64
 
 
-def auto_lsh_params(
-    n_rows: int,
-    base_planes: int = LSH_BASE_PLANES,
-    base_tables: int = LSH_BASE_TABLES,
-    target_occupancy: int = LSH_TARGET_OCCUPANCY,
-    max_tables: int = LSH_MAX_TABLES,
-) -> tuple[int, int]:
+def auto_lsh_params(n_rows: int) -> tuple[int, int]:
     """(n_planes, n_tables) scaled to the corpus size.
 
     planes = max(base, ceil(log2(n / occupancy))) keeps expected bucket
     occupancy constant (candidate generation stays linear in n); tables
     grow by 1/p per added plane (p = per-plane collision probability at
     cosine 0.9) so the near-duplicate recall operating point is preserved.
-    At fixture scale (n ≤ base_occupancy·2^base_planes = 4096) this returns
-    exactly (base_planes, base_tables) — the constants the static SQL
-    oracle replicates."""
-    import math
-
-    planes = base_planes
-    if n_rows > target_occupancy * (1 << base_planes):
-        planes = math.ceil(math.log2(max(n_rows, 2) / target_occupancy))
-    tables = min(
-        max_tables, round(base_tables * (1.0 / _LSH_P_NEAR) ** (planes - base_planes))
-    )
-    return planes, tables
+    At fixture scale (n ≤ occupancy·2^base_planes = 4096) this returns
+    exactly (LSH_BASE_PLANES, LSH_BASE_TABLES) — the constants the static
+    SQL oracle replicates."""
+    planes = LSH_BASE_PLANES
+    if n_rows > LSH_TARGET_OCCUPANCY * (1 << LSH_BASE_PLANES):
+        planes = math.ceil(math.log2(max(n_rows, 2) / LSH_TARGET_OCCUPANCY))
+    growth = (1.0 / _LSH_P_NEAR) ** (planes - LSH_BASE_PLANES)
+    return planes, min(LSH_MAX_TABLES, round(LSH_BASE_TABLES * growth))
 
 
-def lsh_hyperplanes(n_tables: int, n_planes: int, dim: int, seed: int = 7) -> np.ndarray:
+def lsh_hyperplanes(n_tables: int, n_planes: int, dim: int) -> np.ndarray:
     """Deterministic integer hyperplanes (n_tables, n_planes, dim) in
     [-LSH_PLANE_RANGE, LSH_PLANE_RANGE] — shared by the Spark UDF and the
     DuckDB oracle generator (single definition)."""
     return (
-        np.random.default_rng(seed)
+        np.random.default_rng(LSH_SEED)
         .integers(-LSH_PLANE_RANGE, LSH_PLANE_RANGE + 1, size=(n_tables, n_planes, dim))
         .astype(np.float64)
     )
 
 
-def hyperplane_buckets_udf(n_planes: int, n_tables: int, seed: int = 7):
+def hyperplane_buckets_udf(n_planes: int, n_tables: int):
     """vec → array of n_tables bucket ids (each from its own n_planes
     hyperplane set).  Multi-table LSH: a pair is a candidate if it collides
     in ANY table — recall improves geometrically with tables while each
@@ -337,11 +397,11 @@ def hyperplane_buckets_udf(n_planes: int, n_tables: int, seed: int = 7):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def buckets(vec: pd.Series) -> pd.Series:
-        V = np.stack(vec.to_numpy()).astype(np.float64)  # (n, dim)
+        V = _matrix(vec)  # (n, dim)
         dim = V.shape[1]
         H = _planes_cache.get(dim)
         if H is None:
-            H = lsh_hyperplanes(n_tables, n_planes, dim, seed)
+            H = lsh_hyperplanes(n_tables, n_planes, dim)
             _planes_cache[dim] = H
         Q = np.floor(V * LSH_QUANT)  # exact: power-of-two scale + floor
         weights = (1 << np.arange(n_planes)).astype(np.int64)
@@ -355,47 +415,20 @@ def hyperplane_buckets_udf(n_planes: int, n_tables: int, seed: int = 7):
     return buckets
 
 
-def ann_lsh_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    brute_max_rows: int = BRUTE_MAX_ROWS,
-) -> DataFrame:
-    """LSH entry point with the same count-gated dispatch as ann_topk:
-    corpora that fit a broadcast take the exact brute path (strictly better
-    than any approximation at that scale — one matmul, recall 1); larger
-    corpora run hyperplane LSH with auto_lsh_params-scaled geometry (pass
-    explicit n_planes/n_tables to pin it).  Callers wanting the LSH
-    physical path regardless of scale call lsh_topk directly."""
-    n = embeddings.count()
-    if n <= brute_max_rows:
-        return cosine_topk_brute(embeddings, k, id_col, vec_col, _count_checked=True)
-    auto_p, auto_t = auto_lsh_params(n)
-    return lsh_topk(
-        embeddings,
-        k,
-        auto_p if n_planes is None else n_planes,
-        auto_t if n_tables is None else n_tables,
-        id_col,
-        vec_col,
-    )
+def _lsh_candidates(embeddings: DataFrame, n_planes: int, n_tables: int) -> DataFrame:
+    """Distinct (a, b), a < b, colliding in any of the hyperplane tables."""
+    bucket = hyperplane_buckets_udf(n_planes, n_tables)
+    keyed = embeddings.select(F.col(ID), F.explode(bucket(F.col(VEC))).alias("key"))
+    return bucket_pairs(keyed)
 
 
 def lsh_topk(
-    embeddings: DataFrame,
-    k: int = 5,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, k: int = 5, n_planes: int | None = None, n_tables: int | None = None
 ) -> DataFrame:
-    """Approximate top-k: candidates = pairs colliding in any of
-    ``n_tables`` hyperplane-sign buckets, ranked by exact cosine.  Linear
-    candidate generation; recall measured against the exact operator in
-    tests.
+    """Approximate top-k (vec_id, neighbor_id, rank, cosine): candidates =
+    pairs colliding in any of ``n_tables`` hyperplane-sign buckets, ranked
+    by exact cosine.  Linear candidate generation; recall measured against
+    the exact operator in tests.
 
     Operating regime (sign-LSH's similarity-recall curve): the defaults
     (10 planes × 12 tables) hold recall ≥ ~0.95 for genuinely NEAR
@@ -405,281 +438,95 @@ def lsh_topk(
     sacrificed — retrieving those needs near-quadratic candidates and is
     the exact paths' job (ann_topk dispatches there when feasible).
 
-    Shuffle diet: the bucket self-join and the (qid, nid) dedup move
-    (id, bucket) rows ONLY — full embedding vectors rejoin exactly once,
-    after dedup, for scoring.  At 100 TB the duplicated-vector shuffle this
-    replaces would dwarf the id-only join.
+    Shuffle diet: the bucket self-join moves (id, bucket) rows ONLY; each
+    unordered candidate pair is scored once (cosine is symmetric, see
+    _score_pairs) and then emitted in both directions for the ranking.
 
     ``n_planes``/``n_tables`` default to auto_lsh_params(count) — constant
     bucket occupancy (linear candidates) with the recall curve held by
     table growth; at fixture scale the auto values are exactly the
     (10, 12) the static SQL oracle replicates."""
-    # one count serves both the auto geometry and the scoring dispatch
-    # (ADVICE r7: default-geometry callers paid a second uncached count)
-    n = embeddings.count()
     if n_planes is None or n_tables is None:
-        auto_p, auto_t = auto_lsh_params(n)
+        auto_p, auto_t = auto_lsh_params(embeddings.count())
         n_planes = auto_p if n_planes is None else n_planes
         n_tables = auto_t if n_tables is None else n_tables
-    bucket = hyperplane_buckets_udf(n_planes, n_tables)
-    b = embeddings.select(
-        F.col(id_col), F.explode(bucket(F.col(vec_col))).alias("bucket")
+    scored = _score_pairs(embeddings, _lsh_candidates(embeddings, n_planes, n_tables))
+    both = F.array(
+        F.struct(F.col("a"), F.col("b")),
+        F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
     )
-
-    x = b.select(F.col(id_col).alias("qid"), "bucket")
-    y = b.select(F.col(id_col).alias("nid"), "bucket")
-    cand = (
-        x.join(y, "bucket")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid")
-        .dropDuplicates(["qid", "nid"])
-    )
-    scored = _score_pairs(embeddings, cand, "qid", "nid", id_col, vec_col, n_rows=n)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias(id_col), F.col("nid").alias("neighbor_id"), "rank", "cosine")
-    )
-
-
-def _score_pairs(
-    embeddings: DataFrame,
-    pairs: DataFrame,
-    a_col: str,
-    b_col: str,
-    id_col: str,
-    vec_col: str,
-    n_rows: int | None = None,
-    brute_max_rows: int = BRUTE_MAX_ROWS,
-) -> DataFrame:
-    """pairs(a, b) → + cosine, bit-identical to the former per-pair pandas
-    UDF over twice-joined vectors: cosine = (va·vb row-sum) / (‖va‖·‖vb‖),
-    the exact same elementwise-product/sum/np.linalg.norm arithmetic.
-
-    Physical dispatch (count-gated like ann_topk): a broadcastable corpus
-    ships ONCE as an id-sorted matrix and each pair batch GATHERS its rows
-    — no vector join, no per-pair np.stack of 10^5 small lists (measured as
-    the dominant scoring cost), and the pair shuffle carries ids only.
-    Past broadcast scale the original two hash joins + pair UDF remain."""
-    n = embeddings.count() if n_rows is None else n_rows
-    # n == 0 falls through to the join path: zero rows means the scoring
-    # UDF never runs, and _collect_matrix cannot stack an empty corpus
-    if 0 < n <= brute_max_rows:
-        spark = embeddings.sparkSession
-        # keep the zero-guarded norms _collect_matrix already computed —
-        # per-task recomputation threw them away (review finding)
-        ids, M, norms_ = _collect_matrix(embeddings, id_col, vec_col)
-        # the returned frame is LAZY, so this broadcast cannot be
-        # unpersisted here; the session's periodic ContextCleaner GC
-        # (session.py) reclaims it once the caller drops the result
-        bc = spark.sparkContext.broadcast((ids, M, norms_))
-        out_schema = T.StructType(
-            [
-                T.StructField(a_col, T.LongType()),
-                T.StructField(b_col, T.LongType()),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-
-        def score(it):
-            sids, SM, norms = bc.value
-            for pdf in it:
-                ai = np.searchsorted(sids, pdf[a_col].to_numpy())
-                bi = np.searchsorted(sids, pdf[b_col].to_numpy())
-                A = SM[ai]
-                C = SM[bi]
-                cos = (A * C).sum(axis=1) / (norms[ai] * norms[bi])
-                yield pd.DataFrame(
-                    {a_col: pdf[a_col], b_col: pdf[b_col], "cosine": cos}
-                )
-
-        return pairs.mapInPandas(score, out_schema)
-
-    qv = embeddings.select(F.col(id_col).alias(a_col), F.col(vec_col).alias("qv"))
-    nv = embeddings.select(F.col(id_col).alias(b_col), F.col(vec_col).alias("nv"))
-    joined = pairs.join(qv, a_col).join(nv, b_col)
-
-    @F.pandas_udf(T.DoubleType())
-    def cos(a: pd.Series, c: pd.Series) -> pd.Series:
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        C = np.stack(c.to_numpy()).astype(np.float64)
-        na = np.linalg.norm(A, axis=1)
-        nc = np.linalg.norm(C, axis=1)
-        na[na == 0] = 1.0
-        nc[nc == 0] = 1.0
-        return pd.Series((A * C).sum(axis=1) / (na * nc))
-
-    return joined.withColumn("cosine", cos(F.col("qv"), F.col("nv"))).drop("qv", "nv")
+    mirrored = scored.select(F.explode(both).alias("p"), "cosine").select("p.a", "p.b", "cosine")
+    return _rank_topk(mirrored, k)
 
 
 # ---------------------------------------------------------------------------
 # embedding-cosine near-duplicate pairs (the dedup-family member: emit the
-# PAIRS above a similarity threshold, not per-query top-k)
+# PAIRS above a similarity threshold, not per-query top-k).  Output carries
+# ids only (no cosine column): the float is summation-order-sensitive
+# across engines, the pair set is not.
 # ---------------------------------------------------------------------------
 
-_PAIR_SCHEMA = T.StructType(
-    [T.StructField("a", T.LongType()), T.StructField("b", T.LongType())]
-)
-
-
-def cosine_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    brute_max_rows: int = BRUTE_MAX_ROWS,
-    n_query_blocks: int = 8,
-    n_corpus_blocks: int = 8,
-) -> DataFrame:
+def cosine_dup_pairs(embeddings: DataFrame, threshold: float = 0.45) -> DataFrame:
     """(a, b) unordered pairs with cosine(a, b) ≥ threshold — EXACT
     embedding near-dup detection, the cosine sibling of
-    dedup.ngram_jaccard_pairs.  Count-gated physical dispatch like
-    ann_topk: a broadcastable corpus takes one matmul per Arrow batch of
-    queries (each batch emits only its own a<b half — every unordered
-    pair materializes exactly once across batches); larger corpora run the
-    block-nested-loop cogroup with per-task memory bounded by the block
-    sizes.  Output carries ids only (no cosine column): the float is
-    summation-order-sensitive across engines, the pair set is not."""
-    spark = embeddings.sparkSession
-    n = embeddings.count()
-    if n == 0:
-        return spark.createDataFrame([], "a long, b long")
-    if n <= brute_max_rows:
-        ids, M, norms = _collect_matrix(embeddings, id_col, vec_col)
-        bc = spark.sparkContext.broadcast((ids, M / norms[:, None]))
-
-        def part(it):
-            nids, Mn = bc.value
-            chunk = max(4, _ANN_CHUNK_ELEMS // max(len(nids), 1))
-            for pdf in it:
-                Q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                qn = np.linalg.norm(Q, axis=1)
-                qn[qn == 0] = 1.0
-                Qn = Q / qn[:, None]
-                all_qids = pdf[id_col].to_numpy()
-                for i in range(0, len(all_qids), chunk):
-                    sl = slice(i, i + chunk)
-                    S = Qn[sl] @ Mn.T
-                    qids = all_qids[sl]
-                    qi, ci = np.nonzero((S >= threshold) & (qids[:, None] < nids[None, :]))
-                    yield pd.DataFrame({"a": qids[qi], "b": nids[ci]})
-
-        return embeddings.select(id_col, vec_col).mapInPandas(part, _PAIR_SCHEMA)
-
-    # distributed: block-nested-loop over (query-block × corpus-block).
-    # Grouping keys cast to LONG on both sides — see cosine_topk_blocked for
-    # the mixed-type cogroup misalignment this prevents.
-    Bq, Bc = n_query_blocks, n_corpus_blocks
-    q = (
-        embeddings.select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qv"),
-            F.pmod(F.xxhash64(id_col), F.lit(Bq)).alias("qb"),
-        )
-        .withColumn("cb", F.explode(F.sequence(F.lit(0), F.lit(Bc - 1))))
-        .withColumn("cb", F.col("cb").cast("long"))
-    )
-    c = (
-        embeddings.select(
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).alias("nv"),
-            F.pmod(F.xxhash64(id_col), F.lit(Bc)).alias("cb"),
-        )
-        .withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(Bq - 1))))
-        .withColumn("qb", F.col("qb").cast("long"))
-    )
-
-    def block_pairs(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"a": [], "b": []}).astype({"a": "int64", "b": "int64"})
-        Q = np.stack(left["qv"].to_numpy()).astype(np.float64)
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0] = 1.0
-        M = np.stack(right["nv"].to_numpy()).astype(np.float64)
-        mn = np.linalg.norm(M, axis=1)
-        mn[mn == 0] = 1.0
-        S = (Q / qn[:, None]) @ (M / mn[:, None]).T
-        qids = left["qid"].to_numpy()
-        nids = right["nid"].to_numpy()
-        qi, ci = np.nonzero((S >= threshold) & (qids[:, None] < nids[None, :]))
-        return pd.DataFrame({"a": qids[qi], "b": nids[ci]})
-
-    return (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(lambda l, r: block_pairs(l, r), _PAIR_SCHEMA)
-    )
+    dedup.ngram_jaccard_pairs.  Gated like ann_topk: a corpus that
+    ``_fetch_corpus`` admits takes the broadcast scan (each batch emits
+    only its a < b half, so every pair materializes exactly once); a larger
+    one runs cosine_dup_pairs_blocked."""
+    corpus = _fetch_corpus(embeddings)
+    if corpus is None:
+        return cosine_dup_pairs_blocked(embeddings, threshold)
+    return _brute_scan(embeddings, corpus, _pairs_emit(threshold), _PAIRS)
 
 
-def cosine_dup_pairs_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.8,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def cosine_dup_pairs_blocked(
+    embeddings: DataFrame, threshold: float = 0.45, n_blocks: int = N_BLOCKS
 ) -> DataFrame:
+    """cosine_dup_pairs on the distributed block-nested-loop: per-task
+    memory bounded by the block sizes, nothing collected to the driver."""
+    emit = _pairs_emit(threshold)
+
+    def block_pairs(left, right):
+        S = _block_cosines(left, right)
+        return emit(left["qid"].to_numpy(), right["nid"].to_numpy(), S)
+
+    return _block_cogroup(embeddings, n_blocks, block_pairs, _PAIRS)
+
+
+def cosine_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.8) -> DataFrame:
     """The 100 TB path: LSH-bucketed candidate pairs verified by exact
     cosine ≥ threshold.  Candidate generation is linear and id-only (same
     shuffle diet as lsh_topk); recall follows the sign-LSH
     similarity-recall curve — ≥ ~0.95 for genuinely near pairs (cosine ≥
-    ~0.9) at the fixture-scale geometry, measured on planted duplicates in
-    tests.  Geometry defaults to auto_lsh_params(count) — see lsh_topk.
-    Use cosine_dup_pairs (exact) when the corpus permits."""
-    # one count serves both the auto geometry and the scorer dispatch —
-    # default-geometry callers previously paid a second uncached count
-    n = embeddings.count()
-    if n_planes is None or n_tables is None:
-        auto_p, auto_t = auto_lsh_params(n)
-        n_planes = auto_p if n_planes is None else n_planes
-        n_tables = auto_t if n_tables is None else n_tables
-    bucket = hyperplane_buckets_udf(n_planes, n_tables)
-    b = embeddings.select(F.col(id_col), F.explode(bucket(F.col(vec_col))).alias("bucket"))
-    x = b.select(F.col(id_col).alias("a"), "bucket")
-    y = b.select(F.col(id_col).alias("b"), "bucket")
-    cand = (
-        x.join(y, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-    )
-    # same cosine arithmetic as before, via the count-gated broadcast-gather
-    # scorer (no vector joins / per-pair stacks at dimension scale)
-    return (
-        _score_pairs(embeddings, cand, "a", "b", id_col, vec_col, n_rows=n)
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b")
-    )
+    ~0.9) at the auto_lsh_params geometry, measured on planted duplicates
+    in tests.  Use cosine_dup_pairs (exact) when the corpus permits."""
+    cand = _lsh_candidates(embeddings, *auto_lsh_params(embeddings.count()))
+    return _score_pairs(embeddings, cand).filter(F.col("cosine") >= threshold).select("a", "b")
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the list-partitioned scale path
 # ---------------------------------------------------------------------------
 
-def ivf_seed_centroids(embeddings: DataFrame, n_lists: int,
-                       id_col: str = "vec_id", vec_col: str = "embedding") -> np.ndarray:
+#: Lloyd rounds of the trained quantizer
+IVF_TRAIN_ITERS = 20
+
+
+def ivf_seed_centroids(embeddings: DataFrame, n_lists: int) -> np.ndarray:
     """Deterministic coarse quantizer: the ``n_lists`` corpus vectors with
     the smallest ids, as an (n_lists, dim) float64 matrix.  Production IVF
     plugs a TRAINED quantizer (k-means run offline) into ``ivf_topk``'s
     ``centroids`` parameter — the assignment/probe machinery is identical;
     the seed default keeps the operator deterministic and exactly
     SQL-oracle-able without a training step."""
-    pdf = (
-        embeddings.select(id_col, vec_col).orderBy(id_col).limit(n_lists).toPandas()
-    )
+    pdf = embeddings.select(ID, VEC).orderBy(ID).limit(n_lists).toPandas()
     if len(pdf) == 0:
         return np.zeros((0, 0), dtype=np.float64)
-    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    return _matrix(pdf[VEC])
 
 
 def ivf_train_centroids(
-    embeddings: DataFrame,
-    n_lists: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_rows: int = 100_000,
-    n_iter: int = 20,
+    embeddings: DataFrame, n_lists: int, sample_rows: int = 100_000
 ) -> np.ndarray:
     """TRAINED coarse quantizer: deterministic spherical k-means over a
     hash-sampled subset, for ``ivf_topk``'s ``centroids`` hook.
@@ -693,7 +540,7 @@ def ivf_train_centroids(
 
     Deterministic end-to-end (no RNG at all): greedy farthest-point init (k-means++
     without randomness in the D² draw — always the farthest point, ties to
-    the smaller sample index), fixed ``n_iter`` Lloyd rounds on the unit
+    the smaller sample index), IVF_TRAIN_ITERS Lloyd rounds on the unit
     sphere (assign by max cosine, mean + re-normalize, empty lists re-seeded
     from the worst-covered points).  The seed-subset default
     (ivf_seed_centroids) remains the oracle contract; this trainer is the
@@ -702,7 +549,7 @@ def ivf_train_centroids(
     n = embeddings.count()
     if n == 0:
         return np.zeros((0, 0), dtype=np.float64)
-    take = embeddings.select(id_col, vec_col)
+    take = embeddings.select(ID, VEC)
     if n > sample_rows:
         # deterministic hash sample at ~sample_rows expected size, with a
         # HARD driver bound: the hash filter's size is only expected-value,
@@ -715,15 +562,12 @@ def ivf_train_centroids(
         # bias training toward ingest order; ordering by (hash, id) keeps the
         # truncation pseudo-random while staying deterministic and total
         take = (
-            take.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
-            .orderBy(F.xxhash64(F.col(id_col)), id_col)
+            take.filter(F.pmod(F.xxhash64(F.col(ID)), F.lit(m)) == 0)
+            .orderBy(F.xxhash64(F.col(ID)), ID)
             .limit(2 * sample_rows)
         )
-    pdf = take.orderBy(id_col).toPandas()
-    X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    norms = np.linalg.norm(X, axis=1)
-    norms[norms == 0] = 1.0
-    X = X / norms[:, None]
+    X = _matrix(take.orderBy(ID).toPandas()[VEC])
+    X = X / _row_norms(X)[:, None]
     k = min(n_lists, len(X))
     # greedy farthest-point init (deterministic): start from the sample
     # vector nearest the sample mean, then repeatedly take the point with
@@ -737,7 +581,7 @@ def ivf_train_centroids(
         chosen.append(nxt)
         best_cos = np.maximum(best_cos, X @ X[nxt])
     C = X[chosen].copy()
-    for _ in range(n_iter):
+    for _ in range(IVF_TRAIN_ITERS):
         S = X @ C.T  # (n_sample, k) cosine since both sides unit-norm
         assign = np.argmax(S, axis=1)
         newC = np.zeros_like(C)
@@ -750,9 +594,7 @@ def ivf_train_centroids(
             newC[empty] = X[worst]
             counts[empty] = 1
         newC /= counts[:, None]
-        cn = np.linalg.norm(newC, axis=1)
-        cn[cn == 0] = 1.0
-        C = newC / cn[:, None]
+        C = newC / _row_norms(newC)[:, None]
     return C
 
 
@@ -774,13 +616,11 @@ def ivf_assign_udf(centroids: np.ndarray, n_probe: int):
     probes] — element 0 is the corpus-side assignment; the full array is
     the query-side probe set.  Ties break to the smaller list id."""
     Cq, norms = _ivf_quantizer(centroids)
-    L = len(Cq)
-    n_probe = min(n_probe, L)
+    n_probe = min(n_probe, len(Cq))
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(vec: pd.Series) -> pd.Series:
-        V = np.stack(vec.to_numpy()).astype(np.float64)
-        Q = np.floor(V * LSH_QUANT)
+        Q = np.floor(_matrix(vec) * LSH_QUANT)
         S = (Q @ Cq.T) / norms[None, :]  # exact ints / exact norms
         # columns ARE list ids 0..L-1, so topk_rows' column tie rule is
         # exactly "ties break to the smaller list id"
@@ -796,12 +636,11 @@ def ivf_topk(
     n_lists: int = 16,
     n_probe: int = 4,
     centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k via inverted lists: every corpus vector lives in
-    exactly ONE list (its nearest centroid); each query probes its
-    ``n_probe`` nearest lists and ranks the candidates by exact cosine.
+    """Approximate top-k (vec_id, neighbor_id, rank) via inverted lists:
+    every corpus vector lives in exactly ONE list (its nearest centroid);
+    each query probes its ``n_probe`` nearest lists and ranks the
+    candidates by exact cosine.
 
     100 TB shape: the corpus partitions by list id (candidate volume per
     query ≈ n_probe/n_lists of the corpus — tunable recall/cost), the
@@ -809,28 +648,15 @@ def ivf_topk(
     rejoin once for scoring, exactly like lsh_topk.  Recall follows the
     probe coverage; measured against the exact operator in tests."""
     if centroids is None:
-        centroids = ivf_seed_centroids(embeddings, n_lists, id_col, vec_col)
+        centroids = ivf_seed_centroids(embeddings, n_lists)
     if len(centroids) == 0:  # empty corpus → empty result
-        return _empty_topk(embeddings, id_col)
+        return embeddings.sparkSession.createDataFrame(
+            [], f"{ID} long, neighbor_id long, rank int"
+        )
     assign = ivf_assign_udf(centroids, n_probe)
-    assigned = embeddings.select(
-        F.col(id_col), assign(F.col(vec_col)).alias("probes")
-    )
-    corpus = assigned.select(
-        F.col(id_col).alias("nid"), F.element_at("probes", 1).alias("list_id")
-    )
-    queries = assigned.select(
-        F.col(id_col).alias("qid"), F.explode("probes").alias("list_id")
-    )
-    cand = (
-        queries.join(corpus, "list_id")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid")
-    )  # lists are disjoint per corpus vector and probes are distinct → no dup pairs
-    scored = _score_pairs(embeddings, cand, "qid", "nid", id_col, vec_col)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias(id_col), F.col("nid").alias("neighbor_id"), "rank")
-    )
+    assigned = embeddings.select(F.col(ID), assign(F.col(VEC)).alias("probes"))
+    corpus = assigned.select(F.col(ID).alias("b"), F.element_at("probes", 1).alias("list_id"))
+    queries = assigned.select(F.col(ID).alias("a"), F.explode("probes").alias("list_id"))
+    # lists are disjoint per corpus vector and probes are distinct → no dup pairs
+    cand = queries.join(corpus, "list_id").filter(F.col("a") != F.col("b")).select("a", "b")
+    return _rank_topk(_score_pairs(embeddings, cand), k).select(ID, "neighbor_id", "rank")

@@ -6,7 +6,8 @@ The stateless stages (geocode, cell key) reuse the exact batch Columns, so
 streaming and batch cannot drift.  Watermarked tumbling windows bound state
 for late data.  ``drain_to_memory`` is the one synchronous driver of every
 streaming query here and in ``__spark_entry__``: stage the input, read it
-one file per micro-batch, drain into a memory sink.
+one file per micro-batch, drain into a memory sink, and hand the rows back
+as a driver-local frame with the sink's view dropped.
 """
 
 from __future__ import annotations
@@ -137,14 +138,15 @@ def drain_to_memory(spark, source, build, output_mode: str, query_name: str) -> 
     """Run ``build(stream)`` as a real streaming query and drain it
     synchronously: a parquet file source read one file per micro-batch
     (``maxFilesPerTrigger=1``), a memory sink, ``processAllAvailable``.
-    Returns the sink table ``query_name``.
+    Returns the drained rows as a driver-local frame; the sink's view
+    ``query_name`` is dropped, so repeated drains leave nothing registered
+    in the session catalog.
 
     ``source`` is a parquet directory, a single parquet file (copied into a
     temporary directory — the file source reads directories), or a list of
     Arrow tables staged as one file each with strictly increasing mtimes,
     so the source (oldest first) reads them in list order.  The staged
-    copy is removed once the stream drains (the memory sink owns the
-    rows)."""
+    copy is removed once the stream drains."""
     import os
     import shutil
     import tempfile
@@ -181,7 +183,10 @@ def drain_to_memory(spark, source, build, output_mode: str, query_name: str) -> 
     finally:
         if staged:
             shutil.rmtree(path, ignore_errors=True)
-    return spark.table(query_name)
+    sink = spark.table(query_name)
+    rows = spark.createDataFrame(sink.toArrow(), schema=sink.schema)
+    spark.catalog.dropTempView(query_name)
+    return rows
 
 
 def run_dedup_stream_to_memory(spark, pages_dir: str, query_name: str = "dedup_stream"):

@@ -232,9 +232,11 @@ def cell_graph_double_sweep(
     grid-shaped dual graphs the sweep lands on the periphery and matches
     the exact answer (oracle-checked on the fixture).
 
-    Returns one row (n_nodes, n_edges, diameter, endpoint_a, endpoint_b)."""
+    Returns one row (n_nodes, n_edges, diameter, endpoint_a, endpoint_b).
+    The edges are checkpointed once per call, so the lazy dual-graph plan
+    runs once, not in every count and BFS round."""
     spark = dual_edges.sparkSession
-    edges = dual_edges.select("cell_id_a", "cell_id_b")
+    edges = dual_edges.select("cell_id_a", "cell_id_b").localCheckpoint()
     nodes = (
         edges.select(F.col("cell_id_a").alias("cell_id"))
         .unionByName(edges.select(F.col("cell_id_b").alias("cell_id")))
@@ -263,6 +265,7 @@ def cell_graph_double_sweep(
         cand = (int(far[1].hop), u, v)
         if cand[0] > best[0] or (cand[0] == best[0] and cand[1:] < best[1:]):
             best = cand
+    release_local_checkpoint(edges)
     return spark.createDataFrame([(int(n_nodes), int(n_edges), *best)], _DIAMETER_SCHEMA)
 
 

@@ -33,8 +33,8 @@ def _norm(v):
     return v
 
 
-def _match(spark, duck, name):
-    spdf = entry.queries()[name](spark, SF_DIR).toPandas()
+def _match(spark, duck, name, sf_dir=SF_DIR):
+    spdf = entry.queries()[name](spark, sf_dir).toPandas()
     opdf = duck.sql(entry.oracle_sql()[name]).df()
     cols = sorted(spdf.columns)
     assert cols == sorted(opdf.columns)
@@ -62,6 +62,26 @@ def test_entry_smoke(spark):
 # at sf0.01, the driver's tier
 def test_oracle_match(spark, duck, name):
     _match(spark, duck, name)
+
+
+def test_stream_drains_leave_no_sink_view(spark, duck):
+    """Every streaming drain returns driver-local rows and drops its
+    memory-sink view: three calls of events_window_stream register nothing
+    in the session catalog, and the three streaming queries keep their
+    oracle outputs (stream_region_counts at sf0.01, the tier its goldens
+    pin)."""
+    before = {t.name for t in spark.catalog.listTables()}
+    for _ in range(3):
+        assert entry.queries()["events_window_stream"](spark, SF_DIR).count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == before
+    _match(spark, duck, "events_window_stream")
+    _match(spark, duck, "stream_first_event")
+    sf01 = "/root/testdata/sf0.01"
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf01}/{t}.parquet')")
+    _match(spark, con, "stream_region_counts", sf01)
+    assert {t.name for t in spark.catalog.listTables()} == before
 
 
 def test_session_caches_registered_and_clearable(spark, monkeypatch):

@@ -186,7 +186,8 @@ class TestDedup:
         out = minhash_lsh_pairs(d, threshold=0.5).toPandas()
         assert set(zip(out["a"], out["b"])) == {(1, 2)}
 
-    def test_minhash_lsh_recall(self, spark):
+    def test_minhash_lsh_recall(self, spark, monkeypatch, spy):
+        from libosmtools_spark.dedup import dedup as D
         from libosmtools_spark.dedup.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 
         # corpus with planted near-duplicates
@@ -195,8 +196,11 @@ class TestDedup:
         for i in range(40):
             rows.append((i, base if i % 4 == 0 else f"{base} variant {i} " + "x " * i))
         docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+        relational = spy(D, "_verify_relational")
+        filtered = spy(D, "_candidate_docs")
         exact = ngram_jaccard_pairs(docs, threshold=0.8).toPandas()
         lsh = minhash_lsh_pairs(docs, threshold=0.8, num_perm=64, bands=32).toPandas()
+        assert not relational  # the gather side verified
         want = set(zip(exact["a"], exact["b"]))
         got = set(zip(lsh["a"], lsh["b"]))
         assert want, "planted duplicates must exist"
@@ -205,11 +209,13 @@ class TestDedup:
         # the RELATIONAL verification paths (gather disabled so the branch
         # actually runs): both the corpus-wide explode and the count-gated
         # candidate-filtered variant must produce the exact same pairs
-        for min_docs in (0, 20_000):
-            gated = minhash_lsh_pairs(
-                docs, threshold=0.8, num_perm=64, bands=32,
-                candidate_filter_min_docs=min_docs, verify_gather_max_docs=0,
-            ).toPandas()
+        monkeypatch.setattr(D, "VERIFY_GATHER_MAX_DOCS", 0)
+        for min_docs, filter_ran in ((0, True), (20_000, False)):
+            monkeypatch.setattr(D, "CANDIDATE_FILTER_MIN_DOCS", min_docs)
+            relational.clear()
+            filtered.clear()
+            gated = minhash_lsh_pairs(docs, threshold=0.8, num_perm=64, bands=32).toPandas()
+            assert len(relational) == 1 and bool(filtered) == filter_ran
             assert set(zip(gated["a"], gated["b"])) == want
             assert sorted(map(tuple, gated[["a", "b", "jaccard"]].itertuples(index=False))) \
                 == sorted(map(tuple, lsh[["a", "b", "jaccard"]].itertuples(index=False)))
@@ -424,18 +430,23 @@ class TestANN:
         assert c1.shape == (8, 16)
         np.testing.assert_allclose(np.linalg.norm(c1, axis=1), 1.0, rtol=1e-9)
 
-    def test_cosine_dup_pairs_paths_agree(self, embeddings):
-        """Exact near-dup pairs: brute and block-nested-loop physical paths
-        emit the identical pair set."""
-        from libosmtools_spark.sim.ann import cosine_dup_pairs
+    def test_cosine_dup_pairs_paths_agree(self, embeddings, monkeypatch, spy):
+        """Exact near-dup pairs: both sides of cosine_dup_pairs'
+        BRUTE_MAX_ROWS gate and the blocked entry at 3 blocks emit the
+        identical pair set."""
+        from libosmtools_spark.sim import ann
 
-        brute = cosine_dup_pairs(embeddings, threshold=0.4).toPandas()
-        blocked = cosine_dup_pairs(
-            embeddings, threshold=0.4, brute_max_rows=0,
-            n_query_blocks=3, n_corpus_blocks=3,
-        ).toPandas()
-        assert set(zip(brute["a"], brute["b"])) == set(zip(blocked["a"], blocked["b"]))
+        blocked_ran = spy(ann, "cosine_dup_pairs_blocked")
+        brute = ann.cosine_dup_pairs(embeddings, threshold=0.4).toPandas()
+        assert not blocked_ran
+        monkeypatch.setattr(ann, "BRUTE_MAX_ROWS", 0)
+        gated = ann.cosine_dup_pairs(embeddings, threshold=0.4).toPandas()
+        assert len(blocked_ran) == 1
+        blocked = ann.cosine_dup_pairs_blocked(embeddings, threshold=0.4, n_blocks=3).toPandas()
+        want = set(zip(brute["a"], brute["b"]))
+        assert want == set(zip(gated["a"], gated["b"])) == set(zip(blocked["a"], blocked["b"]))
         assert len(brute) == len(brute.drop_duplicates())  # each pair exactly once
+        assert len(blocked) == len(brute)
 
     def test_blocked_topk_complete_on_wide_ids_multi_partition(self, spark):
         """Regression: the blocked cogroup's per-position key types must be
@@ -457,7 +468,7 @@ class TestANN:
         ]
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(8)
         blocked = cosine_topk_blocked(emb, k=3).toPandas()
-        brute = cosine_topk_brute(emb, k=3, _count_checked=True).toPandas()
+        brute = cosine_topk_brute(emb, k=3).toPandas()
         assert len(blocked) == 1600 * 3
         assert blocked["vec_id"].nunique() == 1600
         key = ["vec_id", "neighbor_id", "rank"]
@@ -477,38 +488,94 @@ class TestANN:
         found = sum((i, 800 + i) in pairs for i in range(300))
         assert found / 300 >= 0.95, found / 300
 
-    def test_ann_lsh_topk_dispatch(self, embeddings):
-        """Count-gated dispatch: a broadcast-scale corpus routes to the
-        exact brute path (recall 1 by construction)."""
-        from libosmtools_spark.sim.ann import ann_lsh_topk, cosine_topk_brute
-
-        got = ann_lsh_topk(embeddings, k=3).toPandas().sort_values(["vec_id", "rank"])
-        want = cosine_topk_brute(embeddings, k=3).toPandas().sort_values(["vec_id", "rank"])
-        assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
-
-    def test_ann_topk_gate_both_sides(self, embeddings, monkeypatch):
-        """Both sides of ann_topk's ``brute_max_rows`` gate: a corpus of
-        exactly the bound takes the broadcast matmul path, one row over it
-        the blocked path, and the rows are identical."""
+    def test_ann_topk_gate_both_sides(self, embeddings, monkeypatch, spy):
+        """Both sides of ann_topk's BRUTE_MAX_ROWS gate: a corpus of exactly
+        the bound takes the broadcast matmul path, one row over it the
+        blocked path, and the rows are identical."""
         from libosmtools_spark.sim import ann
 
-        taken = []
-        for name in ("cosine_topk_brute", "cosine_topk_blocked"):
-            impl = getattr(ann, name)
-            monkeypatch.setattr(
-                ann, name, lambda *a, _n=name, _f=impl, **kw: taken.append(_n) or _f(*a, **kw)
-            )
+        brute = spy(ann, "_brute_topk")
+        blocked = spy(ann, "cosine_topk_blocked")
         n = embeddings.count()
 
-        def rows(brute_max_rows):
-            out = ann.ann_topk(embeddings, k=3, brute_max_rows=brute_max_rows).toPandas()
+        def rows(bound):
+            monkeypatch.setattr(ann, "BRUTE_MAX_ROWS", bound)
+            out = ann.ann_topk(embeddings, k=3).toPandas()
             return out.sort_values(["vec_id", "rank"]).reset_index(drop=True)
 
-        at, over = rows(n), rows(n - 1)
-        assert taken == ["cosine_topk_brute", "cosine_topk_blocked"]
+        at = rows(n)
+        assert (len(brute), len(blocked)) == (1, 0)
+        over = rows(n - 1)
+        assert (len(brute), len(blocked)) == (1, 1)
+        with pytest.raises(ValueError):  # the brute entry refuses past the bound
+            ann.cosine_topk_brute(embeddings, k=3)
         assert len(at) == 3 * n
         pd.testing.assert_frame_equal(at, over)
 
+    def test_exact_ties_match_lexsort_reference(self, spark):
+        """Exact-tie differential test.  0/±1 vectors with exactly 4
+        non-zeros (every norm 2), duplicated vectors and zero vectors give
+        cosines that are multiples of 1/4, exact in any summation order, so
+        only the tie rule (cosine desc, neighbour id asc) orders equal
+        scores.  Brute, blocked (1 and 3 blocks) and gated top-k equal a
+        numpy lexsort reference; brute and blocked dup pairs equal the
+        reference pair set; lsh_topk at a fixed geometry equals the
+        reference built from ORDERED colliding pairs (each direction
+        scored on its own)."""
+        from libosmtools_spark.sim import ann
+
+        rng = np.random.default_rng(2024)
+        dim, k = 16, 5
+        base = np.zeros((40, dim))
+        for row in base:
+            row[rng.choice(dim, 4, replace=False)] = rng.choice([-1.0, 1.0], 4)
+        X = np.vstack([base, base[rng.choice(40, 12, replace=False)], np.zeros((8, dim))])
+        ids = rng.choice(10**6, len(X), replace=False).astype(np.int64)
+        rows = [(int(i), v.tolist()) for i, v in zip(ids, X)]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(3)
+
+        norms = np.linalg.norm(X, axis=1)
+        norms[norms == 0] = 1.0
+        C = (X @ X.T) / np.outer(norms, norms)  # exact: multiples of 1/4
+        assert set(np.unique(C)) <= {q / 4 for q in range(-4, 5)}
+
+        def reference(allowed):
+            out = []
+            for qi in range(len(ids)):
+                cand = np.nonzero(allowed[qi])[0]
+                order = cand[np.lexsort((ids[cand], -C[qi, cand]))][:k]
+                out += [(int(ids[qi]), int(ids[c]), r + 1) for r, c in enumerate(order)]
+            return sorted(out)
+
+        def got(df):
+            return sorted(map(tuple, df.select("vec_id", "neighbor_id", "rank").collect()))
+
+        exact = reference(~np.eye(len(ids), dtype=bool))
+        assert got(ann.cosine_topk_brute(emb, k)) == exact
+        assert got(ann.ann_topk(emb, k)) == exact
+        for n_blocks in (1, 3):
+            assert got(ann.cosine_topk_blocked(emb, k, n_blocks=n_blocks)) == exact
+
+        iu, ju = np.nonzero(C >= 0.5)
+        want_pairs = {(int(ids[i]), int(ids[j])) for i, j in zip(iu, ju) if ids[i] < ids[j]}
+        for pairs in (
+            ann.cosine_dup_pairs(emb, 0.5),
+            ann.cosine_dup_pairs_blocked(emb, 0.5, n_blocks=3),
+        ):
+            assert sorted(map(tuple, pairs.collect())) == sorted(want_pairs)
+
+        n_planes, n_tables = 3, 4
+        H = ann.lsh_hyperplanes(n_tables, n_planes, dim)
+        Q = np.floor(X * ann.LSH_QUANT)
+        weights = 1 << np.arange(n_planes)
+        buckets = np.stack([((Q @ H[t].T) > 0) @ weights for t in range(n_tables)], axis=1)
+        collide = (buckets[:, None, :] == buckets[None, :, :]).any(axis=2)
+        np.fill_diagonal(collide, False)
+        lsh = ann.lsh_topk(emb, k, n_planes=n_planes, n_tables=n_tables)
+        assert got(lsh) == reference(collide)
+        pos = {int(i): p for p, i in enumerate(ids)}
+        for r in lsh.collect():
+            assert r.cosine == C[pos[r.vec_id], pos[r.neighbor_id]]
 
 class TestMultimodal:
     def test_feature_plumbing(self, spark, sf_smoke):
@@ -828,7 +895,8 @@ class TestEmptyInputs:
             simhash_fingerprints, simhash_pairs,
         )
         from libosmtools_spark.sim.ann import (
-            ann_topk, cosine_dup_pairs, ivf_topk, lsh_topk,
+            ann_topk, cosine_dup_pairs, cosine_dup_pairs_blocked, cosine_dup_pairs_lsh,
+            cosine_topk_blocked, cosine_topk_brute, ivf_topk, lsh_topk,
         )
 
         docs = spark.createDataFrame([], "doc_id long, text string")
@@ -841,6 +909,10 @@ class TestEmptyInputs:
         assert lsh_topk(emb).count() == 0
         assert cosine_dup_pairs(emb).count() == 0
         assert ivf_topk(emb).count() == 0
+        assert cosine_topk_brute(emb).count() == 0
+        assert cosine_topk_blocked(emb).count() == 0
+        assert cosine_dup_pairs_blocked(emb).count() == 0
+        assert cosine_dup_pairs_lsh(emb).count() == 0
 
 
 class TestWinnowBPE:

@@ -463,6 +463,28 @@ class TestCellGraphDiameter:
             row = cell_graph_double_sweep(edges, sweeps=1).collect()[0]
             assert (row["n_nodes"], row["n_edges"], row["diameter"]) == want
 
+    def test_double_sweep_evaluates_edges_once(self, spark):
+        """The lazy dual-graph plan runs once per call: an identity
+        mapInArrow over the input edges counts every row it passes, and a
+        two-sweep call sees each edge once (not once per count, node
+        distinct and BFS round)."""
+        from libosmtools_spark.tiles.materialize import cell_graph_double_sweep
+
+        seen = spark.sparkContext.accumulator(0)
+
+        def identity(batches):
+            for b in batches:
+                seen.add(b.num_rows)
+                yield b
+
+        rows = [(i, i + 1) for i in range(1, 10)]
+        edges = spark.createDataFrame(rows, "cell_id_a long, cell_id_b long").mapInArrow(
+            identity, "cell_id_a long, cell_id_b long"
+        )
+        row = cell_graph_double_sweep(edges, sweeps=2).collect()[0]
+        assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
+        assert seen.value == len(rows)
+
     def test_auto_falls_through_to_loop_past_bound(self, spark, monkeypatch):
         """Past LOCAL_BFS_MAX_EDGES the diameter degrades to the distributed
         double-sweep (the reference's approximate-beyond-cutoff posture)
