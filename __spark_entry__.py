@@ -223,7 +223,7 @@ def _doc_cells_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng = _engine(spark, "oracle")
         pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
         _CELLS_CACHE[key] = build_cells_table_map(
-            pts.select("cell_key"), eng.candidates_bcast, eng.rings_bcast
+            pts.select("cell_key"), eng.candidates_bcast, None
         )
     return _CELLS_CACHE[key]
 
@@ -561,15 +561,15 @@ def q_cell_repair(spark, sf_dir):
     from libosmtools_spark.joins.spatial import with_cell_key
 
     eng = _engine(spark, "oracle")
-    cand, rings_bcast = eng.candidates_bcast, eng.rings_bcast
+    cand = eng.candidates_bcast
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
     stale = build_cells_table_map(
-        pts.filter(F.col("doc_id") % 7 == 0).select("cell_key"), cand, rings_bcast
+        pts.filter(F.col("doc_id") % 7 == 0).select("cell_key"), cand, None
     )
     repaired, rebuilt = handle_cell_changes(
         pts,
         stale,
-        lambda: build_cells_table_map(pts.select("cell_key"), cand, rings_bcast),
+        lambda: build_cells_table_map(pts.select("cell_key"), cand, None),
     )
     return repaired.select(
         "cell_key", "cell_id", F.lit(int(rebuilt)).cast("int").alias("rebuilt")
@@ -706,7 +706,7 @@ def q_flagship_map(spark, sf_dir):
 
     eng = _engine(spark, "oracle")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    res = map_spatial_join(pts, eng.candidates_bcast, eng.rings_bcast, id_col="doc_id")
+    res = map_spatial_join(pts, eng.candidates_bcast, None, id_col="doc_id")
     out = assign_point_cell_ids(res, _doc_cells_dict(spark, sf_dir))
     return out.select(
         "doc_id",
@@ -736,7 +736,7 @@ def q_flagship_antimeridian(spark, sf_dir):
 
     eng = _engine(spark, "antimeridian")
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
-    res = map_spatial_join(pts, eng.candidates_bcast, eng.rings_bcast, id_col="doc_id")
+    res = map_spatial_join(pts, eng.candidates_bcast, None, id_col="doc_id")
     return res.select(
         "doc_id",
         F.concat_ws(",", F.col("region_ids").cast("array<string>")).alias("region_set"),

@@ -193,11 +193,8 @@ def build_engine(spark, fixtures: str, complex_regions: bool = False):
         # overlap on hotspots) so the scaling measurement is
         # compute-dominated like a planet workload
         rings = spark.read.parquet(_os.path.join(fixtures, "scaling_region_rings.parquet"))
-        eng = SpatialEngine(spark, rings)
-    else:
-        eng = SpatialEngine.from_fixtures(spark, fixtures)
-    eng.cell_index.count()  # materialize the cached index
-    return eng
+        return SpatialEngine(spark, rings)
+    return SpatialEngine.from_fixtures(spark, fixtures)
 
 
 #: load_pages partitioning: at most this many waves of tasks per core …

@@ -612,118 +612,251 @@ def _grid_span(all_rings, level: int):
     return iy_lo, iy_hi, ix_lo, ix_hi, nlat, nlon
 
 
-def _classify_cells(iy, ix, level: int, outer_rings, inner_rings, segs):
-    """(center_in, touched) for cells given by UNWRAPPED (iy, ix) arrays at
-    ``level`` — all geometry in the rings' continuous frame.  Bounds use
-    the exact float ops of cell_bounds/cell_center so in-range results are
-    bit-identical to the packed-key path."""
+#: pad, in degrees, of each boundary segment's bbox in the covering's
+#: (cell, segment) pair filter: far above the float error of
+#: ``segment_intersects_rect`` at frame coordinates (|lon| < 540°, ulp
+#: ~1e-13) and far below a MAX_LEVEL cell (~2.7e-6°), so a pair the filter
+#: drops is one Liang–Barsky could never report as touching
+_COVER_EPS = 1e-9
+
+
+def _cell_rects(iy, ix, level: int):
+    """(min_lat, max_lat, min_lon, max_lon) of cells given by UNWRAPPED
+    (iy, ix) arrays at ``level``, in the rings' continuous frame — the
+    float ops of cell_bounds, so in-range results are bit-identical to the
+    packed-key path."""
     size = 180.0 / float(np.int64(1) << level)
     min_lat = iy.astype(np.float64) * size - 90.0
-    max_lat = min_lat + size
     min_lon = ix.astype(np.float64) * size - 180.0
-    max_lon = min_lon + size
-    clat = (min_lat + max_lat) / 2.0
-    clon = (min_lon + max_lon) / 2.0
-    center_in = point_in_rings(clat, clon, outer_rings, inner_rings)
-    seg_y1, seg_x1, seg_y2, seg_x2 = segs
-    touched = np.zeros(iy.shape, dtype=bool)
-    # batched segment-vs-rect: (segments × cell-chunk) broadcast, chunked
-    # to bound temporaries (a per-cell Python loop dominated the build)
-    ch = max(1, 4_000_000 // max(len(seg_y1), 1))
-    for i0 in range(0, iy.size, ch):
-        sl = slice(i0, min(i0 + ch, iy.size))
-        touched[sl] = segment_intersects_rect(
-            seg_y1[:, None], seg_x1[:, None], seg_y2[:, None], seg_x2[:, None],
-            min_lat[sl][None, :], max_lat[sl][None, :],
-            min_lon[sl][None, :], max_lon[sl][None, :],
-        ).any(axis=0)
-    return center_in, touched
+    return min_lat, min_lat + size, min_lon, min_lon + size
 
 
-def covering_cells(outer_rings, inner_rings, level: int):
-    """Cells at ``level`` overlapping a polygon-with-holes, classified
-    full/partial.
+def _segment_boxes(segs):
+    """(lat_lo, lat_hi, lon_lo, lon_hi) of each segment's bbox padded by
+    ``_COVER_EPS``."""
+    y1, x1, y2, x2 = segs
+    return (
+        np.minimum(y1, y2) - _COVER_EPS,
+        np.maximum(y1, y2) + _COVER_EPS,
+        np.minimum(x1, x2) - _COVER_EPS,
+        np.maximum(x1, x2) + _COVER_EPS,
+    )
 
-    Returns (keys: int64[], full: bool[]).  'full' means the whole cell is
-    inside the region (all of it passes PIP without a geometry test at query
-    time — the 'definite' list of
-    /root/reference/include/osmtools/OsmGridRegionTree.h:109-120).
-    Classification is conservative: a cell is 'full' only if its center is
-    inside AND no boundary segment of any ring intersects the cell rect.
+
+def _expand(counts):
+    """(owner, offset) of each of Σ ``counts`` items: owner i holds
+    ``counts[i]`` items, at offsets 0 … counts[i] - 1, in owner order."""
+    owner = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    return owner, np.arange(owner.size, dtype=np.int64) - (np.cumsum(counts) - counts)[owner]
+
+
+def _base_pairs(boxes, seg_region, level: int, spans, cell_start):
+    """(cell, segment) candidate pairs of the base grid: each segment
+    against the cells of its padded bbox widened by one cell (slack for
+    the float binning), clipped to its region's span.  ``spans`` holds
+    the per-region (iy_lo, iy_hi, ix_lo, ix_hi) arrays; ``cell`` is
+    ``cell_start[region]`` plus the row-major index into the region's span
+    grid, the order ``covering_rows`` enumerates it in.  The pair count is
+    Σ per-segment bbox cells — boundary-linear, never segments × cells."""
+    iy_lo, iy_hi, ix_lo, ix_hi = (a[seg_region] for a in spans)
+    lat_lo, lat_hi, lon_lo, lon_hi = boxes
+    nlat = float(np.int64(1) << level)
+    nlon = float(np.int64(2) << level)
+    y0 = np.clip(np.floor((lat_lo + 90.0) / 180.0 * nlat).astype(np.int64) - 1, iy_lo, iy_hi)
+    y1 = np.clip(np.floor((lat_hi + 90.0) / 180.0 * nlat).astype(np.int64) + 1, iy_lo, iy_hi)
+    x0 = np.clip(np.floor((lon_lo + 180.0) / 360.0 * nlon).astype(np.int64) - 1, ix_lo, ix_hi)
+    x1 = np.clip(np.floor((lon_hi + 180.0) / 360.0 * nlon).astype(np.int64) + 1, ix_lo, ix_hi)
+    nx = x1 - x0 + 1
+    seg, off = _expand((y1 - y0 + 1) * nx)
+    iy = y0[seg] + off // nx[seg]
+    ix = x0[seg] + off % nx[seg]
+    width = ix_hi - ix_lo + 1
+    return cell_start[seg_region[seg]] + (iy - iy_lo[seg]) * width[seg] + (ix - ix_lo[seg]), seg
+
+
+def _centers_inside(lat, lon, region, store):
+    """``point_in_rings`` of each point against its own region's rings
+    (``store`` as ``covering_rows`` builds it), for points that share few
+    distinct latitudes (the cell centers of one level).  A point meets only
+    the edges of its region that straddle its latitude: every other edge's
+    ``_ray_crossings`` term is False, so each ring's crossing parity, and
+    the result, are ``point_in_rings``' exactly, at (points × straddling
+    edges) cost."""
+    (y1, x1, y2, x2), seg_ring, ring_outer, edge_start, edge_count, (lo, hi) = store
+    # wrap_lons_to_frame per region: identity where the frame lies in
+    # [-180, 180], the same float ops elsewhere
+    flo, fhi = lo[region], hi[region]
+    wrap = np.flatnonzero((flo < -180.0) | (fhi > 180.0))
+    if wrap.size:
+        lon = lon.copy()
+        mid = (flo[wrap] + fhi[wrap]) / 2.0
+        lon[wrap] = lon[wrap] + 360.0 * np.round((mid - lon[wrap]) / 360.0)
+    # one row per distinct (region, latitude), and its straddling edges
+    order = np.lexsort((lat, region))
+    first = np.ones(order.size, dtype=bool)
+    first[1:] = (region[order][1:] != region[order][:-1]) | (lat[order][1:] != lat[order][:-1])
+    row_of = np.empty(order.size, dtype=np.int64)
+    row_of[order] = np.cumsum(first) - 1
+    row_region, row_lat = region[order][first], lat[order][first]
+    row, off = _expand(edge_count[row_region])
+    edge = edge_start[row_region][row] + off
+    straddle = (y1[edge] <= row_lat[row]) != (y2[edge] <= row_lat[row])
+    row, edge = row[straddle], edge[straddle]
+    per_row = np.bincount(row, minlength=row_lat.size)
+    pt, off = _expand(per_row[row_of])
+    edge = edge[(np.cumsum(per_row) - per_row)[row_of[pt]] + off]
+    cross = _ray_crossings(lat[pt], lon[pt], y1[edge], x1[edge], y2[edge], x2[edge])
+    # crossing parity per (point, ring)
+    n_rings = np.int64(ring_outer.size)
+    keys, n = np.unique(pt[cross] * n_rings + seg_ring[edge[cross]], return_counts=True)
+    odd = keys[n % 2 == 1]
+    odd_pt, odd_outer = odd // n_rings, ring_outer[odd % n_rings]
+    in_outer = np.zeros(lat.size, dtype=bool)
+    in_outer[odd_pt[odd_outer]] = True
+    in_inner = np.zeros(lat.size, dtype=bool)
+    in_inner[odd_pt[~odd_outer]] = True
+    return in_outer & ~in_inner
+
+
+#: (dy, dx) of a cell's 4 children, in the order the covering emits them
+_CHILD_DY = np.array([0, 0, 1, 1], dtype=np.int64)
+_CHILD_DX = np.array([0, 1, 0, 1], dtype=np.int64)
+
+
+def covering_rows(regions, base_level: int, max_level: int):
+    """Quadtree coverage of a region store: each region's cells start at
+    ``base_level``; FULL cells are kept as-is, PARTIAL cells are
+    recursively subdivided until ``max_level`` — the reference's
+    GridRegionTree recursion (/root/reference/src/OsmGridRegionTree.cpp:133-140,
+    refinement predicate :13-30).  Index size is boundary-linear instead
+    of area-quadratic.  ``base_level == max_level`` is the flat
+    single-level covering.
+
+    ``regions``: a sequence of (outer rings, inner rings).  Returns
+    (region int64[], keys int64[], full bool[]): ``region`` indexes
+    ``regions``, keys are at MIXED levels.  A region's coverage cells
+    partition it (disjoint across levels), so a point matches at most one
+    coverage cell per region.  A cell is 'partial' iff a boundary segment
+    of one of its region's rings touches its rect
+    (``segment_intersects_rect``), and 'full' iff it is untouched and its
+    center is inside (the 'definite' list of
+    /root/reference/include/osmtools/OsmGridRegionTree.h:109-120); other
+    cells are dropped.  Rows come region by region; within a region, level
+    by level: each level's full cells in cell order, then, at
+    ``max_level``, its partial leaves.
+
+    Boundary-local: the touch test runs only on (cell, segment) pairs
+    whose padded segment bbox meets the cell.  The base grid's pairs come
+    from each segment's bbox cell range (``_base_pairs``); a partial
+    cell's 4 children inherit its surviving pairs, so work follows the
+    boundary.  The center ray cast runs only on untouched cells, against
+    the edges straddling each center's latitude (``_centers_inside``).
+    All regions go through each level together, so the per-level numpy
+    calls are paid once per call, not once per region.
 
     Antimeridian-wrapped regions are handled via the continuous-frame
-    convention (unwrap_rings): columns are enumerated in the unwrapped
-    frame and the packed key's ix wraps modulo nlon, so a Fiji/Chukotka
-    region covers cells on BOTH sides of ±180°.
+    convention (unwrap_rings): the recursion runs on unwrapped iy/ix
+    (consistent across levels since child ix = 2·ix + dx commutes with the
+    wrap), so a Fiji/Chukotka region covers cells on BOTH sides of ±180°;
+    keys wrap modulo nlon only at pack time.
     """
-    outer_rings, inner_rings = unwrap_rings(outer_rings, inner_rings)
-    all_rings = list(outer_rings) + list(inner_rings)
-    iy_lo, iy_hi, ix_lo, ix_hi, _nlat, nlon = _grid_span(all_rings, level)
-    ys = np.arange(iy_lo, iy_hi + 1, dtype=np.int64)
-    xs = np.arange(ix_lo, ix_hi + 1, dtype=np.int64)
-    yy, xx = np.meshgrid(ys, xs, indexing="ij")
-    iy, ix = yy.ravel(), xx.ravel()
-    if iy.size == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=bool)
+    rings, ring_outer, ring_region, spans, frames = [], [], [], [], []
+    for r, (outers, inners) in enumerate(regions):
+        outers, inners = unwrap_rings(outers, inners)
+        all_rings = list(outers) + list(inners)
+        spans.append(_grid_span(all_rings, base_level)[:4])
+        frames.append(lon_frame(all_rings))
+        rings += all_rings
+        ring_outer += [True] * len(outers) + [False] * len(inners)
+        ring_region += [r] * len(all_rings)
+    if not rings:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64), np.zeros(0, dtype=bool)
+    seg_ring = np.repeat(np.arange(len(rings), dtype=np.int64), [len(r) - 1 for r in rings])
+    seg_region = np.asarray(ring_region, dtype=np.int64)[seg_ring]
+    segs = _coverage_segments(rings)
+    seg_y1, seg_x1, seg_y2, seg_x2 = segs
+    edge_count = np.bincount(seg_region, minlength=len(spans))
+    # the rings as flat arrays: segments, each segment's ring, which rings
+    # are outer, each region's (contiguous) edge range and lon frame
+    store = (
+        segs,
+        seg_ring,
+        np.asarray(ring_outer, dtype=bool),
+        np.cumsum(edge_count) - edge_count,
+        edge_count,
+        tuple(np.asarray(f, dtype=np.float64) for f in zip(*frames)),
+    )
+    spans = tuple(np.asarray(a, dtype=np.int64) for a in zip(*spans))
+    iy_lo, iy_hi, ix_lo, ix_hi = spans
+    width = ix_hi - ix_lo + 1
+    n_cells = (iy_hi - iy_lo + 1) * width
+    cell_region, off = _expand(n_cells)
+    iy = iy_lo[cell_region] + off // width[cell_region]
+    ix = ix_lo[cell_region] + off % width[cell_region]
+    boxes = _segment_boxes(segs)
+    box_lat_lo, box_lat_hi, box_lon_lo, box_lon_hi = boxes
+    pair_cell, pair_seg = _base_pairs(
+        boxes, seg_region, base_level, spans, np.cumsum(n_cells) - n_cells
+    )
 
-    segs = _coverage_segments(all_rings)
-    center_in, touched = _classify_cells(iy, ix, level, outer_rings, inner_rings, segs)
-    keys = pack_key(level, iy, ix % nlon)
-    full = center_in & ~touched
-    # a cell overlaps the region iff its center is inside OR boundary touches it
-    overlap = center_in | touched
-    return keys[overlap], full[overlap]
-
-
-def adaptive_covering_cells(outer_rings, inner_rings, base_level: int, max_level: int):
-    """Quadtree coverage: start at ``base_level``; FULL cells are kept as-is,
-    PARTIAL cells are recursively subdivided until ``max_level`` — the
-    reference's GridRegionTree recursion
-    (/root/reference/src/OsmGridRegionTree.cpp:133-140, refinement predicate
-    :13-30).  Index size is boundary-linear instead of area-quadratic.
-
-    Returns (keys int64[], full bool[]) with keys at MIXED levels; the
-    coverage cells partition the region (disjoint across levels), so a
-    point matches at most one coverage cell per region.  The recursion runs
-    entirely in the rings' continuous frame (unwrapped iy/ix — consistent
-    across levels since child ix = 2·ix + dx commutes with the wrap); keys
-    wrap modulo nlon only at pack time.
-    """
-    outer_rings, inner_rings = unwrap_rings(outer_rings, inner_rings)
-    all_rings = list(outer_rings) + list(inner_rings)
-    iy_lo, iy_hi, ix_lo, ix_hi, _nlat, nlon = _grid_span(all_rings, base_level)
-    ys = np.arange(iy_lo, iy_hi + 1, dtype=np.int64)
-    xs = np.arange(ix_lo, ix_hi + 1, dtype=np.int64)
-    yy, xx = np.meshgrid(ys, xs, indexing="ij")
-    iy, ix = yy.ravel(), xx.ravel()
-    segs = _coverage_segments(all_rings)
-
+    out_region: list[np.ndarray] = []
     out_keys: list[np.ndarray] = []
     out_full: list[np.ndarray] = []
     level = base_level
-    while True:
-        if iy.size == 0:
-            break
-        center_in, touched = _classify_cells(iy, ix, level, outer_rings, inner_rings, segs)
-        is_full = center_in & ~touched
-        overlap = center_in | touched
+    while iy.size:
+        min_lat, max_lat, min_lon, max_lon = _cell_rects(iy, ix, level)
+        pc, ps = pair_cell, pair_seg
+        lat0, lat1, lon0, lon1 = min_lat[pc], max_lat[pc], min_lon[pc], max_lon[pc]
+        near = (
+            (box_lat_lo[ps] <= lat1)
+            & (box_lat_hi[ps] >= lat0)
+            & (box_lon_lo[ps] <= lon1)
+            & (box_lon_hi[ps] >= lon0)
+        )
+        pc, ps = pc[near], ps[near]
+        hit = segment_intersects_rect(
+            seg_y1[ps], seg_x1[ps], seg_y2[ps], seg_x2[ps],
+            lat0[near], lat1[near], lon0[near], lon1[near],
+        )
+        touched = np.zeros(iy.size, dtype=bool)
+        touched[pc[hit]] = True
+        free = np.flatnonzero(~touched)
+        is_full = np.zeros(iy.size, dtype=bool)
+        is_full[free] = _centers_inside(
+            (min_lat[free] + max_lat[free]) / 2.0,
+            (min_lon[free] + max_lon[free]) / 2.0,
+            cell_region[free],
+            store,
+        )
         keys = pack_key(level, iy, ix % (np.int64(2) << level))
+        out_region.append(cell_region[is_full])
         out_keys.append(keys[is_full])
         out_full.append(np.ones(int(is_full.sum()), dtype=bool))
-        part = overlap & ~is_full
         if level >= max_level:  # max_level partial leaves stay candidates
-            out_keys.append(keys[part])
-            out_full.append(np.zeros(int(part.sum()), dtype=bool))
+            out_region.append(cell_region[touched])
+            out_keys.append(keys[touched])
+            out_full.append(np.zeros(int(touched.sum()), dtype=bool))
             break
-        # vectorized 2x2 split of every partial cell at once
-        piy, pix = iy[part], ix[part]
-        dy, dx = np.meshgrid([0, 1], [0, 1], indexing="ij")
-        iy = ((piy * 2)[:, None] + dy.ravel()[None, :]).ravel()
-        ix = ((pix * 2)[:, None] + dx.ravel()[None, :]).ravel()
+        # vectorized 2x2 split of every partial cell at once; child j of
+        # the k-th partial cell sits at 4k + j and inherits its pairs
+        iy = ((iy[touched] * 2)[:, None] + _CHILD_DY).ravel()
+        ix = ((ix[touched] * 2)[:, None] + _CHILD_DX).ravel()
+        cell_region = np.repeat(cell_region[touched], 4)
+        rank = np.cumsum(touched) - 1
+        keep = touched[pc]
+        pair_cell = ((rank[pc[keep]] * 4)[:, None] + np.arange(4)[None, :]).ravel()
+        pair_seg = np.repeat(ps[keep], 4)
         level += 1
-    if not out_keys:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=bool)
-    return np.concatenate(out_keys), np.concatenate(out_full)
+    region = np.concatenate(out_region)
+    order = np.argsort(region, kind="stable")
+    return region[order], np.concatenate(out_keys)[order], np.concatenate(out_full)[order]
+
+
+def adaptive_covering_cells(outer_rings, inner_rings, base_level: int, max_level: int):
+    """(keys int64[], full bool[]): ``covering_rows`` of one region (a
+    polygon-with-holes)."""
+    _, keys, full = covering_rows([(outer_rings, inner_rings)], base_level, max_level)
+    return keys, full
 
 
 def rect_ring(min_lat, min_lon, max_lat, max_lon) -> np.ndarray:

@@ -14,10 +14,15 @@ for every region, the cells at a chosen level overlapping it, classified
   through the exact ray-cast refine (the "candidate" list).
 
 The adaptive build takes the rings its caller has already collected
-(``SpatialEngine`` collects them once for the broadcast lookup): stores up
+(``SpatialEngine`` collects them once for the rings lookup): stores up
 to ``LOCAL_INDEX_MAX_REGIONS`` regions are covered locally from that
 frame, larger ones fan out one pandas group per region (``applyInPandas``),
-so the build scales with the region count.
+so the build scales with the region count.  The covering
+(``kernels.covering_rows``) is boundary-local: a cell's touch test runs
+only against the boundary segments near it, so its cost follows the
+boundary's cell count, not segments × cells; and it covers a batch of
+regions per pass, so small regions do not each pay its per-level numpy
+calls.
 """
 
 from __future__ import annotations
@@ -33,26 +38,42 @@ CELL_INDEX_SCHEMA = "cell_key long, region_id int, full boolean"
 
 def _rings_of_group(pdf: pd.DataFrame):
     outers, inners = [], []
-    for _, row in pdf.iterrows():
-        ring = np.array([[p["lat"], p["lon"]] for p in row["points"]], dtype=np.float64)
-        (outers if row["ring_role"] == "outer" else inners).append(ring)
+    for role, points in zip(pdf["ring_role"], pdf["points"]):
+        ring = np.array([(p["lat"], p["lon"]) for p in points], dtype=np.float64)
+        (outers if role == "outer" else inners).append(ring)
     return outers, inners
+
+
+#: boundary segments per ``kernels.covering_rows`` call: enough regions to
+#: pay its per-level numpy calls once for many of them, few enough that
+#: its (cell, segment) pair arrays stay small
+COVERING_BATCH_SEGMENTS = 16_384
+
+
+def _covering_frame(groups, base_level: int, max_level: int) -> pd.DataFrame:
+    """cell_index rows of ``groups`` ((region_id, rings frame) pairs),
+    region by region in group order, from ``kernels.covering_rows`` passes
+    over batches of about ``COVERING_BATCH_SEGMENTS`` segments."""
+    rids = np.array([int(rid) for rid, _ in groups], dtype=np.int32)
+    regions = [_rings_of_group(pdf) for _, pdf in groups]
+    n_segs = np.array([sum(len(r) - 1 for r in o + i) for o, i in regions], dtype=np.int64)
+    batch = (np.cumsum(n_segs) - n_segs) // COVERING_BATCH_SEGMENTS
+    parts = []
+    for idx in np.split(np.arange(len(regions)), np.flatnonzero(np.diff(batch)) + 1):
+        region, keys, full = K.covering_rows([regions[j] for j in idx], base_level, max_level)
+        parts.append(pd.DataFrame({"cell_key": keys, "region_id": rids[idx][region], "full": full}))
+    return pd.concat(parts, ignore_index=True)
 
 
 def build_cell_index(region_rings: DataFrame, level: int) -> DataFrame:
     """region_rings(region_id, ring_id, ring_role, points) → cell_index.
 
     Distributed: one task per region group; inside each group the coverage
-    computation is vectorized numpy (kernels.covering_cells).
+    computation is vectorized numpy (kernels.covering_rows at one level).
     """
 
     def per_region(pdf: pd.DataFrame) -> pd.DataFrame:
-        rid = int(pdf["region_id"].iloc[0])
-        outers, inners = _rings_of_group(pdf)
-        keys, full = K.covering_cells(outers, inners, level)
-        return pd.DataFrame(
-            {"cell_key": keys.astype(np.int64), "region_id": np.int32(rid), "full": full}
-        )
+        return _covering_frame([(pdf["region_id"].iloc[0], pdf)], level, level)
 
     return region_rings.groupBy("region_id").applyInPandas(per_region, CELL_INDEX_SCHEMA)
 
@@ -70,16 +91,13 @@ def build_cell_index(region_rings: DataFrame, level: int) -> DataFrame:
 #: 2.9/5.6 s at 512 regions, 5.1/6.4 at 1024, 8.3/6.3 at 2048, 13.3/6.2
 #: at 4096 — the single-core local build crosses the (nearly flat,
 #: fixed-cost-dominated) distributed build between 1k and 2k regions, so
-#: the cap sits at the last size the local build wins.
+#: the cap sits at the last size the local build wins.  Those walls were
+#: measured with the dense segments × cells covering, one region at a
+#: time; the boundary-local, batched covering cut the single-core local
+#: build CPU (same stores, 4-vCPU VM, min of 3) from 2.0/4.0/7.9/16.1 s to
+#: 0.4/0.7/1.7/2.9 s at 512/1024/2048/4096 regions.  The cap stays until
+#: the distributed side is re-measured with it.
 LOCAL_INDEX_MAX_REGIONS = 1024
-
-
-def _adaptive_rows(rid: int, pdf: pd.DataFrame, base_level: int, max_level: int) -> pd.DataFrame:
-    outers, inners = _rings_of_group(pdf)
-    keys, full = K.adaptive_covering_cells(outers, inners, base_level, max_level)
-    return pd.DataFrame(
-        {"cell_key": keys.astype(np.int64), "region_id": np.int32(rid), "full": full}
-    )
 
 
 def local_adaptive_cell_index(rings_pdf: pd.DataFrame, base_level: int, max_level: int):
@@ -89,15 +107,7 @@ def local_adaptive_cell_index(rings_pdf: pd.DataFrame, base_level: int, max_leve
     None for larger stores (their index is built distributed)."""
     if rings_pdf["region_id"].nunique() > LOCAL_INDEX_MAX_REGIONS:
         return None
-    parts = [
-        _adaptive_rows(rid, grp, base_level, max_level)
-        for rid, grp in rings_pdf.groupby("region_id")
-    ]
-    return (
-        pd.concat(parts, ignore_index=True)
-        if parts
-        else pd.DataFrame({"cell_key": [], "region_id": [], "full": []})
-    )
+    return _covering_frame(list(rings_pdf.groupby("region_id")), base_level, max_level)
 
 
 def build_adaptive_cell_index(
@@ -107,12 +117,12 @@ def build_adaptive_cell_index(
     rings_pdf: pd.DataFrame,
 ) -> DataFrame:
     """Multi-level cell_index(cell_key, region_id, full) with keys at mixed
-    levels (kernels.adaptive_covering_cells) — the production index shape:
+    levels (kernels.covering_rows) — the production index shape:
     boundary-linear size, so even continent polygons stay broadcastable.
     Query side: with_ancestor_keys + spatial_join_adaptive.
 
     ``rings_pdf`` is ``region_rings`` already collected: every caller
-    collects the rings for the broadcast lookup (``rings_lookup``) anyway.
+    collects the rings for the rings lookup (``rings_lookup``) anyway.
     Count-gated physical dispatch (identical rows either way, order aside —
     every consumer joins/aggregates or re-sorts): dimension-scale stores
     (≤ LOCAL_INDEX_MAX_REGIONS regions) compute the covering driver-side
@@ -124,7 +134,7 @@ def build_adaptive_cell_index(
         return region_rings.sparkSession.createDataFrame(pdf, CELL_INDEX_SCHEMA)
 
     def per_region(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _adaptive_rows(int(pdf["region_id"].iloc[0]), pdf, base_level, max_level)
+        return _covering_frame([(pdf["region_id"].iloc[0], pdf)], base_level, max_level)
 
     return region_rings.groupBy("region_id").applyInPandas(per_region, CELL_INDEX_SCHEMA)
 

@@ -10,7 +10,7 @@ One Python pass per query: the kernel is the only Python task of the plan.
 ``SpatialEngine.from_fixtures(spark, fx).flagship_map(pages)``.
 
 ``SpatialEngine`` is the only code that builds a region store's artifacts
-(rings broadcast, adaptive cell index, candidate tables): the
+(rings lookup, adaptive cell index, candidate tables): the
 ``__spark_entry__`` queries and the tests build every store through it.
 Its surface is the flagship's three stages: ``flagship_kernel`` (the
 one pass that geocodes pages: RE2 inside the kernel), ``kernel_cells``
@@ -57,8 +57,11 @@ FLAGSHIP_COLUMNS = ("url", "cell_key", "cell_id", "region_ids")
 class SpatialEngine:
     """Holds the built index artifacts (the analog of the reference's
     OsmGridRegionTree + OsmTriangulationRegionStore pair) for a region store,
-    built from one collect of its rings: the rings broadcast, the adaptive
-    cell index and, on first use, the candidate tables broadcast.
+    built from one collect of its rings: the rings lookup and the adaptive
+    cell index rows, plus, each on first read, the candidate tables
+    broadcast (all the flagship reads), the rings broadcast and the cell
+    index frame (read only by the relational fallback,
+    ``joins.spatial.spatial_join_adaptive``).
     """
 
     def __init__(
@@ -73,21 +76,38 @@ class SpatialEngine:
         self.max_level = level + DEFAULT_REFINE_LEVELS if max_level is None else max_level
         self.region_rings = region_rings
         # dimension-scale: collect rings ONCE — the same collected frame
-        # feeds the broadcast lookup AND the (count-gated driver-local)
-        # index build, so the engine constructor runs one Spark job instead
-        # of a collect + a shuffle/UDF stage per build
+        # feeds the rings lookup AND the (count-gated driver-local) index
+        # build, so the engine constructor runs one Spark job instead of a
+        # collect + a shuffle/UDF stage per build
         rings_pdf = region_rings.toPandas()
-        self.rings_bcast = spark.sparkContext.broadcast(rings_lookup(rings_pdf))
-        # the driver-local index (None above LOCAL_INDEX_MAX_REGIONS) feeds
-        # the candidate tables directly; only a distributed index is
-        # collected back for them
+        self.rings_lookup = rings_lookup(rings_pdf)
+        # the driver-local index rows (None above LOCAL_INDEX_MAX_REGIONS)
+        # feed the candidate tables directly; only a distributed index is
+        # built as a frame here, and collected back for them
         self._index_pdf = local_adaptive_cell_index(rings_pdf, level, self.max_level)
-        self.cell_index = (
-            build_adaptive_cell_index(region_rings, level, self.max_level, rings_pdf=rings_pdf)
+        self._cell_index = (
+            build_adaptive_cell_index(region_rings, level, self.max_level, rings_pdf=rings_pdf).cache()
             if self._index_pdf is None
-            else spark.createDataFrame(self._index_pdf, CELL_INDEX_SCHEMA)
-        ).cache()
+            else None
+        )
+        self._rings_bcast = None
         self._candidates_bcast = None
+
+    @property
+    def rings_bcast(self):
+        """The rings lookup, broadcast on first read (the relational
+        fallback's ray-cast reads it; the flagship does not)."""
+        if self._rings_bcast is None:
+            self._rings_bcast = self.spark.sparkContext.broadcast(self.rings_lookup)
+        return self._rings_bcast
+
+    @property
+    def cell_index(self) -> DataFrame:
+        """cell_index(cell_key, region_id, full), cached; a driver-local
+        index becomes a frame on first read."""
+        if self._cell_index is None:
+            self._cell_index = self.spark.createDataFrame(self._index_pdf, CELL_INDEX_SCHEMA).cache()
+        return self._cell_index
 
     @property
     def candidates_bcast(self):
@@ -100,7 +120,7 @@ class SpatialEngine:
             if index_pdf is None:
                 index_pdf = self.cell_index.toPandas()
             self._candidates_bcast = self.spark.sparkContext.broadcast(
-                build_cell_candidates(index_pdf, self.rings_bcast.value)
+                build_cell_candidates(index_pdf, self.rings_lookup)
             )
         return self._candidates_bcast
 
@@ -115,9 +135,7 @@ class SpatialEngine:
         cell key AND region set per page inside the Arrow batch, plus the
         batch-unique key flag that feeds the cells dictionary
         (``kernel_cells``)."""
-        return map_spatial_join_text(
-            pages, self.candidates_bcast, self.rings_bcast, level=self.level
-        )
+        return map_spatial_join_text(pages, self.candidates_bcast, None, level=self.level)
 
     def kernel_cells(self, kernel_out: DataFrame) -> DataFrame:
         """(cell_key, cell_id, region_ids) dictionary over the cells a
@@ -130,7 +148,7 @@ class SpatialEngine:
         return build_cells_table_map(
             kernel_out.filter(F.col(BATCH_UNIQUE)).select("cell_key"),
             self.candidates_bcast,
-            self.rings_bcast,
+            None,
             input_batch_unique=True,
         )
 

@@ -247,7 +247,7 @@ def run_region_stream_to_memory(spark, pages_dir: str, engine, query_name: str =
         spark,
         pages_dir,
         lambda s: stream_region_counts(
-            s, engine.candidates_bcast, engine.rings_bcast, level=engine.level
+            s, engine.candidates_bcast, None, level=engine.level
         ),
         "complete",
         query_name,

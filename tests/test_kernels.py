@@ -160,7 +160,7 @@ class TestAntimeridian:
     def test_touching_region_has_coverage(self):
         # the round-3 hole: rect reaching exactly +180 lost ALL cells
         ring = K.rect_ring(0.0, 175.0, 1.0, 180.0)
-        keys, _ = K.covering_cells([ring], [], 6)
+        keys, _ = K.adaptive_covering_cells([ring], [], 6, 6)
         assert keys.size > 0
         probe = K.cell_key(np.array([0.5]), np.array([177.5]), 6)
         assert np.isin(probe, keys).all()
@@ -168,7 +168,7 @@ class TestAntimeridian:
     def test_crossing_region_covers_both_sides(self):
         ring = K.rect_ring(10.0, 172.0, 20.0, 188.0)  # crosses: 172 → -172
         for keys, full in (
-            K.covering_cells([ring], [], 6),
+            K.adaptive_covering_cells([ring], [], 6, 6),
             K.adaptive_covering_cells([ring], [], 6, 9),
         ):
             assert keys.size > 0
@@ -214,7 +214,7 @@ class TestCoveringCells:
     def test_rect_coverage_exact(self):
         # rect spanning several level-6 cells (cell size 2.8125°)
         ring = K.rect_ring(10.0, 10.0, 20.0, 20.0)
-        keys, full = K.covering_cells([ring], [], 6)
+        keys, full = K.adaptive_covering_cells([ring], [], 6, 6)
         assert keys.size > 0
         # every full cell's bounds lie strictly inside the rect
         mn_lat, mx_lat, mn_lon, mx_lon = K.cell_bounds(keys[full])
@@ -231,7 +231,7 @@ class TestCoveringCells:
 
     def test_full_cells_pass_pip(self):
         ring = K.rect_ring(0.0, 0.0, 45.0, 45.0)
-        keys, full = K.covering_cells([ring], [], 4)
+        keys, full = K.adaptive_covering_cells([ring], [], 4, 4)
         clat, clon = K.cell_center(keys[full])
         assert K.point_in_ring(clat, clon, ring).all()
 

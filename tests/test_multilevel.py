@@ -35,7 +35,7 @@ class TestAdaptiveKernel:
         """For a large region, the adaptive index is far smaller than the
         flat fine-level index (boundary-linear vs area-quadratic)."""
         ring = K.rect_ring(-40.0, -40.0, 40.0, 40.0)
-        flat_keys, _ = K.covering_cells([ring], [], 8)
+        flat_keys, _ = K.adaptive_covering_cells([ring], [], 8, 8)
         ad_keys, ad_full = K.adaptive_covering_cells([ring], [], 3, 8)
         assert len(ad_keys) < len(flat_keys) / 5
         # partial leaves only at max_level

@@ -559,6 +559,34 @@ class TestLocalIndexGate:
         assert _flagship_rows(eng.flagship_map(pages)) == golden
 
 
+class TestLazyStoreArtifacts:
+    """The rings broadcast and the cell index frame are built on first
+    read: the flagship reads neither, the relational fallback both."""
+
+    def test_flagship_builds_neither(self, spark, sf_smoke, pages):
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
+        golden = _golden_flagship_rows(_read_goldens(sf_smoke))
+        assert _flagship_rows(eng.flagship_map(pages)) == golden
+        assert eng._rings_bcast is None and eng._cell_index is None
+
+    def test_fallback_gets_both(self, spark, sf_smoke, pages):
+        from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
+        pts = geocode_pages(pages).select("url", "lat", "lon")
+        hits = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level)
+        assert eng._rings_bcast is not None and eng._cell_index is not None
+        assert sorted(eng.rings_bcast.value) == sorted(eng.rings_lookup)
+        assert eng.cell_index.count() == len(eng._index_pdf)
+        sets = hits.groupBy("url").agg(F.array_sort(F.collect_set("region_id")).alias("ids"))
+        got = {r.url: tuple(r.ids) for r in sets.collect()}
+        golden = _golden_flagship_rows(_read_goldens(sf_smoke))
+        assert got == {u: ids for u, (_, _, ids) in golden.items() if ids}
+
+
 class TestRoundTrip:
     def test_write_read_back_identical(self, engine, pages, tmp_path, spark):
         out = engine.flagship_map(pages)
