@@ -586,13 +586,13 @@ def q_knn(spark, sf_dir):
 
 
 def q_knn_ring(spark, sf_dir):
-    """kNN with the DISTRIBUTED ring-expansion path forced (the 100-TB
-    plan; q_knn's auto-dispatch picks brute at oracle scale) — same exact
+    """kNN on the DISTRIBUTED ring-expansion path (the 100-TB plan; q_knn's
+    dispatch picks brute at oracle scale), called directly — same exact
     output contract, same oracle."""
-    from libosmtools_spark.knn.ring import knn_join
+    from libosmtools_spark.knn.ring import knn_ring
 
     pts = _points(spark, sf_dir)
-    return knn_join(pts, "doc_id", k=KNN_K, level=LEVEL, method="ring").select(
+    return knn_ring(pts, "doc_id", k=KNN_K, level=LEVEL).select(
         "doc_id", F.col("neighbor_id").cast("long").alias("neighbor_id"), "rank"
     )
 

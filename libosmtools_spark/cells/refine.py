@@ -203,8 +203,6 @@ def refine_oversized(
     lon: str = "lon",
     key_col: str = "cell_key",
     max_rounds: int = 16,
-    max_hot_cells: int | None = DEFAULT_MAX_HOT_CELLS,
-    literal_max_hot_cells: int = LITERAL_MAX_HOT_CELLS,
 ) -> DataFrame:
     """points(…, lat, lon, cell_key) → same rows with cell_key subdivided
     wherever a cell exceeded ``max_points`` (CellTriangleCountCriteria
@@ -229,7 +227,7 @@ def refine_oversized(
        dimension-scale.  Three bands by hot-set size:
        - ≤ LITERAL_MAX_HOT_CELLS: pure literal-isin expression — no loop,
          no shuffle, no join;
-       - ≤ max_hot_cells: the collected hot rows ship as a BROADCAST
+       - ≤ DEFAULT_MAX_HOT_CELLS: the collected hot rows ship as a BROADCAST
          anti-join side (a 10k+-literal isin bloats codegen and plan
          serialization; the broadcast costs one small table instead);
        - beyond: fully distributed — candidate (row, level) pairs
@@ -273,18 +271,17 @@ def refine_oversized(
         .select("L", "k")
     )
 
-    # ONE job decides the path: collect at most max_hot_cells+1 hot rows —
-    # if the result fits, it IS the complete hot set (limit(N) returns all
-    # M rows when M ≤ N); an overflow falls through to the fully
-    # distributed resolution (which recomputes the hot agg lazily inside
-    # the join — the rare, already-expensive case)
-    hot_rows = None
-    if max_hot_cells is not None:
-        probe = hot.limit(max_hot_cells + 1).collect()
-        if len(probe) <= max_hot_cells:
-            hot_rows = probe
+    # ONE job decides the path: collect at most DEFAULT_MAX_HOT_CELLS+1 hot
+    # rows — if the result fits, it IS the complete hot set (limit(N)
+    # returns all M rows when M ≤ N); an overflow falls through to the
+    # fully distributed resolution (which recomputes the hot agg lazily
+    # inside the join — the rare, already-expensive case).  Both bounds are
+    # read at call time.
+    hot_rows = hot.limit(DEFAULT_MAX_HOT_CELLS + 1).collect()
+    if len(hot_rows) > DEFAULT_MAX_HOT_CELLS:
+        hot_rows = None
 
-    if hot_rows is not None and len(hot_rows) <= literal_max_hot_cells:
+    if hot_rows is not None and len(hot_rows) <= LITERAL_MAX_HOT_CELLS:
         if not hot_rows:
             return points
         hot_by_level: dict[int, set] = {}

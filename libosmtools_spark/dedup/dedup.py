@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -450,9 +451,10 @@ def simhash_pairs(fingerprints: DataFrame, max_hamming: int = 3, n_bands: int = 
     Candidate generation is a linear banded bucket join (ids only through
     the shuffle); verification is one popcount per candidate.
 
-    The result is lazy; the fingerprint and banded checkpoints it reads
-    (16 bytes per doc and per distinct fingerprint × band) stay persisted
-    with it until Spark's cleaner collects them."""
+    The result is EAGERLY MATERIALIZED (localCheckpoint), after which the
+    fingerprint and banded checkpoints it read are released, as in
+    ``knn_ring``: the returned frame owns one persisted block set, which
+    long-lived sessions release via ``session.release_local_checkpoint``."""
     assert max_hamming < n_bands, "pigeonhole recall guarantee needs max_hamming < n_bands"
     assert SIMHASH_BITS % n_bands == 0
     width = SIMHASH_BITS // n_bands
@@ -514,4 +516,10 @@ def simhash_pairs(fingerprints: DataFrame, max_hamming: int = 3, n_bands: int = 
             F.col("hamming").cast("long").alias("hamming"),
         )
     )
-    return same.unionByName(cross)
+    # DISK_ONLY: the output is quadratic in a duplicate group (10k docs
+    # sharing one fingerprint are 50M pairs), which a memory-first level
+    # would hold in the driver JVM's heap
+    out = same.unionByName(cross).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    release_local_checkpoint(fingerprints)
+    release_local_checkpoint(banded)
+    return out

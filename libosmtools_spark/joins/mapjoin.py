@@ -108,8 +108,7 @@ def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict) -> dict:
       inside(outer) ∧ ¬inside(hole) for nested holes (the region model).
 
     Rows are ordered by (cell key, region id), so the tables do not depend
-    on the index's row order (driver-local and distributed builds give
-    identical tables)."""
+    on the index's row order."""
     ck = cell_index_pdf["cell_key"].to_numpy(dtype=np.int64)
     rid = cell_index_pdf["region_id"].to_numpy(dtype=np.int64)
     full = cell_index_pdf["full"].to_numpy(dtype=bool)

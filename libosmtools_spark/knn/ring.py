@@ -16,7 +16,9 @@ id ascending:
   ``(r · cell_size)²``; stragglers escalate to a doubled radius, the final
   few fall back to a broadcast pass.
 
-``knn_join`` dispatches on an estimated count.  The adjacency being walked
+``knn_join`` dispatches on the point count: one bounded fetch
+(``_fetch_points``) is both the gate and the brute side's corpus.  The
+adjacency being walked
 is the grid-native cell dual graph
 (/root/reference/src/OsmTriangulationRegionStore.cpp:382-429).
 """
@@ -62,24 +64,37 @@ _METRIC_COLS = {"flat": sq_euclid_deg_col, "wrap": wrap_sq_euclid_deg_col}
 #: scales should re-probe.
 BRUTE_THRESHOLD = 64_000
 
+#: ring-expansion rounds before the broadcast straggler pass; the radius
+#: doubles each round, so the last round reaches 8 cells out
+RING_MAX_ROUNDS = 4
 
-def knn_brute(points: DataFrame, id_col: str, k: int = 5, lat: str = "lat", lon: str = "lon",
-              metric: str = "flat") -> DataFrame:
-    """Broadcast the full point matrix; per Arrow batch one numpy distance
-    block + linear-time top-k selection (sim.topk.topk_rows — exact
-    (distance asc, id asc) order at O(n) per row instead of a full
-    argsort).  Exact, shuffle-free."""
-    assert metric in _METRIC_COLS
-    wrap = metric == "wrap"
-    spark = points.sparkSession
-    pdf = points.select(id_col, lat, lon).toPandas()
+
+def _fetch_points(points: DataFrame, id_col: str, lat: str, lon: str):
+    """(ids, lats, lons) SORTED by id ascending, or None past
+    BRUTE_THRESHOLD points.  One bounded job: the limit is both the gate
+    and the fetch (limit(N + 1) returns all M rows when M ≤ N), so the
+    driver never holds more than BRUTE_THRESHOLD + 1 points."""
+    pdf = points.select(id_col, lat, lon).limit(BRUTE_THRESHOLD + 1).toPandas()
+    if len(pdf) > BRUTE_THRESHOLD:
+        return None
     # corpus sorted by id: a STABLE argsort on distance then yields the
     # (distance asc, id asc) order with no per-row lexsort
     order0 = np.argsort(pdf[id_col].to_numpy(), kind="stable")
     ids = pdf[id_col].to_numpy()[order0]
     la = pdf[lat].to_numpy(dtype=np.float64)[order0]
     lo = pdf[lon].to_numpy(dtype=np.float64)[order0]
-    bc = spark.sparkContext.broadcast((ids, la, lo))
+    return ids, la, lo
+
+
+def knn_brute(points: DataFrame, corpus, id_col: str, k: int = 5, lat: str = "lat",
+              lon: str = "lon", metric: str = "flat") -> DataFrame:
+    """Broadcast the full point matrix (``corpus``, the ``_fetch_points``
+    result); per Arrow batch one numpy distance block + linear-time top-k
+    selection (sim.topk.topk_rows — exact (distance asc, id asc) order at
+    O(n) per row instead of a full argsort).  Exact, shuffle-free."""
+    assert metric in _METRIC_COLS
+    wrap = metric == "wrap"
+    bc = points.sparkSession.sparkContext.broadcast(corpus)
 
     id_type = dict(points.dtypes)[id_col]
     schema = f"{id_col} {id_type}, neighbor_id {id_type}, rank int"
@@ -121,7 +136,6 @@ def knn_ring(
     level: int = 6,
     lat: str = "lat",
     lon: str = "lon",
-    max_rounds: int = 4,
     metric: str = "flat",
 ) -> DataFrame:
     """Distributed ring-expansion kNN (see module docstring)."""
@@ -140,7 +154,7 @@ def knn_ring(
     loop_ckpts: list[DataFrame] = []
     radius = 1
 
-    for _ in range(max_rounds):
+    for _ in range(RING_MAX_ROUNDS):
         cand = (
             unresolved.withColumn("n_key", F.explode(ring_keys_col(F.col("cell_key"), radius)))
             .join(data, "n_key")
@@ -222,26 +236,20 @@ def knn_join(
     level: int = 6,
     lat: str = "lat",
     lon: str = "lon",
-    max_rounds: int = 4,
-    method: str = "auto",
-    n_rows: int | None = None,
     metric: str = "flat",
 ) -> DataFrame:
     """points(id, lat, lon, …) → (id, neighbor_id, rank), rank 1..k.
 
-    The ring method returns an EAGERLY MATERIALIZED result (localCheckpoint)
-    — release via ``session.release_local_checkpoint`` in long-lived
-    sessions (one persisted block set per call otherwise).
-
-    method: 'auto' (count-based dispatch), 'brute', or 'ring'.  Callers
-    that already know the point count pass ``n_rows`` to skip the dispatch
-    count() job."""
-    if method == "auto":
-        n = points.count() if n_rows is None else n_rows
-        method = "brute" if n <= BRUTE_THRESHOLD else "ring"
-    if method == "brute":
-        return knn_brute(points, id_col, k, lat, lon, metric)
-    return knn_ring(points, id_col, k, level, lat, lon, max_rounds, metric)
+    Up to BRUTE_THRESHOLD points take ``knn_brute``, fed by the same
+    bounded fetch that gates it (one job); larger sets take ``knn_ring``,
+    which returns an EAGERLY MATERIALIZED result (localCheckpoint) —
+    release via ``session.release_local_checkpoint`` in long-lived
+    sessions (one persisted block set per call otherwise).  Both paths
+    return identical rows."""
+    corpus = _fetch_points(points, id_col, lat, lon)
+    if corpus is None:
+        return knn_ring(points, id_col, k, level, lat, lon, metric)
+    return knn_brute(points, corpus, id_col, k, lat, lon, metric)
 
 
 def knn_neighbor_lists(knn_rows: DataFrame, id_col: str) -> DataFrame:

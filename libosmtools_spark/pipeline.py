@@ -10,7 +10,8 @@ One Python pass per query: the kernel is the only Python task of the plan.
 ``SpatialEngine.from_fixtures(spark, fx).flagship_map(pages)``.
 
 ``SpatialEngine`` is the only code that builds a region store's artifacts
-(rings lookup, adaptive cell index, candidate tables): the
+(rings lookup, adaptive cell index, candidate tables), all on the driver
+from one collect of the rings, whatever the store's size: the
 ``__spark_entry__`` queries and the tests build every store through it.
 Its surface is the flagship's three stages: ``flagship_kernel`` (the
 one pass that geocodes pages: RE2 inside the kernel), ``kernel_cells``
@@ -31,12 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from libosmtools_spark.cells.assign import assign_point_cell_ids, build_cells_table_map
-from libosmtools_spark.index.grid import (
-    CELL_INDEX_SCHEMA,
-    build_adaptive_cell_index,
-    local_adaptive_cell_index,
-    rings_lookup,
-)
+from libosmtools_spark.index.grid import CELL_INDEX_SCHEMA, _covering_frame, rings_lookup
 from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE, map_spatial_join_text
 
 DEFAULT_LEVEL = 6
@@ -58,7 +54,8 @@ class SpatialEngine:
     """Holds the built index artifacts (the analog of the reference's
     OsmGridRegionTree + OsmTriangulationRegionStore pair) for a region store,
     built from one collect of its rings: the rings lookup and the adaptive
-    cell index rows, plus, each on first read, the candidate tables
+    cell index rows covered from it on the driver (the constructor's one
+    Spark job is the collect), plus, each on first read, the candidate tables
     broadcast (all the flagship reads), the rings broadcast and the cell
     index frame (read only by the relational fallback,
     ``joins.spatial.spatial_join_adaptive``).
@@ -75,21 +72,12 @@ class SpatialEngine:
         self.level = level
         self.max_level = level + DEFAULT_REFINE_LEVELS if max_level is None else max_level
         self.region_rings = region_rings
-        # dimension-scale: collect rings ONCE — the same collected frame
-        # feeds the rings lookup AND the (count-gated driver-local) index
-        # build, so the engine constructor runs one Spark job instead of a
-        # collect + a shuffle/UDF stage per build
-        rings_pdf = region_rings.toPandas()
-        self.rings_lookup = rings_lookup(rings_pdf)
-        # the driver-local index rows (None above LOCAL_INDEX_MAX_REGIONS)
-        # feed the candidate tables directly; only a distributed index is
-        # built as a frame here, and collected back for them
-        self._index_pdf = local_adaptive_cell_index(rings_pdf, level, self.max_level)
-        self._cell_index = (
-            build_adaptive_cell_index(region_rings, level, self.max_level, rings_pdf=rings_pdf).cache()
-            if self._index_pdf is None
-            else None
-        )
+        # dimension-scale: the constructor's one Spark job collects the
+        # rings; the rings lookup parses them once, and the index rows are
+        # covered from it on the driver (they feed the candidate tables)
+        self.rings_lookup = rings_lookup(region_rings.toPandas())
+        self._index_pdf = _covering_frame(self.rings_lookup, level, self.max_level)
+        self._cell_index = None
         self._rings_bcast = None
         self._candidates_bcast = None
 
@@ -103,24 +91,22 @@ class SpatialEngine:
 
     @property
     def cell_index(self) -> DataFrame:
-        """cell_index(cell_key, region_id, full), cached; a driver-local
-        index becomes a frame on first read."""
+        """cell_index(cell_key, region_id, full): the driver-built index
+        rows, made a cached frame on first read."""
         if self._cell_index is None:
             self._cell_index = self.spark.createDataFrame(self._index_pdf, CELL_INDEX_SCHEMA).cache()
         return self._cell_index
 
     @property
     def candidates_bcast(self):
-        """The candidate tables (``build_cell_candidates``), broadcast
-        lazily — all the zero-shuffle map join reads."""
+        """The candidate tables (``build_cell_candidates`` over the
+        driver-built index rows), broadcast lazily — all the zero-shuffle
+        map join reads.  Building them runs no Spark job."""
         if self._candidates_bcast is None:
             from libosmtools_spark.joins.mapjoin import build_cell_candidates
 
-            index_pdf = self._index_pdf
-            if index_pdf is None:
-                index_pdf = self.cell_index.toPandas()
             self._candidates_bcast = self.spark.sparkContext.broadcast(
-                build_cell_candidates(index_pdf, self.rings_lookup)
+                build_cell_candidates(self._index_pdf, self.rings_lookup)
             )
         return self._candidates_bcast
 

@@ -33,14 +33,16 @@ from libosmtools_spark.cells.hopsplit import (
     max_hop_pair,
 )
 from libosmtools_spark.geom.columns import cell_bounds_cols
-from libosmtools_spark.index.grid import build_cell_index
+from libosmtools_spark.index.grid import build_adaptive_cell_index
 from libosmtools_spark.session import release_local_checkpoint
 
 
 def vector_to_raster(region_rings: DataFrame, level: int) -> DataFrame:
-    """region polygons → covering cells (cell_key, region_id, full) —
-    alias of the index build; exposed as the materialization operator."""
-    return build_cell_index(region_rings, level)
+    """region polygons → covering cells (cell_key, region_id, full) at one
+    level: the engine's driver-side index build with ``max_level ==
+    level``, exposed as the materialization operator.  Collects the rings
+    (one Spark job) and returns a driver-local frame."""
+    return build_adaptive_cell_index(region_rings, level, level, region_rings.toPandas())
 
 
 def raster_to_vector(cells: DataFrame) -> DataFrame:
@@ -151,44 +153,48 @@ def _local_csr(edges: DataFrame):
     return nodes, indptr, indices, len(pdf)
 
 
-def _distributed_hop_distances(edges: DataFrame, source_cell_id: int) -> DataFrame:
-    """Distributed frontier expansion: per round the frontier equi-joins the
-    edge table, anti-joins the visited set, and both are localCheckpointed
-    (lineage cut); O(diameter) rounds, each a bounded shuffle on cell ids
-    only."""
-    spark = edges.sparkSession
-    both = edges.unionByName(
+def _symmetric_edges(edges: DataFrame) -> DataFrame:
+    """Both directions of every edge, checkpointed: the table each round of
+    ``_distributed_hop_distances`` joins.  Callers build it once per graph
+    and release it after their last BFS."""
+    return edges.unionByName(
         edges.select(
             F.col("cell_id_b").alias("cell_id_a"), F.col("cell_id_a").alias("cell_id_b")
         )
     ).localCheckpoint()
-    visited = spark.createDataFrame(
+
+
+def _distributed_hop_distances(both: DataFrame, source_cell_id: int) -> DataFrame:
+    """Distributed frontier expansion over ``both`` (``_symmetric_edges``):
+    per round the frontier equi-joins the edge table and the new frontier
+    is localCheckpointed (lineage cut); O(diameter) rounds, each a bounded
+    shuffle on cell ids only.  The graph is undirected, so a neighbour of a
+    hop-h cell is at hop h - 1, h or h + 1: anti-joining the last two
+    frontiers, not the whole visited set, leaves exactly the next one, and
+    each round's plan stays two checkpoints wide.  The union of the
+    frontiers is checkpointed once, at the end, and the per-round
+    checkpoints are then released."""
+    frontier = both.sparkSession.createDataFrame(
         [(int(source_cell_id), 0)], "cell_id long, hop long"
-    ).localCheckpoint()
-    frontier = visited
+    )
+    visited, prev, rounds = frontier, None, []
     for hop in range(1, BFS_MAX_ROUNDS + 1):
-        nxt = (
+        seen = frontier if prev is None else prev.unionByName(frontier)
+        prev, frontier = frontier, (
             frontier.join(both, frontier.cell_id == both.cell_id_a)
             .select(F.col("cell_id_b").alias("cell_id"))
             .distinct()
-            .join(visited.select("cell_id"), "cell_id", "left_anti")
+            .join(seen.select("cell_id"), "cell_id", "left_anti")
             .withColumn("hop", F.lit(hop).cast("long"))
             .localCheckpoint()
         )
-        if nxt.isEmpty():
-            release_local_checkpoint(nxt)
+        rounds.append(frontier)
+        if frontier.isEmpty():
             break
-        new_visited = visited.unionByName(nxt).localCheckpoint()
-        # both superseded checkpoints' blocks are dead once the union
-        # materializes (eager) — release them instead of accumulating
-        # O(diameter) persisted block sets over the sweep
-        release_local_checkpoint(visited)
-        if frontier is not visited:
-            release_local_checkpoint(frontier)
-        visited, frontier = new_visited, nxt
-    if frontier is not visited:
-        release_local_checkpoint(frontier)
-    release_local_checkpoint(both)
+        visited = visited.unionByName(frontier)
+    visited = visited.localCheckpoint()
+    for ck in rounds:
+        release_local_checkpoint(ck)
     return visited
 
 
@@ -206,7 +212,10 @@ def cell_hop_distances(dual_edges: DataFrame, source_cell_id: int) -> DataFrame:
     edges = dual_edges.select("cell_id_a", "cell_id_b")
     local = _local_csr(edges)
     if local is None:
-        return _distributed_hop_distances(edges, source_cell_id)
+        both = _symmetric_edges(edges)
+        visited = _distributed_hop_distances(both, source_cell_id)
+        release_local_checkpoint(both)
+        return visited
     nodes, indptr, indices, _ = local
     start = int(np.searchsorted(nodes, source_cell_id))
     if start == len(nodes) or nodes[start] != source_cell_id:
@@ -234,16 +243,15 @@ def cell_graph_double_sweep(
 
     Returns one row (n_nodes, n_edges, diameter, endpoint_a, endpoint_b).
     The edges are checkpointed once per call, so the lazy dual-graph plan
-    runs once, not in every count and BFS round."""
+    runs once, not in every count and BFS round; their symmetric table is
+    checkpointed once too and shared by all 2 × ``sweeps`` BFS calls."""
     spark = dual_edges.sparkSession
     edges = dual_edges.select("cell_id_a", "cell_id_b").localCheckpoint()
-    nodes = (
-        edges.select(F.col("cell_id_a").alias("cell_id"))
-        .unionByName(edges.select(F.col("cell_id_b").alias("cell_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes, n_edges = nodes.count(), edges.count()
+    both = _symmetric_edges(edges)
+    n_edges = edges.count()
+    release_local_checkpoint(edges)
+    nodes = both.select(F.col("cell_id_a").alias("cell_id")).distinct().localCheckpoint()
+    n_nodes = nodes.count()
     # deterministic pseudo-random seeds: hash order over node ids — a
     # bounded driver collect (``sweeps`` rows, never grows with n)
     seed_rows = (
@@ -255,7 +263,7 @@ def cell_graph_double_sweep(
         far = []
         source = int(row.cell_id)
         for _ in range(2):
-            d = _distributed_hop_distances(edges, source)
+            d = _distributed_hop_distances(both, source)
             far.append(d.orderBy(F.desc("hop"), F.asc("cell_id")).limit(1).collect()[0])
             release_local_checkpoint(d)
             source = int(far[-1].cell_id)
@@ -265,7 +273,7 @@ def cell_graph_double_sweep(
         cand = (int(far[1].hop), u, v)
         if cand[0] > best[0] or (cand[0] == best[0] and cand[1:] < best[1:]):
             best = cand
-    release_local_checkpoint(edges)
+    release_local_checkpoint(both)
     return spark.createDataFrame([(int(n_nodes), int(n_edges), *best)], _DIAMETER_SCHEMA)
 
 

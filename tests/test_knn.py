@@ -4,9 +4,6 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-
-from libosmtools_spark.knn.ring import BRUTE_THRESHOLD
 
 
 @pytest.fixture(scope="module")
@@ -18,19 +15,19 @@ def pages_pts(spark, sf_smoke):
 
 
 @pytest.mark.parametrize(
-    "method, n_rows, path",
+    "threshold_delta, path",
     [
-        ("ring", None, "ring"),
-        ("brute", None, "brute"),
-        # both sides of the count gate; n_rows skips the dispatch count job
-        ("auto", BRUTE_THRESHOLD, "brute"),
-        ("auto", BRUTE_THRESHOLD + 1, "ring"),
+        (None, "ring"),  # knn_ring called directly
+        (None, "brute"),  # knn_join at the default threshold
+        # both sides of the gate: BRUTE_THRESHOLD at / one below the count
+        (0, "brute"),
+        (-1, "ring"),
     ],
     ids=["ring", "brute", "auto-at-threshold", "auto-past-threshold"],
 )
-def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, method, n_rows, path):
+def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, threshold_delta, path):
     from libosmtools_spark.knn import ring
-    from libosmtools_spark.knn.ring import knn_join, knn_neighbor_lists
+    from libosmtools_spark.knn.ring import knn_neighbor_lists
 
     taken = []
     for name in ("knn_brute", "knn_ring"):
@@ -38,7 +35,12 @@ def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, method, n_r
         monkeypatch.setattr(
             ring, name, lambda *a, _n=name, _f=impl, **kw: taken.append(_n) or _f(*a, **kw)
         )
-    rows = knn_join(pages_pts, "url", k=5, level=6, method=method, n_rows=n_rows)
+    if threshold_delta is not None:
+        monkeypatch.setattr(ring, "BRUTE_THRESHOLD", pages_pts.count() + threshold_delta)
+    if threshold_delta is None and path == "ring":
+        rows = ring.knn_ring(pages_pts, "url", k=5, level=6)
+    else:
+        rows = ring.knn_join(pages_pts, "url", k=5, level=6)
     assert taken == [f"knn_{path}"]
     got = knn_neighbor_lists(rows, "url").toPandas()
     want = spark.read.parquet(os.path.join(sf_smoke, "golden_knn.parquet")).toPandas()
@@ -48,6 +50,24 @@ def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, method, n_r
     g = got.sort_values("url").reset_index(drop=True)
     w = want.sort_values("url").reset_index(drop=True)
     pd.testing.assert_frame_equal(g, w)
+
+
+def test_q_knn_gates_and_fetches_in_one_job(spark):
+    """q_knn's dispatch runs no count(): the bounded fetch that gates the
+    brute path is its broadcast corpus.  Calling and reading q_knn at
+    sf0.001 runs 5 Spark jobs; a count() gate ahead of a separate fetch
+    ran 8 (the count's shuffle stage, aggregate and result jobs)."""
+    import __spark_entry__ as entry
+    from tests.test_entry import SF_DIR
+
+    sc, group = spark.sparkContext, "q-knn-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = entry.q_knn(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
 
 
 def test_knn_row_shape(spark, pages_pts):
@@ -76,7 +96,7 @@ def test_knn_wrap_metric_crosses_antimeridian(spark):
     import numpy as np
 
     from libosmtools_spark.geom.kernels import wrap_sq_euclid_deg
-    from libosmtools_spark.knn.ring import knn_join
+    from libosmtools_spark.knn.ring import knn_join, knn_ring
 
     rows = [
         (1, 0.0, 179.8),    # query: east of the line
@@ -88,8 +108,8 @@ def test_knn_wrap_metric_crosses_antimeridian(spark):
         (7, 0.0, 0.0),
     ]
     pts = spark.createDataFrame(rows, "doc_id long, lat double, lon double")
-    brute = knn_join(pts, "doc_id", k=3, metric="wrap", method="brute")
-    ring = knn_join(pts, "doc_id", k=3, metric="wrap", method="ring")
+    brute = knn_join(pts, "doc_id", k=3, metric="wrap")
+    ring = knn_ring(pts, "doc_id", k=3, metric="wrap")
     b = {(r.doc_id, r.rank): r.neighbor_id for r in brute.collect()}
     r_ = {(r.doc_id, r.rank): r.neighbor_id for r in ring.collect()}
     assert b == r_
@@ -98,6 +118,6 @@ def test_knn_wrap_metric_crosses_antimeridian(spark):
     # sanity vs the numpy kernel: wrapped distance really is smaller
     assert wrap_sq_euclid_deg(0.0, 179.8, 0.0, -179.9) < wrap_sq_euclid_deg(0.0, 179.8, 0.0, 178.0)
     # the flat metric would have ranked the same-side point first
-    flat = knn_join(pts, "doc_id", k=3, metric="flat", method="brute")
+    flat = knn_join(pts, "doc_id", k=3, metric="flat")
     fb = {(r.doc_id, r.rank): r.neighbor_id for r in flat.collect()}
     assert fb[(1, 1)] == 3

@@ -424,14 +424,14 @@ class TestBoundaryLocalCovering:
                       [np.asarray(p, dtype=np.float64) for role, p in rings if role == "inner"])
                 for rid, rings in regions.items()
             })
-        index = grid.local_adaptive_cell_index(pdf, 6, 10)
+        lookup = grid.rings_lookup(pdf)
+        index = grid._covering_frame(lookup, 6, 10)
         dense = []
-        for rid, grp in pdf.groupby("region_id"):
-            keys, full = _dense_covering(*grid._rings_of_group(grp), 6, 10)
+        for rid, (outers, inners) in lookup.items():
+            keys, full = _dense_covering(outers, inners, 6, 10)
             dense.append(pd.DataFrame({"cell_key": keys, "region_id": np.int32(rid), "full": full}))
         dense = pd.concat(dense, ignore_index=True)
         pd.testing.assert_frame_equal(index, dense)
-        lookup = grid.rings_lookup(pdf)
         assert pickle.dumps(build_cell_candidates(index, lookup)) == pickle.dumps(
             build_cell_candidates(dense, lookup)
         )

@@ -94,7 +94,7 @@ def _antimeridian_store(seed: int) -> dict:
 def _build(regions: dict):
     pdf = _rings_pdf(regions)
     lookup = grid.rings_lookup(pdf)
-    index = grid.local_adaptive_cell_index(pdf, BASE, MAX)
+    index = grid._covering_frame(lookup, BASE, MAX)
     return lookup, index, M.build_cell_candidates(index, lookup)
 
 

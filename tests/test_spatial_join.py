@@ -479,84 +479,70 @@ class TestFlagshipDictionaryFeed:
         assert ra != rb
 
 
-class TestLocalIndexGate:
-    """Both sides of ``grid.LOCAL_INDEX_MAX_REGIONS``: with the gate at 0,
-    every store takes the distributed ``applyInPandas`` build."""
+class TestOneStoreBuild:
+    """Every store is covered once, on the driver, from its rings lookup,
+    whatever its region count: a 1,100-region star store (past the size
+    that once took a distributed per-region covering) builds with one
+    Spark job, the rings collect, and plans no pandas group anywhere."""
+
+    @pytest.fixture(scope="class")
+    def star_rings(self, spark):
+        from libosmtools_spark.data.synth import regions_frames, scaling_region_spec
+
+        return spark.createDataFrame(
+            regions_frames(scaling_region_spec(1100, 64))[1],
+            "region_id long, ring_id long, ring_role string, "
+            "points array<struct<lat:double,lon:double>>",
+        )
 
     @staticmethod
-    def _index_rows(df):
-        return sorted((r.cell_key, r.region_id, r.full) for r in df.collect())
-
-    @pytest.mark.parametrize("store", ["fixture", "antimeridian"])
-    def test_distributed_build_equals_local(self, spark, sf_smoke, monkeypatch, store):
-        import __spark_entry__ as entry
-        from libosmtools_spark.index import grid
-
-        if store == "fixture":
-            rings = spark.read.parquet(os.path.join(sf_smoke, "region_rings.parquet"))
-        else:
-            rings = entry._antim_region_rings(spark)
-        rings_pdf = rings.toPandas()
-        local = grid.build_adaptive_cell_index(rings, 6, 10, rings_pdf=rings_pdf)
-        monkeypatch.setattr(grid, "LOCAL_INDEX_MAX_REGIONS", 0)
-        dist = grid.build_adaptive_cell_index(rings, 6, 10, rings_pdf=rings_pdf)
-
-        def plan(df):
-            return df._jdf.queryExecution().analyzed().toString()
-
-        assert "FlatMapGroupsInPandas" in plan(dist)
-        assert "FlatMapGroupsInPandas" not in plan(local)
-        assert self._index_rows(dist) == self._index_rows(local)
-
-    @pytest.mark.parametrize("store", ["fixture", "antimeridian"])
-    def test_candidates_equal_on_both_sides(self, spark, sf_smoke, monkeypatch, store):
-        """The engine's candidate tables are the same arrays whichever side
-        of the gate built the index; only the distributed side runs a Spark
-        job to collect it (the driver-local index feeds them directly)."""
-        import __spark_entry__ as entry
-        from libosmtools_spark.index import grid
-        from libosmtools_spark.joins.mapjoin import PartialCells
-        from libosmtools_spark.pipeline import SpatialEngine
-
-        if store == "fixture":
-            rings = spark.read.parquet(os.path.join(sf_smoke, "region_rings.parquet"))
-        else:
-            rings = entry._antim_region_rings(spark)
+    def _jobs(spark, group, fn):
+        """(fn(), Spark jobs it ran)."""
         sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-        def candidates(group):
-            eng = SpatialEngine(spark, rings, 6, 10)
-            sc.setJobGroup(group, group)
-            try:
-                cand = eng.candidates_bcast.value
-            finally:
-                sc.setJobGroup(None, None)
-            return cand, len(sc.statusTracker().getJobIdsForGroup(group))
-
-        local, local_jobs = candidates(f"cand-local-{store}")
-        monkeypatch.setattr(grid, "LOCAL_INDEX_MAX_REGIONS", 0)
-        dist, dist_jobs = candidates(f"cand-dist-{store}")
-        assert local_jobs == 0 < dist_jobs
-        assert (local["n_regions"], local["n_words"]) == (dist["n_regions"], dist["n_words"])
-        assert sorted(local["levels"]) == sorted(dist["levels"])
-        for lv, (keys, full_masks, partial, has_part) in local["levels"].items():
-            d_keys, d_full, d_partial, d_has = dist["levels"][lv]
-            np.testing.assert_array_equal(keys, d_keys)
-            np.testing.assert_array_equal(full_masks, d_full)
-            np.testing.assert_array_equal(has_part, d_has)
-            for name in PartialCells.__slots__:
-                np.testing.assert_array_equal(getattr(partial, name), getattr(d_partial, name))
-
-    def test_distributed_build_flagship_matches_golden(self, spark, sf_smoke, pages, monkeypatch):
-        from libosmtools_spark.index import grid
+    def test_large_store_builds_on_the_driver(self, spark, star_rings):
+        from libosmtools_spark.geom import kernels as K
         from libosmtools_spark.pipeline import SpatialEngine
+        from libosmtools_spark.tiles.materialize import vector_to_raster
 
-        monkeypatch.setattr(grid, "LOCAL_INDEX_MAX_REGIONS", 0)
-        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
-        analyzed = eng.cell_index._jdf.queryExecution().analyzed().toString()
-        assert "FlatMapGroupsInPandas" in analyzed
-        golden = _golden_flagship_rows(_read_goldens(sf_smoke))
-        assert _flagship_rows(eng.flagship_map(pages)) == golden
+        eng, ctor_jobs = self._jobs(
+            spark, "one-store-build-ctor", lambda: SpatialEngine(spark, star_rings)
+        )
+        _, cand_jobs = self._jobs(spark, "one-store-build-cand", lambda: eng.candidates_bcast)
+        assert (ctor_jobs, cand_jobs) == (1, 0)
+        assert len(eng.rings_lookup) == 1100
+        for df in (eng.cell_index, vector_to_raster(star_rings, eng.level)):
+            assert "FlatMapGroupsInPandas" not in df._jdf.queryExecution().analyzed().toString()
+
+        # flagship region sets on random points around the star hotspots
+        # equal brute point_in_rings over every region
+        rng = np.random.default_rng(11)
+        hot = np.array([(48.2, 11.4), (17.5, 17.5), (-20.0, 50.0)])
+        which = rng.integers(0, len(hot), size=600)
+        texts = [
+            f"near geo:{a:.6f},{o:.6f} end"
+            for a, o in zip(
+                hot[which, 0] + rng.uniform(-2.5, 2.5, 600),
+                hot[which, 1] + rng.uniform(-2.5, 2.5, 600),
+            )
+        ]
+        pdf = pd.DataFrame({"url": [f"s{i}" for i in range(len(texts))], "text": texts})
+        got = _flagship_rows(eng.flagship_map(spark.createDataFrame(pdf)))
+        coords = np.array([t.split("geo:")[1].split(" ")[0].split(",") for t in texts], dtype=np.float64)
+        inside = np.stack(
+            [K.point_in_rings(coords[:, 0], coords[:, 1], o, i) for o, i in eng.rings_lookup.values()],
+            axis=1,
+        )
+        rids = np.fromiter(eng.rings_lookup, dtype=np.int64)
+        want = {u: tuple(rids[row].tolist()) for u, row in zip(pdf["url"], inside)}
+        assert {u: r[2] for u, r in got.items()} == want
+        assert max(len(ids) for ids in want.values()) > 63  # multi-word masks
 
 
 class TestLazyStoreArtifacts:

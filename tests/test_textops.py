@@ -856,7 +856,11 @@ class TestScaleHygiene:
 
     def test_no_storage_growth_across_calls(self, spark):
         """knn_ring and ngram_jaccard_pairs release their caches: repeated
-        calls in one session must not accumulate persisted RDDs."""
+        calls in one session must not accumulate persisted RDDs.
+        simhash_pairs releases its fingerprint and banded checkpoints, so a
+        q_simhash_pairs call (whose projected result the caller cannot
+        release) leaves at most its one result checkpoint."""
+        import __spark_entry__ as entry
         from libosmtools_spark.dedup.dedup import ngram_jaccard_pairs
         from libosmtools_spark.knn.ring import knn_ring
 
@@ -884,6 +888,9 @@ class TestScaleHygiene:
             # may be garbage-collected mid-loop, dropping the count below
             # the baseline — growth is the bug, shrinkage isn't.
             assert n_cached() <= base
+        for calls in range(1, 4):
+            entry.q_simhash_pairs(spark, TESTDATA).count()
+            assert n_cached() <= base + calls
 
 
 class TestEmptyInputs:

@@ -61,11 +61,10 @@ class TestRasterVector:
         assert keys <= cov9
 
     def test_footprint(self, spark, sf_smoke):
-        from libosmtools_spark.index.grid import build_cell_index
-        from libosmtools_spark.tiles.materialize import region_raster_footprint
+        from libosmtools_spark.tiles.materialize import region_raster_footprint, vector_to_raster
 
         rings = spark.read.parquet(os.path.join(sf_smoke, "region_rings.parquet"))
-        idx = build_cell_index(rings, 6)
+        idx = vector_to_raster(rings, 6)
         fp = region_raster_footprint(idx).toPandas().set_index("region_id")
         assert (fp["n_cells"] >= 1).all()
         assert (fp["n_full"] <= fp["n_cells"]).all()
@@ -292,10 +291,10 @@ class TestRefineHotSetFallback:
         with pytest.raises(ValueError, match="uniform starting key level"):
             refine_oversized(mixed, max_points=10)
 
-    def test_join_path_equals_literal_path(self, spark):
+    def test_join_path_equals_literal_path(self, spark, monkeypatch, spy):
         from pyspark.sql import functions as F
 
-        from libosmtools_spark.cells.refine import refine_oversized
+        from libosmtools_spark.cells import refine as R
         from libosmtools_spark.geom.columns import cell_key_col
 
         # clustered points (a ~2° patch) so cells really exceed the bound
@@ -310,13 +309,18 @@ class TestRefineHotSetFallback:
             .cache()
         )
         pts.count()
-        lit = refine_oversized(pts, max_points=20, max_hot_cells=10**9)
-        jn = refine_oversized(pts, max_points=20, max_hot_cells=0)
+        joins = spy(R, "_resolve_with_join")  # args[1]: the hot side, None if distributed
+        monkeypatch.setattr(R, "DEFAULT_MAX_HOT_CELLS", 10**9)
+        lit = R.refine_oversized(pts, max_points=20)
+        assert joins == []
         # middle band: hot set fits the driver but exceeds the literal cap
         # → collected hot rows ship as a broadcast anti-join side
-        mid = refine_oversized(
-            pts, max_points=20, max_hot_cells=10**9, literal_max_hot_cells=0
-        )
+        monkeypatch.setattr(R, "LITERAL_MAX_HOT_CELLS", 0)
+        mid = R.refine_oversized(pts, max_points=20)
+        assert len(joins) == 1 and joins[0][1] is not None
+        monkeypatch.setattr(R, "DEFAULT_MAX_HOT_CELLS", 0)
+        jn = R.refine_oversized(pts, max_points=20)
+        assert len(joins) == 2 and joins[1][1] is None
         a = {r["id"]: r["cell_key"] for r in lit.select("id", "cell_key").collect()}
         b = {r["id"]: r["cell_key"] for r in jn.select("id", "cell_key").collect()}
         c = {r["id"]: r["cell_key"] for r in mid.select("id", "cell_key").collect()}
@@ -326,19 +330,18 @@ class TestRefineHotSetFallback:
         # the split actually happened (some keys moved past level 6)
         assert any((k >> 55) > 6 for k in a.values())
 
-    def test_many_hot_cells_no_plan_explosion(self, spark):
+    def test_many_hot_cells_no_plan_explosion(self, spark, monkeypatch):
         """>10^5 hot cells: the distributed path must neither collect the
         hot set nor embed plan literals — and still bound every cell."""
         from pyspark.sql import functions as F
 
-        from libosmtools_spark.cells.refine import refine_oversized
+        from libosmtools_spark.cells import refine as R
 
         pts = self._pts(spark, 150_000, level=10)
         # max_points=0: every occupied cell is hot at the probed level →
         # hot rows ≈ distinct cells (> 10^5 at level 10 for 150k points)
-        refined = refine_oversized(
-            pts, max_points=0, max_rounds=1, max_hot_cells=10_000
-        )
+        monkeypatch.setattr(R, "DEFAULT_MAX_HOT_CELLS", 10_000)
+        refined = R.refine_oversized(pts, max_points=0, max_rounds=1)
         row = (
             refined.groupBy("cell_key").agg(F.count("*").alias("n"))
             .agg(F.count("*").alias("cells"), F.sum("n").alias("rows"))
@@ -484,6 +487,30 @@ class TestCellGraphDiameter:
         row = cell_graph_double_sweep(edges, sweeps=2).collect()[0]
         assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
         assert seen.value == len(rows)
+
+    def test_double_sweep_shares_one_symmetric_table(self, spark, spy):
+        """All 2 × ``sweeps`` BFS calls of one double sweep join the same
+        checkpointed symmetric edge table, and the visited union is
+        checkpointed once per BFS, not every round: a two-sweep call on a
+        10-node path runs at most 300 Spark jobs (323 when each BFS built
+        its own table and checkpointed the union every round)."""
+        from libosmtools_spark.tiles import materialize as M
+
+        built = spy(M, "_symmetric_edges")
+        bfs = spy(M, "_distributed_hop_distances")
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, 10)], "cell_id_a long, cell_id_b long"
+        )
+        sc, group = spark.sparkContext, "double-sweep-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            row = M.cell_graph_double_sweep(edges, sweeps=2).collect()[0]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
+        assert len(built) == 1 and len(bfs) == 4
+        assert all(args[0] is bfs[0][0] for args in bfs)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 300
 
     def test_auto_falls_through_to_loop_past_bound(self, spark, monkeypatch):
         """Past LOCAL_BFS_MAX_EDGES the diameter degrades to the distributed
