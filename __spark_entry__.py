@@ -1142,8 +1142,8 @@ def q_cell_point_stats(spark, sf_dir):
 
 def q_hop_distances(spark, sf_dir):
     """T23 — BFS hop distances over the cell dual graph from cell_id 1
-    (tiles.materialize.cell_hop_distances: a driver-local CSR BFS up to
-    LOCAL_BFS_MAX_EDGES edges, the distributed frontier loop beyond)."""
+    (tiles.materialize.cell_hop_distances: one bounded fetch of the edges,
+    at most LOCAL_BFS_MAX_EDGES, then a CSR BFS on the driver)."""
     from libosmtools_spark.tiles.materialize import cell_dual_graph, cell_hop_distances
 
     cells = _doc_cells_dict(spark, sf_dir)
@@ -1163,20 +1163,14 @@ def q_cell_graph_diameter(spark, sf_dir):
 
 
 def q_cell_graph_diameter_loop(spark, sf_dir):
-    """T7, forced-distributed physical path (the knn_ring pattern): the
-    double sweep the diameter takes past LOCAL_BFS_MAX_EDGES —
-    deterministic hash-ordered seeds, two distributed BFS sweeps each
-    (tiles.materialize.cell_graph_double_sweep with sweeps=2; reference
-    posture: approximate beyond the cutoff, never fail,
-    /root/reference/src/OsmTriangulationRegionStore.cpp:100-132).  Same
-    all-pairs recursive-CTE oracle as the local path — the sweep answer
-    must equal the exact diameter on this fixture."""
-    from libosmtools_spark.tiles.materialize import cell_dual_graph, cell_graph_double_sweep
-
-    cells = _doc_cells_dict(spark, sf_dir)
-    return cell_graph_double_sweep(
-        cell_dual_graph(cells.select("cell_key", "cell_id")), sweeps=2
-    ).select("n_nodes", "n_edges", "diameter")
+    """T7, the twin of ``cell_graph_diameter``: the same row through the
+    same driver walk (tiles.materialize.cell_graph_diameter), with the same
+    all-pairs recursive-CTE oracle.  The dual graph derives from the
+    driver-built cells dictionary, so the diameter has one path; above
+    EXACT_DIAMETER_PRACTICAL nodes it is the seeded double sweep of
+    cells/hopsplit.max_hop_pair, the reference's approximate posture
+    (reference src/OsmTriangulationRegionStore.cpp:100-132)."""
+    return q_cell_graph_diameter(spark, sf_dir)
 
 
 def q_split_criteria(spark, sf_dir):
@@ -2071,6 +2065,6 @@ def oracle_sql() -> dict[str, str]:
     # their broadcast counterparts — that equality IS the check
     out["knn_ring"] = out["knn"]
     out["ann_cosine_blocked"] = out["ann_cosine"]
-    # forced-distributed double-sweep vs the same exact all-pairs oracle
+    # the diameter's twin: the same driver walk, the same all-pairs oracle
     out["cell_graph_diameter_loop"] = out["cell_graph_diameter"]
     return out

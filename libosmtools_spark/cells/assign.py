@@ -56,9 +56,11 @@ def build_cells_table_map(
     interns ids with ``intern_region_sets`` (``rings_bcast`` is not read:
     the candidate tables carry the clipped edges).  A NULL key (page
     without a geocode) gets the empty set and cell 0.  The call itself
-    runs that job; the returned frame is a ``LocalRelation``, so reading
-    or broadcasting it starts no Python worker (Spark still collects a
-    broadcast ``LocalTableScan`` in a small JVM-only job).
+    runs that job; the returned frame is a ONE-partition ``LocalRelation``
+    (not one partition per core), so reading or broadcasting it starts no
+    Python worker and runs one task, and writing it makes one file
+    (Spark still collects a broadcast ``LocalTableScan`` in a small
+    JVM-only job).
 
     ``input_batch_unique=True`` skips the distinct exchange for callers
     whose input is already batch-deduplicated near dimension scale (the
@@ -106,7 +108,7 @@ def build_cells_table_map(
     )
     return point_cells.sparkSession.createDataFrame(
         table, "cell_key long, cell_id int, region_ids array<int>"
-    )
+    ).coalesce(1)
 
 
 def assign_point_cell_ids(points_with_key: DataFrame, cells: DataFrame) -> DataFrame:

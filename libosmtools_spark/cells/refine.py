@@ -5,10 +5,10 @@ splitting.
   id into contiguous components over face adjacency (DFS relabel,
   /root/reference/src/OsmTriangulationRegionStore.cpp:517-591).  Grid
   version: component-min labels over the cell-key adjacency graph
-  restricted to same-cell_id edges — vectorized numpy on the driver for a
-  dimension-scale cells table, else a bounded DataFrame loop of min-label
-  propagation + pointer jumping with localCheckpoint (lineage cut), the
-  scalable substitute for the DFS.
+  restricted to same-cell_id edges, computed by vectorized numpy on the
+  driver.  The cells dictionary it reads is built on the driver in the
+  first place, so one ``limit(LOCAL_CC_MAX_ROWS + 1)`` fetch bounds the
+  gather, and a larger table is refused with a ``ValueError``.
 
 - ``refine_oversized``: the reference's refineCells bounds per-cell size
   with pluggable criteria (CellTriangleCountCriteria,
@@ -24,21 +24,18 @@ splitting.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from libosmtools_spark.geom.columns import cell_key_col
 from libosmtools_spark.geom.kernels import _LEVEL_SHIFT
-from libosmtools_spark.tiles.materialize import neighbor_keys_col
 
-#: cells tables up to this many rows take the driver-local vectorized path
-#: — the cells dictionary is DIMENSION-scale (it broadcasts in the flagship
-#: join; the reference's makeConnected is likewise an in-memory DFS,
-#: /root/reference/src/OsmTriangulationRegionStore.cpp:517-591)
+#: most cells-table rows ``connected_components`` fetches to the driver —
+#: the cells dictionary is DIMENSION-scale (it is built on the driver and
+#: broadcast in the flagship join; the reference's makeConnected is
+#: likewise an in-memory DFS,
+#: reference src/OsmTriangulationRegionStore.cpp:517-591)
 LOCAL_CC_MAX_ROWS = 2_000_000
-#: round cap of the distributed label loop (pointer jumping converges in
-#: O(log diameter) rounds)
-CC_MAX_ROUNDS = 50
 
 
 def _local_component_labels(keys: np.ndarray, cids: np.ndarray, max_iter: int = 64) -> np.ndarray:
@@ -46,7 +43,7 @@ def _local_component_labels(keys: np.ndarray, cids: np.ndarray, max_iter: int = 
     fully vectorized numpy: one neighbor-min sweep (np.minimum.at) + one
     pointer jump (label ← label(label)) per round → O(log diameter) rounds,
     microseconds per round at dimension scale.  ``keys`` must be sorted
-    ascending.  Same fixpoint as the distributed loop (parity-tested)."""
+    ascending."""
     n = len(keys)
     level = keys >> _LEVEL_SHIFT
     iy = (keys >> 28) & ((1 << 27) - 1)
@@ -94,92 +91,37 @@ def connected_components(cells: DataFrame) -> DataFrame:
     (/root/reference/src/OsmTriangulationRegionStore.cpp:589) is just the
     cell_id column retained alongside.
 
-    The cells dictionary is a dimension table (it broadcasts in the
-    flagship join), so up to LOCAL_CC_MAX_ROWS — gated and fetched by ONE
-    limit(N+1) job — it runs the vectorized in-memory path (the
-    reference's own makeConnected posture, a DFS over an in-memory
-    triangulation); larger tables run ``_distributed_components``.  Both
-    produce the identical fixpoint (component-min labels; parity-tested
-    and oracle-checked)."""
+    The cells dictionary is a dimension table built on the driver, so
+    ONE limit(LOCAL_CC_MAX_ROWS + 1) job gates and fetches it and the
+    labels are computed in memory (the reference's own makeConnected
+    posture, a DFS over an in-memory triangulation).  A table of more
+    than LOCAL_CC_MAX_ROWS rows raises ``ValueError``: the driver never
+    holds more than that bound plus one row."""
     import pandas as pd
 
-    base = cells.select("cell_key", "cell_id")
-    pdf = base.limit(LOCAL_CC_MAX_ROWS + 1).toPandas()
+    pdf = cells.select("cell_key", "cell_id").limit(LOCAL_CC_MAX_ROWS + 1).toPandas()
     if len(pdf) > LOCAL_CC_MAX_ROWS:
-        return _distributed_components(base)
+        raise ValueError(
+            f"the cells table has more than LOCAL_CC_MAX_ROWS = "
+            f"{LOCAL_CC_MAX_ROWS} rows; the cells dictionary is "
+            "dimension-scale and is labelled on the driver"
+        )
     pdf = pdf.sort_values("cell_key")
     keys = pdf["cell_key"].to_numpy(dtype=np.int64)
     cids = pdf["cell_id"].to_numpy(dtype=np.int64)
     lab = _local_component_labels(keys, cids)
-    # dense_rank over distinct (cell_id, label), cell 0 pinned to 0 —
-    # identical to the Window dense_rank of the distributed path
+    # dense_rank over distinct (cell_id, label), cell 0 pinned to 0 (the
+    # empty-region sentinel never splits —
+    # reference src/OsmTriangulationRegionStore.cpp:996)
     pairs = np.stack([cids, lab], axis=1)
-    # np.unique(axis=0) sorts rows lexicographically — the same order as
-    # Window.orderBy(cell_id, label); inverse = rank-1
+    # np.unique(axis=0) sorts rows lexicographically — the order of
+    # DENSE_RANK() OVER (ORDER BY cell_id, label); inverse = rank-1
     _, inv = np.unique(pairs, axis=0, return_inverse=True)
     refined = np.where(cids == 0, 0, inv.astype(np.int64) + 1)
     out = pd.DataFrame(
         {"cell_key": keys, "cell_id": pdf["cell_id"].to_numpy(), "refined_cell_id": refined}
     )
     return cells.sparkSession.createDataFrame(out)
-
-
-def _distributed_components(base: DataFrame) -> DataFrame:
-    """DataFrame loop: neighbor-min propagation interleaved with pointer
-    jumping (label ← label(label)), O(log diameter) rounds instead of
-    O(diameter), at most CC_MAX_ROUNDS."""
-    # same-cell_id adjacency edges (both directions)
-    edges = (
-        base.withColumn("n_key", F.explode(neighbor_keys_col(F.col("cell_key"))))
-        .join(
-            base.select(F.col("cell_key").alias("n_key"), F.col("cell_id").alias("n_cell_id")),
-            "n_key",
-        )
-        .filter(F.col("cell_id") == F.col("n_cell_id"))
-        .select("cell_key", "n_key")
-    ).localCheckpoint()
-
-    labels = base.withColumn("label", F.col("cell_key"))
-    for _ in range(CC_MAX_ROUNDS):
-        # propagate: label = min(own, neighbors')
-        nbr_min = (
-            edges.join(labels.select(F.col("cell_key").alias("n_key"), "label"), "n_key")
-            .groupBy("cell_key")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "cell_key", "left")
-            .withColumn("new_label", F.least(F.col("label"), F.coalesce("nbr_label", "label")))
-            .select("cell_key", "cell_id", F.col("new_label").alias("label"))
-        )
-        # pointer jumping: label ← label(label).  A label is always the
-        # cell_key of some member of the same component, so the lookup
-        # table is new_labels itself.
-        lut = new_labels.select(F.col("cell_key").alias("label"), F.col("label").alias("label2"))
-        new_labels = (
-            new_labels.join(lut, "label", "left")
-            .select("cell_key", "cell_id", F.coalesce("label2", "label").alias("label"))
-            .localCheckpoint()
-        )
-        converged = (
-            new_labels.join(labels.select("cell_key", F.col("label").alias("old")), "cell_key")
-            .filter(F.col("label") != F.col("old"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if converged:
-            break
-
-    w = Window.orderBy("cell_id", "label")
-    comp = labels.select("cell_id", "label").distinct().withColumn(
-        "refined_cell_id", F.dense_rank().over(w)
-    )
-    out = labels.join(comp, ["cell_id", "label"]).select("cell_key", "cell_id", "refined_cell_id")
-    # cell 0 keeps refined id 0 (the empty-region sentinel never splits —
-    # /root/reference/src/OsmTriangulationRegionStore.cpp:996)
-    return out.withColumn(
-        "refined_cell_id", F.when(F.col("cell_id") == 0, F.lit(0)).otherwise(F.col("refined_cell_id"))
-    )
 
 
 #: above this many hot cells the collected set stops being driver-safe

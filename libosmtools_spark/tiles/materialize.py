@@ -9,10 +9,11 @@ plus the north-rule raster↔vector requirement).
   (/root/reference/src/OsmTriangulationRegionStore.cpp:382-429) — grid-
   native via ring-1 neighbor keys.
 - dual-graph hop distances (T23) and diameter with endpoints (T7) on one
-  core: ONE job gates and fetches the edges as a CSR (``_local_csr``, up
-  to LOCAL_BFS_MAX_EDGES), then the driver runs ``hopsplit.csr_bfs`` /
-  ``hopsplit.max_hop_pair``; past the bound the distributed frontier BFS
-  and the one distributed double sweep (``cell_graph_double_sweep``) run.
+  core, on the driver: ONE job gates and fetches the edges as a CSR
+  (``_local_csr``, at most LOCAL_BFS_MAX_EDGES + 1 rows), then
+  ``hopsplit.csr_bfs`` / ``hopsplit.max_hop_pair`` walk it in memory, as
+  the reference walks its arrangement.  The dual graph derives from the
+  driver-built cells dictionary; a larger edge set raises ``ValueError``.
 - cell sizes/representatives (T10, :280-292), center of mass (T11,
   :294-320), region→cells inverted index (T12,
   /root/reference/include/osmtools/OsmTriangulationRegionStore.h:538-553),
@@ -26,15 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libosmtools_spark.cells.hopsplit import (
-    APPROX_DIAMETER_RUNS,
-    csr_adjacency,
-    csr_bfs,
-    max_hop_pair,
-)
+from libosmtools_spark.cells.hopsplit import csr_adjacency, csr_bfs, max_hop_pair
 from libosmtools_spark.geom.columns import cell_bounds_cols
 from libosmtools_spark.index.grid import build_adaptive_cell_index
-from libosmtools_spark.session import release_local_checkpoint
 
 
 def vector_to_raster(region_rings: DataFrame, level: int) -> DataFrame:
@@ -122,27 +117,33 @@ def cell_dual_graph(cells: DataFrame) -> DataFrame:
     )
 
 
-#: dual-graph edge sets up to this many rows take the driver-local
-#: vectorized path (the dual graph derives from the broadcastable cells
-#: dictionary — edges ≤ 8 × cells, dimension-scale by the same argument)
+#: most dual-graph edges the graph operators fetch to the driver (the dual
+#: graph derives from the driver-built cells dictionary — edges ≤ 8 ×
+#: cells, dimension-scale by the same argument)
 LOCAL_BFS_MAX_EDGES = 4_000_000
-#: round cap of the distributed frontier expansion
-BFS_MAX_ROUNDS = 10_000
 
 _DIAMETER_SCHEMA = (
     "n_nodes long, n_edges long, diameter long, endpoint_a long, endpoint_b long"
 )
 
 
-def _local_csr(edges: DataFrame):
-    """(nodes, indptr, indices, n_edges) of the undirected edge set, or None
-    past LOCAL_BFS_MAX_EDGES.  ONE job both gates and fetches:
-    limit(N+1).toPandas() returns all M rows when M ≤ N, and N+1 rows
-    mean the graph is too big for the driver.  ``nodes`` are the sorted
-    endpoint ids; CSR node i is ``nodes[i]``."""
-    pdf = edges.limit(LOCAL_BFS_MAX_EDGES + 1).toPandas()
+def _local_csr(dual_edges: DataFrame):
+    """(nodes, indptr, indices, n_edges) of the undirected edge set.  ONE
+    job both gates and fetches: limit(N+1).toPandas() returns all M rows
+    when M ≤ N, and N+1 rows mean the graph is too big for the driver
+    (``ValueError``).  ``nodes`` are the sorted endpoint ids; CSR node i
+    is ``nodes[i]``."""
+    pdf = (
+        dual_edges.select("cell_id_a", "cell_id_b")
+        .limit(LOCAL_BFS_MAX_EDGES + 1)
+        .toPandas()
+    )
     if len(pdf) > LOCAL_BFS_MAX_EDGES:
-        return None
+        raise ValueError(
+            "the dual graph has more than LOCAL_BFS_MAX_EDGES = "
+            f"{LOCAL_BFS_MAX_EDGES} edges; it derives from the dimension-scale "
+            "cells dictionary and is walked on the driver"
+        )
     a = pdf["cell_id_a"].to_numpy(dtype=np.int64)
     b = pdf["cell_id_b"].to_numpy(dtype=np.int64)
     nodes = np.unique(np.concatenate([a, b]))
@@ -153,51 +154,6 @@ def _local_csr(edges: DataFrame):
     return nodes, indptr, indices, len(pdf)
 
 
-def _symmetric_edges(edges: DataFrame) -> DataFrame:
-    """Both directions of every edge, checkpointed: the table each round of
-    ``_distributed_hop_distances`` joins.  Callers build it once per graph
-    and release it after their last BFS."""
-    return edges.unionByName(
-        edges.select(
-            F.col("cell_id_b").alias("cell_id_a"), F.col("cell_id_a").alias("cell_id_b")
-        )
-    ).localCheckpoint()
-
-
-def _distributed_hop_distances(both: DataFrame, source_cell_id: int) -> DataFrame:
-    """Distributed frontier expansion over ``both`` (``_symmetric_edges``):
-    per round the frontier equi-joins the edge table and the new frontier
-    is localCheckpointed (lineage cut); O(diameter) rounds, each a bounded
-    shuffle on cell ids only.  The graph is undirected, so a neighbour of a
-    hop-h cell is at hop h - 1, h or h + 1: anti-joining the last two
-    frontiers, not the whole visited set, leaves exactly the next one, and
-    each round's plan stays two checkpoints wide.  The union of the
-    frontiers is checkpointed once, at the end, and the per-round
-    checkpoints are then released."""
-    frontier = both.sparkSession.createDataFrame(
-        [(int(source_cell_id), 0)], "cell_id long, hop long"
-    )
-    visited, prev, rounds = frontier, None, []
-    for hop in range(1, BFS_MAX_ROUNDS + 1):
-        seen = frontier if prev is None else prev.unionByName(frontier)
-        prev, frontier = frontier, (
-            frontier.join(both, frontier.cell_id == both.cell_id_a)
-            .select(F.col("cell_id_b").alias("cell_id"))
-            .distinct()
-            .join(seen.select("cell_id"), "cell_id", "left_anti")
-            .withColumn("hop", F.lit(hop).cast("long"))
-            .localCheckpoint()
-        )
-        rounds.append(frontier)
-        if frontier.isEmpty():
-            break
-        visited = visited.unionByName(frontier)
-    visited = visited.localCheckpoint()
-    for ck in rounds:
-        release_local_checkpoint(ck)
-    return visited
-
-
 def cell_hop_distances(dual_edges: DataFrame, source_cell_id: int) -> DataFrame:
     """T23 — hop distances over the cell dual graph: (cell_id, hop) for
     every cell reachable from ``source_cell_id``, hop = BFS shortest path
@@ -205,18 +161,9 @@ def cell_hop_distances(dual_edges: DataFrame, source_cell_id: int) -> DataFrame:
     the hop metric the reference's cell splitting and diameter checks
     walk).  Cells outside the source's component are absent.
 
-    Edge sets up to LOCAL_BFS_MAX_EDGES run one ``hopsplit.csr_bfs`` on the
-    driver; larger graphs run the distributed frontier expansion.  Both
-    paths produce the identical distance map (parity-tested and
-    oracle-checked)."""
-    edges = dual_edges.select("cell_id_a", "cell_id_b")
-    local = _local_csr(edges)
-    if local is None:
-        both = _symmetric_edges(edges)
-        visited = _distributed_hop_distances(both, source_cell_id)
-        release_local_checkpoint(both)
-        return visited
-    nodes, indptr, indices, _ = local
+    One ``hopsplit.csr_bfs`` on the driver over the fetched CSR; more
+    than LOCAL_BFS_MAX_EDGES edges raise ``ValueError``."""
+    nodes, indptr, indices, _ = _local_csr(dual_edges)
     start = int(np.searchsorted(nodes, source_cell_id))
     if start == len(nodes) or nodes[start] != source_cell_id:
         # a source with no edges reaches only itself
@@ -228,55 +175,6 @@ def cell_hop_distances(dual_edges: DataFrame, source_cell_id: int) -> DataFrame:
     return dual_edges.sparkSession.createDataFrame(out, schema="cell_id long, hop long")
 
 
-def cell_graph_double_sweep(
-    dual_edges: DataFrame, sweeps: int = APPROX_DIAMETER_RUNS
-) -> DataFrame:
-    """T7's distributed path: ``sweeps`` deterministic seeds (hash-ordered
-    node picks, the Spark-determinism analog of the reference's rng), each
-    running two distributed BFS sweeps (id-only shuffles, O(diameter)
-    rounds).  The diameter is the best second-sweep eccentricity, the
-    endpoints its witness pair (ties: the smallest sorted pair).  Exact on
-    trees and a lower bound in general, like the reference's approximation
-    (reference src/OsmTriangulationRegionStore.cpp:100-132); on
-    grid-shaped dual graphs the sweep lands on the periphery and matches
-    the exact answer (oracle-checked on the fixture).
-
-    Returns one row (n_nodes, n_edges, diameter, endpoint_a, endpoint_b).
-    The edges are checkpointed once per call, so the lazy dual-graph plan
-    runs once, not in every count and BFS round; their symmetric table is
-    checkpointed once too and shared by all 2 × ``sweeps`` BFS calls."""
-    spark = dual_edges.sparkSession
-    edges = dual_edges.select("cell_id_a", "cell_id_b").localCheckpoint()
-    both = _symmetric_edges(edges)
-    n_edges = edges.count()
-    release_local_checkpoint(edges)
-    nodes = both.select(F.col("cell_id_a").alias("cell_id")).distinct().localCheckpoint()
-    n_nodes = nodes.count()
-    # deterministic pseudo-random seeds: hash order over node ids — a
-    # bounded driver collect (``sweeps`` rows, never grows with n)
-    seed_rows = (
-        nodes.orderBy(F.xxhash64("cell_id"), F.col("cell_id")).limit(sweeps).collect()
-    )
-    release_local_checkpoint(nodes)
-    best = (0, 0, 0)  # (diameter, endpoint_a, endpoint_b)
-    for row in seed_rows:
-        far = []
-        source = int(row.cell_id)
-        for _ in range(2):
-            d = _distributed_hop_distances(both, source)
-            far.append(d.orderBy(F.desc("hop"), F.asc("cell_id")).limit(1).collect()[0])
-            release_local_checkpoint(d)
-            source = int(far[-1].cell_id)
-        # the second sweep's eccentricity bounds the first's: ecc(far) ≥
-        # far.hop, so it alone is the sweep's answer
-        u, v = sorted((int(far[0].cell_id), int(far[1].cell_id)))
-        cand = (int(far[1].hop), u, v)
-        if cand[0] > best[0] or (cand[0] == best[0] and cand[1:] < best[1:]):
-            best = cand
-    release_local_checkpoint(both)
-    return spark.createDataFrame([(int(n_nodes), int(n_edges), *best)], _DIAMETER_SCHEMA)
-
-
 def cell_graph_diameter_endpoints(dual_edges: DataFrame) -> DataFrame:
     """T7 with the reference's ``calcDiameter(startNode, endNode)`` ENDPOINTS
     (reference include/osmtools/OsmTriangulationRegionStore.h:83):
@@ -284,21 +182,16 @@ def cell_graph_diameter_endpoints(dual_edges: DataFrame) -> DataFrame:
     the max eccentricity over all components (nodes = edge endpoints;
     isolated ids have no hops to measure).
 
-    Edge sets up to LOCAL_BFS_MAX_EDGES run ``hopsplit.max_hop_pair`` on
-    the driver: exact all-pairs BFS up to EXACT_DIAMETER_PRACTICAL nodes,
+    ``hopsplit.max_hop_pair`` runs on the driver over the fetched CSR:
+    exact all-pairs BFS up to EXACT_DIAMETER_PRACTICAL nodes,
     with a PINNED tie rule — the lexicographically smallest ``(endpoint_a,
     endpoint_b)``, ``endpoint_a < endpoint_b``, among every pair at max
     eccentricity (the reference's first-found pair depends on thread
     interleaving; a deterministic rule is the Spark-reproducibility
     analog) — and the seeded double sweep above it, as the reference
     switches (reference src/OsmTriangulationRegionStore.cpp:100-132).
-    Larger edge sets run ``cell_graph_double_sweep``: approximate beyond
-    the cutoff, never fail."""
-    edges = dual_edges.select("cell_id_a", "cell_id_b")
-    local = _local_csr(edges)
-    if local is None:
-        return cell_graph_double_sweep(edges)
-    nodes, indptr, indices, n_edges = local
+    More than LOCAL_BFS_MAX_EDGES edges raise ``ValueError``."""
+    nodes, indptr, indices, n_edges = _local_csr(dual_edges)
     if len(nodes) == 0:
         row = (0, 0, 0, 0, 0)
     else:

@@ -122,5 +122,26 @@ def test_all_queries_have_unique_names(spark):
     assert set(entry.oracle_sql()) <= set(qs)
 
 
+def test_diameter_loop_runs_no_more_jobs_than_diameter(spark, duck):
+    """cell_graph_diameter_loop is the diameter's twin on the same driver
+    walk: with the shared cells dictionary built, it runs no more Spark
+    jobs than cell_graph_diameter (a distributed double sweep over the
+    same 6-node graph ran ~140) and matches the same oracle."""
+    sc = spark.sparkContext
+    entry._doc_cells_dict(spark, SF_DIR)
+
+    def jobs(name):
+        group = f"jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            entry.queries()[name](spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("cell_graph_diameter_loop") <= jobs("cell_graph_diameter")
+    _match(spark, duck, "cell_graph_diameter_loop")
+
+
 if __name__ == "__main__":
     sys.exit(pytest.main([__file__, "-x", "-q"]))

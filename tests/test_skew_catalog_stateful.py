@@ -170,6 +170,9 @@ class TestStagedFlagship:
         w = want.sort_values(key).reset_index(drop=True)
         assert (g["cell_id"].to_numpy() == w["cell_id"].to_numpy()).all()
         assert (g["region_ids"].apply(list) == w["region_ids"].apply(list)).all()
+        # the driver-built dictionary is one partition: its stage is one file
+        cells_dir = os.path.join(root, "cells")
+        assert sum(f.endswith(".parquet") for f in os.listdir(cells_dir)) == 1
 
         # resume: manifest must not grow (all three stages skipped)
         manifest = os.path.join(root, "manifest.jsonl")

@@ -309,6 +309,26 @@ class TestFlagshipMapParity:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
+    def test_dictionary_broadcast_runs_one_task(self, spark, engine, sf_smoke):
+        """The driver-built cells dictionary is one partition, so reading a
+        flagship_map frame broadcasts it in a one-task JVM job, not one
+        task per core.  The fixture's pages are one file, so the final
+        join over the kernel checkpoint is one task too."""
+        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
+        out = engine.flagship_map(pages)
+        sc, group = spark.sparkContext, "flagship-map-read"
+        sc.setJobGroup(group, group)
+        try:
+            out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        tasks = [
+            sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+            for j in tracker.getJobIdsForGroup(group)
+        ]
+        assert len(tasks) == 2 and tasks == [1, 1]
+
 
 def _dictionary_specs():
     """Region 0 apart; region 1 a background strip holding twelve disjoint
@@ -457,12 +477,15 @@ class TestFlagshipDictionaryFeed:
         assert len(got[0]) == len({r[1] for r in got[0]})  # one row per key
 
     def test_kernel_cells_is_driver_local(self, spark, store_engine):
-        """``kernel_cells`` returns a LocalRelation: reading or broadcasting
-        the dictionary starts no Python worker."""
+        """``kernel_cells`` returns a LocalRelation in one partition (a
+        shuffle-free coalesce): reading or broadcasting the dictionary
+        starts no Python worker."""
         eng = store_engine
         cells = eng.kernel_cells(eng.flagship_kernel(spark.createDataFrame(_dictionary_pages())))
-        analyzed = cells._jdf.queryExecution().analyzed().toString()
-        assert analyzed.startswith("LocalRelation")
+        plan = cells._jdf.queryExecution().analyzed()
+        assert (plan.nodeName(), plan.numPartitions(), plan.shuffle()) == ("Repartition", 1, False)
+        assert plan.child().nodeName() == "LocalRelation"
+        analyzed = plan.toString()
         assert "Python" not in analyzed and "MapInArrow" not in analyzed
 
     def test_no_reuse_across_calls(self, spark, store_engine):

@@ -127,52 +127,6 @@ class TestRefine:
         # each refined id maps to exactly one unrefined id
         assert (merged.groupby("refined_cell_id")["cell_id"].nunique() == 1).all()
 
-    def test_cc_all_algorithms_agree(self, spark, engine, pages, cells, monkeypatch, spy):
-        """The vectorized local path and the pointer-jumping distributed
-        path (forced past LOCAL_CC_MAX_ROWS) produce the identical
-        fixpoint."""
-        import pandas as pd
-
-        from libosmtools_spark.cells import refine as R
-
-        ran = spy(R, "_distributed_components")
-        src = cells.select("cell_key", "cell_id")
-
-        def run():
-            return (
-                R.connected_components(src).toPandas()
-                .sort_values("cell_key")
-                .reset_index(drop=True)
-            )
-
-        local = run()
-        assert not ran
-        monkeypatch.setattr(R, "LOCAL_CC_MAX_ROWS", 0)
-        distributed = run()
-        assert len(ran) == 1
-        pd.testing.assert_frame_equal(local, distributed, check_dtype=False)
-
-    def test_cc_jump_fewer_rounds_on_path(self, spark, monkeypatch, spy):
-        """A long path graph converges in ~log2(n) jump rounds: with the
-        round cap at 10 < 64 nodes the distributed loop still finds one
-        component."""
-        import pandas as pd
-
-        from libosmtools_spark.cells import refine as R
-        from libosmtools_spark.geom.kernels import cell_key
-        import numpy as np
-
-        # 64 horizontally adjacent level-6 cells = one path component
-        lons = -180.0 + 2.8125 * np.arange(64) + 0.1
-        keys = cell_key(np.zeros(64), lons, 6)
-        df = spark.createDataFrame(pd.DataFrame({"cell_key": keys, "cell_id": 1}))
-        ran = spy(R, "_distributed_components")
-        monkeypatch.setattr(R, "LOCAL_CC_MAX_ROWS", 0)
-        monkeypatch.setattr(R, "CC_MAX_ROUNDS", 10)
-        jump = R.connected_components(df).toPandas()
-        assert len(ran) == 1
-        assert jump["refined_cell_id"].nunique() == 1  # converged
-
     def test_handle_cell_changes_repair(self, engine, points, cells):
         """T20 repair — handleCellChanges
         (/root/reference/src/OsmTriangulationRegionStore.cpp:927-943):
@@ -376,10 +330,9 @@ class TestHopDistances:
                     q.append(v)
         return dist
 
-    def test_local_and_loop_agree_with_reference(self, spark, monkeypatch, spy):
+    def test_local_and_loop_agree_with_reference(self, spark):
+        """The driver CSR BFS equals an independent dict-and-deque BFS."""
         from libosmtools_spark.tiles import materialize as M
-
-        import numpy as np
 
         rng = np.random.default_rng(13)
         # a random sparse graph + a disjoint component that must be absent
@@ -390,24 +343,16 @@ class TestHopDistances:
         pairs = [(int(a), int(b)) for a, b in pairs]
         want = self._reference_bfs(pairs, 1)
         edges = self._edges(spark, pairs)
-        ran = spy(M, "_distributed_hop_distances")
-        for bound, n_ran in ((M.LOCAL_BFS_MAX_EDGES, 0), (0, 1)):
-            monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", bound)
-            got = {r["cell_id"]: r["hop"] for r in M.cell_hop_distances(edges, 1).collect()}
-            assert got == want, bound
-            assert len(ran) == n_ran
+        got = {r["cell_id"]: r["hop"] for r in M.cell_hop_distances(edges, 1).collect()}
+        assert got == want
         assert 100 not in want  # disjoint component really excluded
 
-    def test_isolated_source(self, spark, monkeypatch, spy):
+    def test_isolated_source(self, spark):
         from libosmtools_spark.tiles import materialize as M
 
         edges = self._edges(spark, [(5, 6)])
-        ran = spy(M, "_distributed_hop_distances")
-        for bound, n_ran in ((M.LOCAL_BFS_MAX_EDGES, 0), (0, 1)):
-            monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", bound)
-            got = M.cell_hop_distances(edges, 99).collect()
-            assert [(r["cell_id"], r["hop"]) for r in got] == [(99, 0)], bound
-            assert len(ran) == n_ran
+        got = M.cell_hop_distances(edges, 99).collect()
+        assert [(r["cell_id"], r["hop"]) for r in got] == [(99, 0)]
 
 
 class TestCellGraphDiameter:
@@ -452,93 +397,6 @@ class TestCellGraphDiameter:
         row = cell_graph_diameter(edges).collect()[0]
         assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (0, 0, 0)
 
-    def test_distributed_double_sweep_matches_local(self, spark):
-        """The distributed double sweep equals the exact local answer on a
-        path graph and a disconnected graph — one sweep suffices because
-        the double sweep is exact on trees."""
-        from libosmtools_spark.tiles.materialize import cell_graph_double_sweep
-
-        for rows, want in (
-            ([(i, i + 1) for i in range(1, 10)], (10, 9, 9)),
-            ([(1, 2), (2, 3), (3, 4), (10, 11)], (6, 4, 3)),
-        ):
-            edges = spark.createDataFrame(rows, "cell_id_a long, cell_id_b long")
-            row = cell_graph_double_sweep(edges, sweeps=1).collect()[0]
-            assert (row["n_nodes"], row["n_edges"], row["diameter"]) == want
-
-    def test_double_sweep_evaluates_edges_once(self, spark):
-        """The lazy dual-graph plan runs once per call: an identity
-        mapInArrow over the input edges counts every row it passes, and a
-        two-sweep call sees each edge once (not once per count, node
-        distinct and BFS round)."""
-        from libosmtools_spark.tiles.materialize import cell_graph_double_sweep
-
-        seen = spark.sparkContext.accumulator(0)
-
-        def identity(batches):
-            for b in batches:
-                seen.add(b.num_rows)
-                yield b
-
-        rows = [(i, i + 1) for i in range(1, 10)]
-        edges = spark.createDataFrame(rows, "cell_id_a long, cell_id_b long").mapInArrow(
-            identity, "cell_id_a long, cell_id_b long"
-        )
-        row = cell_graph_double_sweep(edges, sweeps=2).collect()[0]
-        assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
-        assert seen.value == len(rows)
-
-    def test_double_sweep_shares_one_symmetric_table(self, spark, spy):
-        """All 2 × ``sweeps`` BFS calls of one double sweep join the same
-        checkpointed symmetric edge table, and the visited union is
-        checkpointed once per BFS, not every round: a two-sweep call on a
-        10-node path runs at most 300 Spark jobs (323 when each BFS built
-        its own table and checkpointed the union every round)."""
-        from libosmtools_spark.tiles import materialize as M
-
-        built = spy(M, "_symmetric_edges")
-        bfs = spy(M, "_distributed_hop_distances")
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 10)], "cell_id_a long, cell_id_b long"
-        )
-        sc, group = spark.sparkContext, "double-sweep-jobs"
-        sc.setJobGroup(group, group)
-        try:
-            row = M.cell_graph_double_sweep(edges, sweeps=2).collect()[0]
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
-        assert len(built) == 1 and len(bfs) == 4
-        assert all(args[0] is bfs[0][0] for args in bfs)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 300
-
-    def test_auto_falls_through_to_loop_past_bound(self, spark, monkeypatch):
-        """Past LOCAL_BFS_MAX_EDGES the diameter degrades to the distributed
-        double-sweep (the reference's approximate-beyond-cutoff posture)
-        and still answers."""
-        from libosmtools_spark.tiles import materialize as M
-
-        monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", 3)
-        ran = []
-        sweep = M.cell_graph_double_sweep
-        monkeypatch.setattr(
-            M, "cell_graph_double_sweep", lambda e: ran.append(1) or sweep(e, sweeps=1)
-        )
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 10)], "cell_id_a long, cell_id_b long"
-        )
-        row = M.cell_graph_diameter(edges).collect()[0]
-        assert ran == [1]
-        assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (10, 9, 9)
-
-    def test_loop_empty(self, spark):
-        from libosmtools_spark.tiles.materialize import cell_graph_double_sweep
-
-        edges = spark.createDataFrame([], "cell_id_a long, cell_id_b long")
-        row = cell_graph_double_sweep(edges).collect()[0]
-        assert (row["n_nodes"], row["n_edges"], row["diameter"]) == (0, 0, 0)
-
-
 class TestDiameterEndpoints:
     """calcDiameter(startNode, endNode) parity — the reference reports the
     argmax ENDPOINTS (include/osmtools/OsmTriangulationRegionStore.h:83);
@@ -572,21 +430,6 @@ class TestDiameterEndpoints:
         row = cell_graph_diameter_endpoints(edges).collect()[0]
         assert row["diameter"] == d == 3
         assert (row["endpoint_a"], row["endpoint_b"]) == (1, 4)
-
-    def test_loop_path_witness_pair(self, spark, monkeypatch, spy):
-        """Past LOCAL_BFS_MAX_EDGES the distributed double-sweep reports the
-        best sweep's witness pair — exact on a path graph (tree)."""
-        from libosmtools_spark.tiles import materialize as M
-
-        monkeypatch.setattr(M, "LOCAL_BFS_MAX_EDGES", 2)
-        ran = spy(M, "cell_graph_double_sweep")
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 8)], "cell_id_a long, cell_id_b long"
-        )
-        row = M.cell_graph_diameter_endpoints(edges).collect()[0]
-        assert len(ran) == 1
-        assert row["diameter"] == 7
-        assert (row["endpoint_a"], row["endpoint_b"]) == (1, 8)
 
     def test_endpoints_match_brute_all_pairs(self, spark):
         """On random graphs (sparse ids, many disconnected) the local path's
@@ -650,3 +493,55 @@ class TestDiameterEndpoints:
         assert len(ran) == 2 * H.APPROX_DIAMETER_RUNS  # sweeps, not 11 BFS
         assert tuple(row) == (11, 10, 9, 1, 10)
         assert cell_graph_diameter(edges).collect()[0]["diameter"] == 9
+
+
+def _path_cells(spark, n):
+    """n horizontally adjacent level-6 cells of one cell id: one component."""
+    from libosmtools_spark.geom.kernels import cell_key
+
+    keys = cell_key(np.zeros(n), -180.0 + 2.8125 * np.arange(n) + 0.1, 6)
+    return spark.createDataFrame([(int(k), 1) for k in keys], "cell_key long, cell_id int")
+
+
+def _path_edges(spark, n):
+    """a path of n edges over cell ids 1..n+1."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n + 1)], "cell_id_a long, cell_id_b long"
+    )
+
+
+#: operator → (module, bound constant, input builder, call, answer check)
+_GATHERS = {
+    "connected_components": (
+        "cells.refine", "LOCAL_CC_MAX_ROWS", _path_cells,
+        lambda mod, df: mod.connected_components(df),
+        lambda rows: sorted({r["refined_cell_id"] for r in rows}) == [1] and len(rows) == 5,
+    ),
+    "cell_hop_distances": (
+        "tiles.materialize", "LOCAL_BFS_MAX_EDGES", _path_edges,
+        lambda mod, df: mod.cell_hop_distances(df, 1),
+        lambda rows: {r["cell_id"]: r["hop"] for r in rows} == {i: i - 1 for i in range(1, 7)},
+    ),
+    "cell_graph_diameter_endpoints": (
+        "tiles.materialize", "LOCAL_BFS_MAX_EDGES", _path_edges,
+        lambda mod, df: mod.cell_graph_diameter_endpoints(df),
+        lambda rows: [tuple(r) for r in rows] == [(6, 5, 5, 1, 6)],
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_GATHERS))
+def test_driver_gather_bound_both_sides(spark, monkeypatch, op):
+    """Each cell-graph operator fetches its input to the driver with one
+    limit(N + 1) job: with the bound N at the input's 5 rows the driver
+    walk answers; one row past the bound it raises ValueError naming it."""
+    import importlib
+
+    module, bound, build, call, check = _GATHERS[op]
+    mod = importlib.import_module(f"libosmtools_spark.{module}")
+    df = build(spark, 5)
+    monkeypatch.setattr(mod, bound, 5)
+    assert check(call(mod, df).collect())
+    monkeypatch.setattr(mod, bound, 4)
+    with pytest.raises(ValueError, match=f"{bound} = 4"):
+        call(mod, df)

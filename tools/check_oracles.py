@@ -3,11 +3,16 @@ and compare row count, column names, and exact sorted-value equality —
 a stricter local version of the driver's CORRECTNESS gate.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+The goldens of ``PINNED_AT_SF001`` are pinned at the sf0.01 tier: at any
+other tier their mismatches are reported as expected and do not fail the
+run.  Every other mismatch, and any error, fails it.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -19,6 +24,9 @@ import __spark_entry__ as entry  # noqa: E402
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+#: queries whose oracles read fixture goldens pinned at the sf0.01 tier
+PINNED_AT_SF001 = ("hop_split", "flagship_page_cells", "stream_region_counts")
 
 
 def norm(v):
@@ -39,7 +47,8 @@ def run(sf_dir: str, only: list[str]):
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    failures = []
+    at_sf001 = os.path.basename(os.path.normpath(sf_dir)) == "sf0.01"
+    failures, expected = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -62,35 +71,41 @@ def run(sf_dir: str, only: list[str]):
             print(f"✗ {name}: oracle error {str(e)[:200]}")
             continue
 
-        s_cols = sorted(spdf.columns)
-        o_cols = sorted(opdf.columns)
-        if s_cols != o_cols:
-            failures.append((name, f"schema mismatch: {s_cols} vs {o_cols}"))
-            print(f"✗ {name}: schema {s_cols} vs {o_cols}")
-            continue
-        if len(spdf) != len(opdf):
-            failures.append((name, f"row count {len(spdf)} vs {len(opdf)}"))
-            print(f"✗ {name}: rows {len(spdf)} vs {len(opdf)}")
-            continue
-        s_rows = sorted(map(tuple, spdf[s_cols].map(norm).itertuples(index=False)))
-        o_rows = sorted(map(tuple, opdf[o_cols].map(norm).itertuples(index=False)))
-        if s_rows != o_rows:
-            bad = next(i for i, (a, b) in enumerate(zip(s_rows, o_rows)) if a != b)
-            failures.append((name, f"value mismatch at sorted row {bad}: {s_rows[bad]} vs {o_rows[bad]}"))
-            print(f"✗ {name}: values differ, e.g. {s_rows[bad]} vs {o_rows[bad]}")
-            continue
-        print(f"✓ {name}: {len(spdf)} rows exact match")
+        msg = mismatch(spdf, opdf)
+        if msg is None:
+            print(f"✓ {name}: {len(spdf)} rows exact match")
+        elif name in PINNED_AT_SF001 and not at_sf001:
+            expected.append((name, msg))
+            print(f"~ {name}: expected mismatch, goldens pinned at sf0.01: {msg[:200]}")
+        else:
+            failures.append((name, msg))
+            print(f"✗ {name}: {msg[:200]}")
 
     spark.stop()
-    print(f"\n{len(failures)} failures")
+    print(f"\n{len(failures)} failures, {len(expected)} expected mismatches")
     for n, msg in failures:
         print(f"  {n}: {msg[:300]}")
     return 1 if failures else 0
 
 
-if __name__ == "__main__":
-    import os
+def mismatch(spdf, opdf) -> str | None:
+    """How the Spark result differs from the oracle's: schema, row count or
+    the first differing sorted row; None when they are equal."""
+    s_cols = sorted(spdf.columns)
+    o_cols = sorted(opdf.columns)
+    if s_cols != o_cols:
+        return f"schema {s_cols} vs {o_cols}"
+    if len(spdf) != len(opdf):
+        return f"row count {len(spdf)} vs {len(opdf)}"
+    s_rows = sorted(map(tuple, spdf[s_cols].map(norm).itertuples(index=False)))
+    o_rows = sorted(map(tuple, opdf[o_cols].map(norm).itertuples(index=False)))
+    if s_rows != o_rows:
+        bad = next(i for i, (a, b) in enumerate(zip(s_rows, o_rows)) if a != b)
+        return f"value mismatch at sorted row {bad}: {s_rows[bad]} vs {o_rows[bad]}"
+    return None
 
+
+if __name__ == "__main__":
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     # fail fast with an actionable message when pointed at a directory
     # without the driver-table parquets (e.g. the repo-local fixtures/sfX
