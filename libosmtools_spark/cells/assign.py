@@ -63,8 +63,9 @@ def build_cells_table_map(
     JVM-only job).
 
     ``input_batch_unique=True`` skips the distinct exchange for callers
-    whose input is already batch-deduplicated near dimension scale (the
-    flagship kernel's batch-unique keys, SpatialEngine.kernel_cells);
+    whose input is already deduplicated per task near dimension scale
+    (the flagship kernel's task-unique keys, SpatialEngine.kernel_cells:
+    tasks × occupied cells at most, whatever the Arrow batch size);
     corpus-scale callers keep distinct-first so the driver gather never
     sees fact-table row counts."""
     import pyarrow as pa

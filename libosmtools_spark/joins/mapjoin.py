@@ -194,14 +194,21 @@ def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict) -> dict:
     return {"n_regions": n_regions, "n_words": n_words, "levels": levels}
 
 
+#: mask bytes unpacked to bits at a time by _masks_to_region_lists (its
+#: bit array is 8× this)
+_DECODE_BYTES = 1 << 20
+
+
 def _masks_to_region_lists(masks: np.ndarray):
     """(n, n_words) int64 bitmasks → (offsets, values) int32 arrays for a
     ``pa.ListArray`` of ascending region ids per row.
 
     Vectorized via unique-mask dictionary decode: points in the same cell
     share the same mask, so distinct masks ≈ distinct occupied cells — the
-    per-row work is a gather, and only the (small) unique set is decoded
-    bit by bit.  This replaces the former JVM decode expression
+    per-row work is a gather, and only the (small) unique set is decoded,
+    by unpacking its bits in blocks of ``_DECODE_BYTES`` mask bytes (no
+    per-mask Python loop, whose cost every Arrow batch paid again for the
+    same cells).  This replaces the former JVM decode expression
     (filter/flatten/transform over sequence(0,62)), a NESTED higher-order
     function that Catalyst evaluates interpreted, outside whole-stage
     codegen — measured as a significant slice of the flagship wall at the
@@ -215,19 +222,19 @@ def _masks_to_region_lists(masks: np.ndarray):
     else:
         u, inv = np.unique(masks, axis=0, return_inverse=True)
     inv = inv.ravel()
-    dec = []
-    for row in u:
-        ids = []
-        for w in range(n_words):
-            m = int(row[w])
-            while m:
-                low = m & -m
-                ids.append(w * 63 + low.bit_length() - 1)
-                m ^= low
-        dec.append(np.asarray(ids, dtype=np.int32))
-    ulen = np.fromiter((len(d) for d in dec), dtype=np.int64, count=len(dec))
+    # bit b of word w is region w·63 + b; row-major nonzero keeps each
+    # mask's ids ascending
+    ub = np.ascontiguousarray(u, dtype="<i8").view(np.uint8)
+    step = max(1, _DECODE_BYTES // ub.shape[1])
+    urow, col = [], []
+    for s in range(0, len(ub), step):
+        r, c = np.nonzero(np.unpackbits(ub[s : s + step], axis=1, bitorder="little"))
+        urow.append(r + s)
+        col.append(c)
+    col = np.concatenate(col)
+    flat = ((col >> 6) * 63 + (col & 63)).astype(np.int32)
+    ulen = np.bincount(np.concatenate(urow), minlength=len(u))
     uoff = np.concatenate(([0], np.cumsum(ulen)))[:-1]
-    flat = np.concatenate(dec)
     lens = ulen[inv]
     offs = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=offs[1:])
@@ -346,8 +353,8 @@ def _raycast_partial(masks, la, lo, rows, cells, partial: PartialCells) -> None:
         np.bitwise_or.at(masks, (q_row[hit], rid // 63), np.int64(1) << (rid % 63))
 
 
-#: flag column of map_spatial_join_text: first row of its cell key in the batch
-BATCH_UNIQUE = "batch_unique"
+#: flag column of map_spatial_join_text: first row of its cell key in the task
+TASK_UNIQUE = "task_unique"
 
 #: named-group form of geom.columns.GEO_REGEX for pyarrow's extract_regex
 #: (RE2 requires named captures; names change nothing about what matches)
@@ -390,7 +397,7 @@ def map_spatial_join_text(
     rings_bcast,
     level: int = 6,
 ) -> DataFrame:
-    """pages(url, text) → (url, cell_key, region_ids, batch_unique): the
+    """pages(url, text) → (url, cell_key, region_ids, task_unique): the
     zero-shuffle flagship kernel with geocode + cell-key derivation INSIDE
     the Arrow batch (RE2 + numpy) instead of JVM expressions upstream.
 
@@ -403,30 +410,35 @@ def map_spatial_join_text(
     ~10.6 s; fusing them removes a whole JVM pass and 24 bytes/row of
     boundary traffic (guide §4.1: control how many columns cross).
 
-    ``batch_unique`` (``BATCH_UNIQUE``) is true on the first row of each
-    distinct cell key (NULL included) within its Arrow batch: filtering on
+    ``task_unique`` (``TASK_UNIQUE``) is true on the first row of each
+    distinct cell key (NULL included) within its task: the task carries
+    the sorted keys it has flagged across its Arrow batches.  Filtering on
     it yields the cells-dictionary feed (build_cells_table_map, which
-    collects it to the driver) at batches × occupied-cells rows, straight
-    from this one pass over the pages.
+    collects it to the driver) at tasks × occupied-cells rows at most,
+    whatever the batch size, straight from this one pass over the pages.
 
     ``rings_bcast`` is not read and is not shipped to the workers: the
     candidate tables carry every edge the kernel ray-casts."""
     n_words = candidates_bcast.value["n_words"]
     url_type = dict(pages.dtypes)["url"]
-    schema = f"url {url_type}, cell_key long, region_ids array<int>, {BATCH_UNIQUE} boolean"
+    schema = f"url {url_type}, cell_key long, region_ids array<int>, {TASK_UNIQUE} boolean"
     index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     def run(batches):
         import pyarrow as pa
 
         tabs = candidates_bcast.value["levels"]
+        seen = np.empty(0, dtype=np.int64)
         for batch in batches:
             la, lo = _geocode_batch(batch.column("text"))
             keys = _keys_of(la, lo, level)
             masks = _resolve_masks(la, lo, keys, tabs, None, index_levels, n_words)
             offs, vals = _masks_to_region_lists(masks)
+            uniq, at = np.unique(keys, return_index=True)
+            new = np.isin(uniq, seen, assume_unique=True, invert=True)
             first = np.zeros(len(keys), dtype=bool)
-            first[np.unique(keys, return_index=True)[1]] = True
+            first[at[new]] = True
+            seen = np.union1d(seen, uniq[new])
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("url"),
@@ -436,30 +448,33 @@ def map_spatial_join_text(
                     ),
                     pa.array(first),
                 ],
-                ["url", "cell_key", "region_ids", BATCH_UNIQUE],
+                ["url", "cell_key", "region_ids", TASK_UNIQUE],
             )
 
     out = pages.select("url", "text").mapInArrow(run, schema)
     restore_key = F.when(F.col("cell_key") >= 0, F.col("cell_key"))
-    return out.select("url", restore_key.alias("cell_key"), "region_ids", BATCH_UNIQUE)
+    return out.select("url", restore_key.alias("cell_key"), "region_ids", TASK_UNIQUE)
 
 
 def page_cell_keys_text(pages: DataFrame, level: int = 6) -> DataFrame:
     """pages(…, text) → distinct-ish (cell_key) rows (NULL for pages with
-    no geocode), one text-only Arrow pass emitting each batch's UNIQUE
+    no geocode), one text-only Arrow pass emitting each task's UNIQUE
     keys — the occupied cells alone, without resolving regions (the
     benchmark's keys-pass layer, perfbench/layers.py; the flagship takes
-    the same keys from its kernel pass, ``BATCH_UNIQUE``).  Callers
-    .distinct() the (tiny) result; the batch-level np.unique just keeps
-    the emitted rows at distinct-cell scale instead of corpus scale."""
+    the same keys from its kernel pass, ``TASK_UNIQUE``).  Callers
+    .distinct() the (tiny) result; the task-level dedup just keeps the
+    emitted rows at distinct-cell scale instead of corpus scale."""
     schema = "cell_key long"
 
     def run(batches):
         import pyarrow as pa
 
+        seen = np.empty(0, dtype=np.int64)
         for batch in batches:
             la, lo = _geocode_batch(batch.column("text"))
-            keys = np.unique(_keys_of(la, lo, level))
+            uniq = np.unique(_keys_of(la, lo, level))
+            keys = uniq[np.isin(uniq, seen, assume_unique=True, invert=True)]
+            seen = np.union1d(seen, keys)
             yield pa.RecordBatch.from_arrays([pa.array(keys, type=pa.int64())], ["cell_key"])
 
     out = pages.select("text").mapInArrow(run, schema)

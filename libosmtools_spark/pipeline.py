@@ -2,7 +2,7 @@
 
 pages → one text-in ``mapInArrow`` kernel (geocode, cell key, region set
 per page; joins/mapjoin.py) → cells dictionary over the occupied cells,
-built on the driver from the kernel's batch-unique keys
+built on the driver from the kernel's task-unique keys
 (cells/assign.build_cells_table_map) → broadcast cell-id join
 (cells/assign.assign_point_cell_ids) → (url, cell_key, cell_id, region_ids).
 One Python pass per query: the kernel is the only Python task of the plan.
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from libosmtools_spark.cells.assign import assign_point_cell_ids, build_cells_table_map
 from libosmtools_spark.index.grid import CELL_INDEX_SCHEMA, _covering_frame, rings_lookup
-from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE, map_spatial_join_text
+from libosmtools_spark.joins.mapjoin import TASK_UNIQUE, map_spatial_join_text
 
 DEFAULT_LEVEL = 6
 #: levels of recursive boundary refinement below the base grid — the
@@ -116,23 +116,23 @@ class SpatialEngine:
         return cls(spark, rings, level)
 
     def flagship_kernel(self, pages: DataFrame) -> DataFrame:
-        """(url, cell_key, region_ids, batch_unique): the one text-in
+        """(url, cell_key, region_ids, task_unique): the one text-in
         mapInArrow pass of the flagship (joins/mapjoin.py) — RE2 geocode,
         cell key AND region set per page inside the Arrow batch, plus the
-        batch-unique key flag that feeds the cells dictionary
+        task-unique key flag that feeds the cells dictionary
         (``kernel_cells``)."""
         return map_spatial_join_text(pages, self.candidates_bcast, None, level=self.level)
 
     def kernel_cells(self, kernel_out: DataFrame) -> DataFrame:
         """(cell_key, cell_id, region_ids) dictionary over the cells a
         ``flagship_kernel`` output occupies, built on the driver from its
-        batch-unique keys (no distinct exchange; the driver collect holds
-        Σ over batches of distinct keys: batches × occupied cells at most,
-        bounded only by ``spark.driver.maxResultSize``).  The call runs the
-        collect job; the returned frame is a driver-local
-        ``LocalRelation``."""
+        task-unique keys (no distinct exchange; the driver collect holds
+        Σ over tasks of distinct keys: tasks × occupied cells at most,
+        whatever the Arrow batch size, and bounded only by
+        ``spark.driver.maxResultSize``).  The call runs the collect job;
+        the returned frame is a driver-local ``LocalRelation``."""
         return build_cells_table_map(
-            kernel_out.filter(F.col(BATCH_UNIQUE)).select("cell_key"),
+            kernel_out.filter(F.col(TASK_UNIQUE)).select("cell_key"),
             self.candidates_bcast,
             None,
             input_batch_unique=True,
@@ -145,7 +145,7 @@ class SpatialEngine:
 
         The ``flagship_kernel`` output is marked for a lazy DISK_ONLY
         ``localCheckpoint``.  The call's one Spark job is the dictionary
-        feed: ``kernel_cells`` collects the flagged batch-unique keys, and
+        feed: ``kernel_cells`` collects the flagged task-unique keys, and
         that job runs the kernel once and stores every checkpoint block
         (a partition a job skipped is computed by Spark's
         ``LocalRDDCheckpointData`` after it).  The dictionary is then built
@@ -183,10 +183,10 @@ def pages_from_html(pages: DataFrame) -> DataFrame:
 
 #: format of run_flagship_staged's stage tables, part of their checkpoint
 #: key: a checkpoint root whose stages were written in another format (the
-#: ``page_regions`` stage before it carried ``batch_unique``, say) is
+#: ``page_regions`` stage with the per-batch ``batch_unique`` flag, say) is
 #: rebuilt instead of read back.  Change it whenever a stage's schema or
 #: meaning changes.
-STAGED_FORMAT = "kernel-batch-unique"
+STAGED_FORMAT = "kernel-task-unique"
 
 
 def run_flagship_staged(
@@ -204,7 +204,7 @@ def run_flagship_staged(
     - stage ``page_regions``: ``flagship_kernel``, written to parquet
       (this IS the expensive fact pass — geocode + kernel);
     - stage ``cells``: ``kernel_cells`` over the stage-1 parquet (its
-      batch-unique keys, read back from the narrow stage output and built
+      task-unique keys, read back from the narrow stage output and built
       into the dictionary on the driver);
     - stage ``flagship``: broadcast join of the two.
 

@@ -122,9 +122,8 @@ def cell_dual_graph(cells: DataFrame) -> DataFrame:
 #: cells, dimension-scale by the same argument)
 LOCAL_BFS_MAX_EDGES = 4_000_000
 
-_DIAMETER_SCHEMA = (
-    "n_nodes long, n_edges long, diameter long, endpoint_a long, endpoint_b long"
-)
+_DIAMETER_COLUMNS = ("n_nodes", "n_edges", "diameter", "endpoint_a", "endpoint_b")
+_DIAMETER_SCHEMA = ", ".join(f"{c} long" for c in _DIAMETER_COLUMNS)
 
 
 def _local_csr(dual_edges: DataFrame):
@@ -190,7 +189,8 @@ def cell_graph_diameter_endpoints(dual_edges: DataFrame) -> DataFrame:
     interleaving; a deterministic rule is the Spark-reproducibility
     analog) — and the seeded double sweep above it, as the reference
     switches (reference src/OsmTriangulationRegionStore.cpp:100-132).
-    More than LOCAL_BFS_MAX_EDGES edges raise ``ValueError``."""
+    More than LOCAL_BFS_MAX_EDGES edges raise ``ValueError``.  The row is
+    a driver-local ``LocalRelation``: reading it runs no Spark job."""
     nodes, indptr, indices, n_edges = _local_csr(dual_edges)
     if len(nodes) == 0:
         row = (0, 0, 0, 0, 0)
@@ -198,7 +198,9 @@ def cell_graph_diameter_endpoints(dual_edges: DataFrame) -> DataFrame:
         u, v, diam = max_hop_pair(indptr, indices)
         a, b = sorted((int(nodes[u]), int(nodes[v])))
         row = (len(nodes), n_edges, diam, a, b)
-    return dual_edges.sparkSession.createDataFrame([row], _DIAMETER_SCHEMA)
+    return dual_edges.sparkSession.createDataFrame(
+        pd.DataFrame([row], columns=_DIAMETER_COLUMNS), _DIAMETER_SCHEMA
+    )
 
 
 def cell_graph_diameter(dual_edges: DataFrame) -> DataFrame:

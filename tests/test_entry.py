@@ -143,5 +143,23 @@ def test_diameter_loop_runs_no_more_jobs_than_diameter(spark, duck):
     _match(spark, duck, "cell_graph_diameter_loop")
 
 
+def test_diameter_row_reads_without_a_job(spark, duck):
+    """The diameter's one-row result is a driver-local LocalRelation:
+    reading it runs no Spark job (a parallelized row ran one task per
+    core), and the query still matches its oracle."""
+    sc = spark.sparkContext
+    entry._doc_cells_dict(spark, SF_DIR)
+    df = entry.queries()["cell_graph_diameter"](spark, SF_DIR)
+    group = "jobs-diameter-read"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 1
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    _match(spark, duck, "cell_graph_diameter")
+
+
 if __name__ == "__main__":
     sys.exit(pytest.main([__file__, "-x", "-q"]))

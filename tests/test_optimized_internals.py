@@ -10,6 +10,8 @@ must be bit-equal to the formulation it replaced.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
 
@@ -34,22 +36,26 @@ def test_mod_mersenne_bit_equal():
     assert (_mod_mersenne(edges) == edges % _MERSENNE).all()
 
 
-def test_masks_to_region_lists_matches_bit_decode():
+def test_masks_to_region_lists_matches_bit_decode(monkeypatch):
+    from libosmtools_spark.joins import mapjoin
     from libosmtools_spark.joins.mapjoin import _masks_to_region_lists
 
     rng = np.random.default_rng(0)
-    for n_words in (1, 2, 3):
-        for n in (0, 1, 5, 3000):
-            masks = rng.integers(0, 1 << 45, size=(n, n_words), dtype=np.int64)
-            masks[rng.random((n, n_words)) < 0.5] = 0
-            offs, vals = _masks_to_region_lists(masks)
-            got = [vals[offs[i]: offs[i + 1]].tolist() for i in range(n)]
-            want = [
-                [w * 63 + b for w in range(n_words) for b in range(63)
-                 if (int(row[w]) >> b) & 1]
-                for row in masks
-            ]
-            assert got == want
+    # the default block, and 16-byte blocks: several unpack blocks per call
+    for block, n_words, n in itertools.product(
+        (mapjoin._DECODE_BYTES, 16), (1, 2, 3), (0, 1, 5, 3000)
+    ):
+        monkeypatch.setattr(mapjoin, "_DECODE_BYTES", block)
+        masks = rng.integers(0, 1 << 63, size=(n, n_words), dtype=np.int64)
+        masks[rng.random((n, n_words)) < 0.5] = 0
+        offs, vals = _masks_to_region_lists(masks)
+        got = [vals[offs[i]: offs[i + 1]].tolist() for i in range(n)]
+        want = [
+            [w * 63 + b for w in range(n_words) for b in range(63)
+             if (int(row[w]) >> b) & 1]
+            for row in masks
+        ]
+        assert got == want
 
 
 def test_hull_diameter_equals_allpairs():

@@ -62,6 +62,9 @@ def test_session_settings_are_constants(spark):
     assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == str(
         session.ARROW_MAX_RECORDS_PER_BATCH
     )
+    assert spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch") == str(
+        session.ARROW_MAX_BYTES_PER_BATCH
+    )
     assert spark.conf.get("spark.cleaner.periodicGC.interval") == session.PERIODIC_GC_INTERVAL
 
 

@@ -183,31 +183,37 @@ class TestStagedFlagship:
         assert open(manifest).read() == before  # no stage re-ran
 
     def test_rebuilds_stage_of_older_format(self, spark, sf_smoke, tmp_path):
-        """A checkpoint root whose ``page_regions`` stage was written before
-        it carried ``batch_unique`` (keyed by the bare input fingerprint)
-        and that stopped before ``cells`` is rebuilt on resume, not read
-        back: the result equals flagship_map."""
+        """A checkpoint root whose ``page_regions`` stage was written in an
+        older format and that stopped before ``cells`` is rebuilt on resume,
+        not read back: the result equals flagship_map.  The older formats:
+        no dictionary-feed flag (keyed by the bare input fingerprint), and
+        the per-batch ``batch_unique`` flag (keyed ``kernel-batch-unique``)."""
         import os
 
+        from libosmtools_spark.joins.mapjoin import TASK_UNIQUE
         from libosmtools_spark.pipeline import SpatialEngine, run_flagship_staged
         from libosmtools_spark.run.checkpoint import CheckpointManager, input_fingerprint
 
-        root = str(tmp_path / "ckpt_old")
         pages_path = os.path.join(sf_smoke, "pages.parquet")
         pages = spark.read.parquet(pages_path)
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
-        old = CheckpointManager(spark, root)
-        old.stage(
-            "page_regions",
-            input_fingerprint(spark, pages_path),
-            lambda: eng.flagship_kernel(pages).drop("batch_unique"),
-        )
-
-        got = run_flagship_staged(spark, sf_smoke, root).toPandas()
+        fp = input_fingerprint(spark, pages_path)
         want = eng.flagship_map(pages).toPandas()
-        g = got.sort_values("url").reset_index(drop=True)
         w = want.sort_values("url").reset_index(drop=True)
-        assert (g["url"] == w["url"]).all()
-        assert (g["cell_id"].to_numpy() == w["cell_id"].to_numpy()).all()
-        assert (g["region_ids"].apply(list) == w["region_ids"].apply(list)).all()
-        assert "batch_unique" in spark.read.parquet(os.path.join(root, "page_regions")).columns
+        older = {
+            fp: lambda: eng.flagship_kernel(pages).drop(TASK_UNIQUE),
+            f"{fp}:kernel-batch-unique": lambda: eng.flagship_kernel(pages).withColumnRenamed(
+                TASK_UNIQUE, "batch_unique"
+            ),
+        }
+        for i, (key, stage) in enumerate(older.items()):
+            root = str(tmp_path / f"ckpt_old{i}")
+            CheckpointManager(spark, root).stage("page_regions", key, stage)
+
+            got = run_flagship_staged(spark, sf_smoke, root).toPandas()
+            g = got.sort_values("url").reset_index(drop=True)
+            assert (g["url"] == w["url"]).all()
+            assert (g["cell_id"].to_numpy() == w["cell_id"].to_numpy()).all()
+            assert (g["region_ids"].apply(list) == w["region_ids"].apply(list)).all()
+            cols = spark.read.parquet(os.path.join(root, "page_regions")).columns
+            assert TASK_UNIQUE in cols and "batch_unique" not in cols

@@ -380,7 +380,7 @@ def _brute_flagship(pdf: pd.DataFrame, level: int):
 
 
 class TestFlagshipDictionaryFeed:
-    """The flagship builds its cells dictionary from the batch-unique keys
+    """The flagship builds its cells dictionary from the task-unique keys
     of its one kernel pass."""
 
     @pytest.fixture(scope="class")
@@ -408,54 +408,61 @@ class TestFlagshipDictionaryFeed:
         ids = {r[2]: r[1] for r in g}
         assert ids[(1, 10)] < ids[(1, 2)]
 
-    def test_gather_is_batch_unique_keys(self, spark, store_engine):
-        """With several Arrow batches the dictionary input holds exactly
-        Σ over batches of distinct keys (NULL counted once per batch)."""
-        from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE
+    def test_gather_is_task_unique_keys(self, spark, store_engine):
+        """With several Arrow batches per task the dictionary input holds
+        exactly Σ over tasks of distinct keys (NULL counted once per task):
+        the feed does not grow with the number of batches."""
+        from libosmtools_spark.joins.mapjoin import TASK_UNIQUE
         from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
 
         eng = store_engine
         pdf = _dictionary_pages()
-        pages = spark.createDataFrame(pdf).coalesce(1)  # one partition, pdf order
-        key_of = {
-            r.url: r.cell_key
-            for r in with_cell_key(geocode_pages(pages), level=eng.level)
-            .select("url", "cell_key")
-            .collect()
-        }
-        keys = pd.Series([key_of[u] for u in pdf["url"]], dtype="object")
         batch = 16
-        want = sum(
-            keys.iloc[i : i + batch].nunique(dropna=False) for i in range(0, len(keys), batch)
-        )
         conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
         old = spark.conf.get(conf)
         spark.conf.set(conf, str(batch))
         try:
-            got = eng.flagship_kernel(pages).filter(BATCH_UNIQUE).count()
-            out = eng.flagship_map(pages).toPandas()
+            for parts in (1, 2):
+                pages = spark.createDataFrame(pdf).coalesce(parts)
+                keyed = (
+                    with_cell_key(geocode_pages(pages), level=eng.level)
+                    .select("cell_key", F.spark_partition_id().alias("part"))
+                    .collect()
+                )
+                per_task = {}
+                for r in keyed:
+                    per_task.setdefault(r.part, []).append(r.cell_key)
+                assert len(per_task) == parts
+                assert all(len(k) > 2 * batch for k in per_task.values())
+                distinct = len({r.cell_key for r in keyed})
+                got = eng.flagship_kernel(pages).filter(TASK_UNIQUE).count()
+                assert got == sum(len(set(k)) for k in per_task.values())
+                if parts == 1:
+                    assert got == distinct
+                else:
+                    assert distinct < got < len(keyed)
+                out = eng.flagship_map(pages).toPandas()
+                assert len(out) == len(pdf)
         finally:
             spark.conf.set(conf, old)
-        assert len(keys) > 4 * batch
-        assert got == want
-        assert keys.nunique(dropna=False) < got < len(keys)
-        assert len(out) == len(pdf)
 
-    def test_batch_unique_feed_equals_distinct_first(self, spark, store_engine):
-        """Both sides of ``input_batch_unique``: the kernel's batch-unique
-        keys (several per key, one per Arrow batch) and the distinct-first
-        feed over every page's key give the same dictionary."""
+    def test_task_unique_feed_equals_distinct_first(self, spark, store_engine):
+        """Both sides of ``input_batch_unique``: the kernel's task-unique
+        keys (several per key over two tasks, each of several Arrow
+        batches) and the distinct-first feed over every page's key give
+        the same dictionary."""
         from libosmtools_spark.cells.assign import build_cells_table_map
-        from libosmtools_spark.joins.mapjoin import BATCH_UNIQUE
+        from libosmtools_spark.joins.mapjoin import TASK_UNIQUE
 
         eng = store_engine
-        pages = spark.createDataFrame(_dictionary_pages()).coalesce(1)
+        pages = spark.createDataFrame(_dictionary_pages()).coalesce(2)
         conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
         old = spark.conf.get(conf)
         spark.conf.set(conf, "16")
         try:
             kernel = eng.flagship_kernel(pages).cache()
-            flagged = kernel.filter(BATCH_UNIQUE)
+            flagged = kernel.filter(TASK_UNIQUE)
+            assert kernel.rdd.getNumPartitions() == 2
             assert flagged.count() > flagged.select("cell_key").distinct().count()
             feeds = [
                 build_cells_table_map(
@@ -475,6 +482,32 @@ class TestFlagshipDictionaryFeed:
             spark.conf.set(conf, old)
         assert got[0] == got[1]
         assert len(got[0]) == len({r[1] for r in got[0]})  # one row per key
+
+    def test_wide_pages_batches_follow_byte_bound(self, spark, store_engine):
+        """~64 KB pages: every Arrow batch a Python task receives holds the
+        session's byte bound (Spark closes a batch on the row that reaches
+        it, so at most one row past it), several batches per task, and the
+        flagship still equals the brute-force reference."""
+        from libosmtools_spark.session import ARROW_MAX_BYTES_PER_BATCH
+
+        eng = store_engine
+        pdf = _dictionary_pages()
+        pdf["text"] = pdf["text"] + " " + "x" * (64 * 1024)
+        pages = spark.createDataFrame(pdf).coalesce(2)
+
+        def probe(batches):
+            import pyarrow as pa
+
+            for b in batches:
+                yield pa.RecordBatch.from_pydict({"nbytes": [b.nbytes], "rows": [b.num_rows]})
+
+        sizes = pages.select("url", "text").mapInArrow(probe, "nbytes long, rows long").toPandas()
+        row_bytes = int(pdf["text"].str.len().max()) + 64
+        # two tasks of ~4 MB: the bound splits each into at least two batches
+        assert len(sizes) >= 2 * 2
+        assert sizes["rows"].sum() == len(pdf)
+        assert (sizes["nbytes"] <= ARROW_MAX_BYTES_PER_BATCH + row_bytes).all()
+        assert _flagship_rows(eng.flagship_map(pages)) == _brute_flagship(pdf, eng.level)[0]
 
     def test_kernel_cells_is_driver_local(self, spark, store_engine):
         """``kernel_cells`` returns a LocalRelation in one partition (a
