@@ -598,8 +598,8 @@ def q_knn_ring(spark, sf_dir):
 
 
 def q_knn_wrap(spark, sf_dir):
-    """kNN under the ±180°-wrapped degree metric (geom.kernels
-    .wrap_sq_euclid_deg): neighbors across the antimeridian rank by true
+    """kNN under the ±180°-wrapped degree metric (geom.columns
+    .wrap_sq_euclid_deg_col): neighbors across the antimeridian rank by true
     angular separation instead of flat-space distance."""
     from libosmtools_spark.knn.ring import knn_join
 
@@ -1137,7 +1137,7 @@ def q_cell_point_stats(spark, sf_dir):
     cells = _doc_cells_dict(spark, sf_dir)
     pts = with_cell_key(_points(spark, sf_dir), level=LEVEL)
     pc = assign_point_cell_ids(pts, cells)
-    return cell_stats(pc.select("doc_id", "cell_id"), exact_median=True)
+    return cell_stats(pc.select("doc_id", "cell_id"))
 
 
 def q_hop_distances(spark, sf_dir):

@@ -51,10 +51,10 @@ def build_cells_table_map(
     flagship join right after, and the reference holds the analogous
     cellIdToCellList in memory), so it is built on the driver: one job
     collects the keys (``toArrow``), and the driver computes cell centers
-    (the exact cell_center_cols arithmetic, same IEEE op order), resolves
-    their region sets with the flagship's ``_resolve_masks`` kernel and
-    interns ids with ``intern_region_sets`` (``rings_bcast`` is not read:
-    the candidate tables carry the clipped edges).  A NULL key (page
+    (the midpoint, in the oracle SQL's op order), resolves their region
+    sets with the flagship's ``_resolve_masks`` kernel and interns ids
+    with ``intern_region_sets`` (``rings_bcast`` is not read: the
+    candidate tables carry the clipped edges).  A NULL key (page
     without a geocode) gets the empty set and cell 0.  The call itself
     runs that job; the returned frame is a ONE-partition ``LocalRelation``
     (not one partition per core), so reading or broadcasting it starts no
@@ -80,9 +80,9 @@ def build_cells_table_map(
     col = keys_df.toArrow().column(0)
     keys = np.unique(pc.fill_null(col, -1).to_numpy())
     n = len(keys)
-    # centers via the EXACT cell_center_cols formula — same op order
-    # (iy·size − 90.0) + size/2, so the doubles feeding the ray-cast
-    # are bit-identical to the JVM-computed ones
+    # centers in one fixed op order, (iy·size − 90.0) + size/2 — the
+    # oracle SQL's CK_CLAT/CK_CLON order — so the doubles feeding the
+    # ray-cast are bit-identical to the oracle's
     la = np.full(n, np.nan)
     lo = np.full(n, np.nan)
     valid = keys >= 0

@@ -4,11 +4,9 @@
 The reference refines triangles until no face is "bad" under a pluggable
 criterion, capped at 10,000 rounds
 (/root/reference/include/osmtools/OsmTriangulationRegionStore.h:481-536);
-criteria include max geodesic centroid distance / edge length
-(/root/reference/include/osmtools/MeshCriteria.h:126-227), edge-length ratio
-with a tiny-triangle guard (:277-284), and a Lipschitz size-slope vs
-neighbors (:300-354).  Cell-split criteria bound triangle count or cell
-bbox diagonal (/root/reference/src/CellCriteria.cpp:6-97).
+the grid keeps the two cell-split criteria the driver queries use, which
+bound the point count or the bbox diagonal of a cell (libosmtools
+src/CellCriteria.cpp:6-97).
 
 Grid analogs — each criterion is a function cells → boolean Column "is_bad";
 the subdivision loop replaces every bad cell with its 4 children (T17's
@@ -54,83 +52,6 @@ def count_criterion(max_count: int, count_col: str = "n_points") -> "callable":
     return is_bad
 
 
-def centroid_distance_criterion(max_dist_m: float) -> "callable":
-    """is_bad: max geodesic distance from the cell's center to its corners
-    exceeds ``max_dist_m`` — CentroidDistanceMeshCriteria
-    (/root/reference/include/osmtools/MeshCriteria.h:126-167: max centroid→
-    vertex geodesic distance > maxDist ⇒ IMPERATIVELY_BAD); the grid cell's
-    vertices are its 4 corners."""
-    from libosmtools_spark.geom.columns import cell_center_cols
-
-    def is_bad(cells: DataFrame) -> Column:
-        key = F.col("cell_key")
-        mn_lat, mx_lat, mn_lon, mx_lon = cell_bounds_cols(key)
-        clat, clon = cell_center_cols(key)
-        d = None
-        for a, o in ((mn_lat, mn_lon), (mn_lat, mx_lon), (mx_lat, mn_lon), (mx_lat, mx_lon)):
-            h = haversine_m_col(clat, clon, a, o)
-            d = h if d is None else F.greatest(d, h)
-        return d > F.lit(max_dist_m)
-
-    return is_bad
-
-
-def _cell_edge_lengths_m(key: Column) -> tuple[Column, Column, Column]:
-    """Geodesic lengths of a cell's distinct edges: bottom lat-parallel,
-    top lat-parallel (shorter toward the poles), and the meridian side
-    (both sides equal)."""
-    mn_lat, mx_lat, mn_lon, mx_lon = cell_bounds_cols(key)
-    e_bottom = haversine_m_col(mn_lat, mn_lon, mn_lat, mx_lon)
-    e_top = haversine_m_col(mx_lat, mn_lon, mx_lat, mx_lon)
-    e_side = haversine_m_col(mn_lat, mn_lon, mx_lat, mn_lon)
-    return e_bottom, e_top, e_side
-
-
-def edge_length_criterion(max_len_m: float) -> "callable":
-    """is_bad: longest cell edge exceeds ``max_len_m`` —
-    EdgeLengthMeshCriteria (/root/reference/include/osmtools/MeshCriteria.h:169-227:
-    max geodesic edge length > maxLength)."""
-
-    def is_bad(cells: DataFrame) -> Column:
-        e_bottom, e_top, e_side = _cell_edge_lengths_m(F.col("cell_key"))
-        return F.greatest(e_bottom, e_top, e_side) > F.lit(max_len_m)
-
-    return is_bad
-
-
-def edge_length_ratio_criterion(max_ratio: float, tiny_m: float = 1.0) -> "callable":
-    """is_bad: longest/shortest edge ratio exceeds ``max_ratio``, EXCEPT for
-    tiny cells — EdgeLengthRatioMeshCriteria with the tiny-triangle guard
-    (/root/reference/include/osmtools/MeshCriteria.h:229-290; guard
-    :277-284: when every edge is under ~1 m, q is forced to 1.0 because
-    refining such cells is useless).  Near the poles lon edges shrink by
-    cos(lat), so this is the criterion that catches grid-cell aspect skew."""
-
-    def is_bad(cells: DataFrame) -> Column:
-        e_bottom, e_top, e_side = _cell_edge_lengths_m(F.col("cell_key"))
-        eps = F.lit(2.220446049250313e-16)  # reference: clamp to epsilon
-        longest = F.greatest(F.greatest(e_bottom, e_top, e_side), eps)
-        shortest = F.greatest(F.least(e_bottom, e_top, e_side), eps)
-        q = F.when((longest < F.lit(tiny_m)) & (shortest < F.lit(tiny_m)), F.lit(1.0)).otherwise(
-            longest / shortest
-        )
-        return q > F.lit(max_ratio)
-
-    return is_bad
-
-
-def with_cell_id_criterion(inner: "callable", id_col: str = "cell_id") -> "callable":
-    """Restrict ``inner`` to cells that actually carry a cell id —
-    RefineTrianglesWithCellIdMeshCriteria
-    (/root/reference/include/osmtools/MeshCriteria.h:356-384: faces without
-    an assigned cellId are never refined)."""
-
-    def is_bad(cells: DataFrame) -> Column:
-        return F.col(id_col).isNotNull() & inner(cells)
-
-    return is_bad
-
-
 def refine_until_good(
     cells: DataFrame,
     is_bad,
@@ -150,9 +71,8 @@ def refine_until_good(
     the parent's count and the loop would split all the way to
     ``max_level``.  The canonical refresh re-joins occupancy from a
     precomputed per-level count table (see ``__spark_entry__.
-    q_refine_fixpoint``); key-only criteria (diag/edge/centroid) need
-    none."""
-    from libosmtools_spark.geom.columns import cell_key_col
+    q_refine_fixpoint``); a key-only criterion (``diag_criterion``)
+    needs none."""
     from libosmtools_spark.session import release_local_checkpoint
 
     df = cells

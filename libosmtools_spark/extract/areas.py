@@ -180,15 +180,6 @@ def extract_way_polygons(
     )
 
 
-def rejected_ways(nodes: DataFrame, ways: DataFrame, extraction_types: int = ET_DEFAULT) -> DataFrame:
-    """The anti-join route: tag-matching closed ways dropped for missing
-    nodes (reject accounting, /root/reference/src/AreaExtractor.cpp:198-204)."""
-    kept = ways.filter(closed_way_filter() & tag_filter(extraction_types))
-    exploded = kept.select("way_id", F.explode("refs").alias("node_id"))
-    missing = exploded.join(nodes, "node_id", "left_anti")
-    return missing.select("way_id").distinct()
-
-
 # ---------------------------------------------------------------------------
 # S8 — role routing (/root/reference/src/AreaExtractor.cpp:305-313)
 # ---------------------------------------------------------------------------

@@ -1,11 +1,12 @@
-"""Spark Column expressions mirroring the numpy kernels.
+"""Spark Column expressions for the grid: cell keys, cell bounds, cell
+rings, distances and the page geocode.
 
 These stay entirely JVM-side (whole-stage codegen): cell-key assignment is
 pure arithmetic, the deliberate replacement of the reference's mutex-guarded
 point-location walk
 (/root/reference/include/osmtools/TriangulationGridLocater.h:125-141).
-Each expression is the exact Column translation of the corresponding
-``geom.kernels`` function — parity is asserted in tests/test_columns.py.
+The cell-key expression is the exact Column translation of
+``geom.kernels.cell_key`` — parity is asserted in tests/test_spatial_join.py.
 """
 
 from __future__ import annotations
@@ -54,19 +55,6 @@ def cell_key_sql(lat_expr: str, lon_expr: str, level: int) -> str:
     )
 
 
-def cell_center_cols(key: Column) -> tuple[Column, Column]:
-    """key → (center_lat, center_lon) Columns (midpoint sample point, the
-    grid analog of the face centroid,
-    /root/reference/src/OsmTriangulationRegionStore.cpp:276-278)."""
-    level = F.shiftright(key, _LEVEL_SHIFT)
-    iy = F.shiftright(key, _IY_SHIFT).bitwiseAND(F.lit((1 << (_LEVEL_SHIFT - _IY_SHIFT)) - 1).cast("long"))
-    ix = key.bitwiseAND(F.lit((1 << _IY_SHIFT) - 1).cast("long"))
-    size = F.lit(180.0) / F.pow(F.lit(2.0), level.cast("double"))
-    clat = iy.cast("double") * size - F.lit(90.0) + size / 2
-    clon = ix.cast("double") * size - F.lit(180.0) + size / 2
-    return clat, clon
-
-
 def cell_bounds_cols(key: Column) -> tuple[Column, Column, Column, Column]:
     """key → (min_lat, max_lat, min_lon, max_lon) Columns."""
     level = F.shiftright(key, _LEVEL_SHIFT)
@@ -79,10 +67,12 @@ def cell_bounds_cols(key: Column) -> tuple[Column, Column, Column, Column]:
 
 
 def ring_keys_col(key: Column, k: int) -> Column:
-    """Chebyshev-ring neighbor keys (incl. self) as an array Column — the
-    pure-JVM mirror of ``kernels.cell_ring``: lon wraps, lat clamps (out-of-
-    range rows dropped), deduplicated.  Keeps ring expansion inside
-    whole-stage codegen (no Python in the kNN hot path)."""
+    """Chebyshev-ring neighbor keys (incl. self) as an array Column: every
+    cell at the key's level within grid distance ``k`` — lon wraps, lat
+    clamps (out-of-range rows dropped), deduplicated.  The grid-native cell
+    dual graph (libosmtools src/OsmTriangulationRegionStore.cpp:382-429);
+    keeps ring expansion inside whole-stage codegen (no Python in the kNN
+    hot path)."""
     level = F.shiftright(key, _LEVEL_SHIFT)
     iy = F.shiftright(key, _IY_SHIFT).bitwiseAND(F.lit((1 << (_LEVEL_SHIFT - _IY_SHIFT)) - 1).cast("long"))
     ix = key.bitwiseAND(F.lit((1 << _IY_SHIFT) - 1).cast("long"))
@@ -106,16 +96,25 @@ def ring_keys_col(key: Column, k: int) -> Column:
 
 
 def sq_euclid_deg_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """kNN ranking metric (see kernels.sq_euclid_deg for the rationale)."""
+    """Squared euclidean distance in snapped degree space — the kNN ranking
+    metric.
+
+    kNN ranks by THIS metric (not haversine): products and sums of
+    identical IEEE-754 doubles are bit-identical across engines, which
+    makes kNN rankings reproducible in the DuckDB oracle.  Documented
+    deviation from the reference's geodesic metric."""
     dlat = lat1 - lat2
     dlon = lon1 - lon2
     return dlat * dlat + dlon * dlon
 
 
 def wrap_sq_euclid_deg_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """JVM mirror of kernels.wrap_sq_euclid_deg (±180°-wrapped Δlon).
-    No NULLs reach the F.least (both args derived from the same inputs),
-    so its skip-NULL semantics cannot bite."""
+    """``sq_euclid_deg_col`` with the longitude difference wrapped around
+    ±180° (min(|Δlon|, 360−|Δlon|)) — the geodesically honest variant near
+    the antimeridian.  Still built only from exact-or-correctly-rounded
+    single float ops, so rankings reproduce bit-identically in the SQL
+    oracle.  No NULLs reach the F.least (both args derived from the same
+    inputs), so its skip-NULL semantics cannot bite."""
     dlat = lat1 - lat2
     dlon = F.abs(lon1 - lon2)
     dlon = F.least(dlon, F.lit(360.0) - dlon)
@@ -123,6 +122,9 @@ def wrap_sq_euclid_deg_col(lat1: Column, lon1: Column, lat2: Column, lon2: Colum
 
 
 def haversine_m_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
+    """Great-circle distance in meters — stands in for the reference's
+    GeodesicDistanceCalculator (DCT_GEODESIC_ACCURATE, libosmtools
+    src/CellCriteria.cpp:34)."""
     from libosmtools_spark.geom.kernels import EARTH_RADIUS_M
 
     rlat1, rlat2 = F.radians(lat1), F.radians(lat2)

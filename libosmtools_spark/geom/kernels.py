@@ -8,8 +8,8 @@ coordinate snapping (snapPoints, /root/reference/src/OsmGridRegionTree.cpp:96-10
 ray-casting point-in-polygon with a half-open edge rule (the engine's
 replacement for CGAL exact predicates,
 /root/reference/include/osmtools/OsmTriangulationRegionStore.h:199-205),
-geodesic distance, and cell-ring expansion (the adjacency contract of the
-cell dual graph, /root/reference/src/OsmTriangulationRegionStore.cpp:382-429).
+antimeridian frames and the quadtree covering of the region store.
+Distances and cell-ring expansion run JVM-side (``geom.columns``).
 
 Everything here is deterministic, vectorized over numpy arrays, and safe to
 call inside Arrow/pandas UDF batches.
@@ -37,14 +37,6 @@ SNAP_SCALE = 1_000_000  # 1e-6 degree fixed-point, mirrors sserialize GeoPoint
 MAX_LEVEL = 26
 _LEVEL_SHIFT = 55
 _IY_SHIFT = 28
-
-#: cell 0 is, by definition, "contained in no region"
-#: (/root/reference/src/OsmTriangulationRegionStore.cpp:990-996, :1113-1114)
-EMPTY_CELL_ID = 0
-
-#: reference sentinel for faces of the infinite/outside domain
-#: (/root/reference/src/OsmTriangulationRegionStore.cpp:761-762)
-INFINITE_CELL_ID = 0xFFFFFFFF
 
 EARTH_RADIUS_M = 6_371_008.8  # IUGG mean radius
 
@@ -162,92 +154,6 @@ def cell_center(key):
     return (min_lat + max_lat) / 2.0, (min_lon + max_lon) / 2.0
 
 
-def cell_children(key):
-    """One level down: the 2x2 children (quadtree split, reference default
-    policy /root/reference/src/OsmGridRegionTree.cpp:70)."""
-    level, iy, ix = unpack_key(key)
-    level = int(np.asarray(level).reshape(-1)[0])
-    if level >= MAX_LEVEL:
-        raise ValueError("cannot subdivide beyond MAX_LEVEL")
-    iy2, ix2 = iy * 2, ix * 2
-    dy, dx = np.meshgrid([0, 1], [0, 1], indexing="ij")
-    return pack_key(level + 1, (iy2[..., None] + dy.ravel()), (ix2[..., None] + dx.ravel())).ravel()
-
-
-def cell_parent(key, levels_up: int = 1):
-    level, iy, ix = unpack_key(key)
-    lvl = level - levels_up
-    return pack_key(0, iy >> levels_up, ix >> levels_up) | (lvl << _LEVEL_SHIFT)
-
-
-def cell_ring(key: int, k: int):
-    """All cells at the key's level with Chebyshev grid distance ≤ k
-    (k=0 → the cell itself).  Longitude wraps; latitude clamps at the poles.
-
-    This is the neighbor expansion the kNN operator walks — the grid-native
-    version of the cell dual graph
-    (/root/reference/src/OsmTriangulationRegionStore.cpp:382-429).
-    Returns a 1-D int64 array (deduplicated, sorted).
-    """
-    level, iy, ix = unpack_key(np.int64(key))
-    level, iy, ix = int(level), int(iy), int(ix)
-    nlat = 1 << level
-    nlon = 2 << level
-    ys = np.arange(max(0, iy - k), min(nlat - 1, iy + k) + 1, dtype=np.int64)
-    xs = np.arange(ix - k, ix + k + 1, dtype=np.int64) % nlon
-    yy, xx = np.meshgrid(ys, xs, indexing="ij")
-    keys = pack_key(level, yy.ravel(), xx.ravel())
-    return np.unique(keys)
-
-
-# ---------------------------------------------------------------------------
-# distances
-# ---------------------------------------------------------------------------
-
-def haversine_m(lat1, lon1, lat2, lon2):
-    """Great-circle distance in meters, vectorized.
-
-    Stands in for the reference's GeodesicDistanceCalculator
-    (DCT_GEODESIC_ACCURATE, /root/reference/src/CellCriteria.cpp:34)."""
-    lat1, lon1, lat2, lon2 = (np.radians(np.asarray(a, dtype=np.float64)) for a in (lat1, lon1, lat2, lon2))
-    dlat = lat2 - lat1
-    dlon = lon2 - lon1
-    h = np.sin(dlat / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2.0) ** 2
-    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
-
-
-def sq_euclid_deg(lat1, lon1, lat2, lon2):
-    """Squared euclidean distance in snapped degree space.
-
-    The kNN operator ranks by THIS metric (not haversine): products and sums
-    of identical IEEE-754 doubles are bit-identical across engines, which
-    makes kNN rankings reproducible in the DuckDB oracle.  Documented
-    deviation from the reference's geodesic metric."""
-    lat1, lon1, lat2, lon2 = (np.asarray(a, dtype=np.float64) for a in (lat1, lon1, lat2, lon2))
-    dlat = lat1 - lat2
-    dlon = lon1 - lon2
-    return dlat * dlat + dlon * dlon
-
-
-def wrap_sq_euclid_deg(lat1, lon1, lat2, lon2):
-    """sq_euclid_deg with the longitude difference wrapped around ±180°
-    (min(|Δlon|, 360−|Δlon|)) — the geodesically honest variant near the
-    antimeridian.  Still built only from exact-or-correctly-rounded single
-    float ops, so rankings reproduce bit-identically in the SQL oracle."""
-    lat1, lon1, lat2, lon2 = (np.asarray(a, dtype=np.float64) for a in (lat1, lon1, lat2, lon2))
-    dlat = lat1 - lat2
-    dlon = np.abs(lon1 - lon2)
-    dlon = np.minimum(dlon, 360.0 - dlon)
-    return dlat * dlat + dlon * dlon
-
-
-def cell_diag_m(key):
-    """Geodesic diagonal of a cell — the refinement criterion quantity
-    (FixedSizeDiagRefiner, /root/reference/src/OsmGridRegionTree.cpp:13-30)."""
-    min_lat, max_lat, min_lon, max_lon = cell_bounds(key)
-    return haversine_m(min_lat, min_lon, max_lat, max_lon)
-
-
 # ---------------------------------------------------------------------------
 # point-in-polygon (G6 exact refine)
 # ---------------------------------------------------------------------------
@@ -342,46 +248,6 @@ def clip_edges_for_cell(edges: np.ndarray, min_lat, max_lat, min_lon) -> np.ndar
     return edges[keep & ~west]
 
 
-def point_in_edges(lats, lons, edges: np.ndarray, frame: tuple | None = None):
-    """Ray-cast parity against an explicit (k,4) edge set (same half-open
-    rule as point_in_ring).  Callers are responsible for the edge set being
-    parity-preserving for these points (see clip_edges_for_cell).  Probe
-    lons are shifted into the REGION's continuous frame when the edges came
-    from an antimeridian-wrapped region (identity otherwise).
-
-    ``frame``: the owning region's (lon_lo, lon_hi) continuous frame.
-    Callers holding the region should pass it: re-deriving the frame from a
-    clipped edge SUBSET is wrong when the subset's max lon sits exactly at
-    180.0 for a wrapped region — the `hi <= 180` identity check would then
-    skip the probe shift and the parity would be cast against probes 360°
-    away.  The subset-derived fallback remains for bare edge sets."""
-    ys = np.asarray(lats, dtype=np.float64)
-    xs = np.asarray(lons, dtype=np.float64)
-    if edges.shape[0] == 0:
-        return np.zeros(ys.shape[0], dtype=bool)
-    if frame is not None:
-        elo, ehi = frame
-    else:
-        elo = float(min(edges[:, 1].min(), edges[:, 3].min()))
-        ehi = float(max(edges[:, 1].max(), edges[:, 3].max()))
-    xs = wrap_lons_to_frame(xs, elo, ehi)
-    y1 = edges[:, 0][None, :]
-    x1 = edges[:, 1][None, :]
-    y2 = edges[:, 2][None, :]
-    x2 = edges[:, 3][None, :]
-    n = ys.shape[0]
-    m = edges.shape[0]
-    chunk = max(64, _PIP_CHUNK_ELEMS // m)
-    if n <= chunk:
-        return _point_in_ring_block(ys[:, None], xs[:, None], y1, x1, y2, x2)
-    out = np.empty(n, dtype=bool)
-    for i in range(0, n, chunk):
-        out[i : i + chunk] = _point_in_ring_block(
-            ys[i : i + chunk, None], xs[i : i + chunk, None], y1, x1, y2, x2
-        )
-    return out
-
-
 def point_in_rings(lats, lons, outer_rings, inner_rings=()):
     """PIP against a polygon-with-holes: inside any outer AND not inside any
     inner (/root/reference/include/osmtools/OsmGridRegionTree.h:34-63 —
@@ -445,20 +311,6 @@ def segment_intersects_rect(y1, x1, y2, x2, min_lat, max_lat, min_lon, max_lon):
         t0 = np.where(enter, np.maximum(t0, r), t0)
         t1 = np.where(leave, np.minimum(t1, r), t1)
     return ok & (t0 <= t1)
-
-
-def crosses_antimeridian(lon1, lon2):
-    """True where a segment crosses the ±180° line — such segments are
-    skipped in the reference's CDT segment extraction
-    (/root/reference/src/OsmTriangulationRegionStore.cpp:819-822).  The
-    reference applies this ONLY when extracting triangulation constraint
-    segments; the region itself still participates in every query.  The
-    coverage/PIP kernels below therefore do NOT use this guard — they
-    handle wrapped regions via the continuous-frame convention
-    (unwrap_rings) instead."""
-    lon1 = norm_lon(lon1)
-    lon2 = norm_lon(lon2)
-    return np.abs(lon1 - lon2) > 180.0
 
 
 # ---------------------------------------------------------------------------

@@ -319,7 +319,7 @@ def _raycast_partial(masks, la, lo, rows, cells, partial: PartialCells) -> None:
     lon shifted into the pair's region frame with exactly
     ``kernels.wrap_lons_to_frame``'s arithmetic (identity inside [-180,
     180]), and each probe meets its pair's edges through
-    ``kernels._ray_crossings`` (the predicate of ``point_in_edges``, same
+    ``kernels._ray_crossings`` (the predicate of ``point_in_ring``, same
     operands), so hits are bit-identical to a per-cell ray-cast.  Probes
     are made for about ``kernels._PIP_CHUNK_ELEMS`` at a time, and their
     edges gathered in chunks of as many (probe, edge) elements, so memory

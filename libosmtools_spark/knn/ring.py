@@ -2,7 +2,7 @@
 
 Two physical strategies behind one logical contract — for each query point
 the k nearest *other* points under the squared-euclidean-degree metric (see
-geom.kernels.sq_euclid_deg for why not haversine), ties broken by neighbor
+geom.columns.sq_euclid_deg_col for why not haversine), ties broken by neighbor
 id ascending:
 
 - ``knn_brute``: the reference-index posture — when the point set is
@@ -250,12 +250,3 @@ def knn_join(
     if corpus is None:
         return knn_ring(points, id_col, k, level, lat, lon, metric)
     return knn_brute(points, corpus, id_col, k, lat, lon, metric)
-
-
-def knn_neighbor_lists(knn_rows: DataFrame, id_col: str) -> DataFrame:
-    """(id, neighbor_id, rank) → (id, neighbor_ids array ordered by rank)."""
-    return knn_rows.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rank", "neighbor_id"))), lambda s: s["neighbor_id"]
-        ).alias("neighbor_ids")
-    )

@@ -1,13 +1,11 @@
 """Multimodal column plumbing (training-data extension).
 
 Images/audio/video are opaque ``binary`` columns with typed metadata.  The
-Spark-side machinery — schemas, Arrow batch shapes, partition-aware
-mapInPandas — is real and tested.  The real-decoder slot handles binary
-netpbm (P5/P6) and uncompressed 24-bit BMP end-to-end in pure numpy (no
-codec libs needed), takes Pillow for every other image format when a
-cluster image ships it, and raises ``DecodeUnavailable`` otherwise — at
-which point callers fall back to the documented deterministic stub (so the
-pipeline stays shape-testable on codec-less containers).
+Spark-side machinery — the media schema, Arrow batch shapes,
+partition-aware mapInPandas — is real and tested.  No codec is installed
+here, so features come from a documented deterministic stub: the pipeline
+stays shape-testable, and a real decoder slots in where ``_decode_stub`` is
+called.
 """
 
 from __future__ import annotations
@@ -18,153 +16,11 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-class DecodeUnavailable(NotImplementedError):
-    """Raised by the real-decoder slot: codecs are not installed here."""
-
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),   # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, sha256 string, "
     "feat array<float>, ok boolean"
 )
-
-
-def _pil():
-    """Lazy optional-dependency probe (Pillow is not in this container;
-    cluster images that ship it get the real path automatically).  A
-    function, not an import-time flag, so tests can exercise both branches
-    by monkeypatching."""
-    try:
-        from PIL import Image  # type: ignore
-
-        return Image
-    except ImportError:
-        return None
-
-
-def _luma_bt601(rgb: np.ndarray) -> np.ndarray:
-    """(h, w, 3) uint8 RGB → (h, w) uint8 luma by integer BT.601
-    ((77R + 150G + 29B) >> 8) — deterministic integer math, no float
-    rounding to vary across platforms."""
-    r = rgb[..., 0].astype(np.uint32)
-    g = rgb[..., 1].astype(np.uint32)
-    b = rgb[..., 2].astype(np.uint32)
-    return ((77 * r + 150 * g + 29 * b) >> 8).astype(np.uint8)
-
-
-def decode_ppm(payload: bytes) -> np.ndarray:
-    """Pure-numpy decoder for binary netpbm images — P5 (PGM grayscale)
-    and P6 (PPM RGB), 8-bit maxval.  Returns a (h, w) uint8 luma plane.
-    Full format: magic, whitespace/#-comment-separated width/height/maxval
-    header, single whitespace byte, then raw samples."""
-    magic = payload[:2]
-    if magic not in (b"P5", b"P6"):
-        raise DecodeUnavailable(f"not a binary netpbm payload: {magic!r}")
-    # tokenize the header: fields separated by whitespace, '#' starts a
-    # comment running to end-of-line
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while pos < len(payload) and payload[pos] != 0x0A:
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(int(payload[start:pos]))
-    pos += 1  # the single whitespace byte after maxval
-    w, h, maxval = fields
-    if maxval > 255:
-        raise DecodeUnavailable("16-bit netpbm not supported by the numpy codec")
-    ch = 3 if magic == b"P6" else 1
-    raw = np.frombuffer(payload, dtype=np.uint8, count=w * h * ch, offset=pos)
-    if ch == 1:
-        return raw.reshape(h, w).copy()
-    return _luma_bt601(raw.reshape(h, w, 3))
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Pure-numpy decoder for uncompressed 24-bit BI_RGB Windows bitmaps
-    (BITMAPINFOHEADER).  Returns a (h, w) uint8 luma plane.  Rows are
-    stored bottom-up (positive height), BGR order, stride padded to 4
-    bytes — all handled."""
-    if payload[:2] != b"BM":
-        raise DecodeUnavailable("not a BMP payload")
-    data_off = int.from_bytes(payload[10:14], "little")
-    hdr_size = int.from_bytes(payload[14:18], "little")
-    if hdr_size < 40:
-        raise DecodeUnavailable(f"unsupported BMP header size {hdr_size}")
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = int.from_bytes(payload[22:26], "little", signed=True)
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    if bpp != 24 or compression != 0:
-        raise DecodeUnavailable(
-            f"numpy BMP codec handles 24-bit BI_RGB only (got bpp={bpp}, "
-            f"compression={compression})"
-        )
-    bottom_up = h > 0
-    h = abs(h)
-    stride = ((w * 3 + 3) // 4) * 4
-    raw = np.frombuffer(payload, dtype=np.uint8, count=stride * h, offset=data_off)
-    rows = raw.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    if bottom_up:
-        rows = rows[::-1]
-    bgr = rows  # BMP stores blue first
-    rgb = bgr[..., ::-1]
-    return _luma_bt601(rgb)
-
-
-def real_decode(payload: bytes, mime: str) -> np.ndarray:
-    """The production decoder slot: with Pillow installed, decodes any
-    image payload to a grayscale uint8 array; without it, the pure-numpy
-    in-sandbox codecs handle binary netpbm (P5/P6) and uncompressed 24-bit
-    BMP end-to-end (format sniffed from magic bytes — mime strings lie).
-    Everything else raises DecodeUnavailable (callers fall back to the
-    documented deterministic stub)."""
-    Image = _pil()
-    if Image is not None and (mime or "").startswith("image/"):
-        import io
-
-        img = Image.open(io.BytesIO(payload)).convert("L")
-        return np.asarray(img, dtype=np.uint8)
-    if payload[:2] in (b"P5", b"P6"):
-        return decode_ppm(payload)
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    raise DecodeUnavailable(
-        "no codec for this payload: Pillow is not installed and the magic "
-        "bytes match neither netpbm (P5/P6) nor 24-bit BMP — install "
-        "Pillow (images) / torchaudio / ffmpeg on the cluster image for "
-        "the full real path; the deterministic stub keeps the pipeline "
-        "shape-testable without them"
-    )
-
-
-def real_decode_features(payload: bytes, mime: str) -> np.ndarray:
-    """real_decode → the same 8-float feature contract as _decode_stub:
-    luma histogram over 8 equal bins, L1-normalized (deterministic for a
-    given decoded plane)."""
-    plane = real_decode(payload, mime)
-    hist, _ = np.histogram(plane, bins=8, range=(0, 256))
-    total = max(int(hist.sum()), 1)
-    return (hist / np.float64(total)).astype(np.float32)
 
 
 def _decode_stub(payload: bytes) -> np.ndarray:
@@ -175,17 +31,17 @@ def _decode_stub(payload: bytes) -> np.ndarray:
     return (np.frombuffer(h[:32], dtype=np.uint32).astype(np.float32) / np.float32(2**32))[:8]
 
 
-def extract_features(media: DataFrame, use_stub: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """binary payloads → per-item feature rows via mapInPandas (Arrow
-    batches; one partition per task — the shape the real decoder needs:
-    batch-local, no driver involvement).  ``use_stub=False`` takes the
-    real-decoder slot (Pillow if installed, else rows come back ok=False
-    via DecodeUnavailable)."""
+    batches; one partition per task — the shape a real decoder needs:
+    batch-local, no driver involvement).  ``media`` carries ``media_id``,
+    ``kind`` and a binary ``payload``; a NULL payload comes back
+    ``ok=False`` with no feature."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, ok, nb, digests = [], [], [], []
-            for payload, mime in zip(pdf["payload"], pdf["mime"]):
+            for payload in pdf["payload"]:
                 if payload is None:
                     feats.append(None)
                     ok.append(False)
@@ -195,13 +51,8 @@ def extract_features(media: DataFrame, use_stub: bool = True) -> DataFrame:
                 b = bytes(payload)
                 nb.append(len(b))
                 digests.append(hashlib.sha256(b).hexdigest())
-                try:
-                    vec = _decode_stub(b) if use_stub else real_decode_features(b, mime)
-                    feats.append([float(x) for x in vec])
-                    ok.append(True)
-                except DecodeUnavailable:
-                    feats.append(None)
-                    ok.append(False)
+                feats.append([float(x) for x in _decode_stub(b)])
+                ok.append(True)
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -214,102 +65,3 @@ def extract_features(media: DataFrame, use_stub: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def decode_stub_image(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic fake decoder: materializes a (height, width) uint8
-    luma plane by tiling the payload bytes.  CLEARLY A FAKE — it stands in
-    for PIL/libjpeg (not installed here) so the downstream resize /
-    feature / frame plumbing runs on real arrays with real shapes; swap for
-    a real decoder on a cluster image that ships codecs."""
-    n = width * height
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    if len(buf) == 0:
-        buf = np.zeros(1, dtype=np.uint8)
-    reps = -(-n // len(buf))
-    return np.tile(buf, reps)[:n].reshape(height, width)
-
-
-RESIZED_SCHEMA = "media_id long, out_w int, out_h int, plane binary, mean_luma double"
-
-
-def resize_media(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """decode → block-mean resize to (out_h, out_w) → packed binary plane +
-    mean luma.  The Spark shape is the production one: one Arrow batch per
-    task, numpy-vectorized per item, binary in / binary out, no driver
-    involvement.  Items without dimensions fall back to a square inferred
-    from payload length (documented fake-decoder behavior)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, planes, means = [], [], [], [], []
-            # per-ITEM codec work is inherently a loop; zip over plain
-            # columns (iterrows builds a Series per row — pure overhead)
-            for mid, payload, w0, h0 in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                w = int(w0) if pd.notna(w0) else max(int(len(b) ** 0.5), 1)
-                h = int(h0) if pd.notna(h0) else w
-                img = decode_stub_image(b, w, h).astype(np.float64)
-                # block-mean resize: pad to a multiple of the output grid,
-                # then mean over (h/out_h, w/out_w) blocks — pure numpy
-                ph = -(-h // out_h) * out_h
-                pw = -(-w // out_w) * out_w
-                padded = np.zeros((ph, pw))
-                padded[:h, :w] = img
-                small = padded.reshape(out_h, ph // out_h, out_w, pw // out_w).mean(axis=(1, 3))
-                ids.append(mid)
-                ws.append(out_w)
-                hs.append(out_h)
-                planes.append(small.astype(np.uint8).tobytes())
-                means.append(float(img.mean()))
-            yield pd.DataFrame(
-                {"media_id": ids, "out_w": ws, "out_h": hs, "plane": planes, "mean_luma": means}
-            )
-
-    return media.mapInPandas(run, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = "media_id long, frame_idx int, frame binary, n_frames int"
-
-
-def frame_sample(media: DataFrame, every_k: int = 4, frame_bytes: int = 256) -> DataFrame:
-    """Video frame sampling: treat the payload as frame-major stripes of
-    ``frame_bytes`` (the fake-codec stand-in for demuxing) and emit every
-    k-th frame as its own row — the explode-shaped mapInPandas the real
-    ffmpeg-based sampler plugs into (same schema, same batch contract)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames, totals = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                n_frames = max(len(b) // frame_bytes, 1)
-                for i in range(0, n_frames, every_k):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(b[i * frame_bytes : (i + 1) * frame_bytes])
-                    totals.append(n_frames)
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame": frames, "n_frames": totals}
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
-def pages_html_media(pages: DataFrame) -> DataFrame:
-    """Adapter: the pages table's html binary column as a media table —
-    exercises the plumbing against the fixture corpus."""
-    return pages.select(
-        F.xxhash64("url").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.col("html").alias("payload"),
-        F.lit("text/html").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-    )

@@ -169,18 +169,6 @@ class SpatialEngine:
         return assign_point_cell_ids(res, self.kernel_cells(res)).select(*FLAGSHIP_COLUMNS)
 
 
-def pages_from_html(pages: DataFrame) -> DataFrame:
-    """pages with ``text`` re-derived by EXTRACTION from the ``html``
-    binary column instead of trusting the stored text — the input source
-    the north-star actually describes (geocode pages from extracted page
-    text).  Composable with every SpatialEngine method; the byte-identical
-    invariant says the flagship over this frame equals the flagship over
-    the original, which tests assert against the goldens."""
-    from libosmtools_spark.text.analysis import html_text_col
-
-    return pages.withColumn("text", html_text_col(F.col("html")))
-
-
 #: format of run_flagship_staged's stage tables, part of their checkpoint
 #: key: a checkpoint root whose stages were written in another format (the
 #: ``page_regions`` stage with the per-batch ``batch_unique`` flag, say) is

@@ -78,41 +78,6 @@ def write_table(
     return path
 
 
-def write_remapped_cells(
-    cells: DataFrame,
-    mapping: DataFrame,
-    name: str,
-    root: str,
-    my_col: str = "cell_id",
-    gh_col: str = "gh_cell_id",
-) -> tuple[str, str]:
-    """S11 gh-arrangement v2 sink with cell-id remap
-    (/root/reference/src/OsmTriangulationRegionStore.cpp:1160-1225): every
-    row's cell id is remapped through ``mapping(my_cell_id → gh_cell_id)``;
-    ids NOT in the mapping collapse to the null id = |mapping| (the
-    reference's myNullCellId = myIdsToGhCellIds.size(), :1168).  Also
-    writes the inverse table (gh_cell_id → representative cell_key),
-    mirroring cellId2FaceId (:1189-1196; representative = deterministic min
-    member instead of the reference's iteration-order-dependent pick).
-
-    Returns (cells_path, inverse_path)."""
-    n_mapped = mapping.count()
-    m = F.broadcast(mapping.select(F.col("my_cell_id"), F.col("gh_cell_id")))
-    remapped = (
-        cells.join(m, cells[my_col] == m["my_cell_id"], "left")
-        .withColumn(gh_col, F.coalesce("gh_cell_id", F.lit(n_mapped).cast(dict(mapping.dtypes)["gh_cell_id"])))
-        .drop("my_cell_id")
-    )
-    cells_path = write_table(remapped, name, root)
-    inverse = (
-        remapped.filter(F.col(gh_col) != n_mapped)
-        .groupBy(gh_col)
-        .agg(F.min("cell_key").alias("rep_cell_key"))
-    )
-    inverse_path = write_table(inverse, f"{name}_inverse", root, partition_by=None)
-    return cells_path, inverse_path
-
-
 def read_table(spark: SparkSession, name: str, root: str) -> DataFrame:
     if iceberg_available(spark):
         try:

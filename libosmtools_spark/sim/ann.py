@@ -25,8 +25,8 @@ Every operator runs on one small core:
 
 Operators: ``ann_topk`` (gated: brute or blocked), ``cosine_topk_brute``,
 ``cosine_topk_blocked``, ``lsh_topk`` (hyperplane LSH), ``ivf_topk``
-(inverted lists), ``cosine_dup_pairs`` (gated: brute or blocked),
-``cosine_dup_pairs_blocked`` and ``cosine_dup_pairs_lsh``.
+(inverted lists, seed quantizer), ``cosine_dup_pairs`` (gated: brute or
+blocked) and ``cosine_dup_pairs_blocked``.
 """
 
 from __future__ import annotations
@@ -493,109 +493,19 @@ def cosine_dup_pairs_blocked(
     return _block_cogroup(embeddings, n_blocks, block_pairs, _PAIRS)
 
 
-def cosine_dup_pairs_lsh(embeddings: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """The 100 TB path: LSH-bucketed candidate pairs verified by exact
-    cosine ≥ threshold.  Candidate generation is linear and id-only (same
-    shuffle diet as lsh_topk); recall follows the sign-LSH
-    similarity-recall curve — ≥ ~0.95 for genuinely near pairs (cosine ≥
-    ~0.9) at the auto_lsh_params geometry, measured on planted duplicates
-    in tests.  Use cosine_dup_pairs (exact) when the corpus permits."""
-    cand = _lsh_candidates(embeddings, *auto_lsh_params(embeddings.count()))
-    return _score_pairs(embeddings, cand).filter(F.col("cosine") >= threshold).select("a", "b")
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the list-partitioned scale path
 # ---------------------------------------------------------------------------
 
-#: Lloyd rounds of the trained quantizer
-IVF_TRAIN_ITERS = 20
-
-
 def ivf_seed_centroids(embeddings: DataFrame, n_lists: int) -> np.ndarray:
     """Deterministic coarse quantizer: the ``n_lists`` corpus vectors with
-    the smallest ids, as an (n_lists, dim) float64 matrix.  Production IVF
-    plugs a TRAINED quantizer (k-means run offline) into ``ivf_topk``'s
-    ``centroids`` parameter — the assignment/probe machinery is identical;
-    the seed default keeps the operator deterministic and exactly
-    SQL-oracle-able without a training step."""
+    the smallest ids, as an (n_lists, dim) float64 matrix.  No training
+    step, so the operator stays deterministic and exactly SQL-oracle-able
+    (``__spark_entry__._ivf_sql`` replicates the assignment)."""
     pdf = embeddings.select(ID, VEC).orderBy(ID).limit(n_lists).toPandas()
     if len(pdf) == 0:
         return np.zeros((0, 0), dtype=np.float64)
     return _matrix(pdf[VEC])
-
-
-def ivf_train_centroids(
-    embeddings: DataFrame, n_lists: int, sample_rows: int = 100_000
-) -> np.ndarray:
-    """TRAINED coarse quantizer: deterministic spherical k-means over a
-    hash-sampled subset, for ``ivf_topk``'s ``centroids`` hook.
-
-    100 TB shape: training never sees the full corpus — a deterministic
-    xxhash64 row sample of ≤ ``sample_rows`` vectors collects to the
-    driver (the quantizer is a dimension-scale model, same posture as the
-    region store), and the k-means loop is a few numpy matmuls over that
-    sample.  Assignment of the full corpus happens distributed inside
-    ivf_topk exactly as with the seed quantizer.
-
-    Deterministic end-to-end (no RNG at all): greedy farthest-point init (k-means++
-    without randomness in the D² draw — always the farthest point, ties to
-    the smaller sample index), IVF_TRAIN_ITERS Lloyd rounds on the unit
-    sphere (assign by max cosine, mean + re-normalize, empty lists re-seeded
-    from the worst-covered points).  The seed-subset default
-    (ivf_seed_centroids) remains the oracle contract; this trainer is the
-    recall path for clustered real corpora — measured ≥ the seed quantizer
-    at equal n_probe on a clustered fixture in tests."""
-    n = embeddings.count()
-    if n == 0:
-        return np.zeros((0, 0), dtype=np.float64)
-    take = embeddings.select(ID, VEC)
-    if n > sample_rows:
-        # deterministic hash sample at ~sample_rows expected size, with a
-        # HARD driver bound: the hash filter's size is only expected-value,
-        # so a sorted limit(2*sample_rows) makes the collect bound
-        # unconditional while staying deterministic (ties impossible: ids
-        # are unique, the orderBy is total)
-        m = max(1, n // sample_rows)
-        # truncation key = hash, not raw id: when the hash filter
-        # over-delivers, a raw-id limit would keep only the smallest ids and
-        # bias training toward ingest order; ordering by (hash, id) keeps the
-        # truncation pseudo-random while staying deterministic and total
-        take = (
-            take.filter(F.pmod(F.xxhash64(F.col(ID)), F.lit(m)) == 0)
-            .orderBy(F.xxhash64(F.col(ID)), ID)
-            .limit(2 * sample_rows)
-        )
-    X = _matrix(take.orderBy(ID).toPandas()[VEC])
-    X = X / _row_norms(X)[:, None]
-    k = min(n_lists, len(X))
-    # greedy farthest-point init (deterministic): start from the sample
-    # vector nearest the sample mean, then repeatedly take the point with
-    # the smallest max-cosine to any chosen center
-    mean = X.mean(axis=0)
-    first = int(np.argmax(X @ mean))
-    chosen = [first]
-    best_cos = X @ X[first]
-    for _ in range(1, k):
-        nxt = int(np.argmin(best_cos))
-        chosen.append(nxt)
-        best_cos = np.maximum(best_cos, X @ X[nxt])
-    C = X[chosen].copy()
-    for _ in range(IVF_TRAIN_ITERS):
-        S = X @ C.T  # (n_sample, k) cosine since both sides unit-norm
-        assign = np.argmax(S, axis=1)
-        newC = np.zeros_like(C)
-        np.add.at(newC, assign, X)
-        counts = np.bincount(assign, minlength=k)
-        empty = counts == 0
-        if empty.any():
-            # re-seed empty lists from the worst-covered sample points
-            worst = np.argsort(S[np.arange(len(X)), assign])[: int(empty.sum())]
-            newC[empty] = X[worst]
-            counts[empty] = 1
-        newC /= counts[:, None]
-        C = newC / _row_norms(newC)[:, None]
-    return C
 
 
 def _ivf_quantizer(centroids: np.ndarray):
@@ -635,7 +545,6 @@ def ivf_topk(
     k: int = 5,
     n_lists: int = 16,
     n_probe: int = 4,
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate top-k (vec_id, neighbor_id, rank) via inverted lists:
     every corpus vector lives in exactly ONE list (its nearest centroid);
@@ -647,8 +556,7 @@ def ivf_topk(
     list assignment shuffle carries (id, list) rows only, and vectors
     rejoin once for scoring, exactly like lsh_topk.  Recall follows the
     probe coverage; measured against the exact operator in tests."""
-    if centroids is None:
-        centroids = ivf_seed_centroids(embeddings, n_lists)
+    centroids = ivf_seed_centroids(embeddings, n_lists)
     if len(centroids) == 0:  # empty corpus → empty result
         return embeddings.sparkSession.createDataFrame(
             [], f"{ID} long, neighbor_id long, rank int"

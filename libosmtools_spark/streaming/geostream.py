@@ -1,6 +1,7 @@
 """Structured-Streaming ingestion of a pages stream (north-rule batch
 lineage is primary; streaming is the continuous-arrival variant of the same
-flagship pipeline — geocode → cell key → windowed per-cell counts).
+flagship pipeline — geocode → cell key → region resolve → windowed
+per-region counts).
 
 The stateless stages (geocode, cell key) reuse the exact batch Columns, so
 streaming and batch cannot drift.  Watermarked tumbling windows bound state
@@ -18,74 +19,6 @@ from pyspark.sql import functions as F
 from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
 
 
-def stream_cell_counts(
-    pages_stream: DataFrame,
-    level: int = 6,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """pages stream → (window, cell_key, n_pages) with watermarked late-data
-    handling.  Works identically on a batch frame (for oracle checks) —
-    window() and the geocode/cell-key Columns are engine-agnostic."""
-    pts = with_cell_key(geocode_pages(pages_stream), level=level)
-    return (
-        pts.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "cell_key")
-        .agg(F.count("*").alias("n_pages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "cell_key",
-            "n_pages",
-        )
-    )
-
-
-def stream_dedup_first_seen(pages_stream: DataFrame):
-    """Custom stateful operator (applyInPandasWithState): emit each url the
-    FIRST time it is seen across the whole stream; duplicates in later
-    micro-batches are suppressed.  State = one boolean per url group.
-
-    This is the streaming face of the dedup family (north-rule training-
-    data op): exact online deduplication with bounded per-key state."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def dedup(key, batches, state):
-        if state.exists:
-            # already emitted — swallow everything
-            for _ in batches:
-                pass
-            return iter(())
-        # a url's rows within one micro-batch may span several Arrow
-        # chunks: track the min-warc_ts row ACROSS all chunks (chunk-order
-        # independence → deterministic output for duplicate-heavy batches)
-        first = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cand = pdf.sort_values(["warc_ts", "lang"], kind="stable").head(1)
-            if first is None or (
-                tuple(cand[["warc_ts", "lang"]].iloc[0])
-                < tuple(first[["warc_ts", "lang"]].iloc[0])
-            ):
-                first = cand
-        state.update((True,))
-        return iter(() if first is None else (first[["url", "warc_ts", "lang"]],))
-
-    return (
-        pages_stream.select("url", "warc_ts", "lang")
-        .groupBy("url")
-        .applyInPandasWithState(
-            dedup,
-            outputStructType="url string, warc_ts timestamp, lang string",
-            stateStructType="seen boolean",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def stream_first_event_per_user(events_stream: DataFrame):
     """Custom stateful operator (applyInPandasWithState): emit each
     user_id's FIRST event across the whole stream; later micro-batches'
@@ -95,8 +28,9 @@ def stream_first_event_per_user(events_stream: DataFrame):
     globally ordered by (ts, event_id) — the driver query stages it that
     way — the emitted row equals the relational ``row_number() OVER
     (PARTITION BY user_id ORDER BY ts, event_id) = 1`` answer, which is
-    the exact-oracle contract.  Same chunk-order-independent min tracking
-    as stream_dedup_first_seen."""
+    the exact-oracle contract.  A user's rows within one micro-batch may
+    span several Arrow chunks, so the min is tracked across all chunks
+    (chunk-order independent)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def first(key, batches, state):
@@ -187,19 +121,6 @@ def drain_to_memory(spark, source, build, output_mode: str, query_name: str) -> 
     rows = spark.createDataFrame(sink.toArrow(), schema=sink.schema)
     spark.catalog.dropTempView(query_name)
     return rows
-
-
-def run_dedup_stream_to_memory(spark, pages_dir: str, query_name: str = "dedup_stream"):
-    """Drive the stateful dedup synchronously over fixture parquet."""
-    return drain_to_memory(spark, pages_dir, stream_dedup_first_seen, "append", query_name)
-
-
-def run_stream_to_memory(spark, pages_dir: str, level: int = 6, query_name: str = "cells_stream"):
-    """Drive the streaming query synchronously over the fixture parquet
-    (memory sink; processAllAvailable) — the local smoke harness."""
-    return drain_to_memory(
-        spark, pages_dir, lambda s: stream_cell_counts(s, level=level), "complete", query_name
-    )
 
 
 def stream_region_counts(

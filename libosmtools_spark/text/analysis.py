@@ -182,23 +182,6 @@ def shingle_pos_rows(
     )
 
 
-def analyze_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-stop text-analysis projection over a documents table."""
-    t = F.col(text_col)
-    q = quality_cols(t)
-    fp = fingerprint_cols(t)
-    return docs.select(
-        "doc_id",
-        q["n_chars"].alias("n_chars"),
-        q["n_tokens"].alias("n_tokens"),
-        q["alpha_ratio"].alias("alpha_ratio"),
-        q["punct_ratio"].alias("punct_ratio"),
-        q["mean_token_len"].alias("mean_token_len"),
-        predicted_lang_col(t).alias("pred_lang"),
-        fp["fp_md5"].alias("fp_md5"),
-    )
-
-
 #: BPE-ish pre-tokenizer classes (letters / digits / punctuation runs) —
 #: deliberately restricted to character classes whose semantics agree
 #: between Java regex (Spark) and RE2 (DuckDB), so the count is exactly

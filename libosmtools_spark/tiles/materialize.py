@@ -212,15 +212,6 @@ def cell_graph_diameter(dual_edges: DataFrame) -> DataFrame:
     )
 
 
-def cell_sizes(point_cells: DataFrame) -> DataFrame:
-    """T10: per-cell point count + representative (first point id seen —
-    deterministic: min id).  (/root/reference/src/OsmTriangulationRegionStore.cpp:280-292)."""
-    id_col = [c for c in point_cells.columns if c not in ("cell_key", "cell_id")][0]
-    return point_cells.groupBy("cell_id").agg(
-        F.count("*").alias("n_points"), F.min(id_col).alias("representative")
-    )
-
-
 def cell_center_of_mass(point_cells_latlon: DataFrame) -> DataFrame:
     """T11: mean of member point coords per cell
     (/root/reference/src/OsmTriangulationRegionStore.cpp:294-320 — mean of
@@ -255,26 +246,22 @@ def region_cells_inverted(cells: DataFrame) -> DataFrame:
     return cells.select("cell_key", "cell_id", F.explode("region_ids").alias("region_id"))
 
 
-def cell_stats(point_cells: DataFrame, exact_median: bool = False) -> DataFrame:
+def cell_stats(point_cells: DataFrame) -> DataFrame:
     """T22: min/max/median/mean points per cell, cell 0 excluded
     (/root/reference/src/OsmTriangulationRegionStore.cpp:1088-1111).
 
-    ``exact_median=False`` (default): percentile_approx — the per-cell
-    sizes table can itself be large at 10^12 rows and the exact percentile
-    funnels every group value through one task.  ``exact_median=True``:
-    Spark's exact linear-interpolation percentile — same definition as
-    DuckDB quantile_cont, used by the driver oracle.  The mean is
-    sum(int)/count (exact integer sum, one IEEE division) either way."""
+    The median is Spark's exact linear-interpolation percentile — the same
+    definition as DuckDB quantile_cont, so the driver oracle matches it
+    exactly.  It runs over the per-cell sizes table (one row per cell,
+    dimension-scale), not over the points.  The mean is sum(int)/count
+    (exact integer sum, one IEEE division)."""
     sizes = point_cells.filter(F.col("cell_id") != 0).groupBy("cell_id").agg(
         F.count("*").alias("n")
-    )
-    median = (
-        F.expr("percentile(n, 0.5)") if exact_median else F.expr("percentile_approx(n, 0.5)")
     )
     return sizes.agg(
         F.min("n").alias("min_points"),
         F.max("n").alias("max_points"),
-        median.alias("median_points"),
+        F.expr("percentile(n, 0.5)").alias("median_points"),
         (F.sum("n").cast("double") / F.count("*").cast("double")).alias("mean_points"),
         F.count("*").alias("n_cells"),
     )

@@ -167,9 +167,15 @@ class TestCriteria:
         out = refine_until_good(cells, diag_criterion(200_000.0), max_level=12).toPandas()
         levels = out["cell_key"].to_numpy() >> _LEVEL_SHIFT
         assert levels.min() > 4  # everything got subdivided at least once
-        from libosmtools_spark.geom.kernels import cell_diag_m
+        from libosmtools_spark.geom.kernels import EARTH_RADIUS_M, cell_bounds
 
-        assert cell_diag_m(out["cell_key"].to_numpy()).max() <= 200_000.0
+        # independent numpy haversine of each cell's bbox diagonal
+        mn_lat, mx_lat, mn_lon, mx_lon = (np.radians(b) for b in cell_bounds(out["cell_key"].to_numpy()))
+        h = np.sin((mx_lat - mn_lat) / 2) ** 2 + np.cos(mn_lat) * np.cos(mx_lat) * np.sin((mx_lon - mn_lon) / 2) ** 2
+        diag = 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(h))
+        assert diag.max() <= 200_000.0
+        # and none was split past it: a parent's diagonal is about twice its child's
+        assert diag.min() > 100_000.0
 
     def test_refine_fixpoint_count_refresh(self, spark):
         """refine_until_good with the count criterion + occupancy refresh
@@ -205,59 +211,6 @@ class TestCriteria:
         df = spark.createDataFrame([(1, 10), (2, 300)], "cell_key long, n_points long")
         bad = df.filter(count_criterion(100)(df)).toPandas()
         assert list(bad["cell_key"]) == [2]
-
-    def test_centroid_distance_criterion(self, spark):
-        """CentroidDistanceMeshCriteria analog
-        (/root/reference/include/osmtools/MeshCriteria.h:126-167): max
-        center→corner geodesic distance vs the half-diagonal."""
-        from libosmtools_spark.cells.criteria import centroid_distance_criterion
-        from libosmtools_spark.geom.kernels import cell_diag_m, cell_key
-
-        keys = [int(cell_key([0.0], [0.0], 6)[0]), int(cell_key([0.0], [0.0], 12)[0])]
-        df = spark.createDataFrame([(k,) for k in keys], "cell_key long")
-        # threshold between the two cells' center→corner distances: the
-        # level-6 cell is bad, the level-12 cell is not
-        import numpy as np
-
-        half_diag6 = cell_diag_m(np.array(keys[:1]))[0] / 2
-        bad = df.filter(centroid_distance_criterion(half_diag6 * 0.5)(df)).toPandas()
-        assert list(bad["cell_key"]) == [keys[0]]
-        none_bad = df.filter(centroid_distance_criterion(half_diag6 * 2)(df)).toPandas()
-        assert len(none_bad) == 0
-
-    def test_edge_length_and_ratio_criteria(self, spark):
-        """EdgeLengthMeshCriteria + EdgeLengthRatioMeshCriteria with the
-        tiny-triangle guard (/root/reference/include/osmtools/MeshCriteria.h:169-290,
-        guard :277-284)."""
-        from libosmtools_spark.cells.criteria import (
-            edge_length_criterion,
-            edge_length_ratio_criterion,
-        )
-        from libosmtools_spark.geom.kernels import cell_key
-
-        equator = int(cell_key([0.0], [0.0], 6)[0])
-        polar = int(cell_key([89.9], [0.0], 6)[0])     # lon edges shrink by cos(lat)
-        tiny = int(cell_key([89.9], [0.0], 26)[0])     # sub-meter cell near the pole
-        df = spark.createDataFrame([(equator,), (polar,), (tiny,)], "cell_key long")
-        # edge length: the two level-6 cells have ~313 km meridian edges
-        bad_len = df.filter(edge_length_criterion(100_000.0)(df)).toPandas()
-        assert set(bad_len["cell_key"]) == {equator, polar}
-        # ratio: only the polar cell is skewed (equator cell ~1:1); the tiny
-        # polar cell is equally skewed but saved by the tiny-cell guard
-        bad_ratio = df.filter(edge_length_ratio_criterion(5.0)(df)).toPandas()
-        assert set(bad_ratio["cell_key"]) == {polar}
-
-    def test_with_cell_id_wrapper(self, spark):
-        """RefineTrianglesWithCellIdMeshCriteria analog
-        (/root/reference/include/osmtools/MeshCriteria.h:356-384)."""
-        from libosmtools_spark.cells.criteria import count_criterion, with_cell_id_criterion
-
-        df = spark.createDataFrame(
-            [(1, 300, 7), (2, 300, None)], "cell_key long, n_points long, cell_id int"
-        )
-        crit = with_cell_id_criterion(count_criterion(100))
-        bad = df.filter(crit(df)).toPandas()
-        assert list(bad["cell_key"]) == [1]
 
 
 if __name__ == "__main__":

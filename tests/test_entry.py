@@ -161,5 +161,23 @@ def test_diameter_row_reads_without_a_job(spark, duck):
     _match(spark, duck, "cell_graph_diameter")
 
 
+def test_engine_build_runs_one_job(spark, monkeypatch):
+    """Building a query store's engine runs one Spark job, the collect of
+    its rings; the covering, the candidate tables and the broadcast are
+    built on the driver.  (The rings frame is driver-local, but its
+    ``toPandas`` still runs that job: the Arrow collect of a
+    ``LocalRelation`` goes through an RDD, as a parallelized list's does.)"""
+    monkeypatch.setattr(entry, "_ENGINE_CACHE", {})
+    sc = spark.sparkContext
+    group = "jobs-engine-build"
+    sc.setJobGroup(group, group)
+    try:
+        eng = entry._engine(spark, "oracle")
+        eng.candidates_bcast
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 if __name__ == "__main__":
     sys.exit(pytest.main([__file__, "-x", "-q"]))

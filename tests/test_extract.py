@@ -120,12 +120,18 @@ class TestWayExtraction:
         assert kept == {1, 2, 3}
 
     def test_missing_node_rejected_and_counted(self, osm):
-        from libosmtools_spark.extract.areas import rejected_ways
+        """A closed, tag-matching way with a node missing from the nodes
+        table is dropped, not assembled with a hole in its ring (reject
+        accounting, libosmtools src/AreaExtractor.cpp:198-204)."""
+        from libosmtools_spark.extract.areas import closed_way_filter, extract_way_polygons, tag_filter
 
         nodes, ways, rels = osm
-        rej = rejected_ways(nodes, ways).toPandas()
-        assert set(rej["way_id"]) == {104}
-
+        candidates = {r.way_id for r in ways.filter(closed_way_filter() & tag_filter()).collect()}
+        node_ids = {r.node_id for r in nodes.select("node_id").collect()}
+        missing = {r.way_id for r in ways.collect() if not set(r.refs) <= node_ids}
+        assert missing & candidates == {104}
+        kept = set(extract_way_polygons(nodes, ways).toPandas()["orig_id"])
+        assert kept == candidates - {104}
 
 class TestRelationExtraction:
     def test_multipolygon_assembled(self, osm):

@@ -1,4 +1,5 @@
-"""Unit tests for the pure-numpy geometry kernels (SURVEY.md §5 item 1)."""
+"""Unit tests for the pure-numpy geometry kernels (SURVEY.md §5 item 1) and
+the JVM ring and distance columns."""
 
 import numpy as np
 import pytest
@@ -51,26 +52,42 @@ class TestCellKey:
         assert k5 > 0 and k6 > 0 and k5 != k6
 
     def test_parent_child(self):
+        """The 2x2 children of a key (the split ``refine_until_good``
+        writes with key arithmetic) are the cells whose centers key back to
+        it one level up."""
         key = K.cell_key([48.1], [11.5], 10)[0]
-        ch = K.cell_children(key)
-        assert len(ch) == 4
-        for c in ch:
-            assert K.cell_parent(c) == key
+        _, iy, ix = K.unpack_key(key)
+        ch = [K.pack_key(11, 2 * iy + dy, 2 * ix + dx) for dy in (0, 1) for dx in (0, 1)]
+        assert len(set(ch)) == 4
+        clat, clon = K.cell_center(np.array(ch))
+        assert (K.cell_key(clat, clon, 10) == key).all()
+        assert (K.cell_key(clat, clon, 11) == np.array(ch)).all()
 
-    def test_ring_k0_and_k1(self):
+    @staticmethod
+    def _ring(spark, key, k):
+        from pyspark.sql import functions as F
+
+        from libosmtools_spark.geom.columns import ring_keys_col
+
+        df = spark.createDataFrame([(int(key),)], "cell_key long")
+        return df.select(ring_keys_col(F.col("cell_key"), k).alias("r")).first().r
+
+    def test_ring_k0_and_k1(self, spark):
         key = int(K.cell_key([48.0], [11.0], 8)[0])
-        assert list(K.cell_ring(key, 0)) == [key]
-        r1 = K.cell_ring(key, 1)
+        assert self._ring(spark, key, 0) == [key]
+        r1 = self._ring(spark, key, 1)
         assert len(r1) == 9 and key in r1
 
-    def test_ring_wraps_lon(self):
+    def test_ring_wraps_lon(self, spark):
         key = int(K.cell_key([0.0], [-179.9], 4)[0])
-        r = K.cell_ring(key, 1)
+        r = self._ring(spark, key, 1)
         assert len(r) == 9  # wrapped across the antimeridian, no loss
+        _, _, ix = K.unpack_key(np.array(r))
+        assert set(ix.tolist()) == {31, 0, 1}  # nlon = 32 at level 4
 
-    def test_ring_clamps_at_pole(self):
+    def test_ring_clamps_at_pole(self, spark):
         key = int(K.cell_key([89.9], [0.0], 4)[0])
-        r = K.cell_ring(key, 1)
+        r = self._ring(spark, key, 1)
         assert len(r) == 6  # top row: 2 lat rows x 3 lon cols
 
 
@@ -136,11 +153,6 @@ class TestSegRect:
 
 
 class TestAntimeridian:
-    def test_guard(self):
-        assert K.crosses_antimeridian([179.5], [-179.5])[0]
-        assert not K.crosses_antimeridian([10.0], [11.0])[0]
-        assert not K.crosses_antimeridian([179.0], [179.9])[0]
-
     def test_unwrap_identity_for_normal_rings(self):
         ring = K.rect_ring(0.0, 10.0, 5.0, 20.0)
         outs, inns = K.unwrap_rings([ring], [])
@@ -194,20 +206,31 @@ class TestAntimeridian:
         lons = np.array([175.0, -179.0, -170.0, 170.0])  # -179 ≡ 181 inside
         got = K.point_in_rings(lats, lons, outs, inns)
         assert list(got) == [True, True, False, False]
-        # edge-set path agrees (the map-join clipped path)
-        edges = np.vstack([K.ring_edges(r) for r in outs])
-        got_e = K.point_in_edges(lats, lons, edges)
-        assert list(got_e) == [True, True, False, False]
 
 
 class TestDistances:
-    def test_haversine_known(self):
+    """The JVM distance columns (``geom.columns``)."""
+
+    @staticmethod
+    def _eval(spark, fn, *coords):
+        from pyspark.sql import functions as F
+
+        return spark.range(1).select(fn(*(F.lit(float(c)) for c in coords)).alias("d")).first().d
+
+    def test_haversine_known(self, spark):
+        from libosmtools_spark.geom.columns import haversine_m_col
+
         # equator degree ≈ 111.19 km
-        d = K.haversine_m(0.0, 0.0, 0.0, 1.0)
+        d = self._eval(spark, haversine_m_col, 0.0, 0.0, 0.0, 1.0)
         assert abs(d - 111_195) < 300
 
-    def test_sq_euclid_exact(self):
-        assert K.sq_euclid_deg(1.0, 2.0, 4.0, 6.0) == 9.0 + 16.0
+    def test_sq_euclid_exact(self, spark):
+        from libosmtools_spark.geom.columns import sq_euclid_deg_col, wrap_sq_euclid_deg_col
+
+        assert self._eval(spark, sq_euclid_deg_col, 1.0, 2.0, 4.0, 6.0) == 9.0 + 16.0
+        # wrapped: Δlon across ±180° is 0.5 + 0.5, not 359
+        assert self._eval(spark, wrap_sq_euclid_deg_col, 0.0, 179.5, 0.0, -179.5) == 1.0
+        assert self._eval(spark, sq_euclid_deg_col, 0.0, 179.5, 0.0, -179.5) == 359.0 * 359.0
 
 
 class TestCoveringCells:
@@ -281,25 +304,6 @@ class TestCellKeysMulti:
         assert K.cell_keys_multi([], [], []) == {}
         one = K.cell_keys_multi([1.0], [2.0], [6])
         np.testing.assert_array_equal(one[6], K.cell_key([1.0], [2.0], 6))
-
-
-class TestPointInEdgesFrame:
-    def test_region_frame_overrides_subset_inference(self):
-        """ADVICE r4 corner case: a wrapped region's clipped edge subset
-        whose max lon sits EXACTLY at 180.0 lies entirely inside
-        [-180, 180], so frame inference from the subset skips the probe
-        shift and casts the ray 360° away.  Passing the owning region's
-        frame (as build_cell_candidates now does) shifts correctly."""
-        # edge from (0,174) to (2,180) — the west wall fragment a cell
-        # just east of the line keeps; owning region spans 174..186
-        sub = np.array([[0.0, 174.0, 2.0, 180.0]])
-        lats = np.array([1.0])
-        lons = np.array([-179.5])  # continuous frame: 180.5, east of the edge
-        got = K.point_in_edges(lats, lons, sub, frame=(174.0, 186.0))
-        assert not got[0]  # edge crosses lat=1 at x=177 < 180.5: no crossing
-        # legacy subset-inferred frame reads (174,180) ⊂ [-180,180] → no
-        # shift → spurious crossing at x=177 > -179.5 → wrong 'inside'
-        assert K.point_in_edges(lats, lons, sub)[0]
 
 
 class TestUnwrapFarApartRings:

@@ -27,7 +27,6 @@ def pages_pts(spark, sf_smoke):
 )
 def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, threshold_delta, path):
     from libosmtools_spark.knn import ring
-    from libosmtools_spark.knn.ring import knn_neighbor_lists
 
     taken = []
     for name in ("knn_brute", "knn_ring"):
@@ -42,9 +41,9 @@ def test_knn_matches_golden(spark, sf_smoke, pages_pts, monkeypatch, threshold_d
     else:
         rows = ring.knn_join(pages_pts, "url", k=5, level=6)
     assert taken == [f"knn_{path}"]
-    got = knn_neighbor_lists(rows, "url").toPandas()
+    pdf = rows.toPandas().sort_values(["url", "rank"])
+    got = pdf.groupby("url")["neighbor_id"].agg(tuple).rename("neighbor_ids").reset_index()
     want = spark.read.parquet(os.path.join(sf_smoke, "golden_knn.parquet")).toPandas()
-    got["neighbor_ids"] = got["neighbor_ids"].map(tuple)
     want = want.rename(columns={"neighbor_urls": "neighbor_ids"})
     want["neighbor_ids"] = want["neighbor_ids"].map(tuple)
     g = got.sort_values("url").reset_index(drop=True)
@@ -93,9 +92,9 @@ if __name__ == "__main__":
 def test_knn_wrap_metric_crosses_antimeridian(spark):
     """Under metric='wrap', a neighbor just across ±180° outranks a flat-
     space-nearer one; ring and brute paths agree exactly."""
-    import numpy as np
+    from pyspark.sql import functions as F
 
-    from libosmtools_spark.geom.kernels import wrap_sq_euclid_deg
+    from libosmtools_spark.geom.columns import wrap_sq_euclid_deg_col
     from libosmtools_spark.knn.ring import knn_join, knn_ring
 
     rows = [
@@ -115,8 +114,15 @@ def test_knn_wrap_metric_crosses_antimeridian(spark):
     assert b == r_
     # the across-the-line point is the query's top neighbor under wrap
     assert b[(1, 1)] == 2
-    # sanity vs the numpy kernel: wrapped distance really is smaller
-    assert wrap_sq_euclid_deg(0.0, 179.8, 0.0, -179.9) < wrap_sq_euclid_deg(0.0, 179.8, 0.0, 178.0)
+    # sanity vs the JVM metric: wrapped distance really is smaller
+    d = (
+        spark.createDataFrame([(2, -179.9), (3, 178.0)], "id long, lon double")
+        .select("id", wrap_sq_euclid_deg_col(F.lit(0.0), F.lit(179.8), F.lit(0.0), F.col("lon")).alias("d"))
+        .collect()
+    )
+    d = {r.id: r.d for r in d}
+    assert d[2] == pytest.approx(0.09) and d[3] == pytest.approx(3.24)
+    assert d[2] < d[3]
     # the flat metric would have ranked the same-side point first
     flat = knn_join(pts, "doc_id", k=3, metric="flat")
     fb = {(r.doc_id, r.rank): r.neighbor_id for r in flat.collect()}

@@ -19,6 +19,12 @@ lon_s = st.floats(min_value=-540.0, max_value=540.0, allow_nan=False)
 level_s = st.integers(min_value=0, max_value=K.MAX_LEVEL)
 
 
+def _parent(key) -> int:
+    """One level up: the cell whose 2x2 split contains ``key``."""
+    level, iy, ix = K.unpack_key(key)
+    return int(K.pack_key(level - 1, iy >> 1, ix >> 1))
+
+
 class TestCellKeyProperties:
     @given(lat=lat_s, lon=lon_s, level=level_s)
     @settings(max_examples=300, deadline=None)
@@ -38,19 +44,23 @@ class TestCellKeyProperties:
     @given(lat=lat_s, lon=lon_s, level=st.integers(min_value=1, max_value=K.MAX_LEVEL))
     @settings(max_examples=300, deadline=None)
     def test_parent_of_key_is_coarser_key(self, lat, lon, level):
-        """cell_parent(key at L) == the point's own key at L-1 — the
+        """parent(key at L) == the point's own key at L-1 — the
         quadtree hierarchy is consistent with direct assignment."""
         fine = K.cell_key(np.array([lat]), np.array([lon]), level)
         coarse = K.cell_key(np.array([lat]), np.array([lon]), level - 1)
-        assert K.cell_parent(fine)[0] == coarse[0]
+        assert _parent(fine[0]) == coarse[0]
 
     @given(lat=lat_s, lon=lon_s, level=st.integers(min_value=0, max_value=K.MAX_LEVEL - 1))
     @settings(max_examples=200, deadline=None)
     def test_children_partition_parent(self, lat, lon, level):
-        """The point's key at level+1 is among its level-key's 4 children."""
+        """The point's key at level+1 is among its level-key's 4 children
+        (the 2x2 split that ``refine_until_good`` writes with key
+        arithmetic)."""
         key = K.cell_key(np.array([lat]), np.array([lon]), level)
         child = K.cell_key(np.array([lat]), np.array([lon]), level + 1)
-        assert child[0] in set(K.cell_children(int(key[0])).tolist())
+        _, iy, ix = K.unpack_key(key[0])
+        children = {int(K.pack_key(level + 1, 2 * iy + dy, 2 * ix + dx)) for dy in (0, 1) for dx in (0, 1)}
+        assert int(child[0]) in children
 
     @given(lon=lon_s)
     @settings(max_examples=300, deadline=None)

@@ -243,3 +243,28 @@ def test_candidates_pickle_round_trip(store):
         for name in M.PartialCells.__slots__:
             np.testing.assert_array_equal(getattr(view, name), getattr(bview, name))
     np.testing.assert_array_equal(_resolve(la, lo, back), _resolve(la, lo, cand))
+
+
+def test_wrapped_region_frame_when_clip_ends_at_180():
+    """A wrapped region (continuous frame 172..186; ``unwrap_rings``
+    recentres a frame whose midpoint reaches 180) whose boundary cell just
+    east of the line keeps only edges ending exactly at lon 180.0.
+    A frame inferred from that clipped subset would lie inside
+    [-180, 180], skip the probe shift and cast the ray 360° away; the
+    resolver shifts by the owning region's frame and agrees with
+    ``point_in_rings``."""
+    hook = [(0.0, 172.0), (1.2, 180.0), (4.0, 180.0), (4.0, 186.0),
+            (6.0, 186.0), (6.0, 172.0), (0.0, 172.0)]
+    lookup, _, cand = _build({0: [("outer", hook)]})
+    la, lo = np.array([1.0]), np.array([-179.5])  # frame lon 180.5
+    # the probe's cell is a partial cell whose clipped edges end at 180.0
+    lv = MAX
+    keys, _, view, _ = cand["levels"][lv]
+    i = int(np.searchsorted(keys, K.cell_key(la, lo, lv)[0]))
+    assert keys[i] == K.cell_key(la, lo, lv)[0]
+    (rid, clipped, lon_lo, lon_hi), = view[i]
+    assert float(clipped[:, [1, 3]].max()) == 180.0 and (lon_lo, lon_hi) == (172.0, 186.0)
+    got = _resolve(la, lo, cand)
+    want = _brute_masks(la, lo, lookup, cand["n_words"])
+    np.testing.assert_array_equal(got, want)
+    assert not want.any()  # the eastward ray from 180.5 crosses no edge

@@ -1,40 +1,10 @@
-"""Salting, catalog sink fallback, stateful streaming dedup."""
+"""Catalog sink fallback, staged flagship checkpoints."""
 
 import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-
-class TestSalting:
-    def test_salted_count_matches_plain(self, spark, sf_smoke):
-        from libosmtools_spark.joins.skew import salted_count, top_hot_keys
-        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
-
-        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
-        pts = with_cell_key(geocode_pages(pages)).select("url", "cell_key")
-        hot = top_hot_keys(pts, "cell_key", top_k=4)
-        assert hot, "fixture must have hot cells"
-        got = salted_count(pts, "cell_key", entropy="url", hot_keys=hot).toPandas()
-        want = pts.groupBy("cell_key").count().toPandas()
-        m = got.merge(want, on="cell_key")
-        assert (m["n"] == m["count"]).all()
-        assert len(got) == len(want)
-
-    def test_replicated_join_matches_plain(self, spark, sf_smoke):
-        from libosmtools_spark.joins.skew import replicate_broadcast_join, top_hot_keys
-        from libosmtools_spark.joins.spatial import geocode_pages, with_cell_key
-
-        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(500)
-        pts = with_cell_key(geocode_pages(pages)).select("url", "cell_key")
-        dim = pts.groupBy("cell_key").count().withColumnRenamed("count", "n_in_cell")
-        hot = top_hot_keys(pts, "cell_key", top_k=3)
-        got = replicate_broadcast_join(pts, dim, "cell_key", hot, n_salt=4, entropy="url").toPandas()
-        want = pts.join(dim, "cell_key").toPandas()
-        g = got.sort_values(["url"]).reset_index(drop=True)[["url", "cell_key", "n_in_cell"]]
-        w = want.sort_values(["url"]).reset_index(drop=True)[["url", "cell_key", "n_in_cell"]]
-        pd.testing.assert_frame_equal(g, w, check_dtype=False)
 
 
 class TestCatalogSink:
@@ -53,40 +23,6 @@ class TestCatalogSink:
         # partitioned layout on disk
         parts = [p for p in os.listdir(tmp_path / "page_cells") if p.startswith("cell_prefix=")]
         assert parts
-
-    def test_remap_sink_roundtrip(self, spark, sf_smoke, tmp_path):
-        """S11 gh-arrangement v2 remap sink
-        (/root/reference/src/OsmTriangulationRegionStore.cpp:1160-1225):
-        mapped ids translate, unmapped collapse to |mapping| (myNullCellId),
-        inverse table gives one representative per gh id."""
-        from libosmtools_spark.pipeline import SpatialEngine
-        from libosmtools_spark.run.catalog import read_table, write_remapped_cells
-
-        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
-        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(400)
-        cells = eng.kernel_cells(eng.flagship_kernel(pages)).select("cell_key", "cell_id")
-        ids = sorted(r.cell_id for r in cells.select("cell_id").distinct().collect())
-        # map all but the last id, reversing order (a nontrivial remap)
-        mapped = ids[:-1]
-        mapping = spark.createDataFrame(
-            [(int(m), int(g)) for g, m in enumerate(reversed(mapped))],
-            "my_cell_id int, gh_cell_id int",
-        )
-        write_remapped_cells(cells, mapping, "gh_cells", str(tmp_path))
-        back = read_table(spark, "gh_cells", str(tmp_path)).toPandas()
-        n_null = len(mapped)
-        want = {m: g for g, m in enumerate(reversed(mapped))}
-        for _, row in back.iterrows():
-            assert row["gh_cell_id"] == want.get(row["cell_id"], n_null)
-        inv = read_table(spark, "gh_cells_inverse", str(tmp_path)).toPandas()
-        assert sorted(inv["gh_cell_id"]) == sorted(set(want.values()) & set(
-            back["gh_cell_id"]
-        ))
-        # every representative actually belongs to its gh cell
-        merged = inv.merge(
-            back, left_on=["gh_cell_id", "rep_cell_key"], right_on=["gh_cell_id", "cell_key"]
-        )
-        assert len(merged) == len(inv)
 
     def test_prefix_spreads_level6_keys(self, spark):
         """Regression: the prefix must be level-relative — a fixed absolute
@@ -116,31 +52,26 @@ class TestCatalogSink:
 
 
 class TestStatefulDedupStream:
-    def test_first_seen_dedup(self, spark, sf_smoke):
-        from libosmtools_spark.streaming.geostream import run_dedup_stream_to_memory
-
-        pages_file = os.path.join(sf_smoke, "pages.parquet")
-        got = run_dedup_stream_to_memory(spark, pages_file, query_name="t_dedup").toPandas()
-        static = spark.read.parquet(pages_file).toPandas()
-        # fixture urls are unique → output == input urls; the operator's
-        # suppression is exercised via the duplicated stream below
-        assert set(got["url"]) == set(static["url"])
-
-    def test_suppresses_duplicates_across_batches(self, spark, sf_smoke, tmp_path):
+    def test_suppresses_duplicates_across_batches(self, spark, tmp_path):
+        """The stateful first-event-per-user stream over two files with
+        identical events: the second micro-batch repeats every user and is
+        fully suppressed, so each user appears once, with its first event."""
         import shutil
 
-        # two files with identical urls → second batch fully suppressed
-        src = os.path.join(sf_smoke, "pages.parquet")
-        d = tmp_path / "dup_stream"
+        from libosmtools_spark.streaming.geostream import drain_to_memory, stream_first_event_per_user
+        from tests.test_entry import SF_DIR
+
+        src = os.path.join(SF_DIR, "events.parquet")
+        d = tmp_path / "dup_events"
         d.mkdir()
         shutil.copy(src, d / "a.parquet")
         shutil.copy(src, d / "b.parquet")
-        from libosmtools_spark.streaming.geostream import run_dedup_stream_to_memory
-
-        got = run_dedup_stream_to_memory(spark, str(d), query_name="t_dedup2").toPandas()
-        static = spark.read.parquet(src).toPandas()
-        assert len(got) == len(static)
-        assert not got["url"].duplicated().any()
+        got = drain_to_memory(spark, str(d), stream_first_event_per_user, "append", "t_dedup2").toPandas()
+        ev = pd.read_parquet(src).sort_values(["ts", "event_id"])
+        want = ev.groupby("user_id").head(1)
+        assert not got["user_id"].duplicated().any()
+        assert len(got) == len(want)
+        assert dict(zip(got["user_id"], got["event_id"])) == dict(zip(want["user_id"], want["event_id"]))
 
 
 if __name__ == "__main__":

@@ -117,9 +117,9 @@ class TestPageRegionsParity:
         EXTRACTED from the html binary.  Extraction must be byte-identical
         to the stored text on every row, and the join output over the
         html-derived frame must equal the join output over the original."""
-        from libosmtools_spark.pipeline import pages_from_html
+        from libosmtools_spark.text.analysis import html_text_col
 
-        extracted = pages_from_html(pages)
+        extracted = pages.withColumn("text", html_text_col(F.col("html")))
         bad = (
             extracted.select("url", "text")
             .join(pages.select("url", F.col("text").alias("t0")), "url")

@@ -23,9 +23,16 @@ def embeddings(spark):
 
 class TestTextAnalysis:
     def test_analyze_shapes(self, docs):
-        from libosmtools_spark.text.analysis import analyze_documents
+        from libosmtools_spark.text.analysis import fingerprint_cols, predicted_lang_col, quality_cols
 
-        out = analyze_documents(docs).toPandas()
+        t = F.col("text")
+        q = quality_cols(t)
+        out = docs.select(
+            "doc_id",
+            *(q[c].alias(c) for c in ("n_tokens", "alpha_ratio")),
+            predicted_lang_col(t).alias("pred_lang"),
+            fingerprint_cols(t)["fp_md5"].alias("fp_md5"),
+        ).toPandas()
         assert len(out) == docs.count()
         assert (out["n_tokens"] >= 1).all()
         assert out["alpha_ratio"].between(0, 1).all()
@@ -35,9 +42,9 @@ class TestTextAnalysis:
     def test_md5_matches_duckdb(self, docs):
         import duckdb
 
-        from libosmtools_spark.text.analysis import analyze_documents
+        from libosmtools_spark.text.analysis import fingerprint_cols
 
-        got = analyze_documents(docs).select("doc_id", "fp_md5").toPandas()
+        got = docs.select("doc_id", fingerprint_cols(F.col("text"))["fp_md5"].alias("fp_md5")).toPandas()
         want = duckdb.sql(
             f"select doc_id, md5(text) as fp_md5 from read_parquet('{TESTDATA}/documents.parquet')"
         ).df()
@@ -343,93 +350,6 @@ class TestANN:
         assert out["p"].apply(lambda p: len(set(p)) == 3).all()  # distinct lists
         assert out["p"].apply(lambda p: all(0 <= x < 8 for x in p)).all()
 
-    def test_ivf_trained_quantizer_beats_seed(self, spark):
-        """On a clustered corpus (the real-world embedding shape) the
-        trained spherical-k-means quantizer must reach top-k recall >= the
-        seed (first-n-by-id) quantizer at equal n_probe — and be
-        deterministic across runs."""
-        from libosmtools_spark.sim.ann import (
-            cosine_topk_brute,
-            ivf_seed_centroids,
-            ivf_topk,
-            ivf_train_centroids,
-        )
-
-        rng = np.random.default_rng(5)
-        centers = rng.normal(size=(25, 32)) * 3.0
-        # ids ordered cluster-by-cluster: the seed quantizer's first-25
-        # vectors all come from the first clusters — the adversarial (and
-        # realistic: ingest order correlates with source) case
-        X = np.concatenate(
-            [c + rng.normal(size=(40, 32)) for c in centers], axis=0
-        )
-        rows = [(int(i), v.tolist()) for i, v in enumerate(X)]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
-        exact = cosine_topk_brute(emb, k=5).toPandas()
-        want = set(zip(exact["vec_id"], exact["neighbor_id"]))
-
-        def recall(cents):
-            got = ivf_topk(emb, k=5, n_lists=25, n_probe=2, centroids=cents).toPandas()
-            have = set(zip(got["vec_id"], got["neighbor_id"]))
-            return len(have & want) / len(want)
-
-        trained = ivf_train_centroids(emb, n_lists=25)
-        trained2 = ivf_train_centroids(emb, n_lists=25)
-        np.testing.assert_array_equal(trained, trained2)  # deterministic
-        r_seed = recall(ivf_seed_centroids(emb, 25))
-        r_trained = recall(trained)
-        emb.unpersist()
-        assert r_trained >= r_seed, (r_trained, r_seed)
-        assert r_trained >= 0.9, r_trained  # probes cover the true cluster
-
-    def test_ivf_training_collect_hard_bounded(self, spark):
-        """The trainer's driver collect is unconditionally bounded: even
-        when the hash sample over-delivers (expected-size only), at most
-        2*sample_rows vectors reach the driver — and the sorted limit keeps
-        training deterministic."""
-        from libosmtools_spark.sim.ann import ivf_train_centroids
-
-        rng = np.random.default_rng(9)
-        X = rng.normal(size=(300, 8))
-        rows = [(int(i), v.tolist()) for i, v in enumerate(X)]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        import libosmtools_spark.sim.ann as ann_mod
-
-        seen = {}
-        orig = ann_mod.np.stack
-
-        def spy(arrs, *a, **kw):
-            out = orig(arrs, *a, **kw)
-            seen.setdefault("n", len(out))
-            return out
-
-        ann_mod.np.stack = spy
-        try:
-            # sample_rows=20 over 300 rows: hash keeps ~1/15 in expectation
-            # but the limit(2*20) bound must hold regardless
-            c1 = ivf_train_centroids(emb, n_lists=4, sample_rows=20)
-            seen.clear()
-            c2 = ivf_train_centroids(emb, n_lists=4, sample_rows=20)
-        finally:
-            ann_mod.np.stack = orig
-        assert seen["n"] <= 40, seen
-        np.testing.assert_array_equal(c1, c2)
-
-    def test_ivf_trained_sampling_deterministic(self, spark):
-        """The hash-sampled training path (corpus > sample_rows) is
-        deterministic and produces valid unit-norm centroids."""
-        from libosmtools_spark.sim.ann import ivf_train_centroids
-
-        rng = np.random.default_rng(9)
-        X = rng.normal(size=(800, 16))
-        rows = [(int(i), v.tolist()) for i, v in enumerate(X)]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        c1 = ivf_train_centroids(emb, n_lists=8, sample_rows=200)
-        c2 = ivf_train_centroids(emb, n_lists=8, sample_rows=200)
-        np.testing.assert_array_equal(c1, c2)
-        assert c1.shape == (8, 16)
-        np.testing.assert_allclose(np.linalg.norm(c1, axis=1), 1.0, rtol=1e-9)
-
     def test_cosine_dup_pairs_paths_agree(self, embeddings, monkeypatch, spy):
         """Exact near-dup pairs: both sides of cosine_dup_pairs'
         BRUTE_MAX_ROWS gate and the blocked entry at 3 blocks emit the
@@ -473,20 +393,6 @@ class TestANN:
         assert blocked["vec_id"].nunique() == 1600
         key = ["vec_id", "neighbor_id", "rank"]
         assert set(map(tuple, blocked[key].to_numpy())) == set(map(tuple, brute[key].to_numpy()))
-
-    def test_cosine_dup_lsh_recall(self, spark):
-        """LSH near-dup path: recall >= 0.95 on planted duplicates."""
-        from libosmtools_spark.sim.ann import cosine_dup_pairs_lsh
-
-        rng = np.random.default_rng(7)
-        base = rng.normal(size=(800, 64))
-        dups = base[:300] + rng.normal(size=(300, 64)) * 0.12
-        rows = [(int(i), v.tolist()) for i, v in enumerate(np.vstack([base, dups]))]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        got = cosine_dup_pairs_lsh(emb, threshold=0.9).toPandas()
-        pairs = set(zip(got["a"], got["b"]))
-        found = sum((i, 800 + i) in pairs for i in range(300))
-        assert found / 300 >= 0.95, found / 300
 
     def test_ann_topk_gate_both_sides(self, embeddings, monkeypatch, spy):
         """Both sides of ann_topk's BRUTE_MAX_ROWS gate: a corpus of exactly
@@ -579,10 +485,14 @@ class TestANN:
 
 class TestMultimodal:
     def test_feature_plumbing(self, spark, sf_smoke):
-        from libosmtools_spark.mm.multimodal import extract_features, pages_html_media
+        from libosmtools_spark.mm.multimodal import extract_features
 
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(100)
-        media = pages_html_media(pages)
+        media = pages.select(
+            F.xxhash64("url").alias("media_id"),
+            F.lit("image").alias("kind"),
+            F.col("html").alias("payload"),
+        )
         out = extract_features(media).toPandas()
         assert len(out) == 100
         assert out["ok"].all()
@@ -593,167 +503,6 @@ class TestMultimodal:
         m = out.sort_values("media_id").reset_index(drop=True)
         m2 = out2.sort_values("media_id").reset_index(drop=True)
         assert (m["sha256"] == m2["sha256"]).all()
-
-    def test_real_decoder_raises(self):
-        from libosmtools_spark import mm
-        from libosmtools_spark.mm.multimodal import DecodeUnavailable, real_decode
-
-        if mm.multimodal._pil() is None:  # this container: no Pillow
-            with pytest.raises(DecodeUnavailable):
-                real_decode(b"xx", "image/png")
-        else:  # a cluster image with codecs: the real path decodes
-            import io
-
-            from PIL import Image
-
-            buf = io.BytesIO()
-            Image.new("L", (4, 4), color=128).save(buf, format="PNG")
-            assert real_decode(buf.getvalue(), "image/png").shape == (4, 4)
-
-    def test_real_decoder_with_fake_pil(self, monkeypatch):
-        """The Pillow-present branch, driven by a monkeypatched decoder —
-        exercises real_decode_features' histogram contract without codecs
-        in the container."""
-        import numpy as np
-
-        from libosmtools_spark.mm import multimodal as M
-
-        class _FakeImg:
-            def convert(self, mode):
-                return self
-
-            def __array__(self, dtype=None):
-                return np.zeros((4, 4), dtype=dtype or np.uint8)
-
-        class _FakeImage:
-            @staticmethod
-            def open(fp):
-                return _FakeImg()
-
-        monkeypatch.setattr(M, "_pil", lambda: _FakeImage)
-        feat = M.real_decode_features(b"xxxx", "image/png")
-        assert feat.shape == (8,) and feat.dtype == np.float32
-        assert feat[0] == 1.0 and feat[1:].sum() == 0.0  # all-zero plane -> bin 0
-
-        # non-image mime still refuses even with the decoder present
-        with pytest.raises(M.DecodeUnavailable):
-            M.real_decode(b"xx", "audio/wav")
-
-    @staticmethod
-    def _encode_ppm(rgb: "np.ndarray") -> bytes:
-        h, w, _ = rgb.shape
-        return b"P6\n# test comment\n%d %d\n255\n" % (w, h) + rgb.astype(np.uint8).tobytes()
-
-    @staticmethod
-    def _encode_pgm(gray: "np.ndarray") -> bytes:
-        h, w = gray.shape
-        return b"P5 %d %d 255\n" % (w, h) + gray.astype(np.uint8).tobytes()
-
-    @staticmethod
-    def _encode_bmp24(rgb: "np.ndarray") -> bytes:
-        """Minimal uncompressed 24-bit BI_RGB bottom-up BMP writer (test
-        fixture generator — independent of the decoder under test)."""
-        h, w, _ = rgb.shape
-        stride = ((w * 3 + 3) // 4) * 4
-        img = bytearray()
-        for y in range(h - 1, -1, -1):  # bottom-up
-            row = rgb[y, :, ::-1].astype(np.uint8).tobytes()  # BGR
-            img += row + b"\x00" * (stride - len(row))
-        data_off = 14 + 40
-        file_size = data_off + len(img)
-        hdr = b"BM" + file_size.to_bytes(4, "little") + b"\x00\x00\x00\x00"
-        hdr += data_off.to_bytes(4, "little")
-        info = (40).to_bytes(4, "little") + w.to_bytes(4, "little", signed=True)
-        info += h.to_bytes(4, "little", signed=True) + (1).to_bytes(2, "little")
-        info += (24).to_bytes(2, "little") + (0).to_bytes(4, "little")
-        info += len(img).to_bytes(4, "little") + b"\x00" * 16
-        return bytes(hdr + info + img)
-
-    def test_numpy_codecs_decode_real_formats(self):
-        """The in-sandbox real path: netpbm P5/P6 and 24-bit BMP decode
-        end-to-end in pure numpy, matching the source plane exactly
-        (integer BT.601 luma for the RGB formats)."""
-        from libosmtools_spark.mm.multimodal import decode_bmp, decode_ppm, real_decode
-
-        rng = np.random.default_rng(5)
-        rgb = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)  # odd w: BMP padding
-        luma = (
-            (77 * rgb[..., 0].astype(np.uint32)
-             + 150 * rgb[..., 1].astype(np.uint32)
-             + 29 * rgb[..., 2].astype(np.uint32)) >> 8
-        ).astype(np.uint8)
-        np.testing.assert_array_equal(decode_ppm(self._encode_ppm(rgb)), luma)
-        np.testing.assert_array_equal(decode_bmp(self._encode_bmp24(rgb)), luma)
-        gray = rng.integers(0, 256, size=(4, 6), dtype=np.uint8)
-        np.testing.assert_array_equal(decode_ppm(self._encode_pgm(gray)), gray)
-        # real_decode sniffs magic bytes, mime not required to be truthful
-        np.testing.assert_array_equal(real_decode(self._encode_ppm(rgb), "application/octet-stream"), luma)
-        np.testing.assert_array_equal(real_decode(self._encode_bmp24(rgb), None), luma)
-
-    def test_real_decode_features_end_to_end(self, spark):
-        """extract_features(use_stub=False) over a media table of actual
-        PPM/BMP payloads: the NON-stub branch decodes and features real
-        formats in this container (ok=True), while an undecodable payload
-        degrades to ok=False instead of failing the job."""
-        from libosmtools_spark.mm.multimodal import extract_features
-
-        rng = np.random.default_rng(6)
-        rgb = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-        gray = rng.integers(0, 256, size=(8, 8), dtype=np.uint8)
-        rows = [
-            (1, "image", self._encode_ppm(rgb), "image/x-portable-pixmap", None, None),
-            (2, "image", self._encode_bmp24(rgb), "image/bmp", None, None),
-            (3, "image", self._encode_pgm(gray), "image/x-portable-graymap", None, None),
-            (4, "image", b"\x89PNG not really", "image/png", None, None),
-        ]
-        media = spark.createDataFrame(
-            rows,
-            "media_id long, kind string, payload binary, mime string, width int, height int",
-        )
-        out = (
-            extract_features(media, use_stub=False)
-            .toPandas()
-            .sort_values("media_id")
-            .reset_index(drop=True)
-        )
-        assert out["ok"].tolist() == [True, True, True, False]
-        # expected feature: L1-normalized 8-bin histogram of the luma plane
-        luma = (
-            (77 * rgb[..., 0].astype(np.uint32)
-             + 150 * rgb[..., 1].astype(np.uint32)
-             + 29 * rgb[..., 2].astype(np.uint32)) >> 8
-        ).astype(np.uint8)
-        hist, _ = np.histogram(luma, bins=8, range=(0, 256))
-        want = (hist / hist.sum()).astype(np.float32)
-        np.testing.assert_allclose(np.array(out.loc[0, "feat"], dtype=np.float32), want, rtol=1e-6)
-        # PPM and BMP encode the same pixels -> identical features
-        assert list(out.loc[0, "feat"]) == list(out.loc[1, "feat"])
-
-    def test_resize_plumbing(self, spark, sf_smoke):
-        from libosmtools_spark.mm.multimodal import pages_html_media, resize_media
-
-        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(50)
-        out = resize_media(pages_html_media(pages), out_w=8, out_h=8).toPandas()
-        assert len(out) == 50
-        assert out["plane"].map(len).eq(64).all()  # 8x8 uint8 plane
-        assert out["mean_luma"].between(0, 255).all()
-        # determinism (fake decoder is payload-deterministic)
-        out2 = resize_media(pages_html_media(pages), out_w=8, out_h=8).toPandas()
-        a = out.sort_values("media_id").reset_index(drop=True)
-        b = out2.sort_values("media_id").reset_index(drop=True)
-        assert (a["plane"] == b["plane"]).all()
-
-    def test_frame_sample_plumbing(self, spark, sf_smoke):
-        from libosmtools_spark.mm.multimodal import frame_sample, pages_html_media
-
-        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet")).limit(20)
-        out = frame_sample(pages_html_media(pages), every_k=4, frame_bytes=64).toPandas()
-        assert out["media_id"].nunique() == 20
-        # every media contributes frame 0 and only every-4th frames
-        assert (out["frame_idx"] % 4 == 0).all()
-        per = out.groupby("media_id").agg(n=("frame_idx", "size"), tot=("n_frames", "first"))
-        assert (per["n"] == -(-per["tot"] // 4)).all()
-        assert out["frame"].map(len).le(64).all()
 
 
 class TestStreaming:
@@ -780,19 +529,6 @@ class TestStreaming:
         b = batch.sort_values(key).reset_index(drop=True)
         assert len(g) == len(b) > 0
         assert (g["n_pages"].to_numpy() == b["n_pages"].to_numpy()).all()
-
-    def test_stream_matches_batch(self, spark, sf_smoke):
-        from libosmtools_spark.streaming.geostream import (
-            run_stream_to_memory,
-            stream_cell_counts,
-        )
-
-        pages_dir = os.path.join(sf_smoke, "pages.parquet")
-        got = run_stream_to_memory(spark, pages_dir, query_name="t_stream").toPandas()
-        batch = stream_cell_counts(spark.read.parquet(pages_dir)).toPandas()
-        g = got.sort_values(["window_start", "cell_key"]).reset_index(drop=True)
-        b = batch.sort_values(["window_start", "cell_key"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(g, b)
 
 
 class TestCheckpoint:
@@ -902,7 +638,7 @@ class TestEmptyInputs:
             simhash_fingerprints, simhash_pairs,
         )
         from libosmtools_spark.sim.ann import (
-            ann_topk, cosine_dup_pairs, cosine_dup_pairs_blocked, cosine_dup_pairs_lsh,
+            ann_topk, cosine_dup_pairs, cosine_dup_pairs_blocked,
             cosine_topk_blocked, cosine_topk_brute, ivf_topk, lsh_topk,
         )
 
@@ -919,7 +655,6 @@ class TestEmptyInputs:
         assert cosine_topk_brute(emb).count() == 0
         assert cosine_topk_blocked(emb).count() == 0
         assert cosine_dup_pairs_blocked(emb).count() == 0
-        assert cosine_dup_pairs_lsh(emb).count() == 0
 
 
 class TestWinnowBPE:

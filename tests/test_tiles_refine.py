@@ -93,17 +93,12 @@ class TestCellGraph:
 
     def test_sizes_com_stats(self, points, pages, cells):
         from libosmtools_spark.cells.assign import assign_point_cell_ids
-        from libosmtools_spark.tiles.materialize import (
-            cell_center_of_mass,
-            cell_sizes,
-            cell_stats,
-        )
+        from libosmtools_spark.tiles.materialize import cell_center_of_mass, cell_stats
 
         pts = points.select("url", "lat", "lon", "cell_key")
         pc = assign_point_cell_ids(pts, cells).cache()
-        sizes = cell_sizes(pc.select("url", "cell_key", "cell_id")).toPandas()
-        assert sizes["n_points"].sum() == pages.count()
         com = cell_center_of_mass(pc.select("cell_id", "lat", "lon")).toPandas()
+        assert com["n_points"].sum() == pages.count()
         assert com["com_lat"].between(-90, 90).all()
         stats = cell_stats(pc.select("url", "cell_id")).toPandas().iloc[0]
         assert stats["min_points"] >= 1
