@@ -11,8 +11,10 @@ One Python pass per query: the kernel is the only Python task of the plan.
 
 ``SpatialEngine`` is the only code that builds a region store's artifacts
 (rings lookup, adaptive cell index, candidate tables), all on the driver
-from one collect of the rings, whatever the store's size: the
-``__spark_entry__`` queries and the tests build every store through it.
+from one Arrow table of the rings, whatever the store's size: a bare local
+parquet store is read by the driver itself (no Spark job), any other rings
+frame is collected with one job.  The ``__spark_entry__`` queries and the
+tests build every store through it.
 Its surface is the flagship's three stages: ``flagship_kernel`` (the
 one pass that geocodes pages: RE2 inside the kernel), ``kernel_cells``
 (the dictionary, a driver step fed from that pass) and ``flagship_map``
@@ -32,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from libosmtools_spark.cells.assign import assign_point_cell_ids, build_cells_table_map
-from libosmtools_spark.index.grid import CELL_INDEX_SCHEMA, _covering_frame, rings_lookup
+from libosmtools_spark.index.grid import CELL_INDEX_SCHEMA, _covering_frame, rings_lookup, rings_table
 from libosmtools_spark.joins.mapjoin import TASK_UNIQUE, map_spatial_join_text
 
 DEFAULT_LEVEL = 6
@@ -53,12 +55,13 @@ FLAGSHIP_COLUMNS = ("url", "cell_key", "cell_id", "region_ids")
 class SpatialEngine:
     """Holds the built index artifacts (the analog of the reference's
     OsmGridRegionTree + OsmTriangulationRegionStore pair) for a region store,
-    built from one collect of its rings: the rings lookup and the adaptive
-    cell index rows covered from it on the driver (the constructor's one
-    Spark job is the collect), plus, each on first read, the candidate tables
-    broadcast (all the flagship reads), the rings broadcast and the cell
-    index frame (read only by the relational fallback,
-    ``joins.spatial.spatial_join_adaptive``).
+    built from one Arrow table of its rings (``index.grid.rings_table``: a
+    bare local parquet store is read on the driver with no Spark job, any
+    other frame costs one collect job): the rings lookup and the adaptive
+    cell index rows covered from it on the driver, plus, each on first
+    read, the candidate tables broadcast (all the flagship reads), the
+    rings broadcast and the cell index frame (read only by the relational
+    fallback, ``joins.spatial.spatial_join_adaptive``).
     """
 
     def __init__(
@@ -72,10 +75,10 @@ class SpatialEngine:
         self.level = level
         self.max_level = level + DEFAULT_REFINE_LEVELS if max_level is None else max_level
         self.region_rings = region_rings
-        # dimension-scale: the constructor's one Spark job collects the
-        # rings; the rings lookup parses them once, and the index rows are
-        # covered from it on the driver (they feed the candidate tables)
-        self.rings_lookup = rings_lookup(region_rings.toPandas())
+        # dimension-scale: the rings are read (or collected) once as Arrow,
+        # the rings lookup parses them once, and the index rows are covered
+        # from it on the driver (they feed the candidate tables)
+        self.rings_lookup = rings_lookup(rings_table(region_rings))
         self._index_pdf = _covering_frame(self.rings_lookup, level, self.max_level)
         self._cell_index = None
         self._rings_bcast = None

@@ -162,11 +162,12 @@ def test_diameter_row_reads_without_a_job(spark, duck):
 
 
 def test_engine_build_runs_one_job(spark, monkeypatch):
-    """Building a query store's engine runs one Spark job, the collect of
-    its rings; the covering, the candidate tables and the broadcast are
-    built on the driver.  (The rings frame is driver-local, but its
-    ``toPandas`` still runs that job: the Arrow collect of a
-    ``LocalRelation`` goes through an RDD, as a parallelized list's does.)"""
+    """Building a query store's engine runs one Spark job, the ``toArrow``
+    collect of its rings; the covering, the candidate tables and the
+    broadcast are built on the driver.  (The store is built from Python
+    lists, not read from parquet, so it takes the collect side of
+    ``index.grid.rings_table``: the Arrow collect of a ``LocalRelation``
+    goes through an RDD, as a parallelized list's does.)"""
     monkeypatch.setattr(entry, "_ENGINE_CACHE", {})
     sc = spark.sparkContext
     group = "jobs-engine-build"

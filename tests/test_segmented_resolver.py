@@ -6,12 +6,17 @@ clipped edges.  Its masks must equal a brute resolver that ray-casts each
 point against every region's whole rings (``kernels.point_in_rings``), on
 stores built to break it: holes, antimeridian-wrapped regions, more than
 126 regions (three mask words), duplicate vertices, and points exactly on
-vertices, on edges and on cell borders.
+vertices, on edges and on cell borders.  The last test runs the same
+stores through the engine: written to parquet and as a frame of rows,
+pages carrying those points as ``geo:`` tokens get the same region sets
+from ``flagship_map``, the relational ``spatial_join_adaptive`` and
+``point_in_rings``.
 """
 
 from __future__ import annotations
 
 import pickle
+import re
 
 import numpy as np
 import pandas as pd
@@ -268,3 +273,91 @@ def test_wrapped_region_frame_when_clip_ends_at_180():
     want = _brute_masks(la, lo, lookup, cand["n_words"])
     np.testing.assert_array_equal(got, want)
     assert not want.any()  # the eastward ray from 180.5 crosses no edge
+
+
+#: page texts whose token no geocoder may read (or, the last, reads as the
+#: valid 6-decimal prefix of its longitude)
+GARBLED = [
+    "no token at all",
+    "geo:12.5,3.25",
+    "geo:abc,def",
+    "geo:1.123456;2.123456",
+    "geo: 1.123456,2.123456",
+    "geo:1.1234567,2.123456",
+    "geo:--1.000000,2.000000",
+    "geo:1.000000,",
+    "geo:1.123456,2.1234567",
+]
+
+
+def _rounded(regions: dict) -> dict:
+    """The store with every vertex on a 1e-5° grid, so its vertices and
+    edge midpoints are exact in a 6-decimal ``geo:`` token."""
+    return {
+        rid: [(role, [(round(a, 5), round(o, 5)) for a, o in pts]) for role, pts in rings]
+        for rid, rings in regions.items()
+    }
+
+
+def _region_sets(df, url_col="url", ids_col="region_ids") -> dict:
+    return {r[url_col]: tuple(sorted(r[ids_col])) for r in df.collect()}
+
+
+@pytest.mark.parametrize("name", sorted(STORES))
+def test_engine_paths_agree_with_point_in_rings(spark, tmp_path, spy, name):
+    """The parquet store (read on the driver) and the same rows as a
+    frame (collected) give ``flagship_map`` the same region sets as the
+    relational ``spatial_join_adaptive`` and brute ``point_in_rings``,
+    page by page, garbled tokens included."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from libosmtools_spark.geom.columns import GEO_REGEX
+    from libosmtools_spark.joins.spatial import geocode_pages, spatial_join_adaptive
+    from libosmtools_spark.pipeline import SpatialEngine
+
+    regions = _rounded(STORES[name]())
+    pdf = _rings_pdf(regions)
+    path = str(tmp_path / "region_rings.parquet")
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
+    stores = {
+        "parquet": spark.read.parquet(path),
+        "rows": spark.createDataFrame(
+            list(pdf.itertuples(index=False)),
+            "region_id long, ring_id long, ring_role string, points array<struct<lat:double,lon:double>>",
+        ),
+    }
+    la, lo = _points(regions, seed=3)
+    texts = [
+        f"p geo:{a:.6f},{o:.6f} q" if not (np.isnan(a) or np.isnan(o)) else "p no coordinates q"
+        for a, o in zip(la, lo)
+    ] + GARBLED
+    urls = [f"u{i}" for i in range(len(texts))]
+    pages = spark.createDataFrame(pd.DataFrame({"url": urls, "text": texts}))
+
+    # brute: the tokens parsed in Python, every region's whole rings
+    lookup = grid.rings_lookup(pdf)
+    coords = np.full((len(texts), 2), np.nan)
+    for i, t in enumerate(texts):
+        m = re.search(GEO_REGEX, t, re.ASCII)
+        if m:
+            coords[i] = float(m[1]), float(m[2])
+    ok = ~np.isnan(coords).any(axis=1)
+    inside = np.zeros((len(texts), len(lookup)), dtype=bool)
+    for j, (outers, inners) in enumerate(lookup.values()):
+        inside[ok, j] = K.point_in_rings(coords[ok, 0], coords[ok, 1], outers, inners)
+    rids = np.fromiter(lookup, dtype=np.int64)
+    want = {u: tuple(rids[row].tolist()) for u, row in zip(urls, inside)}
+    assert not any(want[u] for u in urls[-len(GARBLED) : -1])
+    assert max(len(ids) for ids in want.values()) > 1 and min(len(ids) for ids in want.values()) == 0
+
+    reads = spy(grid.pq, "read_table")
+    for side, rings in stores.items():
+        eng = SpatialEngine(spark, rings, BASE, MAX)
+        assert _region_sets(eng.flagship_map(pages)) == want, side
+    assert reads == [([path],)]  # the parquet store read on the driver, the rows collected
+    pts = geocode_pages(pages).select("url", "lat", "lon")
+    hits = spatial_join_adaptive(pts, eng.cell_index, eng.rings_bcast, BASE, MAX)
+    rel = _region_sets(hits.groupBy("url").agg(F.collect_set("region_id").alias("region_ids")))
+    assert rel == {u: ids for u, ids in want.items() if ids}

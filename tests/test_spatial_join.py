@@ -42,6 +42,17 @@ def _flagship_rows(df):
     return out
 
 
+def _jobs(spark, group, fn):
+    """(fn(), Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _read_goldens(sf_dir):
     names = ("golden_page_regions", "golden_page_cells")
     return {n: pd.read_parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
@@ -538,8 +549,9 @@ class TestFlagshipDictionaryFeed:
 class TestOneStoreBuild:
     """Every store is covered once, on the driver, from its rings lookup,
     whatever its region count: a 1,100-region star store (past the size
-    that once took a distributed per-region covering) builds with one
-    Spark job, the rings collect, and plans no pandas group anywhere."""
+    that once took a distributed per-region covering), built from pandas
+    and so collected rather than read from parquet, builds with one Spark
+    job, the rings collect, and plans no pandas group anywhere."""
 
     @pytest.fixture(scope="class")
     def star_rings(self, spark):
@@ -551,26 +563,13 @@ class TestOneStoreBuild:
             "points array<struct<lat:double,lon:double>>",
         )
 
-    @staticmethod
-    def _jobs(spark, group, fn):
-        """(fn(), Spark jobs it ran)."""
-        sc = spark.sparkContext
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     def test_large_store_builds_on_the_driver(self, spark, star_rings):
         from libosmtools_spark.geom import kernels as K
         from libosmtools_spark.pipeline import SpatialEngine
         from libosmtools_spark.tiles.materialize import vector_to_raster
 
-        eng, ctor_jobs = self._jobs(
-            spark, "one-store-build-ctor", lambda: SpatialEngine(spark, star_rings)
-        )
-        _, cand_jobs = self._jobs(spark, "one-store-build-cand", lambda: eng.candidates_bcast)
+        eng, ctor_jobs = _jobs(spark, "one-store-build-ctor", lambda: SpatialEngine(spark, star_rings))
+        _, cand_jobs = _jobs(spark, "one-store-build-cand", lambda: eng.candidates_bcast)
         assert (ctor_jobs, cand_jobs) == (1, 0)
         assert len(eng.rings_lookup) == 1100
         for df in (eng.cell_index, vector_to_raster(star_rings, eng.level)):
@@ -599,6 +598,89 @@ class TestOneStoreBuild:
         want = {u: tuple(rids[row].tolist()) for u, row in zip(pdf["url"], inside)}
         assert {u: r[2] for u, r in got.items()} == want
         assert max(len(ids) for ids in want.values()) > 63  # multi-word masks
+
+
+class TestStoreRead:
+    """``index.grid.rings_table``: a bare local parquet store is read on
+    the driver (no Spark job); a filtered, projected, unioned or
+    partitioned frame of the same files, or a frame built from rows, is
+    collected with one job and keeps its own rows.  Both sides give the
+    same lookup and byte-identical candidate tables."""
+
+    @pytest.fixture(scope="class")
+    def store_path(self, sf_smoke):
+        return os.path.join(sf_smoke, "scaling_region_rings.parquet")
+
+    @staticmethod
+    def _build(spark, group, rings):
+        """(engine with its candidate tables built, Spark jobs it ran)."""
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        def build():
+            eng = SpatialEngine(spark, rings)
+            eng.candidates_bcast
+            return eng
+
+        return _jobs(spark, group, build)
+
+    @staticmethod
+    def _tables(eng):
+        import pickle
+
+        return pickle.dumps((eng.rings_lookup, eng.candidates_bcast.value), protocol=pickle.HIGHEST_PROTOCOL)
+
+    @pytest.fixture(scope="class")
+    def driver_engine(self, spark, store_path):
+        return self._build(spark, "store-read-engine", spark.read.parquet(store_path))[0]
+
+    def test_bare_parquet_store_runs_no_job(self, spark, store_path):
+        _, jobs = self._build(spark, "store-read-bare", spark.read.parquet(store_path))
+        assert jobs == 0
+
+    def test_rows_frame_collects_the_same_tables(self, spark, store_path, driver_engine):
+        pdf = pd.read_parquet(store_path)
+        rows = spark.createDataFrame(
+            [(int(r.region_id), int(r.ring_id), r.ring_role, [dict(p) for p in r.points]) for r in pdf.itertuples()],
+            "region_id long, ring_id long, ring_role string, points array<struct<lat:double,lon:double>>",
+        )
+        eng, jobs = self._build(spark, "store-read-rows", rows)
+        assert jobs == 1
+        assert self._tables(eng) == self._tables(driver_engine)
+
+    def test_filtered_frame_keeps_its_filter(self, spark, store_path, driver_engine):
+        eng, jobs = self._build(spark, "store-read-filter", spark.read.parquet(store_path).where("region_id % 2 = 0"))
+        assert jobs == 1
+        assert list(eng.rings_lookup) == [r for r in driver_engine.rings_lookup if r % 2 == 0]
+
+    @pytest.mark.parametrize("shape", ["projected", "unioned", "partitioned"])
+    def test_other_frames_collect_once(self, spark, store_path, driver_engine, tmp_path, shape):
+        df = spark.read.parquet(store_path)
+        if shape == "projected":
+            df = df.select("points", "ring_role", "ring_id", "region_id")
+        elif shape == "unioned":
+            df = df.where("region_id < 20").unionByName(df.where("region_id >= 20"))
+        else:
+            df.write.partitionBy("ring_role").parquet(str(tmp_path / "by_role"))
+            df = spark.read.parquet(str(tmp_path / "by_role"))
+        eng, jobs = self._build(spark, f"store-read-{shape}", df)
+        assert jobs == 1
+        assert self._tables(eng) == self._tables(driver_engine)
+
+    def test_store_path_with_space_reads_on_driver(self, spark, store_path, driver_engine, tmp_path, spy):
+        import shutil
+
+        from libosmtools_spark.index import grid
+
+        d = tmp_path / "store with space"
+        d.mkdir()
+        shutil.copy(store_path, d / "part-0.parquet")
+        df = spark.read.parquet(str(d))
+        assert "%20" in df.inputFiles()[0]
+        reads = spy(grid.pq, "read_table")
+        eng, jobs = self._build(spark, "store-read-space", df)
+        assert jobs == 0
+        assert reads == [([str(d / "part-0.parquet")],)]
+        assert self._tables(eng) == self._tables(driver_engine)
 
 
 class TestLazyStoreArtifacts:
